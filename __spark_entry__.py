@@ -1022,14 +1022,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     q["winnow_overlap_pairs"] = lambda s, d: winnow.winnow_overlap_pairs(
         _t(s, d, "documents")
     )
+    # connected components via alternating large-star/small-star
+    # (Kiveris 2014): O(log n) rounds even on chain-shaped duplicate
+    # graphs; the oracle is iteration-free recursive reachability
     q["dedup_clusters"] = lambda s, d: dedup.dedup_clusters(_t(s, d, "documents"))
-    # same labels via alternating large-star/small-star (Kiveris 2014):
-    # O(log n) rounds vs label-prop's O(diameter) — the scale-grade CC
-    # for chain-shaped duplicate graphs; oracle is iteration-free
-    # recursive reachability, shared with dedup_clusters
-    q["cc_star_labels"] = lambda s, d: dedup.cc_star_labels(
-        _t(s, d, "documents")
-    )
     # dedup-audit readout: distribution of near-dup cluster sizes
     q["dedup_cluster_sizes"] = lambda s, d: dedup.cluster_size_histogram(
         _t(s, d, "documents")
@@ -2017,7 +2013,8 @@ FROM (SELECT doc_id FROM documents WHERE doc_id % 3 = 2) d
 """
 
     # connected components over the candidate graph: min reachable doc_id
-    # per node via a recursive CTE (the SQL twin of the Spark label loop)
+    # per node via a recursive CTE — algorithm-agnostic: the Spark star
+    # rounds must land on the same fixed point
     clusters_sql = f"""
 {bands_cte.replace("WITH ", "WITH RECURSIVE ", 1)},
 pairs AS (
@@ -2034,9 +2031,6 @@ reach(doc_id, cluster) AS (
 SELECT doc_id, min(cluster) AS cluster FROM reach GROUP BY doc_id
 """
     o["dedup_clusters"] = clusters_sql
-    # cc_star_labels converges to the SAME fixed point (min doc_id per
-    # component); the reachability oracle is algorithm-agnostic
-    o["cc_star_labels"] = clusters_sql
     o["dedup_cluster_sizes"] = f"""
 WITH labels AS ({clusters_sql}),
 sizes AS (SELECT cluster, count(*) AS cluster_size FROM labels GROUP BY 1)
@@ -2048,8 +2042,8 @@ SELECT cluster_size, count(*) AS n_clusters FROM sizes GROUP BY 1
     # full training-data recipe: quality keep -> exact dedup -> fuzzy
     # dedup over the survivors -> decontaminate -> content-keyed split.
     # Reuses the curate CTE chain (scored/kept/uniq), re-bands over the
-    # exact-dedup survivor set (rdocs), and replays the label
-    # propagation as the same recursive reachability the dedup_clusters
+    # exact-dedup survivor set (rdocs), and replays the connected
+    # components as the same recursive reachability the dedup_clusters
     # oracle states.
     from metadata_quality_stack_spark.operators.contamination import (
         EVAL_MOD as _EVAL_MOD,

@@ -29,9 +29,7 @@ The window hash is built as W zip_with stages over shifted slices of a
 STAGED codepoint array (the word_ngrams pattern — HOF arguments bind
 once per row; an element_at-into-expression formulation re-evaluates
 the whole subtree per element under interpreted HOF eval, the measured
-O(T^2) trap). This is O(len*W) work; ``chunk_table_fast`` is the
-Arrow-batched production twin computing the identical numbers O(len)
-per doc, parity-tested.
+O(T^2) trap). This is O(len*W) work per doc.
 
 No min/max chunk-size clamps (documented simplification — production
 CDC adds them to bound the chunk-size distribution; they would be two
@@ -175,53 +173,6 @@ def cdc_dedup_ratio(docs: DataFrame, text_col: str = "text") -> DataFrame:
             "sum((cnt - 1) * len) * 1000000 div "
             "greatest(sum(cnt * len), 1)"
         ).cast("long").alias("dup_bytes_ppm"),
-    )
-
-
-def chunk_table_fast(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """Arrow-batched production twin of :func:`cdc_chunk_stats` — one
-    O(len) pass per doc (numpy sliding windows over int64 codepoints;
-    exact integers, bit-identical to the expression path)."""
-    import pandas as pd  # noqa: F401
-
-    pows = [CDC_B ** (CDC_W - 1 - j) for j in range(CDC_W)]
-
-    def part(batches):
-        import numpy as np
-
-        for pdf in batches:
-            out = []
-            for doc_id, text in zip(pdf["doc_id"], pdf[text_col]):
-                t = text if isinstance(text, str) else ""
-                n = len(t)
-                if n == 0:
-                    out.append((doc_id, 0, 0, 0))
-                    continue
-                if n >= CDC_W:
-                    codes = np.frombuffer(
-                        t.encode("utf-32-le"), dtype=np.uint32
-                    ).astype(np.int64)
-                    win = np.lib.stride_tricks.sliding_window_view(
-                        codes, CDC_W
-                    )
-                    hs = (win @ np.array(pows, dtype=np.int64)) % CDC_P
-                    ends = (np.nonzero(hs % CDC_D == 0)[0] + CDC_W).tolist()
-                else:
-                    ends = []
-                if not ends or ends[-1] != n:
-                    ends.append(n)
-                lens = [e - p for e, p in zip(ends, [0] + ends[:-1])]
-                out.append((doc_id, n, len(ends), max(lens)))
-            import pandas as _pd
-
-            yield _pd.DataFrame(
-                out,
-                columns=["doc_id", "n_chars", "n_chunks", "max_chunk_len"],
-            )
-
-    return docs.select("doc_id", text_col).mapInPandas(
-        part,
-        "doc_id long, n_chars long, n_chunks long, max_chunk_len long",
     )
 
 

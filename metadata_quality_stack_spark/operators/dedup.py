@@ -489,91 +489,39 @@ def drop_duplicated_lines(docs: DataFrame) -> DataFrame:
     )
 
 
-def simhash_fast(docs: DataFrame, n_bits: int = 16) -> DataFrame:
-    """Production SimHash: xxhash64 token hashes (one JVM intrinsic per
-    token) instead of the per-character interpreted polynomial fold the
-    oracle-checkable ``simhash`` uses — that HOF variant exists ONLY for
-    DuckDB-mirrorable gate parity (VERDICT r1 #5).
-
-    Shape: explode tokens -> hash -> conditional-sum vote aggregation.
-    Everything stays in whole-stage codegen; the groupBy partial-aggregates
-    map-side, so the shuffled payload is (doc_id, 16 small ints) per doc
-    per partition — never the tokens. Empty docs survive via explode_outer
-    (NULL hash votes nothing -> simhash 0)."""
-    # xxhash64(NULL) returns the seed (42), not NULL — guard explicitly so
-    # the no-token row from explode_outer contributes zero votes
-    ex = docs.select(
-        "doc_id", F.explode_outer(tokens(F.col("text"))).alias("t")
-    ).select(
-        "doc_id",
-        F.when(
-            F.col("t").isNotNull(), F.xxhash64(F.lower(F.col("t")))
-        ).alias("h"),
-    )
-    votes = [
-        F.sum(
-            F.when(F.col("h").isNull(), 0)
-            .when(F.shiftright("h", j).bitwiseAND(F.lit(1)) == 1, 1)
-            .otherwise(-1)
-        ).alias(f"v{j}")
-        for j in range(n_bits)
-    ]
-    sig = None
-    for j in range(n_bits):
-        term = F.when(F.col(f"v{j}") > 0, F.lit(1 << j)).otherwise(F.lit(0))
-        sig = term if sig is None else sig + term
-    return (
-        ex.groupBy("doc_id")
-        .agg(*votes)
-        .select("doc_id", sig.cast("long").alias("simhash"))
-    )
-
-
-def dedup_clusters(docs: DataFrame, max_iter: int = 15) -> DataFrame:
+def dedup_clusters(docs: DataFrame) -> DataFrame:
     """Duplicate-cluster assignment: connected components over the MinHash
-    LSH candidate graph via iterative min-label propagation. cluster =
-    min(doc_id) of the component — canonical keep-one-per-cluster dedup.
+    LSH candidate graph via alternating large-star/small-star rounds
+    (:func:`star_components`). cluster = min(doc_id) of the component —
+    canonical keep-one-per-cluster dedup.
 
-    Iterative dataflow (the one driver-side loop in the engine): each
-    round is one join + groupBy; rounds needed = graph diameter (dup
-    clusters are near-cliques, so 2-3 in practice); early-stops when no
-    label changes. localCheckpoint every round truncates lineage so the
-    plan does not grow with iterations. At 100 TB the same loop runs over
-    the banded pair table with labels bucketed by doc_id."""
+    100 TB shape: state is only the canonical (lo, hi) edge list — two
+    longs per candidate edge, text and signatures long gone; each round
+    is two node-keyed hash-shuffles; the edge count never exceeds the
+    input candidate count (star rounds only re-point edges). At the
+    fixed point the graph is a disjoint union of stars centered at
+    component minima (SoCC 2014, Thm 2), so labels read off the edge
+    list with one final aggregation — no label table is carried between
+    rounds, and docs without a candidate edge label themselves."""
     pairs = minhash_candidate_pairs(docs)
-    edges = pairs.union(
-        pairs.select(F.col("d2").alias("d1"), F.col("d1").alias("d2"))
+    edges = pairs.select(F.col("d1").alias("lo"), F.col("d2").alias("hi"))
+    stars, _rounds = star_components(edges)
+    labels = stars.groupBy("hi").agg(F.min("lo").alias("cluster"))
+    return (
+        docs.select("doc_id")
+        .join(
+            labels.select(F.col("hi").alias("doc_id"), "cluster"),
+            "doc_id",
+            "left",
+        )
+        .select(
+            "doc_id",
+            F.coalesce("cluster", F.col("doc_id")).alias("cluster"),
+        )
     )
-    labels = docs.select("doc_id", F.col("doc_id").alias("cluster"))
-    for _ in range(max_iter):
-        nbr = (
-            edges.join(labels, edges["d2"] == labels["doc_id"])
-            .groupBy("d1")
-            .agg(F.min("cluster").alias("nbr_min"))
-        )
-        # change detection folds into the same projection (old vs new label
-        # comparison), so each round is exactly one join + one groupBy —
-        # no second join-and-count pass over the labels
-        new_label = F.least(
-            F.col("cluster"), F.coalesce(F.col("nbr_min"), F.col("cluster"))
-        )
-        new = (
-            labels.join(nbr, labels["doc_id"] == nbr["d1"], "left")
-            .select(
-                "doc_id",
-                new_label.alias("cluster"),
-                (new_label < F.col("cluster")).alias("_changed"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        changed = new.filter(F.col("_changed")).count()  # reads the checkpoint
-        labels = new.drop("_changed")
-        if changed == 0:
-            break
-    return labels.select("doc_id", "cluster")
 
 
-def cluster_size_histogram(docs: DataFrame, max_iter: int = 15) -> DataFrame:
+def cluster_size_histogram(docs: DataFrame) -> DataFrame:
     """Dedup-audit readout: the distribution of near-dup cluster sizes
     (how many clusters of size 1, 2, 3, ...). The first thing an
     operator checks after a fuzzy-dedup run — a fat tail means template
@@ -581,7 +529,7 @@ def cluster_size_histogram(docs: DataFrame, max_iter: int = 15) -> DataFrame:
     clusters get hand-reviewed before their representatives are kept.
     Two tiny aggregations over the (doc_id, cluster) labels; text and
     signatures are long gone by this stage."""
-    clusters = dedup_clusters(docs, max_iter=max_iter)
+    clusters = dedup_clusters(docs)
     sizes = clusters.groupBy("cluster").agg(
         F.count("*").alias("cluster_size")
     )
@@ -590,7 +538,7 @@ def cluster_size_histogram(docs: DataFrame, max_iter: int = 15) -> DataFrame:
     )
 
 
-def fuzzy_dedup_keep(docs: DataFrame, max_iter: int = 15) -> DataFrame:
+def fuzzy_dedup_keep(docs: DataFrame) -> DataFrame:
     """Fuzzy (MinHash/LSH) deduplication as a SELECTION MASK: every doc
     with a keep flag, keeping exactly the min-doc_id representative of
     each near-duplicate cluster — the fuzzy twin of the exact-dedup
@@ -598,7 +546,7 @@ def fuzzy_dedup_keep(docs: DataFrame, max_iter: int = 15) -> DataFrame:
     (similarity.semantic_dedup). Non-duplicates are their own cluster
     and are always kept. The mask composes with the curation pipeline
     by a doc_id join (labels are ~16 bytes/doc; text never moves)."""
-    clusters = dedup_clusters(docs, max_iter=max_iter)
+    clusters = dedup_clusters(docs)
     return clusters.select(
         "doc_id", (F.col("cluster") == F.col("doc_id")).alias("keep")
     )
@@ -965,7 +913,7 @@ FROM arr a LEFT JOIN pd USING (doc_id)
 """
 
 
-def fuzzy_dedup_keep_best(docs: DataFrame, max_iter: int = 15) -> DataFrame:
+def fuzzy_dedup_keep_best(docs: DataFrame) -> DataFrame:
     """Quality-aware twin of :func:`fuzzy_dedup_keep`: per near-dup
     cluster keep the LONGEST member (word count; ties -> lowest doc_id)
     instead of the arbitrary min-id one — the representative rule
@@ -981,7 +929,7 @@ def fuzzy_dedup_keep_best(docs: DataFrame, max_iter: int = 15) -> DataFrame:
     Columns: doc_id, cluster, n_words, keep."""
     from pyspark.sql.window import Window
 
-    clusters = dedup_clusters(docs, max_iter=max_iter)
+    clusters = dedup_clusters(docs)
     scores = docs.select(
         "doc_id",
         F.greatest(F.size(tokens(F.col("text"))), F.lit(0))
@@ -1215,12 +1163,10 @@ def minhash_candidate_pairs_sql(
 # ----------------------------------------------------------------------
 # Connected components via alternating large-star / small-star rounds
 # (Kiveris, Lattanzi, Mirrokni, Rastogi, Vassilvitskii — "Connected
-# Components in MapReduce and Beyond", SoCC 2014). Same output contract
-# as dedup_clusters (cluster = min doc_id of the component) but the
-# round count is O(log n) instead of O(graph diameter): min-label
-# propagation pays one round PER HOP on chain-shaped duplicate graphs
+# Components in MapReduce and Beyond", SoCC 2014). The round count is
+# O(log n), not O(graph diameter): chain-shaped duplicate graphs
 # (templated page series A~B~C~... where only adjacent pairs share an
-# LSH bucket), while the star rounds contract distance geometrically.
+# LSH bucket) contract geometrically instead of one hop per round.
 # ----------------------------------------------------------------------
 def _large_star(edges: DataFrame) -> DataFrame:
     """One large-star round over canonical (lo < hi) edges: every node u
@@ -1273,12 +1219,13 @@ def star_components(
     round — two longs to the driver; xxhash64 is engine-internal but
     only gates the STOP decision, never output values, so cross-engine
     oracle parity is unaffected. localCheckpoint truncates lineage so
-    the plan stays round-independent."""
+    the plan stays round-independent. Raises RuntimeError when
+    ``max_iter`` rounds pass without the fixed point: a partial star
+    graph would label one component as several clusters."""
     edges = edges.localCheckpoint(eager=True)
-    prev, rounds = None, 0
-    for _ in range(max_iter):
+    prev = None
+    for rounds in range(1, max_iter + 1):
         edges = _small_star(_large_star(edges)).localCheckpoint(eager=True)
-        rounds += 1
         # bit_xor, not sum: order-free AND overflow-free under ANSI mode
         # (a long sum of 64-bit hashes overflows and throws in Spark 4)
         row = edges.agg(
@@ -1289,42 +1236,8 @@ def star_components(
         ).collect()[0]
         cur = (row.n, row.ck)
         if cur == prev:
-            break
+            return edges, rounds
         prev = cur
-    return edges, rounds
-
-
-def cc_star_labels(docs: DataFrame, max_iter: int = 20) -> DataFrame:
-    """(doc_id, cluster) labels for the MinHash-LSH candidate graph via
-    alternating large-star/small-star — the scale-grade twin of
-    dedup_clusters for graphs whose diameter is NOT small.
-
-    100 TB shape: state is only the canonical (lo, hi) edge list — two
-    longs per candidate edge, text and signatures long gone; each round
-    is two node-keyed hash-shuffles; the edge count never exceeds the
-    input candidate count (star rounds only re-point edges); the loop
-    early-stops at the fixed point detected by a count+checksum
-    aggregate (two longs to the driver per round); localCheckpoint
-    truncates lineage so the plan stays round-independent. At the fixed
-    point the graph is a disjoint union of stars centered at component
-    minima (SoCC 2014, Thm 2), so labels read off the edge list with
-    one final aggregation — no label table is carried between rounds,
-    which is the structural difference from dedup_clusters (labels
-    there, edges here).
-    """
-    pairs = minhash_candidate_pairs(docs)
-    edges = pairs.select(F.col("d1").alias("lo"), F.col("d2").alias("hi"))
-    stars, _rounds = star_components(edges, max_iter=max_iter)
-    labels = stars.groupBy("hi").agg(F.min("lo").alias("cluster"))
-    return (
-        docs.select("doc_id")
-        .join(
-            labels.select(F.col("hi").alias("doc_id"), "cluster"),
-            "doc_id",
-            "left",
-        )
-        .select(
-            "doc_id",
-            F.coalesce("cluster", F.col("doc_id")).alias("cluster"),
-        )
+    raise RuntimeError(
+        f"star_components: no fixed point after {max_iter} rounds"
     )

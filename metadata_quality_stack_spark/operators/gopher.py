@@ -302,13 +302,12 @@ def gopher_repetition_fast(docs: DataFrame) -> DataFrame:
     iterator pandas UDF computing all 12 signals per batch. The column
     version is the DuckDB-mirrorable gate variant; interpreted HOF eval
     costs ~7.5 ms/doc where the Python Counter pass costs a fraction of
-    that (measured in tests/test_gopher.py::test_fast_variant) — same
-    trade the repo makes for simhash/simhash_fast. Map-only: text
-    crosses the Arrow pipe once, zero Exchange. Results are integer-
-    exact-equal to the column version (parity-tested; tokenization is
-    the same [ \\t\\n\\r]+ split as functions/text.token_array, and
-    str.lower matches Java toLowerCase on the ASCII/Latin corpus
-    contract shared with functions/langid.py)."""
+    that (measured in tests/test_gopher.py::test_fast_variant).
+    Map-only: text crosses the Arrow pipe once, zero Exchange. Results
+    are integer-exact-equal to the column version (parity-tested;
+    tokenization is the same [ \\t\\n\\r]+ split as
+    functions/text.token_array, and str.lower matches Java toLowerCase
+    on the ASCII/Latin corpus contract shared with functions/langid.py)."""
     from pyspark.sql.functions import pandas_udf
 
     cols = [c.split(" ")[0] for c in _FAST_SCHEMA.split(", ")]

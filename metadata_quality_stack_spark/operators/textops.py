@@ -382,18 +382,6 @@ def rolling_fingerprint(docs: DataFrame) -> DataFrame:
     return docs.select("doc_id", _poly_hash(norm).alias("rolling_hash"))
 
 
-def rolling_fingerprint_fast(docs: DataFrame) -> DataFrame:
-    """Production fingerprint: xxhash64 over the normalized text — ONE JVM
-    intrinsic call per doc, fully codegen, map-only. The polynomial
-    ``rolling_fingerprint`` above iterates a per-character interpreted
-    lambda and exists only as the DuckDB-mirrorable gate variant
-    (VERDICT r1 #5); the job path must use this one."""
-    norm = F.trim(
-        F.regexp_replace(F.lower(F.col("text")), "[ \t\n\r]+", " ")
-    )
-    return docs.select("doc_id", F.xxhash64(norm).alias("rolling_hash"))
-
-
 def term_stats(docs: DataFrame, limit: int = 50) -> DataFrame:
     """Corpus vocabulary census: per-term frequency (tf), document
     frequency (df), and smoothed idf = ln((N+1)/(df+1)) — the readout a

@@ -462,10 +462,15 @@ def url_feature_census(
     fuses into the scan, composes with partition pruning; the score is
     an integer weighted sum so both engines agree exactly.
 
+    A null url reads as '' (every feature 0) in both engines: Spark's
+    rlike/contains would propagate the null where DuckDB's CASE maps
+    it to 0.
+
     Columns: doc_id, url_len, path_depth, n_digits, subdomain_depth,
     n_hyphens_host, has_query, spam_word_hit, url_spam_score."""
-    u = F.lower(F.col(url_col))
-    nu = normalize_url(F.col(url_col))
+    url = F.coalesce(F.col(url_col), F.lit(""))
+    u = F.lower(url)
+    nu = normalize_url(url)
     host = domain_of(nu)
     feats = pages.select(
         id_col,
@@ -497,9 +502,10 @@ def url_feature_census_sql(
     syn_pages: str, url_col: str = "url", id_col: str = "doc_id"
 ) -> str:
     """DuckDB mirror of :func:`url_feature_census` (same normalize chain,
-    same count-by-replace arithmetic, same weights)."""
-    u = f"lower({url_col})"
-    nu = normalize_url_sql(url_col)
+    same count-by-replace arithmetic, same weights, same null-as-'')."""
+    url = f"coalesce({url_col}, '')"
+    u = f"lower({url})"
+    nu = normalize_url_sql(url)
     host = f"regexp_replace(regexp_extract({nu}, '^([^/?&]+)', 1), ':[0-9]+$', '')"
     spam = "|".join(URL_SPAM_WORDS)
     return f"""

@@ -243,45 +243,3 @@ SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*)::BIGINT AS n_shared
 FROM s a JOIN s b ON a.sel_h = b.sel_h AND a.doc_id < b.doc_id
 GROUP BY 1, 2 HAVING count(*) >= {min_shared}
 """
-
-
-def selected_fingerprints_fast(
-    docs: DataFrame, k: int = WINNOW_K, w: int = WINNOW_W
-) -> DataFrame:
-    """Production twin: xxhash64 per gram (one JVM intrinsic, no md5 or
-    base conversion), masked to 28 bits so the packed-key selection is
-    byte-compatible with the gate variant's layout. Same plan shape —
-    only the hash family differs (gate keeps md5 because DuckDB can
-    replay it; the selection guarantee holds for any hash)."""
-    from pyspark.sql import Window
-
-    norm = _norm(F.col("text"))
-    idx = F.sequence(F.lit(1), F.length(norm) - F.lit(k - 1))
-    grams = F.transform(
-        idx,
-        lambda i: F.xxhash64(norm.substr(i, F.lit(k)))
-        .bitwiseAND(F.lit((1 << 28) - 1))
-        .cast("long"),
-    )
-    arr = F.when(F.length(norm) >= k, grams).otherwise(
-        F.array().cast("array<long>")
-    )
-    g = docs.select("doc_id", F.posexplode(arr).alias("pos", "h"))
-    key = F.col("h") * _POS_M + (F.lit(_POS_M - 1) - F.col("pos"))
-    frame = (
-        Window.partitionBy("doc_id")
-        .orderBy("pos")
-        .rowsBetween(Window.currentRow, w - 1)
-    )
-    win = g.select(
-        "doc_id",
-        F.min(key).over(frame).alias("winkey"),
-        F.count(F.lit(1)).over(frame).alias("cnt"),
-    ).filter(F.col("cnt") == w)
-    return win.select(
-        "doc_id",
-        (F.lit(_POS_M - 1) - F.col("winkey").bitwiseAND(F.lit(_POS_M - 1)))
-        .cast("long")
-        .alias("sel_pos"),
-        F.shiftright("winkey", POS_BITS).cast("long").alias("sel_h"),
-    ).distinct()

@@ -148,7 +148,6 @@ def curation_recipe(
     contamination_max: float = 0.2,
     val_pct: int = 5,
     test_pct: int = 5,
-    max_iter: int = 15,
 ) -> DataFrame:
     """The FULL training-data recipe (FineWeb/CCNet shape) as one
     composition — what a reference user runs end-to-end between a raw
@@ -167,7 +166,7 @@ def curation_recipe(
 
     Scale shape: document text never shuffles anywhere in the chain —
     the exact stage ships ~50 B fingerprint rows (plans/curate._stages),
-    the fuzzy stage ships shingle hashes and 16 B labels
+    the fuzzy stage ships shingle hashes and 16 B candidate edges
     (operators/dedup.dedup_clusters), decontamination broadcasts the
     eval shingle set, and the final stages are id-only joins + a map-only
     split projection derived from the fingerprint already in hand
@@ -185,7 +184,7 @@ def curation_recipe(
     stages = _stages(docs, meta_cols or {}, profile, None, None)
     canon = stages["deduped"]
     surv_docs = docs.join(canon.select("doc_id"), "doc_id", "semi")
-    fuzzy = fuzzy_dedup_keep(surv_docs, max_iter=max_iter)
+    fuzzy = fuzzy_dedup_keep(surv_docs)
     fsurv = canon.join(fuzzy.filter(F.col("keep")).select("doc_id"), "doc_id")
     bad = (
         decontaminate(docs)

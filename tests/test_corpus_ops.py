@@ -101,6 +101,15 @@ def test_term_stats_counts_and_idf(spark):
     assert ordered == ["sat", "the"]
 
 
+def test_rolling_fingerprint_normalization(spark):
+    # case, whitespace runs and edge whitespace all normalise away
+    rows = [(0, "Hello   World"), (1, "hello\nworld"), (2, " hello world ")]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    hashes = [r.rolling_hash for r in
+              textops.rolling_fingerprint(df).orderBy("doc_id").collect()]
+    assert hashes[0] == hashes[1] == hashes[2]
+
+
 def test_semantic_dedup_keeps_lowest_id(spark):
     # v0/v1 identical direction (cos=1); v2 orthogonal-ish
     dim = similarity.DIM

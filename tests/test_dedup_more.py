@@ -1,5 +1,6 @@
 """dedup_audit: LSH banding recall/precision vs exact Jaccard truth."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from metadata_quality_stack_spark.operators import dedup
@@ -99,9 +100,7 @@ def test_star_components_chain_converges_logarithmically(spark):
     """A 64-node path graph is the adversarial case for min-label
     propagation (63 rounds = the diameter); the large-star/small-star
     alternation must contract it to one star on node 0 in O(log n)
-    rounds. This is the property that makes cc_star_labels the
-    scale-grade CC — template-series near-dup chains are exactly this
-    shape."""
+    rounds. Template-series near-dup chains are exactly this shape."""
     n = 64
     chain = spark.createDataFrame(
         [(i, i + 1) for i in range(n - 1)], "lo long, hi long"
@@ -111,25 +110,35 @@ def test_star_components_chain_converges_logarithmically(spark):
     assert {(r.lo, r.hi) for r in got} == {(0, i) for i in range(1, n)}
     # fixed-point detection costs one extra confirming round
     assert rounds <= 12, f"star rounds blew the log bound: {rounds}"
+    # a round bound that cannot reach the fixed point fails loudly
+    # instead of returning a partial star graph (= split clusters)
+    with pytest.raises(RuntimeError, match="after 2 rounds"):
+        dedup.star_components(chain, max_iter=2)
 
 
-def test_cc_star_matches_label_propagation(spark):
-    """Both CC algorithms must land on the identical fixed point
-    (cluster = min doc_id per component) over the real LSH candidate
-    graph of the sf0.001 documents table."""
+def test_dedup_clusters_matches_oracle(spark):
+    """The star rounds must land on the fixed point the iteration-free
+    recursive-reachability oracle states (cluster = min doc_id per
+    component) over the real LSH candidate graph of the sf0.001
+    documents table."""
+    import duckdb
+
+    import __spark_entry__ as entry
+
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    a = {
-        (r.doc_id, r.cluster) for r in dedup.cc_star_labels(docs).collect()
-    }
-    b = {
+    got = {
         (r.doc_id, r.cluster) for r in dedup.dedup_clusters(docs).collect()
     }
-    assert a == b
+    con = duckdb.connect()
+    con.register("documents", docs.toPandas())
+    want = set(con.execute(entry.oracle_sql()["dedup_clusters"]).fetchall())
+    assert got == want
+    assert any(d != c for d, c in got), "no multi-doc cluster exercised"
 
 
 def test_star_components_empty_and_singleton(spark):
     """Hostile inputs: an empty edge list must fix immediately, and
-    cc_star_labels must label every doc its own cluster when no
+    dedup_clusters must label every doc its own cluster when no
     candidate pairs exist."""
     empty = spark.createDataFrame([], "lo long, hi long")
     stars, rounds = dedup.star_components(empty, max_iter=5)
@@ -138,5 +147,5 @@ def test_star_components_empty_and_singleton(spark):
         [(1, "completely unique text that shares no shingles with anyone")],
         "doc_id long, text string",
     )
-    got = dedup.cc_star_labels(lone).collect()
+    got = dedup.dedup_clusters(lone).collect()
     assert [(r.doc_id, r.cluster) for r in got] == [(1, 1)]

@@ -3,6 +3,9 @@ needed): every queries() entry has a DuckDB oracle except the documented
 rows-only case, the oracle dict has no orphans, and the priority prefix
 that steers the driver's ~50-query verification window is well-formed."""
 
+import ast
+from pathlib import Path
+
 import __spark_entry__ as entry
 
 # r5: the rows-only set is EMPTY — `full_pipeline` (model-UDF pipeline,
@@ -60,3 +63,40 @@ def test_driver_verified_reads_round_files():
 def test_oracle_sql_is_text():
     for name, sql in entry.oracle_sql().items():
         assert isinstance(sql, str) and sql.strip(), name
+
+
+def _referenced_names(tree: ast.AST) -> set[str]:
+    return {
+        n.id if isinstance(n, ast.Name) else n.attr
+        for n in ast.walk(tree)
+        if isinstance(n, (ast.Name, ast.Attribute))
+    }
+
+
+def test_every_public_fast_variant_is_used():
+    """A public ``*_fast`` operator is a second implementation of some
+    other operator. It stays only while it is registered in queries()
+    (so the gate checks it) or called from package code; an uncalled
+    twin is dead weight that no gate or job exercises. Static: parses
+    the sources, no Spark session."""
+    root = Path(entry.__file__).resolve().parent
+    pkg = root / "metadata_quality_stack_spark"
+    fast = {
+        node.name
+        for f in sorted((pkg / "operators").glob("*.py"))
+        for node in ast.parse(f.read_text()).body
+        if isinstance(node, ast.FunctionDef)
+        and node.name.endswith("_fast")
+        and not node.name.startswith("_")
+    }
+    assert fast, "no *_fast operators found under operators/"
+    used = set()
+    for f in [*pkg.rglob("*.py"), root / "job.py"]:
+        used |= _referenced_names(ast.parse(f.read_text()))
+    entry_tree = ast.parse((root / "__spark_entry__.py").read_text())
+    (queries_def,) = [
+        n for n in entry_tree.body
+        if isinstance(n, ast.FunctionDef) and n.name == "queries"
+    ]
+    used |= _referenced_names(queries_def)
+    assert not fast - used, f"uncalled *_fast operators: {sorted(fast - used)}"

@@ -393,3 +393,12 @@ def test_bpe_pack_sequences_shard_exchange_is_int_only(spark):
         assert "text#" not in blk and "token_ids#" not in blk, (
             f"Exchange ({i}) shuffles text/token-id strings:\n{blk}"
         )
+
+
+def test_ivf_assign_is_shuffle_free(spark):
+    from metadata_quality_stack_spark.operators import similarity
+
+    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
+    plan = plan_str(similarity.ivf_assign(emb), "simple")
+    assert "Exchange" not in plan  # argmax is a per-row projection now
+    assert "Window" not in plan

@@ -267,7 +267,10 @@ def test_rescore_delta_scores_only_churn(spark):
 
 
 def test_url_feature_census_hostile_and_spam_scoring(spark):
-    from metadata_quality_stack_spark.operators.urlops import url_feature_census
+    from metadata_quality_stack_spark.operators.urlops import (
+        url_feature_census,
+        url_feature_census_sql,
+    )
 
     rows = [
         # clean page: short, no digits, no query
@@ -278,6 +281,7 @@ def test_url_feature_census_hostile_and_spam_scoring(spark):
         # long url crossing the 96-char line, no other flags
         (2, "https://example.org/" + "a" * 90),
         (3, "example.com"),  # bare host, no scheme/path
+        (4, None),  # null url: every feature 0, not NULL, in both engines
     ]
     docs = spark.createDataFrame(rows, "doc_id long, url string")
     out = {r["doc_id"]: r.asDict() for r in url_feature_census(docs).collect()}
@@ -292,3 +296,9 @@ def test_url_feature_census_hostile_and_spam_scoring(spark):
     assert out[1]["url_spam_score"] == 5
     assert out[2]["url_spam_score"] == 1  # length only
     assert out[3]["path_depth"] == 0 and out[3]["url_spam_score"] == 0
+    assert all(v == 0 for k, v in out[4].items() if k != "doc_id")
+    con = duckdb.connect()
+    con.register("pages", docs.toPandas())
+    sql = url_feature_census_sql("SELECT * FROM pages")
+    want = {r[0]: r for r in con.execute(sql).fetchall()}
+    assert {d: tuple(r.values()) for d, r in out.items()} == want

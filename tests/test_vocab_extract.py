@@ -126,7 +126,7 @@ def test_pipeline_accepts_html_only_input(spark):
 
 def test_dedup_clusters_transitive(spark):
     """A near-dup chain A~B, B~C (A and C not direct candidates) must land
-    in ONE cluster = min(doc_id): label propagation crosses >1 hop."""
+    in ONE cluster = min(doc_id): connected components cross >1 hop."""
     from pyspark.sql import Row
 
     from metadata_quality_stack_spark.operators import dedup

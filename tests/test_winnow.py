@@ -101,23 +101,6 @@ def test_density_bounds_and_hostile_rows(spark):
     assert all(r.n_grams == 0 and r.n_selected == 0 for r in hostile)
 
 
-def test_fast_twin_same_shape_and_bounds(spark):
-    # xxhash64 family: selections differ from the md5 gate variant but
-    # the density law and the per-doc window plan are identical
-    docs = spark.read.parquet(DOCS).filter(F.col("doc_id") < 100)
-    sel = winnow.selected_fingerprints_fast(docs)
-    per = sel.groupBy("doc_id").count().collect()
-    stats = {
-        r.doc_id: r.n_windows
-        for r in winnow.winnow_fingerprints(docs).collect()
-    }
-    for r in per:
-        assert r["count"] <= stats[r.doc_id]
-        assert r["count"] * winnow.WINNOW_W >= stats[r.doc_id]
-    plan = sel._jdf.queryExecution().executedPlan().toString()
-    assert "SinglePartition" not in plan
-
-
 def test_window_plan_partitioned_by_doc(spark):
     docs = spark.read.parquet(DOCS)
     sel = winnow.selected_fingerprints(docs)
