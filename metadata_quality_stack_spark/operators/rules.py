@@ -31,6 +31,7 @@ from metadata_quality_stack_spark.functions.text import (
     safe_div,
     token_columns,
 )
+from metadata_quality_stack_spark.session import jvm_cached
 
 
 def _as_pct(cond: Column) -> Column:
@@ -201,6 +202,20 @@ def drop_reasons(pcts: dict[str, Column], profile: str) -> Column:
 
 
 CSE_GUARD = "_cse_guard"
+# columns of quality_pipeline's model stage that the model rules read
+MODEL_COLS = ("lang_pred", "lang_conf", "ppl")
+# what final_scores appends to its carry columns, in output order
+SCORE_COLS = (*config.DIMENSIONS, "total_score", "rating", "keep", "drop_reasons")
+
+
+def stage_select(carry, cols: dict[str, Column]) -> tuple[Column, ...]:
+    """The select-list of :func:`stage`: ``carry`` names, ``cols`` under
+    their keys, then the guard column."""
+    return (
+        *[F.col(c) for c in carry],
+        *[v.alias(k) for k, v in cols.items()],
+        F.rand(42).alias(CSE_GUARD),
+    )
 
 
 def stage(df: DataFrame, carry: list[str], cols: dict[str, Column]) -> DataFrame:
@@ -213,38 +228,32 @@ def stage(df: DataFrame, carry: list[str], cols: dict[str, Column]) -> DataFrame
     reference (measured 3-5x slowdown). Staged projections chain inside
     ONE codegen stage — intermediates become local variables, computed
     once per row, with no shuffle and no caching.
+
+    ``stage`` itself takes live Columns and builds every call. The
+    scoring stages are built by :func:`scoring_selects` and
+    :func:`final_select` instead, which cache their select-lists per
+    process (``session.jvm_cached``: keyed on the argument names and the
+    py4j gateway), so a repeat call only folds ``df.select`` over them.
     """
-    return df.select(
-        *[F.col(c) for c in carry],
-        *[v.alias(k) for k, v in cols.items()],
-        F.rand(42).alias(CSE_GUARD),
-    )
+    return df.select(*stage_select(carry, cols))
 
 
-def scoring_stages(
-    df: DataFrame,
+@jvm_cached()
+def scoring_selects(
+    carry: tuple[str, ...],
     text_col: str,
-    meta_cols: dict[str, str],
+    meta_cols: tuple[tuple[str, str | None], ...],
     profile: str,
-    extra_pcts=None,
-    rule_ids=None,
-) -> DataFrame:
-    """feats -> pcts staged projections; returns df carrying pct_<rule>
-    columns for every rule of ``profile`` (model pcts via ``extra_pcts``:
-    fn(meta) -> dict of Columns evaluated against the feats stage).
-    ``rule_ids`` restricts the projected pct columns to a subset of the
-    profile's rules — callers whose model pcts only exist after a join
-    (the micro pipeline) stage the native pcts here and attach the model
-    pcts post-join, so text never crosses that join's Exchange."""
-    carry = list(df.columns)
-    meta = {k: (F.col(v) if v else None) for k, v in meta_cols.items()}
+    rule_ids: frozenset[str] | None,
+) -> tuple[tuple[Column, ...], ...]:
+    """The select-lists of :func:`scoring_stages`, from names only."""
+    meta = {k: (F.col(v) if v else None) for k, v in meta_cols}
     # stage 0a: lower once; stage 0b: tokenize the lowered text ONCE
     # (raw tokens are never materialized — word_count is array-free);
     # stage 1: all scalar features over text + the materialized arrays.
     # All three stay inside one WholeStageCodegen span (no HOFs anywhere).
-    lowered = stage(df, carry, lower_column(F.col(text_col)))
-    toked = stage(
-        lowered,
+    lowered = stage_select(carry, lower_column(F.col(text_col)))
+    toked = stage_select(
         [*carry, "_low_text"],
         token_columns(F.col(text_col), F.col("_low_text")),
     )
@@ -253,33 +262,68 @@ def scoring_stages(
         lows=F.col("_lows"),
         low_text=F.col("_low_text"),
     )
-    staged = stage(toked, carry, feats)
-    pcts = native_rule_percentages({k: F.col(k) for k in feats}, meta)
-    if extra_pcts:
-        pcts.update(extra_pcts(meta))
+    staged = stage_select(carry, feats)
     rules = config.RULES_BY_PROFILE[profile]
     if rule_ids is not None:
         rules = [r for r in rules if r["id"] in rule_ids]
-    return stage(staged, carry, {f"pct_{r['id']}": pcts[r["id"]] for r in rules})
+    pcts = native_rule_percentages({k: F.col(k) for k in feats}, meta)
+    if any(r["kind"] == "model" for r in rules):
+        pcts.update(
+            model_rule_percentages(meta.get("lang"), *[F.col(c) for c in MODEL_COLS])
+        )
+    pct_stage = stage_select(carry, {f"pct_{r['id']}": pcts[r["id"]] for r in rules})
+    return lowered, toked, staged, pct_stage
+
+
+def scoring_stages(
+    df: DataFrame,
+    text_col: str,
+    meta_cols: dict[str, str | None],
+    profile: str,
+    rule_ids=None,
+) -> DataFrame:
+    """feats -> pcts staged projections; returns df carrying pct_<rule>
+    columns for every rule of ``profile``. Model rules read the
+    ``MODEL_COLS`` that quality_pipeline's model stage adds.
+    ``rule_ids`` restricts the projected pct columns to a subset of the
+    profile's rules — callers whose model pcts come from elsewhere (the
+    micro pipeline) stage the native pcts here and attach their own
+    model pcts after. The select-lists are cached
+    (:func:`scoring_selects`)."""
+    plan = scoring_selects(
+        tuple(df.columns),
+        text_col,
+        tuple(sorted(meta_cols.items())),
+        profile,
+        None if rule_ids is None else frozenset(rule_ids),
+    )
+    for cols in plan:
+        df = df.select(*cols)
+    return df
+
+
+@jvm_cached()
+def final_select(
+    carry: tuple[str, ...], profile: str, keep_pcts: bool
+) -> tuple[Column, ...]:
+    """The select-list of :func:`final_scores`, from names only."""
+    rules = config.RULES_BY_PROFILE[profile]
+    pcts = {r["id"]: F.col(f"pct_{r['id']}") for r in rules}
+    scores = score_columns(pcts, profile)
+    cols = [F.col(c) for c in carry]
+    if keep_pcts:
+        cols += [pcts[r["id"]].alias(f"pct_{r['id']}") for r in rules]
+    scores["drop_reasons"] = drop_reasons(pcts, profile)
+    cols += [scores[c].alias(c) for c in SCORE_COLS]
+    return tuple(cols)
 
 
 def final_scores(
     df: DataFrame, carry: list[str], profile: str, keep_pcts: bool = False
 ) -> DataFrame:
-    """Rollup projection over materialized pct_* attribute columns."""
-    pcts = {r["id"]: F.col(f"pct_{r['id']}") for r in config.RULES_BY_PROFILE[profile]}
-    scores = score_columns(pcts, profile)
-    cols = [F.col(c) for c in carry]
-    if keep_pcts:
-        cols += [pcts[r["id"]].alias(f"pct_{r['id']}") for r in config.RULES_BY_PROFILE[profile]]
-    cols += [scores[d].alias(d) for d in config.DIMENSIONS]
-    cols += [
-        scores["total_score"].alias("total_score"),
-        scores["rating"].alias("rating"),
-        scores["keep"].alias("keep"),
-        drop_reasons(pcts, profile).alias("drop_reasons"),
-    ]
-    return df.select(*cols)
+    """Rollup projection over materialized pct_* attribute columns; the
+    select-list is cached (:func:`final_select`)."""
+    return df.select(*final_select(tuple(carry), profile, keep_pcts))
 
 
 _BARRIER_SEQ = 0

@@ -685,9 +685,11 @@ def eval_set_stratified(
     quota sibling (deterministic PREFERENCE order); this one wants the
     opposite: an order uncorrelated with anything.
 
-    One shuffle on the stratum key (bounded strata); the skewed-stratum
-    window cost is capped by N — row_number short-circuits nothing, but
-    only (id, stratum, md5) triples move, never text.
+    One shuffle on the stratum key (bounded strata), and the skewed-
+    stratum cost is capped by N: Spark 4 plans the row_number <= N
+    filter as a ``WindowGroupLimit … Partial`` below the Exchange, so
+    each map task ships at most N (id, stratum, md5) rows per stratum,
+    never text (pinned in tests/test_plan_shapes.py).
 
     Columns: strata (aliased from strata_col), doc_id,
     rank_in_stratum (1-based)."""

@@ -444,6 +444,11 @@ def _count_char(col: Column, ch: str) -> Column:
 
 
 URL_SPAM_WORDS = ("porn", "xxx", "casino", "viagra", "poker", "escort")
+# a spam word counts only as a whole url segment: both ends sit at the
+# url's start/end or at a '.', '/' or '-' separator, so 'escorted-tours'
+# and 'pokerun' do not hit. One pattern for both engines (Java regex and
+# DuckDB's RE2 read it the same way).
+URL_SPAM_PATTERN = "(^|[./-])(" + "|".join(URL_SPAM_WORDS) + ")([./-]|$)"
 
 
 def url_feature_census(
@@ -458,13 +463,18 @@ def url_feature_census(
     later.
 
     All-native single-pass string expressions on the ~100-byte url
-    (count-by-replace and one literal-alternation rlike), MAP-ONLY —
+    (count-by-replace and one separator-anchored alternation rlike,
+    ``URL_SPAM_PATTERN``), MAP-ONLY —
     fuses into the scan, composes with partition pruning; the score is
     an integer weighted sum so both engines agree exactly.
 
     A null url reads as '' (every feature 0) in both engines: Spark's
     rlike/contains would propagate the null where DuckDB's CASE maps
     it to 0.
+
+    ``subdomain_depth`` counts the dots of the normalized host, not its
+    subdomain labels: after the leading ``www.`` is dropped, a bare
+    ``example.com`` already reads 1 and ``a.b.example.com`` reads 3.
 
     Columns: doc_id, url_len, path_depth, n_digits, subdomain_depth,
     n_hyphens_host, has_query, spam_word_hit, url_spam_score."""
@@ -484,7 +494,7 @@ def url_feature_census(
         _count_char(host, ".").alias("subdomain_depth"),
         _count_char(host, "-").alias("n_hyphens_host"),
         nu.contains("?").cast("int").alias("has_query"),
-        u.rlike("(" + "|".join(URL_SPAM_WORDS) + ")")
+        u.rlike(URL_SPAM_PATTERN)
         .cast("int")
         .alias("spam_word_hit"),
     )
@@ -507,7 +517,6 @@ def url_feature_census_sql(
     u = f"lower({url})"
     nu = normalize_url_sql(url)
     host = f"regexp_replace(regexp_extract({nu}, '^([^/?&]+)', 1), ':[0-9]+$', '')"
-    spam = "|".join(URL_SPAM_WORDS)
     return f"""
 WITH feats AS (
   SELECT {id_col},
@@ -520,7 +529,7 @@ WITH feats AS (
     (length({host}) - length(replace({host}, '-', '')))::BIGINT
       AS n_hyphens_host,
     (CASE WHEN contains({nu}, '?') THEN 1 ELSE 0 END)::INT AS has_query,
-    (CASE WHEN regexp_matches({u}, '({spam})') THEN 1 ELSE 0 END)::INT
+    (CASE WHEN regexp_matches({u}, '{URL_SPAM_PATTERN}') THEN 1 ELSE 0 END)::INT
       AS spam_word_hit
   FROM ({syn_pages}))
 SELECT *, (spam_word_hit * 2

@@ -1,14 +1,20 @@
 """The full quality-filter pipeline (north rule §3.4 target lifecycle):
 
-    read pages -> PII scrub -> model scorers (langid, perplexity UDFs)
-    -> native heuristic rules (one projection) -> weighted rollup
-    -> rating -> keep/drop + drop_reasons -> results + per-partition metrics
+    read pages -> model scorers (langid + perplexity, one fused Arrow UDF)
+    -> native heuristic rules (staged projections) -> weighted rollup
+    -> rating -> keep/drop + drop_reasons -> PII scrub (+ toxicity mask)
+    -> results + per-partition metrics
 
 Plan shape at 100 TB: the whole per-document stage is map-only (scan ->
-project -> two Arrow UDF stages -> project); zero shuffles until the
+project -> one Arrow UDF stage -> project); zero shuffles until the
 metrics sidecar groupBys. Filters on e.g. ``lang`` push down to the
 parquet/Iceberg scan; the ``html`` column is never read unless text
 extraction is requested (column pruning).
+
+Every select-list of the pipeline is built once per process and reused
+(:func:`pipeline_selects`, ``session.jvm_cached``), so a call costs a
+few py4j round trips per projection instead of ~6,400 for rebuilding
+the ~1,300-node expression tree.
 """
 
 from __future__ import annotations
@@ -16,16 +22,18 @@ from __future__ import annotations
 from typing import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from metadata_quality_stack_spark import config
-from metadata_quality_stack_spark.functions.scrub import scrub_columns
+from metadata_quality_stack_spark.functions.scrub import scrub_columns, toxicity_columns
 from metadata_quality_stack_spark.operators.rules import (
-    final_scores,
-    model_rule_percentages,
-    scoring_stages,
+    MODEL_COLS,
+    SCORE_COLS,
+    final_select,
+    scoring_selects,
+    stage_select,
 )
+from metadata_quality_stack_spark.session import jvm_cached
 
 
 def model_scores_udf():
@@ -52,6 +60,81 @@ def model_scores_udf():
     return _udf
 
 
+@jvm_cached(per_context=True)
+def model_scores_column(text_col: str) -> Column:
+    """``model_scores_udf()`` applied to ``text_col``, aliased ``_m``.
+    Cached per live SparkContext: the wrapped Python function binds that
+    context's accumulator."""
+    return model_scores_udf()(F.col(text_col)).alias("_m")
+
+
+@jvm_cached()
+def pipeline_selects(
+    columns: tuple[str, ...],
+    text_col: str,
+    id_cols: tuple[str, ...],
+    lang_col: str | None,
+    source_col: str | None,
+    n_chars_col: str | None,
+    profile: str,
+    include_text: bool,
+    toxic_terms: tuple[str, ...],
+) -> tuple[tuple, tuple, tuple]:
+    """:func:`quality_pipeline`'s select-lists, from names only:
+    ``(before, model_carry, after)``. ``before`` extracts the text when
+    only ``html`` is there; the model stage selects ``model_carry`` plus
+    :func:`model_scores_column`; ``after`` holds the rest in order."""
+    before = ()
+    if text_col not in columns and "html" in columns:
+        from metadata_quality_stack_spark.sources.pages import extract_text_column
+
+        before = ((
+            *[F.col(c) for c in columns if c != "html"],
+            extract_text_column(F.col("html")).alias(text_col),
+        ),)
+    needed = [*id_cols, *(c for c in (lang_col, source_col, n_chars_col) if c), text_col]
+    model_carry = tuple(F.col(c) for c in needed)
+
+    # Stage 1 — model scorers (the only Python in the plan; Arrow-batched,
+    # iterator-form so weights build once per worker). Both models run in
+    # ONE fused UDF: the document text crosses the JVM<->Python Arrow pipe
+    # once, not once per model — at 100 TB the text transfer IS the cost
+    # of this stage. The struct result is materialized once then
+    # field-extracted, so the UDF executes once per row.
+    fields = (*model_carry, *[F.col(f"_m.{c}").alias(c) for c in MODEL_COLS])
+
+    # Stages 2-3 — features then rule percentages (model rules included),
+    # as staged projections (codegen locals: each feature computed once
+    # per row; see rules.stage)
+    meta_cols = {"lang": lang_col, "source": source_col, "n_chars": n_chars_col}
+    scoring = scoring_selects(
+        (*needed, *MODEL_COLS), text_col, tuple(sorted(meta_cols.items())), profile, None
+    )
+
+    # Stage 4 — rollup, then the scrub in the final projection
+    carry = [*id_cols, *([lang_col] if lang_col else []), *MODEL_COLS, text_col]
+    rollup = final_select(tuple(carry), profile, False)
+    scrub = scrub_columns(F.col(text_col))
+    counts = ("scrub_count", "scrub_email_count", "scrub_ip_count", "scrub_phone_count")
+    base = [c for c in (*carry, *SCORE_COLS) if c != text_col]
+    out = [*(F.col(c) for c in base), *(scrub[c].alias(c) for c in counts)]
+    base += counts
+    if include_text or toxic_terms:
+        out.append(scrub["scrubbed_text"].alias("scrubbed_text"))
+    after = [fields, *scoring, rollup, tuple(out)]
+    if toxic_terms:
+        # Toxicity masking (north rule: PII/toxicity scrub) runs AFTER the
+        # PII chain, on the scrubbed text. The stage() barrier keeps
+        # CollapseProject from inlining the whole scrub when-chain into the
+        # three toxicity references — scrubbed text is computed once.
+        tox = toxicity_columns(F.col("_scrubbed"), list(toxic_terms))
+        final = [F.col(c) for c in base] + [tox["tox_count"].alias("tox_count")]
+        if include_text:
+            final.append(tox["detoxed_text"].alias("scrubbed_text"))
+        after += [stage_select(base, {"_scrubbed": F.col("scrubbed_text")}), tuple(final)]
+    return before, model_carry, tuple(after)
+
+
 def quality_pipeline(
     df: DataFrame,
     text_col: str = "text",
@@ -69,74 +152,22 @@ def quality_pipeline(
 
     If ``text_col`` is absent but an ``html`` binary column exists, text is
     extracted first via the native byte-identical extractor
-    (sources.pages.extract_text_column) — still map-only, still codegen."""
-    if text_col not in df.columns and "html" in df.columns:
-        from metadata_quality_stack_spark.sources.pages import extract_text_column
+    (sources.pages.extract_text_column) — still map-only, still codegen.
 
-        df = df.withColumn(text_col, extract_text_column(F.col("html"))).drop("html")
-    text = F.col(text_col)
-
-    # Stage 1 — model scorers (the only Python in the plan; Arrow-batched,
-    # iterator-form so weights build once per worker). Both models run in
-    # ONE fused UDF: the document text crosses the JVM<->Python Arrow pipe
-    # once, not once per model — at 100 TB the text transfer IS the cost
-    # of this stage. The struct result is materialized once then
-    # field-extracted, so the UDF executes once per row.
-    df1 = (
-        df.withColumn("_m", model_scores_udf()(text))
-        .withColumn("lang_pred", F.col("_m.lang_pred"))
-        .withColumn("lang_conf", F.col("_m.lang_conf"))
-        .withColumn("ppl", F.col("_m.ppl"))
-        .drop("_m")
-        .select(*id_cols, *([lang_col] if lang_col else []),
-                *(c for c in (source_col, n_chars_col) if c),
-                text_col, "lang_pred", "lang_conf", "ppl")
+    The plan is a fold of ``df.select`` over cached select-lists. They
+    are keyed on ``df.columns`` and the other arguments plus the py4j
+    gateway (:func:`pipeline_selects`); the model UDF Column is keyed on
+    ``text_col`` and the live SparkContext (:func:`model_scores_column`)."""
+    before, model_carry, after = pipeline_selects(
+        tuple(df.columns), text_col, tuple(id_cols), lang_col, source_col,
+        n_chars_col, profile, include_text, tuple(toxic_terms or ()),
     )
-
-    # Stages 2-3 — features then rule percentages, as staged projections
-    # (codegen locals: each feature computed once per row; see rules.stage)
-    meta_cols = {"lang": lang_col, "source": source_col, "n_chars": n_chars_col}
-
-    def model_pcts(meta):
-        return model_rule_percentages(
-            meta["lang"], F.col("lang_pred"), F.col("lang_conf"), F.col("ppl")
-        )
-
-    with_pcts = scoring_stages(df1, text_col, meta_cols, profile, extra_pcts=model_pcts)
-
-    # Stage 4 — rollup + scrub in the final projection
-    carry = [*id_cols]
-    if lang_col:
-        carry.append(lang_col)
-    carry += ["lang_pred", "lang_conf", "ppl", text_col]
-    scored = final_scores(with_pcts, carry, profile)
-
-    scrub = scrub_columns(F.col(text_col))
-    out_cols = [F.col(c) for c in scored.columns if c != text_col] + [
-        scrub["scrub_count"].alias("scrub_count"),
-        scrub["scrub_email_count"].alias("scrub_email_count"),
-        scrub["scrub_ip_count"].alias("scrub_ip_count"),
-        scrub["scrub_phone_count"].alias("scrub_phone_count"),
-    ]
-    if include_text or toxic_terms:
-        out_cols.append(scrub["scrubbed_text"].alias("scrubbed_text"))
-    out = scored.select(*out_cols)
-    if toxic_terms:
-        # Toxicity masking (north rule: PII/toxicity scrub) runs AFTER the
-        # PII chain, on the scrubbed text. The stage() barrier keeps
-        # CollapseProject from inlining the whole scrub when-chain into the
-        # three toxicity references — scrubbed text is computed once.
-        from metadata_quality_stack_spark.functions.scrub import toxicity_columns
-        from metadata_quality_stack_spark.operators.rules import stage
-
-        base = [c for c in out.columns if c != "scrubbed_text"]
-        pre = stage(out, base, {"_scrubbed": F.col("scrubbed_text")})
-        tox = toxicity_columns(F.col("_scrubbed"), toxic_terms)
-        final = [F.col(c) for c in base] + [tox["tox_count"].alias("tox_count")]
-        if include_text:
-            final.append(tox["detoxed_text"].alias("scrubbed_text"))
-        out = pre.select(*final)
-    return out
+    for cols in before:
+        df = df.select(*cols)
+    df = df.select(*model_carry, model_scores_column(text_col))
+    for cols in after:
+        df = df.select(*cols)
+    return df
 
 
 def partition_metrics(result: DataFrame, lang_col: str = "lang_pred") -> dict[str, DataFrame]:

@@ -8,8 +8,10 @@ default, UTC session timezone for deterministic timestamp semantics.
 
 from __future__ import annotations
 
+import functools
 import os
 
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
 
 
@@ -49,3 +51,34 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def jvm_cached(per_context: bool = False):
+    """Bounded lru-cache for a builder of Column select-lists.
+
+    A PySpark Column is a handle on a JVM object, and building one costs
+    several py4j round trips (the call itself plus the call-site capture
+    of Spark 4's ``_with_origin``); the scoring plan is ~1,300 of them.
+    The builder's arguments must be hashable names, never Columns or
+    DataFrames. The cache key adds the py4j gateway, so a relaunched JVM
+    rebuilds instead of sending dead object ids. Native Columns outlive
+    ``spark.stop()``; a Column that binds SparkContext state (a Python
+    UDF binds the context's accumulator) passes ``per_context=True`` and
+    is keyed on the live SparkContext instead. Callers receive shared
+    tuples and must not mutate them.
+    """
+
+    def deco(build):
+        @functools.lru_cache(maxsize=64)
+        def keyed(_scope, *args):
+            return build(*args)
+
+        @functools.wraps(build)
+        def cached(*args):
+            scope = SparkContext._active_spark_context if per_context else SparkContext._gateway
+            return keyed(scope, *args)
+
+        cached.cache_info = keyed.cache_info
+        return cached
+
+    return deco

@@ -6,7 +6,7 @@ no watermarks, windows, or stateful streams anywhere in
 resumable incremental runs. This module exists because a web-scale
 quality filter in production typically ALSO runs as a continuous ingest:
 the per-document stage of :func:`quality_pipeline` is map-only (scan →
-project → two Arrow UDF stages → project, zero shuffles), so it lifts
+project → one fused Arrow UDF stage → project, zero shuffles), so it lifts
 verbatim onto ``readStream`` with exactly-once file-sink semantics — the
 streaming checkpoint plays the role the batch path's snapshot manifest
 plays (sources/sink.py).

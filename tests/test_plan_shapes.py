@@ -402,3 +402,21 @@ def test_ivf_assign_is_shuffle_free(spark):
     plan = plan_str(similarity.ivf_assign(emb), "simple")
     assert "Exchange" not in plan  # argmax is a per-row projection now
     assert "Window" not in plan
+
+
+def test_eval_set_stratified_limits_each_stratum_before_exchange(spark):
+    """The per-stratum top-N is cut map-side: a WindowGroupLimit in
+    Partial mode sits below the stratum Exchange, so a skewed stratum
+    ships at most N rows per map task instead of all of them."""
+    from metadata_quality_stack_spark.operators.sampling import eval_set_stratified
+
+    docs = spark.createDataFrame(
+        [(i, "en" if i % 10 else "de") for i in range(400)], "doc_id long, lang string"
+    )
+    lines = plan_str(eval_set_stratified(docs, n_per_stratum=5), "simple").splitlines()
+    exchange = [i for i, ln in enumerate(lines) if "Exchange hashpartitioning(strata" in ln]
+    partial = [
+        i for i, ln in enumerate(lines) if "WindowGroupLimit" in ln and ln.rstrip().endswith("Partial")
+    ]
+    assert len(exchange) == 1 and partial, "\n".join(lines)
+    assert partial[0] > exchange[0], "\n".join(lines)  # below = later in the tree

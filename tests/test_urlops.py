@@ -282,6 +282,11 @@ def test_url_feature_census_hostile_and_spam_scoring(spark):
         (2, "https://example.org/" + "a" * 90),
         (3, "example.com"),  # bare host, no scheme/path
         (4, None),  # null url: every feature 0, not NULL, in both engines
+        # spam words inside longer words are not hits: the match is
+        # anchored at '.', '/', '-' or the url's ends
+        (5, "https://escorted-tours.com/italy"),
+        (6, "https://example.org/events/pokerun"),
+        (7, "https://cdn.example.net/assets/app.ab4xxx7e.js"),
     ]
     docs = spark.createDataFrame(rows, "doc_id long, url string")
     out = {r["doc_id"]: r.asDict() for r in url_feature_census(docs).collect()}
@@ -297,6 +302,8 @@ def test_url_feature_census_hostile_and_spam_scoring(spark):
     assert out[2]["url_spam_score"] == 1  # length only
     assert out[3]["path_depth"] == 0 and out[3]["url_spam_score"] == 0
     assert all(v == 0 for k, v in out[4].items() if k != "doc_id")
+    for d in (5, 6, 7):
+        assert out[d]["spam_word_hit"] == 0 and out[d]["url_spam_score"] == 0, out[d]
     con = duckdb.connect()
     con.register("pages", docs.toPandas())
     sql = url_feature_census_sql("SELECT * FROM pages")
