@@ -10,7 +10,8 @@ Reads an Iceberg-style pages table (url, warc_ts, html, text, lang),
 runs the quality pipeline bucket-by-bucket through the snapshot-manifest
 sink (resumable: a killed run continues from the last committed bucket),
 and writes the per-partition metrics sidecar (lang histogram, drop-reason
-counts, scrub counts, rating histogram) next to the results.
+counts, scrub counts, rating histogram) as one JSON file beside the
+manifest: ``<output>/_metrics/partition_metrics.json``.
 
 Size the JVM on the submit command line (``--driver-memory`` here in
 local mode; ``spark.executor.memory`` on a real cluster): the library's
@@ -48,7 +49,6 @@ def main() -> None:
                          "spend (driver-side read -> codegen IN-list for "
                          "config-sized lists, broadcast anti-join beyond "
                          "10k entries)")
-    ap.add_argument("--include-text", action="store_true", default=True)
     ap.add_argument("--partition-by-day", action="store_true",
                     help="hive-partition each bucket's output by warc day "
                          "(partition pruning for day-scoped readers)")
@@ -65,7 +65,8 @@ def main() -> None:
                          "mojibake, lexical diversity, homoglyph script "
                          "mix, language-aware stopwords) over the input "
                          "pages and write per-doc family flags here; "
-                         "per-family keep rates land in DIR/_metrics. "
+                         "per-family keep rates land in "
+                         "DIR/_metrics/keep_rates.json. "
                          "Uses the declared lang column when present, "
                          "the langid model's prediction otherwise")
     ap.add_argument("--warm", action="store_true",
@@ -97,6 +98,7 @@ def main() -> None:
         merge_rescore,
         read_results,
         run_incremental,
+        write_json,
     )
 
     from metadata_quality_stack_spark.operators.urlops import (
@@ -154,7 +156,7 @@ def main() -> None:
             id_cols=id_cols,
             lang_col="lang" if "lang" in bucket_df.columns else None,
             profile=args.profile,
-            include_text=args.include_text,
+            include_text=True,
         )
         if args.partition_by_day and "warc_ts" in out.columns:
             out = out.withColumn("day", F.to_date("warc_ts"))
@@ -180,21 +182,16 @@ def main() -> None:
             partition_by="day" if args.partition_by_day else None,
         )
 
-    # location-aware read: after a merge, rewritten buckets live in
-    # generation dirs the snapshot log maps
-    results = read_results(spark, args.output)
-    metrics_dir = os.path.join(args.output, "_metrics")
-    # each metric is one pruned columnar scan + a small partial-agg
-    # shuffle. Measured note: caching a slim projection for the four
-    # jobs was tried and REVERTED - materializing a row cache of the
-    # whole table costs more than four pruned parquet scans at every
-    # scale (columnar scans of 2-3 small columns are cheap; cache
-    # memory is not), and the 8-core submit legs read ~10 s slower
-    # with the cache (BENCH/scaling_submit.json round notes).
-    for name, df in partition_metrics(results).items():
-        df.coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(metrics_dir, name)
-        )
+    # the sidecar covers the whole table (buckets of earlier runs and
+    # carried buckets too), so it reads the table back, location-aware:
+    # after a merge, rewritten buckets live in generation dirs the
+    # snapshot log maps. A run whose filters kept no page wrote no
+    # bucket dir, so there is nothing to read.
+    results = None if stats.get("rows") == 0 else read_results(spark, args.output)
+    write_json(
+        os.path.join(args.output, "_metrics", "partition_metrics.json"),
+        partition_metrics(results),
+    )
     if args.curate:
         from metadata_quality_stack_spark.operators.urlops import domain_of
         from metadata_quality_stack_spark.plans.curate import curation_recipe
@@ -260,11 +257,12 @@ def main() -> None:
             F.count("*").alias("n_docs"),
             *[F.sum(F.col(c).cast("long")).alias(f"n_{c}") for c in fam_cols],
         )
-        rates.coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(args.filter_bank, "_metrics", "keep_rates")
-        )
         r = rates.collect()[0]
         stats["filter_bank"] = {k: int(v) for k, v in r.asDict().items()}
+        write_json(
+            os.path.join(args.filter_bank, "_metrics", "keep_rates.json"),
+            stats["filter_bank"],
+        )
 
     stats["elapsed_s"] = round(time.time() - t_session, 3)
     if args.warm:

@@ -6,8 +6,9 @@
     -> results + per-partition metrics
 
 Plan shape at 100 TB: the whole per-document stage is map-only (scan ->
-project -> one Arrow UDF stage -> project); zero shuffles until the
-metrics sidecar groupBys. Filters on e.g. ``lang`` push down to the
+project -> one Arrow UDF stage -> project); zero shuffles. The metrics
+sidecar is one aggregation over the written table (one scan, one small
+shuffle), folded in Python. Filters on e.g. ``lang`` push down to the
 parquet/Iceberg scan; the ``html`` column is never read unless text
 extraction is requested (column pruning).
 
@@ -19,6 +20,7 @@ the ~1,300-node expression tree.
 
 from __future__ import annotations
 
+from collections import Counter
 from typing import Iterator
 
 import pandas as pd
@@ -34,6 +36,7 @@ from metadata_quality_stack_spark.operators.rules import (
     stage_select,
 )
 from metadata_quality_stack_spark.session import jvm_cached
+from metadata_quality_stack_spark.sources.sink import reason_rollup
 
 
 def model_scores_udf():
@@ -170,25 +173,40 @@ def quality_pipeline(
     return df
 
 
-def partition_metrics(result: DataFrame, lang_col: str = "lang_pred") -> dict[str, DataFrame]:
-    """The per-partition metrics sidecar (north rule): lang histogram,
-    drop-reason counts, scrub counts, rating histogram. Each is one
-    partial-aggregated groupBy (map-side combine, small shuffle)."""
+def partition_metrics(result: DataFrame | None) -> dict:
+    """The per-partition metrics sidecar (north rule), JSON-ready:
+    ``lang_histogram``, ``rating_histogram`` and ``drop_reasons`` as
+    lists of ``{key, n_docs}`` rows (a null key stays a row) and
+    ``scrub_totals`` as one row. One scan of ``result`` and one small
+    shuffle (:func:`sources.sink.reason_rollup` over lang x rating); the
+    at most langs x ratings x reasons groups fold in Python. ``None``
+    stands for a table no page reached (no bucket dir was written)."""
+    scrub = {
+        "scrub_email_count": "emails_scrubbed",
+        "scrub_ip_count": "ips_scrubbed",
+        "scrub_phone_count": "phones_scrubbed",
+    }
+    rows = [] if result is None else reason_rollup(result, ["lang_pred", "rating"], list(scrub))
+    langs, ratings, reasons = Counter(), Counter(), Counter()
+    totals = dict.fromkeys([*scrub.values(), "docs_kept", "docs_total"], 0)
+    for r in rows:
+        langs[r["lang_pred"]] += r["docs"]
+        ratings[r["rating"]] += r["docs"]
+        reasons[r["reason"]] += r["reason_n"]
+        totals["docs_kept"] += r["kept"]
+        totals["docs_total"] += r["docs"]
+        for c, name in scrub.items():
+            totals[name] += r[c] or 0
+
+    def hist(key: str, counts: Counter) -> list[dict]:
+        keys = sorted((k for k, n in counts.items() if n), key=lambda k: (k is not None, k))
+        return [{key: k, "n_docs": counts[k]} for k in keys]
+
     return {
-        "lang_histogram": result.groupBy(lang_col).agg(F.count("*").alias("n_docs")),
-        "rating_histogram": result.groupBy("rating").agg(F.count("*").alias("n_docs")),
-        "drop_reasons": (
-            result.select(F.explode("drop_reasons").alias("reason"))
-            .groupBy("reason")
-            .agg(F.count("*").alias("n_docs"))
-        ),
-        "scrub_totals": result.agg(
-            F.sum("scrub_email_count").alias("emails_scrubbed"),
-            F.sum("scrub_ip_count").alias("ips_scrubbed"),
-            F.sum("scrub_phone_count").alias("phones_scrubbed"),
-            F.sum(F.when(F.col("keep"), 1).otherwise(0)).alias("docs_kept"),
-            F.count("*").alias("docs_total"),
-        ),
+        "lang_histogram": hist("lang_pred", langs),
+        "rating_histogram": hist("rating", ratings),
+        "drop_reasons": hist("reason", reasons),
+        "scrub_totals": totals,
     }
 
 

@@ -37,6 +37,17 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
+def write_json(path: str, obj) -> None:
+    """Write ``obj`` as JSON to ``path`` through a tmp file and an atomic
+    rename, so a reader sees the old file or the new one, never half of
+    one. Creates the parent directory."""
+    os.makedirs(os.path.dirname(path), exist_ok=True)
+    tmp = path + ".tmp"
+    with open(tmp, "w") as f:
+        json.dump(obj, f, indent=1, sort_keys=True)
+    os.replace(tmp, path)
+
+
 class SnapshotManifest:
     def __init__(self, out_dir: str) -> None:
         self.path = os.path.join(out_dir, "_manifest.json")
@@ -50,10 +61,7 @@ class SnapshotManifest:
 
     def commit(self, bucket: int, info: dict) -> None:
         self.entries[str(bucket)] = info
-        tmp = self.path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(self.entries, f, indent=1, sort_keys=True)
-        os.replace(tmp, self.path)  # atomic snapshot swap
+        write_json(self.path, self.entries)  # atomic snapshot swap
 
 
 class SnapshotLog:
@@ -94,10 +102,7 @@ class SnapshotLog:
         if locations:
             entry["locations"] = dict(sorted(locations.items()))
         self.snapshots.append(entry)
-        tmp = self.path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(self.snapshots, f, indent=1)
-        os.replace(tmp, self.path)
+        write_json(self.path, self.snapshots)
         return sid
 
     def next_id(self) -> int:
@@ -112,6 +117,35 @@ class SnapshotLog:
 
     def buckets_at(self, snapshot_id: int) -> list[int]:
         return list(self.entry(snapshot_id)["buckets"])
+
+
+def reason_rollup(df: DataFrame, keys: list[str], sum_cols: list[str]) -> list:
+    """Doc-level sums and drop-reason counts per ``keys`` group in ONE
+    pruned columnar scan and one small shuffle: ``posexplode_outer``
+    keeps every doc exactly once at pos NULL (no reasons) or pos 0, so
+    ``docs``, ``kept`` and each of ``sum_cols`` count only that row,
+    while ``reason_n`` counts every exploded reason. Returns the
+    collected ``keys`` x ``reason`` rows (reason NULL for docs without
+    one); a table without ``drop_reasons`` reads as one with no reasons."""
+    if "drop_reasons" in df.columns:
+        reasons = [F.posexplode_outer("drop_reasons").alias("pos", "reason")]
+    else:
+        reasons = [
+            F.lit(None).cast("int").alias("pos"),
+            F.lit(None).cast("string").alias("reason"),
+        ]
+    first = F.col("pos").isNull() | (F.col("pos") == 0)
+    return (
+        df.select(*keys, "keep", *sum_cols, *reasons)
+        .groupBy(*keys, "reason")
+        .agg(
+            F.count(F.when(first, 1)).alias("docs"),
+            F.count(F.when(first & F.col("keep"), 1)).alias("kept"),
+            F.count("pos").alias("reason_n"),
+            *[F.sum(F.when(first, F.col(c)).otherwise(0)).alias(c) for c in sum_cols],
+        )
+        .collect()
+    )
 
 
 def run_incremental(
@@ -170,83 +204,24 @@ def run_incremental(
             spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
         wall_s = round((time.time() - t0) / len(remaining), 3)
 
-        have_dirs = any(
-            d.startswith("bucket=") for d in os.listdir(out_dir)
-        )
-        if not have_dirs:  # every remaining bucket was empty
-            for b in remaining:
-                manifest.commit(b, {"rows": 0, "kept": 0, "wall_s": wall_s})
-            return {
-                "buckets": n_buckets,
-                "rows": sum(e["rows"] for e in manifest.entries.values()),
-                "kept": sum(e["kept"] for e in manifest.entries.values()),
-            }
-        written = read_results(spark, out_dir).filter(
-            F.col("bucket").isin([int(b) for b in remaining])
-        )
-        has_scrub = "scrub_count" in written.columns
-        has_reasons = "drop_reasons" in written.columns
-        # ONE read-back job for commit stats + drop-reason lineage
-        # (was two scans of the written table): posexplode_outer keeps
-        # every doc exactly once at pos NULL (no reasons) or pos 0, so
-        # doc-level stats count only that row, while reason occurrences
-        # count per exploded row. One pruned columnar scan, one small
-        # shuffle; collect size = buckets x reasons.
-        doc_cols = ["bucket", "keep"] + (["scrub_count"] if has_scrub else [])
-        if has_reasons:
-            ex = written.select(
-                *doc_cols,
-                F.posexplode_outer("drop_reasons").alias("pos", "reason"),
-            )
-            first = F.col("pos").isNull() | (F.col("pos") == 0)
-        else:
-            ex = written.select(
-                *doc_cols, F.lit(None).cast("string").alias("reason")
-            )
-            first = F.lit(True)
-        aggs = [
-            F.sum(F.when(first, 1).otherwise(0)).alias("rows"),
-            F.sum(F.when(first & F.col("keep"), 1).otherwise(0)).alias(
-                "kept"
-            ),
-            F.count(F.when(F.col("reason").isNotNull(), 1)).alias(
-                "reason_n"
-            ),
-        ]
-        if has_scrub:
-            aggs.append(
-                F.sum(
-                    F.when(first, F.col("scrub_count")).otherwise(0)
-                ).alias("scrubbed")
-            )
-        per_bucket: dict[int, dict] = {}
-        drop_hist: dict[int, dict[str, int]] = {}
-        for r in ex.groupBy("bucket", "reason").agg(*aggs).collect():
-            b = int(r["bucket"])
-            pb = per_bucket.setdefault(
-                b, {"rows": 0, "kept": 0, "scrubbed": 0}
-            )
-            pb["rows"] += int(r["rows"] or 0)
-            pb["kept"] += int(r["kept"] or 0)
-            if has_scrub:
-                pb["scrubbed"] += int(r["scrubbed"] or 0)
-            if r["reason"] is not None and int(r["reason_n"]):
-                drop_hist.setdefault(b, {})[r["reason"]] = int(r["reason_n"])
-
-        done = 0
-        for b in remaining:
-            stats = per_bucket.get(b)
-            entry = {
-                "rows": int(stats["rows"]) if stats else 0,
-                "kept": int(stats["kept"] or 0) if stats else 0,
-                "wall_s": wall_s,
-            }
-            if has_scrub:
-                entry["scrubbed"] = int(stats["scrubbed"] or 0) if stats else 0
-            if b in drop_hist:
-                entry["drop_reasons"] = drop_hist[b]
-            manifest.commit(b, entry)
-            done += 1
+        entries = {b: {"rows": 0, "kept": 0, "wall_s": wall_s} for b in remaining}
+        # no bucket dir: every remaining bucket was empty, nothing to read
+        if any(d.startswith("bucket=") for d in os.listdir(out_dir)):
+            written = read_results(spark, out_dir).filter(F.col("bucket").isin(remaining))
+            scrub = [c for c in ("scrub_count",) if c in written.columns]
+            if scrub:
+                for e in entries.values():
+                    e["scrubbed"] = 0
+            for r in reason_rollup(written, ["bucket"], scrub):
+                e = entries[int(r["bucket"])]
+                e["rows"] += r["docs"]
+                e["kept"] += r["kept"]
+                if scrub:
+                    e["scrubbed"] += r["scrub_count"] or 0
+                if r["reason"] is not None and r["reason_n"]:
+                    e.setdefault("drop_reasons", {})[r["reason"]] = r["reason_n"]
+        for done, b in enumerate(remaining, 1):
+            manifest.commit(b, entries[b])
             if fail_after is not None and done >= fail_after:
                 raise RuntimeError(f"injected failure after {done} buckets")
     # run completed: record the committed-bucket set as a new snapshot
@@ -589,10 +564,7 @@ def expire_snapshots(out_dir: str, keep_from: int) -> dict:
     ]
     # commit the truncated log first (atomic); orphan dirs after a crash
     # here are invisible and reclaimed by the next expire call
-    tmp = log.path + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(retained, f, indent=1)
-    os.replace(tmp, log.path)
+    write_json(log.path, retained)
     for d in doomed:
         shutil.rmtree(os.path.join(rewrites_dir, d), ignore_errors=True)
     return {

@@ -52,7 +52,18 @@ def test_spark_submit_pyfiles_job(spark, tmp_path):
     assert len(manifest) == 4
     result = spark.read.parquet(os.path.join(out_dir, "bucket=*"))
     assert result.count() == 120 - n_blocked
-    assert os.path.isdir(os.path.join(out_dir, "_metrics", "lang_histogram"))
+    # the metrics sidecar is one JSON file; its totals agree with the
+    # stats line and its drop reasons with the manifest's commit read-back
+    assert os.listdir(os.path.join(out_dir, "_metrics")) == ["partition_metrics.json"]
+    sidecar = json.load(open(os.path.join(out_dir, "_metrics", "partition_metrics.json")))
+    assert sidecar["scrub_totals"]["docs_total"] == stats["rows"]
+    assert sidecar["scrub_totals"]["docs_kept"] == stats["kept"]
+    manifest_reasons = {}
+    for entry in manifest.values():
+        for reason, n in entry.get("drop_reasons", {}).items():
+            manifest_reasons[reason] = manifest_reasons.get(reason, 0) + n
+    assert manifest_reasons
+    assert {r["reason"]: r["n_docs"] for r in sidecar["drop_reasons"]} == manifest_reasons
     # the blocked domain never reaches the results table
     from pyspark.sql import functions as F
 
@@ -78,6 +89,9 @@ def test_spark_submit_pyfiles_job(spark, tmp_path):
     assert fam <= set(bank.columns)
     assert "filter_bank" in stats
     rates = stats["filter_bank"]
+    bank_metrics = os.path.join(str(tmp_path / "bank"), "_metrics")
+    assert os.listdir(bank_metrics) == ["keep_rates.json"]
+    assert json.load(open(os.path.join(bank_metrics, "keep_rates.json"))) == rates
     assert rates["n_docs"] == 120 - n_blocked
     # AND-composition invariant holds in the recorded rates
     assert rates["n_keep"] <= min(
@@ -94,6 +108,40 @@ def test_spark_submit_pyfiles_job(spark, tmp_path):
         F.pmod(F.xxhash64(F.col("url_norm")), F.lit(4)) != F.col("bucket")
     ).count()
     assert mismatched == 0
+
+
+def test_job_no_page_survives_filters(spark, tmp_path):
+    """A lang filter that matches no page commits a manifest of empty
+    buckets; the run still exits 0, records its snapshot and writes a
+    sidecar with empty histograms and zero totals. Runs ``python job.py``
+    in a subprocess because job.main stops its session."""
+    sys.path.insert(0, REPO)
+    from metadata_quality_stack_spark.sources.pages import generate_pages
+
+    pages_dir = str(tmp_path / "pages")
+    out_dir = str(tmp_path / "out")
+    pdf = generate_pages(40, seed=3).drop(columns=["row_class"])
+    spark.createDataFrame(pdf).repartition(2).write.parquet(pages_dir)
+    env = {**os.environ, "PYTHONPATH": REPO, "SPARK_GRAFT_CPUS": "2"}
+    proc = subprocess.run(
+        [sys.executable, os.path.join(REPO, "job.py"), "--input", pages_dir,
+         "--output", out_dir, "--buckets", "2", "--lang-filter", "xx"],
+        capture_output=True, text=True, cwd=str(tmp_path), env=env, timeout=600,
+    )
+    assert proc.returncode == 0, proc.stderr[-2000:]
+    stats = json.loads(
+        [line for line in proc.stdout.splitlines() if line.startswith("{")][-1]
+    )
+    assert stats["rows"] == 0 and stats["kept"] == 0
+    manifest = json.load(open(os.path.join(out_dir, "_manifest.json")))
+    assert sorted(manifest) == ["0", "1"]
+    snapshots = json.load(open(os.path.join(out_dir, "_snapshots.json")))
+    assert [s["buckets"] for s in snapshots] == [[0, 1]]
+    assert stats["snapshot_id"] == snapshots[0]["snapshot_id"]
+    sidecar = json.load(open(os.path.join(out_dir, "_metrics", "partition_metrics.json")))
+    assert sidecar["lang_histogram"] == sidecar["rating_histogram"] == []
+    assert sidecar["drop_reasons"] == []
+    assert set(sidecar["scrub_totals"].values()) == {0}
 
 
 @pytest.mark.skipif(shutil.which("spark-submit") is None, reason="no spark-submit")
@@ -159,6 +207,9 @@ def test_spark_submit_merge_recrawl(spark, tmp_path):
     assert len(old) == 1 and not old[0]["scrubbed_text"].startswith(
         "Recrawled body"
     )
+    # the sidecar covers the whole merged table, carried buckets included
+    sidecar = json.load(open(os.path.join(out_dir, "_metrics", "partition_metrics.json")))
+    assert sidecar["scrub_totals"]["docs_total"] == latest.count()
     # every other url's row carried over exactly
     a = {r["url"]: r["total_score"] for r in pinned.collect()}
     b = {r["url"]: r["total_score"] for r in latest.collect()}

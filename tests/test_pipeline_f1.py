@@ -3,6 +3,8 @@ deterministic pages corpus vs the pandas oracle — keep/drop F1 >= 0.99
 (target from BASELINE.json; we assert exact agreement), scrubbed text
 byte-identical, scores identical."""
 
+import json
+
 import pandas as pd
 
 from metadata_quality_stack_spark.oracle.scoring import score_pandas
@@ -75,16 +77,60 @@ def test_html_extraction_byte_identical():
         assert extract_text(r["html"]) == r["text"]
 
 
+def _four_groupby_metrics(result):
+    """The sidecar as four separate groupBy jobs (the formulation
+    partition_metrics replaced), in its JSON-ready shape: the reference."""
+    from pyspark.sql import functions as F
+
+    def hist(df, key):
+        rows = df.groupBy(key).agg(F.count("*").alias("n_docs")).collect()
+        rows = sorted(rows, key=lambda r: (r[key] is not None, r[key]))
+        return [{key: r[key], "n_docs": r["n_docs"]} for r in rows]
+
+    totals = result.agg(
+        F.sum("scrub_email_count").alias("emails_scrubbed"),
+        F.sum("scrub_ip_count").alias("ips_scrubbed"),
+        F.sum("scrub_phone_count").alias("phones_scrubbed"),
+        F.sum(F.when(F.col("keep"), 1).otherwise(0)).alias("docs_kept"),
+        F.count("*").alias("docs_total"),
+    ).collect()[0]
+    return {
+        "lang_histogram": hist(result, "lang_pred"),
+        "rating_histogram": hist(result, "rating"),
+        "drop_reasons": hist(
+            result.select(F.explode("drop_reasons").alias("reason")), "reason"
+        ),
+        "scrub_totals": totals.asDict(),
+    }
+
+
 def test_partition_metrics(spark):
-    pdf = generate_pages(200, seed=7)
-    df = spark.createDataFrame(pdf.drop(columns=["row_class"]))
-    res = quality_pipeline(df)
-    m = partition_metrics(res)
-    totals = m["scrub_totals"].collect()[0]
-    assert totals["docs_total"] == 200
-    assert 0 < totals["docs_kept"] < 200
-    assert totals["emails_scrubbed"] >= 0
-    langs = {r["lang_pred"] for r in m["lang_histogram"].collect()}
-    assert "en" in langs
-    reasons = {r["reason"] for r in m["drop_reasons"].collect()}
-    assert "word_count" in reasons
+    pdf = generate_pages(200, seed=7).drop(columns=["row_class"])
+    empty = pdf.iloc[[0]].assign(url="https://empty.example.org/0", text="")
+    df = spark.createDataFrame(pd.concat([pdf, empty], ignore_index=True))
+    res = quality_pipeline(df).localCheckpoint()
+    assert res.filter("size(drop_reasons) = 0").count() > 0
+    assert res.filter("scrubbed_text = ''").count() == 1
+
+    sc = spark.sparkContext
+    sc.setJobGroup("partition_metrics_test", "partition_metrics")
+    try:
+        m = partition_metrics(res)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = sc.statusTracker().getJobIdsForGroup("partition_metrics_test")
+    assert 1 <= len(jobs) <= 2, jobs
+    assert json.loads(json.dumps(m)) == m
+    assert m == _four_groupby_metrics(res)
+    totals = m["scrub_totals"]
+    assert totals["docs_total"] == 201
+    assert 0 < totals["docs_kept"] < 201
+    assert totals["emails_scrubbed"] > 0
+    assert "en" in {r["lang_pred"] for r in m["lang_histogram"]}
+    assert "word_count" in {r["reason"] for r in m["drop_reasons"]}
+    assert partition_metrics(None) == {
+        "lang_histogram": [],
+        "rating_histogram": [],
+        "drop_reasons": [],
+        "scrub_totals": dict.fromkeys(totals, 0),
+    }
