@@ -62,6 +62,7 @@ from metadata_quality_stack_spark.functions.perplexity import (
     _EDGE_PUNCT,
 )
 from metadata_quality_stack_spark.operators.dsir import _round_half_away
+from metadata_quality_stack_spark.operators.similarity import double_array_lit
 
 LANGID_B = 2048  # trigram buckets per language
 LANGID_ALPHA = 0.1  # same smoothing as functions/langid.py
@@ -215,7 +216,8 @@ def _model_frame(docs: DataFrame, extra_cols: tuple[str, ...] = ()) -> DataFrame
         # closure factory, NOT a default-arg lambda: pyspark counts a
         # defaulted parameter as a lambda arg and would mis-arity the
         # merge function (see .claude/skills/verify gotchas)
-        arr = F.lit(weights)
+        # one parsed literal: F.lit(list) costs a py4j call per element
+        arr = F.expr(f"array({', '.join(str(int(v)) for v in weights)})")
         return F.aggregate(
             F.col("_g"),
             F.lit(0).cast("long"),
@@ -223,8 +225,8 @@ def _model_frame(docs: DataFrame, extra_cols: tuple[str, ...] = ()) -> DataFrame
         )
 
     lang_sums = [_lang_fold(w[lang]).alias(f"s_{lang}") for lang in LANGS]
-    pu_arr = F.lit(pu)
-    pb_arr = F.lit(pb)
+    pu_arr = double_array_lit(pu)
+    pb_arr = double_array_lit(pb)
 
     def _cost(p: F.Column) -> F.Column:
         p_uni = F.element_at(pu_arr, (p["u"] + F.lit(1)).cast("int"))

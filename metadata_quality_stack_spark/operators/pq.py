@@ -45,8 +45,13 @@ here).
 
 from __future__ import annotations
 
+import operator
+from functools import reduce
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from metadata_quality_stack_spark.operators.similarity import centroid_array_lit, double_array_lit
 
 PQ_M = 4  # subspaces
 PQ_DSUB = 16  # dims per subspace (PQ_M * PQ_DSUB == similarity.DIM)
@@ -71,18 +76,41 @@ def _sub(emb: Column, m: int, dsub: int = PQ_DSUB) -> Column:
     return F.slice(emb, m * dsub + 1, dsub)
 
 
-def _argmin_code(sub: Column, book: list[tuple[int, list[float]]]) -> Column:
-    """Map-only argmin over literal centroids: array_min of
-    (dist, code) structs — smallest distance, then smallest code on
-    ties (mirrors ORDER BY dist ASC, code ASC)."""
-    entries = []
-    for code, cent in book:
-        c = F.array(*[F.lit(float(v)) for v in cent])
-        d = F.round(_sqdist(sub, c), 6)
-        entries.append(
-            F.struct(d.alias("d"), F.lit(int(code)).cast("long").alias("code"))
-        )
-    return F.array_min(F.array(*entries))["code"]
+def _argmin(vec: Column, cents: list[tuple[int, list[float]]], name: str = "code") -> Column:
+    """Map-only argmin over literal centroids: array_min of (dist, id)
+    structs — smallest distance, then smallest id on ties (mirrors ORDER
+    BY dist ASC, code ASC). ``vec`` is bound to a lambda variable first,
+    so it is evaluated once per row rather than once per centroid."""
+    cents_lit = centroid_array_lit(cents)
+    best = F.transform(
+        F.array(vec),
+        lambda v: F.array_min(
+            F.transform(
+                cents_lit,
+                lambda c: F.struct(
+                    F.round(_sqdist(v, c["cent"]), 6).alias("d"), c["id"].alias(name)
+                ),
+            )
+        ),
+    )
+    return best[0][name]
+
+
+def _codes(books: list[list[tuple[int, list[float]]]], dsub: int) -> list[Column]:
+    """code0..code{M-1}: each subvector of ``embedding`` argmin-encoded."""
+    return [
+        _argmin(_sub(F.col("embedding"), i, dsub), book).alias(f"code{i}")
+        for i, book in enumerate(books)
+    ]
+
+
+def _qd(q: Column, cent: Column, m: int, dsub: int) -> Column:
+    """Query subvector vs ``cent`` distance, rounded, as a when-chain keyed
+    on the ``m`` column so one projection covers all subspaces."""
+    expr = F.round(_sqdist(_sub(q, m - 1, dsub), cent), 6)
+    for i in range(m - 2, -1, -1):
+        expr = F.when(F.col("m") == i, F.round(_sqdist(_sub(q, i, dsub), cent), 6)).otherwise(expr)
+    return expr
 
 
 def _coded_tall(
@@ -96,9 +124,7 @@ def _coded_tall(
         *[
             F.struct(
                 F.lit(i).alias("m"),
-                _argmin_code(_sub(F.col("embedding"), i, dsub), books[i]).alias(
-                    "code"
-                ),
+                _argmin(_sub(F.col("embedding"), i, dsub), books[i]).alias("code"),
                 _sub(F.col("embedding"), i, dsub)
                 .cast("array<double>")
                 .alias("sub"),
@@ -167,12 +193,7 @@ def pq_encode(
     return embeddings.select(
         "vec_id",
         "label",
-        *[
-            _argmin_code(_sub(F.col("embedding"), i, dsub), books[i]).alias(
-                f"code{i}"
-            )
-            for i in range(len(books))
-        ],
+        *_codes(books, dsub),
     )
 
 
@@ -201,18 +222,10 @@ def pq_topk_trained(
     q_emb = embeddings.filter(F.col("vec_id") == query_vec_id).select(
         F.col("embedding").alias("q_emb")
     )
-    # per-subspace qd against the matching query subvector: a when-chain
-    # keyed on m so one projection covers all subspaces
-    dt = cb.crossJoin(F.broadcast(q_emb))
-    expr = F.round(
-        _sqdist(_sub(F.col("q_emb"), m - 1, dsub), F.col("cent")), 6
+    # per-subspace qd against the matching query subvector
+    dt = cb.crossJoin(F.broadcast(q_emb)).select(
+        "m", "code", _qd(F.col("q_emb"), F.col("cent"), m, dsub).alias("qd")
     )
-    for i in range(m - 2, -1, -1):
-        expr = F.when(
-            F.col("m") == i,
-            F.round(_sqdist(_sub(F.col("q_emb"), i, dsub), F.col("cent")), 6),
-        ).otherwise(expr)
-    dt = dt.select("m", "code", expr.alias("qd"))
 
     out = pq_encode(embeddings, books, dsub)
     for i in range(m):
@@ -220,9 +233,7 @@ def pq_topk_trained(
             F.col("code").alias(f"code{i}"), F.col("qd").alias(f"qd{i}")
         )
         out = out.join(F.broadcast(dt_i), f"code{i}")
-    adc = F.col("qd0")
-    for i in range(1, m):
-        adc = adc + F.col(f"qd{i}")
+    adc = reduce(operator.add, [F.col(f"qd{i}") for i in range(m)])
     return (
         out.filter(F.col("vec_id") != query_vec_id)
         .select("vec_id", "label", F.round(adc, 6).alias("adc_dist"))
@@ -279,14 +290,7 @@ def _coarse_cells(
 
 
 def _argmin_cell(emb: Column, cells: list[tuple[int, list[float]]]) -> Column:
-    entries = []
-    for cell_id, cent in cells:
-        c = F.array(*[F.lit(float(v)) for v in cent])
-        d = F.round(_sqdist(emb, c), 6)
-        entries.append(
-            F.struct(d.alias("d"), F.lit(int(cell_id)).cast("long").alias("cell"))
-        )
-    return F.array_min(F.array(*entries))["cell"]
+    return _argmin(emb, cells, "cell")
 
 
 def ivfpq_topk(
@@ -320,12 +324,7 @@ def ivfpq_topk(
         "vec_id",
         "label",
         _argmin_cell(F.col("embedding"), cells).alias("cell_id"),
-        *[
-            _argmin_code(_sub(F.col("embedding"), i, dsub), books[i]).alias(
-                f"code{i}"
-            )
-            for i in range(m)
-        ],
+        *_codes(books, dsub),
     )
     q_emb = embeddings.filter(F.col("vec_id") == query_vec_id).select(
         F.col("embedding").alias("q_emb")
@@ -351,14 +350,9 @@ def ivfpq_topk(
         ],
         "m int, code long, cent array<double>",
     )
-    dt = cb.crossJoin(F.broadcast(q_emb))
-    expr = F.round(_sqdist(_sub(F.col("q_emb"), m - 1, dsub), F.col("cent")), 6)
-    for i in range(m - 2, -1, -1):
-        expr = F.when(
-            F.col("m") == i,
-            F.round(_sqdist(_sub(F.col("q_emb"), i, dsub), F.col("cent")), 6),
-        ).otherwise(expr)
-    dt = dt.select("m", "code", expr.alias("qd"))
+    dt = cb.crossJoin(F.broadcast(q_emb)).select(
+        "m", "code", _qd(F.col("q_emb"), F.col("cent"), m, dsub).alias("qd")
+    )
 
     out = enc.join(F.broadcast(probe), "cell_id")
     for i in range(m):
@@ -366,9 +360,7 @@ def ivfpq_topk(
             F.col("code").alias(f"code{i}"), F.col("qd").alias(f"qd{i}")
         )
         out = out.join(F.broadcast(dt_i), f"code{i}")
-    adc = F.col("qd0")
-    for i in range(1, m):
-        adc = adc + F.col(f"qd{i}")
+    adc = reduce(operator.add, [F.col(f"qd{i}") for i in range(m)])
     return (
         out.filter(F.col("vec_id") != query_vec_id)
         .select("vec_id", "label", F.round(adc, 6).alias("adc_dist"))
@@ -382,7 +374,7 @@ def _residual(emb: Column, cell_id: Column, cells) -> Column:
     when over the literal coarse centroids."""
     expr = None
     for cid, cent in cells:
-        c = F.array(*[F.lit(float(v)) for v in cent])
+        c = double_array_lit(cent)
         r = F.zip_with(
             emb, c, lambda x, y: x.cast("double") - y.cast("double")
         )
@@ -441,12 +433,7 @@ def ivfpq_residual_topk(
         "vec_id",
         "label",
         "cell_id",
-        *[
-            _argmin_code(_sub(F.col("embedding"), i, dsub), books[i]).alias(
-                f"code{i}"
-            )
-            for i in range(m)
-        ],
+        *_codes(books, dsub),
     )
     q_emb = embeddings.filter(F.col("vec_id") == query_vec_id).select(
         F.col("embedding").alias("q_emb")
@@ -473,19 +460,13 @@ def ivfpq_residual_topk(
         "m int, code long, bcent array<double>",
     )
     # per-(cell, m, code) distance table: || (q - c)_sub_m - bcent ||^2
-    dt = cells_df.crossJoin(cb).crossJoin(F.broadcast(q_emb))
+    dt = cells_df.crossJoin(F.broadcast(cb)).crossJoin(F.broadcast(q_emb))
     qres = F.zip_with(
         F.col("q_emb"),
         F.col("ccent"),
         lambda x, y: x.cast("double") - y.cast("double"),
     )
-    expr = F.round(_sqdist(_sub(qres, m - 1, dsub), F.col("bcent")), 6)
-    for i in range(m - 2, -1, -1):
-        expr = F.when(
-            F.col("m") == i,
-            F.round(_sqdist(_sub(qres, i, dsub), F.col("bcent")), 6),
-        ).otherwise(expr)
-    dt = dt.select("cell_id", "m", "code", expr.alias("qd"))
+    dt = dt.select("cell_id", "m", "code", _qd(qres, F.col("bcent"), m, dsub).alias("qd"))
 
     out = enc.join(F.broadcast(probe), "cell_id")
     for i in range(m):
@@ -495,9 +476,7 @@ def ivfpq_residual_topk(
             F.col("qd").alias(f"qd{i}"),
         )
         out = out.join(F.broadcast(dt_i), ["cell_id", f"code{i}"])
-    adc = F.col("qd0")
-    for i in range(1, m):
-        adc = adc + F.col(f"qd{i}")
+    adc = reduce(operator.add, [F.col(f"qd{i}") for i in range(m)])
     return (
         out.filter(F.col("vec_id") != query_vec_id)
         .select("vec_id", "label", F.round(adc, 6).alias("adc_dist"))

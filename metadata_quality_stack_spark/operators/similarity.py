@@ -9,9 +9,15 @@
 
 All arithmetic is explicit double with a fixed fold order so the DuckDB
 oracle (list_reduce mirror) produces bit-identical values.
+
+Literal vectors (hyperplanes, centroids) reach the JVM as one parsed SQL
+literal each and are looped over with ``transform``, not built from one
+py4j call per component and one lambda pair per vector.
 """
 
 from __future__ import annotations
+
+import math
 
 import numpy as np
 from pyspark.sql import Column, DataFrame
@@ -20,6 +26,27 @@ from pyspark.sql import functions as F
 LSH_SEED = 1234
 LSH_N_PLANES = 8
 DIM = 64
+
+
+def _array_sql(values) -> str:
+    """SQL literal of an ``array<double>``: ``repr`` round-trips a double
+    exactly and the ``D`` suffix keeps it a double."""
+    vals = (f"{v!r}D" if math.isfinite(v) else f"double('{v!r}')" for v in map(float, values))
+    return f"array({', '.join(vals)})"
+
+
+def double_array_lit(values) -> Column:
+    """Literal ``array<double>`` in one JVM call."""
+    return F.expr(_array_sql(values))
+
+
+def centroid_array_lit(cents: list[tuple[int, list[float]]]) -> Column:
+    """Literal ``array<struct<id: bigint, cent: array<double>>>`` in one
+    JVM call, in the given order."""
+    rows = ", ".join(
+        f"named_struct('id', {int(i)}L, 'cent', {_array_sql(vec)})" for i, vec in cents
+    )
+    return F.expr(f"array({rows})")
 
 
 def _dot(a: Column, b: Column) -> Column:
@@ -113,11 +140,11 @@ def brute_force_topk(
 def lsh_bucket(emb: Column, planes: list[list[float]] | None = None) -> Column:
     """Bucket = concatenated sign bits of dot(embedding, plane_i)."""
     planes = planes or hyperplanes()
-    bits = []
-    for p in planes:
-        plane = F.array(*[F.lit(v) for v in p])
-        bits.append(F.when(_dot(emb, plane) >= 0, F.lit("1")).otherwise(F.lit("0")))
-    return F.concat(*bits)
+    bits = F.transform(
+        F.expr(f"array({', '.join(map(_array_sql, planes))})"),
+        lambda plane: F.when(_dot(emb, plane) >= 0, F.lit("1")).otherwise(F.lit("0")),
+    )
+    return F.array_join(bits, "")
 
 
 def lsh_bucket_histogram(embeddings: DataFrame) -> DataFrame:
@@ -370,17 +397,15 @@ def ivf_assign(embeddings: DataFrame, k: int = IVF_K) -> DataFrame:
 def _argmax_cell(cents: list[tuple[int, list[float]]]):
     """Per-row argmax struct over literal centroids: array_max of
     (sim, -cell_id) — highest sim, then smallest cell_id on ties."""
-    entries = []
-    for cell_id, vec in cents:
-        c_emb = F.array(*[F.lit(float(v)) for v in vec])
-        sim = F.round(cosine(F.col("embedding"), c_emb), 6)
-        entries.append(
-            F.struct(
-                sim.alias("cell_sim"),
-                F.lit(-int(cell_id)).cast("long").alias("neg_cell"),
-            )
+    return F.array_max(
+        F.transform(
+            centroid_array_lit(cents),
+            lambda c: F.struct(
+                F.round(cosine(F.col("embedding"), c["cent"]), 6).alias("cell_sim"),
+                (-c["id"]).alias("neg_cell"),
+            ),
         )
-    return F.array_max(F.array(*entries))
+    )
 
 
 def ivf_train(
