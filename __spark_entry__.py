@@ -1370,57 +1370,15 @@ def _driver_verified() -> set[str]:
     return set(_verified_latest_round())
 
 
-# Queries the round-3 VERDICT explicitly requires driver-green rows
-# for in round 4 ("Next round: do this" #1/#2/#6). They are older than
-# most of the round-4 additions but sit late in dict order, so with an
-# unverified backlog wider than one window they must sort FIRST among
-# the unverified; round-4 additions that spill past the window get
-# their rows in round 5 via the same mechanism.
-_VERDICT_R3_FIRST = (
-    "embedding_qc",
-    "ann_topk_multiprobe",
-    "dedup_cluster_sizes",
-    "dedup_index_probe",
-    "dedup_index_probe_bloom",
-    "fuzzy_index_probe",
-    "quality_classifier_weights",
-    "quality_classifier_scores",
-    "quality_classifier_confusion",
-    "gopher_repetition_fast",
-    "shuffle_shards",
-    "corpus_token_budget",
-    # round-4 flagship additions, after the verdict-named set: the
-    # end-to-end recipe composite, the multi-join relational pair, the
-    # fixed-point-log2 family, and the audit/datasheet readouts
-    "curation_recipe",
-    "tpch_q3",
-    "tpch_q5",
-    "ngram_lm_surprisal",
-    "ngram_lm_stored_cycle",
-    "ngram_lm_by_lang",
-    "token_entropy",
-    "source_kl",
-    "corpus_datasheet",
-    "dedup_audit",
-)
-
-
 def _prioritize(q: dict) -> dict:
-    """Unverified queries first (verdict-named ones, then natural
-    order); the verified tail is ordered by STALENESS — least-recently-
-    green first — so the window slots left after the unverified set
+    """Unverified queries first (in natural order); the verified tail
+    is ordered by STALENESS — least-recently-green first, natural order
+    within a round — so the window slots left after the unverified set
     rotate re-verification across rounds instead of re-checking the
     same early-dict entries forever."""
     latest = _verified_latest_round()
     names = list(q)
-    vfirst = {n: i for i, n in enumerate(_VERDICT_R3_FIRST)}
-
-    def key(i):
-        n = names[i]
-        verified = latest.get(n, -1)
-        return (verified, vfirst.get(n, len(vfirst)), i)
-
-    order = sorted(range(len(names)), key=key)
+    order = sorted(range(len(names)), key=lambda i: (latest.get(names[i], -1), i))
     return {names[i]: q[names[i]] for i in order}
 
 

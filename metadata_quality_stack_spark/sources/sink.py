@@ -327,6 +327,19 @@ def _locations_at(log: SnapshotLog, snapshot_id: int) -> dict[int, str]:
     return loc
 
 
+def _has_rows(out_dir: str, log: SnapshotLog, snapshot_id: int) -> bool:
+    """False when no data root the snapshot maps holds a ``bucket=`` dir:
+    every run so far kept no page, so there is nothing to read."""
+    locs = _locations_at(log, snapshot_id)
+    roots = {os.path.join(out_dir, rel) for rel in locs.values()}
+    return any(
+        d.startswith("bucket=")
+        for root in roots
+        if os.path.isdir(root)
+        for d in os.listdir(root)
+    )
+
+
 def merge_rescore(
     spark: SparkSession,
     out_dir: str,
@@ -359,9 +372,14 @@ def merge_rescore(
     if not log.snapshots:
         raise ValueError("merge_rescore needs an existing completed store")
     latest = log.snapshots[-1]["snapshot_id"]
-    cur = read_results(spark, out_dir, snapshot=latest)
-
     bucket_of = F.pmod(F.xxhash64(F.col(key_col)), F.lit(n_buckets))
+    empty = not _has_rows(out_dir, log, latest)
+    if empty:
+        # an empty store (its runs kept no page): an empty frame of the
+        # transform's shape, so every new key reads as added
+        cur = transform(new_pages).withColumn("bucket", bucket_of).limit(0)
+    else:
+        cur = read_results(spark, out_dir, snapshot=latest)
     h60 = _h60_url(F.col(content_col))
     new_slim = (
         new_pages.select(
@@ -438,7 +456,9 @@ def merge_rescore(
 
     prev_loc = _locations_at(log, latest)
     locations = {str(b): r for b, r in prev_loc.items() if r}
-    locations.update({str(b): rel for b in dirty})
+    # an empty store has no main-dir bucket dirs to read, so the new
+    # generation serves every bucket, clean ones as empty
+    locations.update({str(b): rel for b in (prev_loc if empty else dirty)})
     sid = log.append(sorted(prev_loc), locations=locations)  # atomic commit
     return {
         "dirty_buckets": dirty,
@@ -509,6 +529,9 @@ def compact_results(spark: SparkSession, out_dir: str) -> dict:
     if not log.snapshots:
         raise ValueError("compact_results needs an existing completed store")
     latest = log.snapshots[-1]["snapshot_id"]
+    buckets = sorted(_locations_at(log, latest))
+    if not _has_rows(out_dir, log, latest):  # nothing to rewrite
+        return {"snapshot_id": latest, "buckets": buckets, "rows": 0}
     cur = read_results(spark, out_dir, snapshot=latest)
     sid = log.next_id()
     rel = os.path.join(_REWRITE_ROOT, f"g{sid}")
@@ -519,7 +542,6 @@ def compact_results(spark: SparkSession, out_dir: str) -> dict:
         shutil.rmtree(gen_dir)
     rows = cur.count()
     cur.write.mode("overwrite").partitionBy("bucket").parquet(gen_dir)
-    buckets = sorted(_locations_at(log, latest))
     sid = log.append(buckets, locations={str(b): rel for b in buckets})
     return {"snapshot_id": sid, "buckets": buckets, "rows": int(rows)}
 

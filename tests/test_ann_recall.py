@@ -15,34 +15,45 @@ def emb(spark):
     return spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet").cache()
 
 
-def _recall(emb, fn, k=10):
-    hits = 0
-    for q in QUERIES:
-        exact = {r.vec_id for r in similarity.brute_force_topk(emb, q, k).collect()}
-        approx = {r.vec_id for r in fn(emb, q, k).collect()}
-        hits += len(exact & approx)
-    return hits / (k * len(QUERIES))
+@pytest.fixture(scope="module")
+def recall(emb):
+    """recall@10 of ``fn`` over QUERIES; the exact top-10 of each query is
+    computed once for the module."""
+    k = 10
+    exact = {
+        q: {r.vec_id for r in similarity.brute_force_topk(emb, q, k).collect()}
+        for q in QUERIES
+    }
+
+    def _recall(fn):
+        hits = sum(
+            len(exact[q] & {r.vec_id for r in fn(emb, q, k).collect()})
+            for q in QUERIES
+        )
+        return hits / (k * len(QUERIES))
+
+    return _recall
 
 
-def test_multi_table_beats_single_table(emb):
-    single = _recall(emb, similarity.ann_topk)
-    multi = _recall(emb, similarity.ann_topk_multi)
+def test_multi_table_beats_single_table(recall):
+    single = recall(similarity.ann_topk)
+    multi = recall(similarity.ann_topk_multi)
     assert multi > single
     assert multi >= 0.30  # measured 0.43 with 8 tables x 5 planes
 
 
-def test_ivf_recall_floor(emb):
-    ivf = _recall(emb, lambda e, q, k: similarity.ivf_topk(e, q, k))
+def test_ivf_recall_floor(recall):
+    ivf = recall(lambda e, q, k: similarity.ivf_topk(e, q, k))
     assert ivf >= 0.35  # measured ~0.5 at nprobe=2 of 16 cells
 
 
-def test_more_probes_more_recall(emb):
-    lo = _recall(emb, lambda e, q, k: similarity.ivf_topk(e, q, k, nprobe=1))
-    hi = _recall(emb, lambda e, q, k: similarity.ivf_topk(e, q, k, nprobe=4))
+def test_more_probes_more_recall(recall):
+    lo = recall(lambda e, q, k: similarity.ivf_topk(e, q, k, nprobe=1))
+    hi = recall(lambda e, q, k: similarity.ivf_topk(e, q, k, nprobe=4))
     assert hi >= lo  # the recall/cost dial moves the right way
 
 
-def test_trained_ivf_recall_and_balance(emb):
+def test_trained_ivf_recall_and_balance(emb, recall):
     """Lloyd-trained IVF, measured on the sf0.01 embeddings (10 queries,
     recall@10, nprobe sweep — the full table lives in BENCH/BASELINE.md):
 
@@ -99,7 +110,7 @@ def test_trained_ivf_recall_and_balance(emb):
             .limit(k)
         )
 
-    assert _recall(emb, trained) >= 0.4  # measured 0.57 at nprobe=2
+    assert recall(trained) >= 0.4  # measured 0.57 at nprobe=2
 
     seed_max = (
         similarity.ivf_assign(emb, similarity.IVF_K)
@@ -118,13 +129,13 @@ def test_trained_ivf_recall_and_balance(emb):
     assert trained_max <= seed_max  # measured 38 vs 42
 
 
-def test_multiprobe_beats_single_bucket(emb):
+def test_multiprobe_beats_single_bucket(recall):
     """Multi-probe LSH (Hamming-1 neighbor buckets, one table): probes
     (n_planes+1)/2^n_planes ≈ 3.5% of a uniform corpus vs the 8x5
     multi-table's ~25%, repairing the narrow-margin misses that
     dominate single-bucket LSH. Recall measured here and recorded in
     BENCH/BASELINE.md."""
-    single = _recall(emb, similarity.ann_topk)
-    multiprobe = _recall(emb, similarity.ann_topk_multiprobe)
+    single = recall(similarity.ann_topk)
+    multiprobe = recall(similarity.ann_topk_multiprobe)
     assert multiprobe > single
     assert multiprobe >= 0.10  # measured on the sf0.01 embeddings

@@ -100,3 +100,45 @@ def test_every_public_fast_variant_is_used():
     ]
     used |= _referenced_names(queries_def)
     assert not fast - used, f"uncalled *_fast operators: {sorted(fast - used)}"
+
+
+def _proc_paths(tree: ast.AST):
+    """Every string or f-string passed to a call whose text starts with
+    ``/proc`` (f-string fields read as ``{}``), with its line."""
+    for call in ast.walk(tree):
+        if not isinstance(call, ast.Call):
+            continue
+        for arg in call.args:
+            if isinstance(arg, ast.Constant) and isinstance(arg.value, str):
+                text = arg.value
+            elif isinstance(arg, ast.JoinedStr):
+                text = "".join(
+                    v.value if isinstance(v, ast.Constant) else "{}"
+                    for v in arg.values
+                )
+            else:
+                continue
+            if text.startswith("/proc"):
+                yield call.lineno, text
+
+
+def test_only_perfbench_measure_reads_proc_for_timing():
+    """Steal, load and process-tree CPU come from ``perfbench/measure.py``
+    alone; a second reader of ``/proc/stat`` or ``/proc/<pid>/stat``
+    is a copy that can disagree with it (a tree walk that stops two
+    levels below the driver misses the Arrow UDF workers). Static:
+    parses the bench, the job, the tools and the package, no Spark
+    session."""
+    root = Path(entry.__file__).resolve().parent
+    files = [
+        root / "bench.py",
+        root / "job.py",
+        *sorted((root / "tools").glob("*.py")),
+        *sorted((root / "metadata_quality_stack_spark").rglob("*.py")),
+    ]
+    found = [
+        f"{f.relative_to(root)}:{line} {text}"
+        for f in files
+        for line, text in _proc_paths(ast.parse(f.read_text()))
+    ]
+    assert not found, f"/proc read outside perfbench/measure.py: {found}"

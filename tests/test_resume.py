@@ -510,3 +510,61 @@ def test_expire_preserves_inherited_locations(spark, tmp_path):
         for r in read_results(spark, out, snapshot=sid).collect()
     }
     assert pinned == after
+
+
+def _hashed_transform(df):
+    """The pipeline scorer plus the content hash the merge keys on."""
+    from pyspark.sql import functions as F
+
+    from metadata_quality_stack_spark.operators.urlops import _h60_url
+
+    return quality_pipeline(
+        df.withColumn("content_h", _h60_url(F.col("text"))),
+        id_cols=("url", "content_h"),
+        lang_col="lang",
+        include_text=False,
+    )
+
+
+def test_merge_into_store_whose_first_run_kept_no_page(spark, tmp_path):
+    """A first run whose filter keeps no page commits a snapshot but
+    writes no bucket dir. Merging a crawl into that store adds every
+    page: the latest read equals a fresh run over the same crawl, and
+    compaction before and after the merge reads the store the same way."""
+    import os
+
+    from pyspark.sql import functions as F
+
+    from metadata_quality_stack_spark.sources.sink import (
+        compact_results,
+        merge_rescore,
+    )
+
+    pages = pages_spark_df(spark, n_rows=40, seed=21)
+    store, fresh = str(tmp_path / "store"), str(tmp_path / "fresh")
+    run_incremental(
+        spark, pages, store,
+        lambda df: _hashed_transform(df.filter(F.col("lang") == "xx")),
+    )
+    assert not any(d.startswith("bucket=") for d in os.listdir(store))
+    assert compact_results(spark, store) == {
+        "snapshot_id": 0, "buckets": list(range(8)), "rows": 0,
+    }
+
+    res = merge_rescore(spark, store, pages, _hashed_transform)
+    assert res["rows_written"] == 40 and res["snapshot_id"] == 1
+    run_incremental(spark, pages, fresh, _hashed_transform)
+
+    def rows(out_dir):
+        return sorted(
+            tuple(r)
+            for r in read_results(spark, out_dir)
+            .select("url", "keep", "total_score")
+            .collect()
+        )
+
+    want = rows(fresh)
+    assert len(want) == 40
+    assert rows(store) == want
+    assert compact_results(spark, store)["rows"] == 40
+    assert rows(store) == want

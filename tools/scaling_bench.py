@@ -25,7 +25,8 @@ CPU-steal storms.
 
 Noise handling: the host shows bursty steal (tens of seconds of stolen
 CPU within a single run). Runs are interleaved N,4N,N,4N,... across
-rounds, each run records /proc/stat steal jiffies, and the per-level
+rounds, each run is timed by ``perfbench/measure.py`` (wall, host steal
+jiffies, 1-min load at start, whole-tree CPU seconds), and the per-level
 result is the best (min wall) run — the honest engine number under the
 quietest observed window.
 
@@ -41,13 +42,14 @@ import json
 import os
 import subprocess
 import sys
-import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
+import bench  # noqa: E402
+from perfbench import measure  # noqa: E402
+
 CORPUS_PATH = "/tmp/scaling_bench_pages"
-BASE_ROWS = int(os.environ.get("BENCH_BASE_ROWS", "4000"))
 # 100 replicas = 400k docs: sized so the SLOW leg runs ~100 s and the
 # fast leg ~30 s. At 100k docs the 8-core wall dropped to ~10 s on the
 # round-3 engine and the job's fixed serial fraction (driver planning,
@@ -56,7 +58,7 @@ BASE_ROWS = int(os.environ.get("BENCH_BASE_ROWS", "4000"))
 # 0.90. Scaling claims are about the saturation regime (production
 # shards run minutes per task), so measure there.
 REPLICAS = int(os.environ.get("BENCH_REPLICAS", "100"))
-N_DOCS = BASE_ROWS * REPLICAS
+N_DOCS = bench.PIPELINE_BASE_ROWS * REPLICAS
 N_SMALL = 2
 N_LARGE = 8
 CPUSET = {2: "0-1", 8: "0-7"}
@@ -64,63 +66,13 @@ ROUNDS = int(os.environ.get("SCALING_ROUNDS", "2"))
 RUNS_PER_INVOKE = 3
 
 
-def _steal() -> int:
-    return int(open("/proc/stat").readline().split()[8])
-
-
-def _tree_cpu() -> float:
-    """CPU seconds consumed by this process + all (dead or alive) children
-    — the JVM and its python workers. Live-child CPU comes from /proc."""
-    import resource
-
-    own = resource.getrusage(resource.RUSAGE_SELF)
-    dead = resource.getrusage(resource.RUSAGE_CHILDREN)
-    total = own.ru_utime + own.ru_stime + dead.ru_utime + dead.ru_stime
-    clk = os.sysconf("SC_CLK_TCK")
-    me = str(os.getpid())
-    for pid in os.listdir("/proc"):
-        if not pid.isdigit():
-            continue
-        try:
-            with open(f"/proc/{pid}/stat") as f:
-                parts = f.read().rsplit(")", 1)[1].split()
-            # ppid is field 4 (index 1 after the comm close-paren)
-            if parts[1] == me:
-                total += (int(parts[11]) + int(parts[12])) / clk
-                # include grandchildren (python workers under the JVM)
-                for pid2 in os.listdir("/proc"):
-                    if not pid2.isdigit():
-                        continue
-                    try:
-                        with open(f"/proc/{pid2}/stat") as f2:
-                            p2 = f2.read().rsplit(")", 1)[1].split()
-                        if p2[1] == pid:
-                            total += (int(p2[11]) + int(p2[12])) / clk
-                    except OSError:
-                        pass
-        except OSError:
-            pass
-    return total
-
-
-def build_corpus() -> None:
+def build_corpus(path: str, replicas: int) -> None:
     """Materialize the deterministic corpus ONCE (shared by both levels)."""
-    from pyspark.sql import functions as F
-
     from metadata_quality_stack_spark import get_spark
-    from metadata_quality_stack_spark.sources.pages import generate_pages
 
     spark = get_spark(app_name="scaling-corpus", master="local[16]")
-    pdf = generate_pages(BASE_ROWS, seed=7).drop(columns=["row_class"])
-    base = spark.createDataFrame(pdf)
-    reps = spark.range(REPLICAS).select(F.col("id").alias("replica"))
-    corpus = (
-        base.crossJoin(reps)
-        .withColumn("url", F.concat_ws("/", "url", F.col("replica").cast("string")))
-        .drop("replica")
-        .repartition(64)  # enough splits that both levels saturate
-    )
-    corpus.write.mode("overwrite").parquet(CORPUS_PATH)
+    # 64 splits: enough that both levels saturate
+    bench.build_pages_corpus(spark, replicas, 64).write.mode("overwrite").parquet(path)
     spark.stop()
 
 
@@ -134,23 +86,19 @@ def worker(cpus: int, runs: int = RUNS_PER_INVOKE) -> None:
     )
     corpus = spark.read.parquet(CORPUS_PATH)
 
-    def noop(df):
-        df.write.format("noop").mode("overwrite").save()
+    def run(df=corpus):
+        bench._noop(quality_pipeline(df, id_cols=("url",), lang_col="lang"))
 
     # warm: python worker pool + model build (once-per-worker in prod) and
     # C2 JIT of the big generated projection methods (a full-corpus pass —
     # short samples leave the hot paths half-compiled at high parallelism)
-    noop(
-        quality_pipeline(
-            corpus.sample(fraction=0.1, seed=1), id_cols=("url",), lang_col="lang"
-        )
-    )
-    noop(quality_pipeline(corpus, id_cols=("url",), lang_col="lang"))
+    run(corpus.sample(fraction=0.1, seed=1))
+    run()
     for _ in range(runs):
-        s0, c0, t0 = _steal(), _tree_cpu(), time.time()
-        noop(quality_pipeline(corpus, id_cols=("url",), lang_col="lang"))
-        dt = time.time() - t0
-        cpu = _tree_cpu() - c0
+        # cpu_s is the whole process tree: driver, JVM and the Arrow
+        # UDF python workers under the JVM's daemon
+        rec = measure.timed(run)
+        dt, cpu = rec["wall_s"], rec["cpu_s"]
         print(
             json.dumps(
                 {
@@ -158,7 +106,8 @@ def worker(cpus: int, runs: int = RUNS_PER_INVOKE) -> None:
                     "docs": N_DOCS,
                     "wall_s": round(dt, 3),
                     "docs_per_sec": round(N_DOCS / dt, 1),
-                    "steal_jiffies": _steal() - s0,
+                    "steal_jiffies": rec["steal_jiffies"],
+                    "load_1m_start": round(rec["load_1m_start"], 2),
                     "cpu_s": round(cpu, 1),
                     "docs_per_cpu_sec": round(N_DOCS / cpu, 1) if cpu > 0 else None,
                 }
@@ -170,7 +119,7 @@ def worker(cpus: int, runs: int = RUNS_PER_INVOKE) -> None:
 
 def orchestrate() -> None:
     if not os.path.exists(os.path.join(CORPUS_PATH, "_SUCCESS")):
-        build_corpus()
+        build_corpus(CORPUS_PATH, REPLICAS)
     runs: dict[int, list[dict]] = {N_SMALL: [], N_LARGE: []}
     for rnd in range(ROUNDS):
         for cpus in (N_SMALL, N_LARGE):

@@ -13,8 +13,9 @@ resumable bucketed sink + metrics sidecar.
 
 Methodology mirrors scaling_bench.py (see its docstring for why
 taskset pinning and why 2-vs-8 instead of 8-vs-32 on this 32-core
-shared host): runs interleave N,4N across rounds, each records
-/proc/stat steal jiffies, best (min in-job elapsed) run per leg wins.
+shared host): runs interleave N,4N across rounds, each records host
+steal jiffies and the 1-min load at its start (``perfbench/measure.py``),
+best (min in-job elapsed) run per leg wins.
 The throughput clock is job.py's own ``elapsed_s`` — in-job time from
 live SparkSession to stats emit — so the ~12 s of JVM+python cold
 start (identical fixed cost on both legs, amortized to nothing over a
@@ -45,15 +46,15 @@ import os
 import shutil
 import subprocess
 import sys
-import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
+from perfbench import measure  # noqa: E402
+
 CORPUS_PATH = os.environ.get(
     "SCALING_SUBMIT_CORPUS", "/tmp/scaling_submit_pages"
 )
-BASE_ROWS = 4000
 REPLICAS = int(os.environ.get("SCALING_SUBMIT_REPLICAS", "400"))  # 1.6M docs
 # Geometry is env-tunable. Measured finding (see BENCH/BASELINE.md
 # "Scaling through the deployment path"): pure-register CPU work is
@@ -73,18 +74,11 @@ OUT_JSON = os.environ.get("SCALING_SUBMIT_OUT", "scaling_submit.json")
 ZIP = os.path.join(REPO, "dist", "metadata_quality_stack_spark.zip")
 
 
-def _steal() -> int:
-    return int(open("/proc/stat").readline().split()[8])
-
-
 def _ensure_inputs() -> None:
     if not os.path.exists(os.path.join(CORPUS_PATH, "_SUCCESS")):
-        import tools.scaling_bench as sb
+        from tools.scaling_bench import build_corpus
 
-        sb.CORPUS_PATH = CORPUS_PATH
-        sb.BASE_ROWS = BASE_ROWS
-        sb.REPLICAS = REPLICAS
-        sb.build_corpus()
+        build_corpus(CORPUS_PATH, REPLICAS)
     if not os.path.exists(ZIP):
         from tools.build_pyfiles import build
 
@@ -94,34 +88,32 @@ def _ensure_inputs() -> None:
 def run_leg(cpus: int, rnd: int) -> dict:
     out_dir = f"/tmp/scaling_submit_out_{cpus}"
     shutil.rmtree(out_dir, ignore_errors=True)
-    s0, t0 = _steal(), time.time()
-    proc = subprocess.run(
-        [
-            "taskset", "-c", CPUSET[cpus],
-            "spark-submit", "--master", f"local[{cpus}]",
-            # REQUIRED on the submit path: session.get_spark's
-            # spark.driver.memory=48g is builder config, which only
-            # sizes the JVM when python launches it in-process; under
-            # spark-submit the JVM is already up, so without this flag
-            # the whole local "cluster" runs at the 1g default —
-            # execution memory starves, the (bucket, salt) text
-            # exchange spills, and GC throttles 8 concurrent tasks far
-            # harder than 2 (measured: 8-core leg 183 s at 1g vs 145 s
-            # properly sized; job-level efficiency read 0.71 instead
-            # of the engine's real scaling). On a real cluster this is
-            # ordinary executor sizing (spark.executor.memory).
-            "--driver-memory", "48g",
-            "--py-files", ZIP,
-            os.path.join(REPO, "job.py"),
-            "--input", CORPUS_PATH, "--output", out_dir,
-            "--buckets", "4", "--warm",
-        ],
-        capture_output=True, text=True, cwd="/tmp", check=True,
-    )
-    wall = time.time() - t0
-    steal = _steal() - s0
+    cmd = [
+        "taskset", "-c", CPUSET[cpus],
+        "spark-submit", "--master", f"local[{cpus}]",
+        # REQUIRED on the submit path: session.get_spark's
+        # spark.driver.memory=48g is builder config, which only
+        # sizes the JVM when python launches it in-process; under
+        # spark-submit the JVM is already up, so without this flag
+        # the whole local "cluster" runs at the 1g default —
+        # execution memory starves, the (bucket, salt) text
+        # exchange spills, and GC throttles 8 concurrent tasks far
+        # harder than 2 (measured: 8-core leg 183 s at 1g vs 145 s
+        # properly sized; job-level efficiency read 0.71 instead
+        # of the engine's real scaling). On a real cluster this is
+        # ordinary executor sizing (spark.executor.memory).
+        "--driver-memory", "48g",
+        "--py-files", ZIP,
+        os.path.join(REPO, "job.py"),
+        "--input", CORPUS_PATH, "--output", out_dir,
+        "--buckets", "4", "--warm",
+    ]
+    procs = []
+    timing = measure.timed(lambda: procs.append(subprocess.run(
+        cmd, capture_output=True, text=True, cwd="/tmp", check=True,
+    )))
     stats = json.loads(
-        [ln for ln in proc.stdout.splitlines() if ln.startswith("{")][-1]
+        [ln for ln in procs[0].stdout.splitlines() if ln.startswith("{")][-1]
     )
     shutil.rmtree(out_dir, ignore_errors=True)
     hot_s = round(stats["elapsed_s"] - stats.get("warm_s", 0.0), 3)
@@ -133,8 +125,9 @@ def run_leg(cpus: int, rnd: int) -> dict:
         "warm_s": stats.get("warm_s", 0.0),
         "elapsed_s": stats["elapsed_s"],
         "docs_per_sec": round(stats["rows"] / hot_s, 1),
-        "submit_wall_s": round(wall, 3),
-        "steal_jiffies": steal,
+        "submit_wall_s": round(timing["wall_s"], 3),
+        "steal_jiffies": timing["steal_jiffies"],
+        "load_1m_start": round(timing["load_1m_start"], 2),
         "kept": stats["kept"],
     }
     print(json.dumps(rec), flush=True)

@@ -16,9 +16,11 @@ from __future__ import annotations
 import os
 import resource
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+import bench  # noqa: E402
+from perfbench import measure  # noqa: E402
 
 
 def main() -> None:
@@ -28,23 +30,11 @@ def main() -> None:
 
     from metadata_quality_stack_spark import get_spark
     from metadata_quality_stack_spark.plans.pipeline import quality_pipeline
-    from metadata_quality_stack_spark.sources.pages import pages_spark_df
 
     spark = get_spark(app_name="sustained-bench")
-    base = 4000
-    replicas = max(n_docs // base, 1)
-    reps = spark.range(replicas).select(F.col("id").alias("replica"))
-    pages = (
-        pages_spark_df(spark, base, seed=7)
-        .crossJoin(reps)
-        .withColumn(
-            "url", F.concat_ws("/", "url", F.col("replica").cast("string"))
-        )
-        .drop("replica")
-        .repartition(128)
-    )
+    replicas = max(n_docs // bench.PIPELINE_BASE_ROWS, 1)
     tmp = "/tmp/sustained_pages"
-    pages.write.mode("overwrite").parquet(tmp)
+    bench.build_pages_corpus(spark, replicas, 128).write.mode("overwrite").parquet(tmp)
 
     def fresh_probe():
         # rebuild the whole plan from a fresh scan each run — reusing one
@@ -64,22 +54,18 @@ def main() -> None:
             F.sum(F.length("scrubbed_text")).alias("out_bytes"),
         )
 
-    def steal_jiffies() -> int:
-        with open("/proc/stat") as f:
-            return int(f.readline().split()[8])
-
     best = None
     for run in range(1, n_runs + 1):
-        t0, st0 = time.time(), steal_jiffies()
-        row = fresh_probe().collect()[0]
-        wall, stolen = time.time() - t0, steal_jiffies() - st0
+        rows = []
+        rec = measure.timed(lambda: rows.append(fresh_probe().collect()[0]))
+        row, wall = rows[0], rec["wall_s"]
         rss_mb = resource.getrusage(resource.RUSAGE_SELF).ru_maxrss / 1024
         rate = row["n"] / wall
         if run > 1 and (best is None or rate > best["docs_per_sec"]):
             best = {
                 "docs_per_sec": round(rate, 1),
                 "wall_s": round(wall, 1),
-                "steal_jiffies": stolen,
+                "steal_jiffies": rec["steal_jiffies"],
             }
         print(
             {
@@ -88,7 +74,8 @@ def main() -> None:
                 "kept": int(row["kept"]),
                 "wall_s": round(wall, 1),
                 "docs_per_sec": round(rate, 1),
-                "steal_jiffies": stolen,
+                "steal_jiffies": rec["steal_jiffies"],
+                "load_1m_start": round(rec["load_1m_start"], 2),
                 "driver_rss_mb": round(rss_mb, 1),
             }
         )
