@@ -185,9 +185,8 @@ def main() -> None:
     # the sidecar covers the whole table (buckets of earlier runs and
     # carried buckets too), so it reads the table back, location-aware:
     # after a merge, rewritten buckets live in generation dirs the
-    # snapshot log maps. A run whose filters kept no page wrote no
-    # bucket dir, so there is nothing to read.
-    results = None if stats.get("rows") == 0 else read_results(spark, args.output)
+    # snapshot log maps. A store no page reached reads as None.
+    results = read_results(spark, args.output)
     write_json(
         os.path.join(args.output, "_metrics", "partition_metrics.json"),
         partition_metrics(results),

@@ -50,6 +50,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
+from metadata_quality_stack_spark.sources.store import read_table
+
 BPE_WORD_RE = "[a-z]+"
 BPE_N_MERGES = 8
 
@@ -453,14 +455,11 @@ def _read_merge_log(spark, log_dir: str) -> list[tuple[str, str, int]]:
     """Logged merges in rank order; duplicate ranks (crash-retry
     appends) collapse harmlessly because rounds are deterministic —
     any row with a given rank carries the identical merge."""
-    from pyspark.errors import AnalysisException
-
-    try:
-        rows = spark.read.parquet(log_dir).collect()
-    except AnalysisException:
+    log = read_table(spark, log_dir)
+    if log is None:
         return []
     by_rank: dict[int, tuple[str, str, int]] = {}
-    for r in rows:
+    for r in log.collect():
         by_rank.setdefault(int(r.rank), (r.pair, r.merged, int(r.total)))
     return [by_rank[k] for k in sorted(by_rank)]
 

@@ -44,6 +44,7 @@ from pyspark.sql import functions as F
 
 from metadata_quality_stack_spark.functions.text import token_array
 from metadata_quality_stack_spark.operators.sketches import _h60_sql
+from metadata_quality_stack_spark.sources.store import scratch_dir
 
 LM_BUCKETS = 256  # B: token-hash space; pairs encode as bp*B+bc < 2^16
 LOG2_F_BITS = 10  # fractional bits of the fixed-point log2 (~0.001)
@@ -283,11 +284,7 @@ def ngram_lm_stored_cycle(spark, docs: DataFrame, mod: int = 2) -> DataFrame:
     removed after an eager checkpoint (the index_probe_cycle pattern).
 
     Columns: doc_id, n_bigrams, surprisal_fp, avg_bits."""
-    import shutil
-    import tempfile
-
-    d = tempfile.mkdtemp(prefix="ngram_lm_store_")
-    try:
+    with scratch_dir("ngram_lm_store_") as d:
         train = docs.filter(F.col("doc_id") % mod == 0)
         ngram_lm_model(train).write.mode("overwrite").parquet(d)
         stored = spark.read.parquet(d)
@@ -295,8 +292,6 @@ def ngram_lm_stored_cycle(spark, docs: DataFrame, mod: int = 2) -> DataFrame:
             stored, docs.filter(F.col("doc_id") % mod == 1)
         )
         return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
 
 
 # ----------------------------------------------------------------- oracles

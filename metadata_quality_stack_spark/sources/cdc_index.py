@@ -6,8 +6,9 @@ new"; this answers "how many of this document's BYTES are new" — the
 number a recrawl budget is planned on (a news site's pages are 95%
 boilerplate chunks the index has seen for months; the novel-bytes ppm
 is the real information yield of the crawl). Same lifecycle as every
-index here: build / probe-and-ingest / compact, parquet bucket dirs,
-batch survivor hashes appended after an eager pin.
+index here: build / probe-and-ingest / compact, parquet bucket dirs
+written through ``sources/store.py``, batch survivor hashes appended
+after an eager pin.
 
 Probe semantics (the contract the SQL oracle states): a chunk is KNOWN
 iff its (md5, len) was in the index BEFORE this batch — batch docs are
@@ -26,11 +27,11 @@ rows.
 
 from __future__ import annotations
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from metadata_quality_stack_spark.operators import cdc
+from metadata_quality_stack_spark.sources import store
 
 CH_BUCKETS = 16
 
@@ -45,26 +46,14 @@ def _chunks(docs: DataFrame, text_col: str = "text") -> DataFrame:
 
 
 def _with_bucket(df: DataFrame) -> DataFrame:
-    return df.withColumn(
-        "ch_bucket",
-        F.conv(F.substring("h", 1, 2), 16, 10).cast("int") % CH_BUCKETS,
-    )
+    return df.withColumn("ch_bucket", store.hex_bucket(F.col("h"), CH_BUCKETS))
 
 
 def build_chunk_index(docs: DataFrame, index_dir: str) -> None:
     """Initialize from an existing corpus: distinct (h, len), one file
     per bucket dir."""
-    (
-        _with_bucket(_chunks(docs).select("h", "len").distinct())
-        .repartition("ch_bucket")
-        .write.mode("overwrite")
-        .partitionBy("ch_bucket")
-        .parquet(index_dir)
-    )
-
-
-def read_chunk_index(spark: SparkSession, index_dir: str) -> DataFrame:
-    return spark.read.option("basePath", index_dir).parquet(index_dir)
+    chunks = _with_bucket(_chunks(docs).select("h", "len").distinct())
+    store.write_partitioned(chunks, index_dir, "ch_bucket", "overwrite")
 
 
 def novel_bytes_batch(
@@ -77,12 +66,11 @@ def novel_bytes_batch(
 
     Columns: doc_id, total_bytes, novel_bytes, novel_ppm."""
     ch = _chunks(new_docs)
-    try:
-        idx = read_chunk_index(spark, index_dir).select(
-            "h", "len", F.lit(1).alias("_known")
-        ).distinct()
-        flagged = ch.join(idx, ["h", "len"], "left")
-    except AnalysisException:
+    idx = store.read_table(spark, index_dir)
+    if idx is not None:
+        known = idx.select("h", "len", F.lit(1).alias("_known")).distinct()
+        flagged = ch.join(known, ["h", "len"], "left")
+    else:  # first ingest: every chunk is novel
         flagged = ch.withColumn("_known", F.lit(None).cast("int"))
     novel = F.when(F.col("_known").isNull(), F.col("len")).otherwise(F.lit(0))
     per = flagged.groupBy("doc_id").agg(
@@ -108,34 +96,22 @@ def novel_bytes_batch(
     survivors = flagged.filter(F.col("_known").isNull()).select(
         "h", "len"
     ).distinct()
-    (
-        _with_bucket(survivors)
-        .repartition("ch_bucket")
-        .write.mode("append")
-        .partitionBy("ch_bucket")
-        .parquet(index_dir)
+    store.write_partitioned(
+        _with_bucket(survivors), index_dir, "ch_bucket", "append"
     )
     return readout
 
 
 def compact_chunk_index(spark: SparkSession, index_dir: str) -> None:
     """Per-bucket rewrite to distinct rows in one file (dynamic
-    partition overwrite — the dedup_index mechanism)."""
-    idx = read_chunk_index(spark, index_dir).select(
-        "h", "len", "ch_bucket"
-    ).distinct()
-    conf = spark.conf
-    old = conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        (
-            idx.repartition("ch_bucket")
-            .write.mode("overwrite")
-            .partitionBy("ch_bucket")
-            .parquet(index_dir)
-        )
-    finally:
-        conf.set("spark.sql.sources.partitionOverwriteMode", old)
+    partition overwrite, ``sources/store.py``). An absent index has
+    nothing to compact."""
+    idx = store.read_table(spark, index_dir)
+    if idx is None:
+        return
+    idx = idx.select("h", "len", "ch_bucket").distinct()
+    with store.dynamic_overwrite(spark):
+        store.write_partitioned(idx, index_dir, "ch_bucket", "overwrite")
 
 
 def chunk_index_cycle(
@@ -146,11 +122,7 @@ def chunk_index_cycle(
     batch C (== 2) and return C's novelty readout — pure chunk-set
     algebra the SQL oracle restates (C's chunks vs chunks(A) ∪
     chunks(B)). Compaction between ingests must not change the answer."""
-    import shutil
-    import tempfile
-
-    index_dir = tempfile.mkdtemp(prefix="cdc_index_gate_")
-    try:
+    with store.scratch_dir("cdc_index_gate_") as index_dir:
         build_chunk_index(docs.filter(F.col("doc_id") % mod == 0), index_dir)
         novel_bytes_batch(
             spark, docs.filter(F.col("doc_id") % mod == 1), index_dir
@@ -159,8 +131,6 @@ def chunk_index_cycle(
         return novel_bytes_batch(
             spark, docs.filter(F.col("doc_id") % mod == 2), index_dir
         )
-    finally:
-        shutil.rmtree(index_dir, ignore_errors=True)
 
 
 def chunk_index_cycle_sql(

@@ -9,10 +9,10 @@ batch runs: probe index -> keep unseen -> append the survivors'
 fingerprints. This module is that loop.
 
 Layout: one parquet table of 16-byte md5 fingerprints, partition-dirred
-by a hash-prefix bucket (`fp_bucket=<0..N>`). The bucket dirs bound
-per-append file counts (one file per bucket per batch, enforced by a
-pre-write repartition on the bucket column) and give `compact_index` a
-per-bucket unit of work. At 10^12 documents the index is ~16 TB of
+by a hash-prefix bucket (`fp_bucket=<0..N>`), written through
+`sources/store.py`. The bucket dirs bound per-append file counts (one
+file per bucket per batch) and give `compact_index` a per-bucket unit
+of work. At 10^12 documents the index is ~16 TB of
 fingerprints — far too big to broadcast, exactly right for a
 shuffle-on-fingerprint anti-join; a production deploy stores it as an
 Iceberg table bucketed on the fingerprint (sources/bucketed.py is the
@@ -27,14 +27,15 @@ Correctness properties (tested in tests/test_dedup_index.py):
 * survivors are pinned with an eager localCheckpoint BEFORE the append,
   so the returned DataFrame cannot silently re-probe the grown index.
 * `compact_index` rewrites each bucket dir with distinct fingerprints
-  via dynamic partition overwrite (same mechanism as the results sink).
+  via dynamic partition overwrite (`sources/store.py`).
 """
 
 from __future__ import annotations
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from metadata_quality_stack_spark.sources import store
 
 FP_BUCKETS = 16
 
@@ -45,14 +46,15 @@ def content_fingerprint() -> F.Column:
     return F.md5(F.encode(F.col("text"), "UTF-8"))
 
 
-def _bucket(fp: F.Column) -> F.Column:
-    return (
-        F.conv(F.substring(fp, 1, 2), 16, 10).cast("int") % FP_BUCKETS
+def _with_bucket(fps: DataFrame) -> DataFrame:
+    return fps.withColumn(
+        "fp_bucket", store.hex_bucket(F.col("fingerprint"), FP_BUCKETS)
     )
 
 
-def _with_bucket(fps: DataFrame) -> DataFrame:
-    return fps.withColumn("fp_bucket", _bucket(F.col("fingerprint")))
+def _append(survivors: DataFrame, index_dir: str) -> None:
+    fps = _with_bucket(survivors.select("fingerprint"))
+    store.write_partitioned(fps, index_dir, "fp_bucket", "append")
 
 
 def build_index(docs: DataFrame, index_dir: str) -> None:
@@ -61,16 +63,7 @@ def build_index(docs: DataFrame, index_dir: str) -> None:
     fps = _with_bucket(
         docs.select(content_fingerprint().alias("fingerprint")).distinct()
     )
-    (
-        fps.repartition("fp_bucket")
-        .write.mode("overwrite")
-        .partitionBy("fp_bucket")
-        .parquet(index_dir)
-    )
-
-
-def read_index(spark: SparkSession, index_dir: str) -> DataFrame:
-    return spark.read.option("basePath", index_dir).parquet(index_dir)
+    store.write_partitioned(fps, index_dir, "fp_bucket", "overwrite")
 
 
 def ingest_batch(
@@ -85,29 +78,20 @@ def ingest_batch(
     Columns: doc_id, fingerprint."""
     batch = new_docs.select("doc_id", content_fingerprint().alias("fingerprint"))
     first = batch.groupBy("fingerprint").agg(F.min("doc_id").alias("_first"))
-    batch_first = (
+    survivors = (
         batch.join(first, "fingerprint")
         .filter(F.col("doc_id") == F.col("_first"))
         .select("doc_id", "fingerprint")
     )
-    # Existence probe through the Spark reader, NOT os.path: the index
-    # lives wherever the warehouse lives (HDFS/S3 in production), where a
-    # driver-local isdir() is always false and would silently skip the
-    # anti-join, re-admitting known duplicates. A failed read (no dir /
-    # empty dir -> AnalysisException) is the genuine "first ingest" case.
-    try:
-        idx = read_index(spark, index_dir).select("fingerprint")
-        survivors = batch_first.join(idx, "fingerprint", "left_anti")
-    except AnalysisException:
-        survivors = batch_first
+    # an absent index is the genuine "first ingest" case; any other read
+    # failure (a table without a fingerprint column) raises
+    idx = store.read_table(spark, index_dir)
+    if idx is not None:
+        survivors = survivors.join(
+            idx.select("fingerprint"), "fingerprint", "left_anti"
+        )
     survivors = survivors.localCheckpoint(eager=True)
-    (
-        _with_bucket(survivors.select("fingerprint"))
-        .repartition("fp_bucket")
-        .write.mode("append")
-        .partitionBy("fp_bucket")
-        .parquet(index_dir)
-    )
+    _append(survivors, index_dir)
     return survivors
 
 
@@ -116,15 +100,14 @@ def compact_index(spark: SparkSession, index_dir: str) -> None:
     the periodic maintenance that caps both file counts and the
     duplicate rows a crashed append may have left. Dynamic partition
     overwrite touches only buckets present in the read (all of them
-    here; at scale the job runs per-bucket on a schedule)."""
-    idx = read_index(spark, index_dir).select("fingerprint", "fp_bucket").distinct()
-    with _dynamic_overwrite(spark):
-        (
-            idx.repartition("fp_bucket")
-            .write.mode("overwrite")
-            .partitionBy("fp_bucket")
-            .parquet(index_dir)
-        )
+    here; at scale the job runs per-bucket on a schedule). An absent
+    index has nothing to compact."""
+    idx = store.read_table(spark, index_dir)
+    if idx is None:
+        return
+    idx = idx.select("fingerprint", "fp_bucket").distinct()
+    with store.dynamic_overwrite(spark):
+        store.write_partitioned(idx, index_dir, "fp_bucket", "overwrite")
 
 
 def index_probe_cycle(
@@ -141,22 +124,15 @@ def index_probe_cycle(
     ingests precisely because it must NOT change the answer.
 
     Columns: doc_id, fingerprint."""
-    import shutil
-    import tempfile
-
-    index_dir = tempfile.mkdtemp(prefix="dedup_index_gate_")
-    try:
+    with store.scratch_dir("dedup_index_gate_") as index_dir:
         build_index(docs.filter(F.col("doc_id") % mod == 0), index_dir)
         ingest_batch(spark, docs.filter(F.col("doc_id") % mod == 1), index_dir)
         compact_index(spark, index_dir)
-        survivors = ingest_batch(
-            spark, docs.filter(F.col("doc_id") % mod == 2), index_dir
-        )
         # ingest_batch localCheckpoints eagerly, so the result outlives
         # the scratch directory
-        return survivors
-    finally:
-        shutil.rmtree(index_dir, ignore_errors=True)
+        return ingest_batch(
+            spark, docs.filter(F.col("doc_id") % mod == 2), index_dir
+        )
 
 
 def index_probe_cycle_bloom(
@@ -172,11 +148,7 @@ def index_probe_cycle_bloom(
     bitmap's superset invariant (it only removes duplicate rows).
 
     Columns: doc_id, fingerprint."""
-    import shutil
-    import tempfile
-
-    index_dir = tempfile.mkdtemp(prefix="dedup_index_bloom_gate_")
-    try:
+    with store.scratch_dir("dedup_index_bloom_gate_") as index_dir:
         build_index(docs.filter(F.col("doc_id") % mod == 0), index_dir)
         ingest_batch_bloom(
             spark, docs.filter(F.col("doc_id") % mod == 1), index_dir
@@ -185,8 +157,6 @@ def index_probe_cycle_bloom(
         return ingest_batch_bloom(
             spark, docs.filter(F.col("doc_id") % mod == 2), index_dir
         )
-    finally:
-        shutil.rmtree(index_dir, ignore_errors=True)
 
 
 def index_probe_cycle_sql(table: str = "documents", mod: int = 3) -> str:
@@ -209,31 +179,14 @@ WHERE fingerprint NOT IN (SELECT fingerprint FROM a)
 """
 
 
-class _dynamic_overwrite:
-    def __init__(self, spark: SparkSession) -> None:
-        self.spark = spark
-
-    def __enter__(self):
-        self.prev = self.spark.conf.get(
-            "spark.sql.sources.partitionOverwriteMode", "static"
-        )
-        self.spark.conf.set(
-            "spark.sql.sources.partitionOverwriteMode", "dynamic"
-        )
-
-    def __exit__(self, *exc):
-        self.spark.conf.set(
-            "spark.sql.sources.partitionOverwriteMode", self.prev
-        )
-
-
 # --------------------------------------------------------- bloom sidecar
 # A Bloom bitmap (operators/bloom.py) maintained NEXT TO the index: the
 # ingest probe consults the broadcast bitmap map-only first, and only
 # the maybe-dups (typically a few % of a fresh crawl batch) pay the
 # anti-join against the on-disk index. Stored as a tiny parquet table in
 # the index dir — it lives wherever the warehouse lives (the same
-# non-local-URI reasoning as the read-based existence probe above).
+# non-local-URI reasoning as the read-based existence probe in
+# sources/store.py).
 #
 # Crash-safety invariant: the bitmap is always a SUPERSET of the index's
 # fingerprint positions — ingest writes the merged bitmap BEFORE
@@ -281,10 +234,10 @@ def write_bloom(spark: SparkSession, bitmap: list[int], index_dir: str) -> None:
 
 def read_bloom(spark: SparkSession, index_dir: str) -> list[int] | None:
     """Read the bitmap at its STORED geometry (m_bits column)."""
-    try:
-        rows = spark.read.parquet(_bloom_dir(index_dir)).collect()
-    except AnalysisException:
+    sidecar = store.read_table(spark, _bloom_dir(index_dir))
+    if sidecar is None:
         return None
+    rows = sidecar.collect()
     if rows and "m_bits" in rows[0].__fields__:
         m_bits = int(rows[0].m_bits)
     elif rows:
@@ -325,11 +278,9 @@ def ingest_batch_bloom(
     )
 
     bitmap = read_bloom(spark, index_dir)
-    idx = None
-    try:
-        idx = read_index(spark, index_dir).select("fingerprint")
-    except AnalysisException:
-        pass
+    idx = store.read_table(spark, index_dir)
+    if idx is not None:
+        idx = idx.select("fingerprint")
     if bitmap is None:
         # bootstrap: size m to the index's ACTUAL key count (one cheap
         # parquet-metadata count), not the production ceiling
@@ -371,11 +322,5 @@ def ingest_batch_bloom(
         )
     # superset-first: merged bitmap lands BEFORE the fingerprint append
     write_bloom(spark, merged, index_dir)
-    (
-        _with_bucket(survivors.select("fingerprint"))
-        .repartition("fp_bucket")
-        .write.mode("append")
-        .partitionBy("fp_bucket")
-        .parquet(index_dir)
-    )
+    _append(survivors, index_dir)
     return survivors

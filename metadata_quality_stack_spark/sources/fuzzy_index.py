@@ -9,7 +9,8 @@ cells and each batch runs: band the delta -> probe the index -> keep
 novel docs -> append the survivors' cells. This module is that loop.
 
 Layout: one parquet table of (band:int, bucket:long) rows, partition-
-dirred by band (``band=<0..N_BANDS-1>/``). The cells are ~12 bytes and
+dirred by band (``band=<0..N_BANDS-1>/``, written through
+``sources/store.py``). The cells are ~12 bytes and
 there are at most N_BANDS per document, so at 10^12 docs the index is
 ~50 TB-scale-free metadata next to the corpus — right-sized for a
 shuffle join keyed (band, bucket), or shuffle-free when stored bucketed
@@ -30,29 +31,18 @@ Correctness properties (tests/test_fuzzy_index.py):
 
 from __future__ import annotations
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from metadata_quality_stack_spark.operators.dedup import minhash_bands
+from metadata_quality_stack_spark.sources import store
 
 
 def build_fuzzy_index(docs: DataFrame, index_dir: str) -> None:
     """Initialize the index from an existing corpus: distinct cells,
     one shuffle, one file per band dir."""
-    (
-        minhash_bands(docs)
-        .select("band", "bucket")
-        .distinct()
-        .repartition("band")
-        .write.mode("overwrite")
-        .partitionBy("band")
-        .parquet(index_dir)
-    )
-
-
-def read_fuzzy_index(spark: SparkSession, index_dir: str) -> DataFrame:
-    return spark.read.option("basePath", index_dir).parquet(index_dir)
+    cells = minhash_bands(docs).select("band", "bucket").distinct()
+    store.write_partitioned(cells, index_dir, "band", "overwrite")
 
 
 def fuzzy_ingest_batch(
@@ -66,11 +56,9 @@ def fuzzy_ingest_batch(
     Columns: doc_id, n_hit_bands, batch_near_dup, near_dup_of_corpus,
     keep."""
     bb = minhash_bands(new_docs)
-    try:
-        idx = read_fuzzy_index(spark, index_dir).select("band", "bucket")
-    except AnalysisException:
-        idx = None  # first ingest: empty index
+    idx = store.read_table(spark, index_dir)  # None: first ingest
     if idx is not None:
+        idx = idx.select("band", "bucket")
         corpus_hits = (
             bb.join(idx, ["band", "bucket"])
             .groupBy("doc_id")
@@ -117,31 +105,21 @@ def fuzzy_ingest_batch(
         # appends stay minimal (dups would be harmless — countDistinct —
         # but they grow the table for nothing)
         kept_cells = kept_cells.join(idx, ["band", "bucket"], "left_anti")
-    (
-        kept_cells.repartition("band")
-        .write.mode("append")
-        .partitionBy("band")
-        .parquet(index_dir)
-    )
+    store.write_partitioned(kept_cells, index_dir, "band", "append")
     return out
 
 
 def compact_fuzzy_index(spark: SparkSession, index_dir: str) -> None:
     """Rewrite each band dir with distinct cells (dynamic partition
-    overwrite — same mechanism as the results sink). Must never change
-    probe answers; only reclaims crash-duplicate rows."""
-    idx = read_fuzzy_index(spark, index_dir).select("band", "bucket").distinct()
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        (
-            idx.repartition("band")
-            .write.mode("overwrite")
-            .partitionBy("band")
-            .parquet(index_dir)
-        )
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    overwrite, ``sources/store.py``). Must never change probe answers;
+    only reclaims crash-duplicate rows. An absent index has nothing to
+    compact."""
+    idx = store.read_table(spark, index_dir)
+    if idx is None:
+        return
+    idx = idx.select("band", "bucket").distinct()
+    with store.dynamic_overwrite(spark):
+        store.write_partitioned(idx, index_dir, "band", "overwrite")
 
 
 def fuzzy_index_probe_cycle(
@@ -157,11 +135,7 @@ def fuzzy_index_probe_cycle(
 
     Columns: doc_id, n_hit_bands, batch_near_dup, near_dup_of_corpus,
     keep."""
-    import shutil
-    import tempfile
-
-    index_dir = tempfile.mkdtemp(prefix="fuzzy_index_gate_")
-    try:
+    with store.scratch_dir("fuzzy_index_gate_") as index_dir:
         build_fuzzy_index(docs.filter(F.col("doc_id") % mod == 0), index_dir)
         fuzzy_ingest_batch(
             spark, docs.filter(F.col("doc_id") % mod == 1), index_dir
@@ -170,5 +144,3 @@ def fuzzy_index_probe_cycle(
         return fuzzy_ingest_batch(
             spark, docs.filter(F.col("doc_id") % mod == 2), index_dir
         )
-    finally:
-        shutil.rmtree(index_dir, ignore_errors=True)

@@ -25,16 +25,30 @@ the uncommitted partitions — idempotent, no duplicates, no holes
 (SURVEY.md §5.2 item 6 kill-and-rerun test). The earlier design filtered
 and transformed once PER bucket, re-scanning the full input n_buckets
 times (VERDICT r1 "What's wrong #3") — this one scans once per run.
+
+Reads go through ``store.read_table`` on each data root itself (the main
+dir, ``_rewrites/g<N>``), not a ``bucket=*`` glob: Spark skips the
+``_``-prefixed manifest, log, sidecar and generation entries, the
+``bucket`` partition filter still prunes, no ``_spark_metadata`` probe
+logs a warning, and a root no page reached reads as ``None``.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import shutil
 import time
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from metadata_quality_stack_spark.sources.store import (
+    dynamic_overwrite,
+    read_table,
+    scratch_dir,
+)
 
 
 def write_json(path: str, obj) -> None:
@@ -196,18 +210,15 @@ def run_incremental(
             part_cols.append(partition_by)
         # dynamic overwrite replaces only the partitions present in the
         # data; committed bucket=<b> dirs and _manifest.json stay intact
-        prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
+        with dynamic_overwrite(spark):
             result.write.mode("overwrite").partitionBy(*part_cols).parquet(out_dir)
-        finally:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
         wall_s = round((time.time() - t0) / len(remaining), 3)
 
         entries = {b: {"rows": 0, "kept": 0, "wall_s": wall_s} for b in remaining}
-        # no bucket dir: every remaining bucket was empty, nothing to read
-        if any(d.startswith("bucket=") for d in os.listdir(out_dir)):
-            written = read_results(spark, out_dir).filter(F.col("bucket").isin(remaining))
+        written = read_results(spark, out_dir)
+        # None: no run so far kept a page, there is nothing to count
+        if written is not None:
+            written = written.filter(F.col("bucket").isin(remaining))
             scrub = [c for c in ("scrub_count",) if c in written.columns]
             if scrub:
                 for e in entries.values():
@@ -244,15 +255,17 @@ def run_incremental(
 
 def read_results(
     spark: SparkSession, out_dir: str, snapshot: int | None = None
-) -> DataFrame:
+) -> DataFrame | None:
     """Read the results table; ``snapshot`` pins an Iceberg-style
     time-travel read to the bucket set committed as of that snapshot.
     The pin is a predicate on the hive PARTITION column, so the scan
     partition-prunes to exactly those ``bucket=<b>/`` dirs — later
     buckets are never listed, let alone read (plan-asserted in
-    tests/test_resume.py)."""
-    # basePath so nested hive layouts (bucket=*/day=*) unify into one read
-    # with bucket and any inner partition columns exposed for pruning
+    tests/test_resume.py).
+
+    Returns ``None`` when no data root the read maps holds a row: every
+    run up to that snapshot kept no page (the snapshot log exists, no
+    ``bucket=`` dir was ever written)."""
     log = SnapshotLog(out_dir)
     loc: dict[int, str] = {}
     if snapshot is not None:
@@ -262,37 +275,22 @@ def read_results(
         # merged table: the latest mapping decides where each bucket lives
         loc = _locations_at(log, log.snapshots[-1]["snapshot_id"])
 
-    def base_read() -> DataFrame:
-        return spark.read.option("basePath", out_dir).parquet(
-            os.path.join(out_dir, "bucket=*")
-        )
-
     if not loc or all(rel == "" for rel in loc.values()):
-        df = base_read()
-        if snapshot is not None:
+        df = read_table(spark, out_dir)
+        if df is not None and snapshot is not None:
             df = df.filter(F.col("bucket").isin(sorted(loc)))
         return df
-    # split the read by data root; each root keeps hive partition
-    # pruning on its own bucket subset
-    main_buckets = sorted(b for b, rel in loc.items() if rel == "")
-    parts: list[DataFrame] = []
-    if main_buckets:
-        parts.append(base_read().filter(F.col("bucket").isin(main_buckets)))
+    # split the read by data root (the main dir '' first); each root
+    # keeps hive partition pruning on its own bucket subset
     by_rel: dict[str, list[int]] = {}
     for b, rel in loc.items():
-        if rel:
-            by_rel.setdefault(rel, []).append(b)
+        by_rel.setdefault(rel, []).append(b)
+    parts: list[DataFrame] = []
     for rel, buckets in sorted(by_rel.items()):
-        root = os.path.join(out_dir, rel)
-        parts.append(
-            spark.read.option("basePath", root)
-            .parquet(os.path.join(root, "bucket=*"))
-            .filter(F.col("bucket").isin(sorted(buckets)))
-        )
-    df = parts[0]
-    for p in parts[1:]:
-        df = df.unionByName(p)
-    return df
+        df = read_table(spark, os.path.join(out_dir, rel))
+        if df is not None:
+            parts.append(df.filter(F.col("bucket").isin(sorted(buckets))))
+    return reduce(DataFrame.unionByName, parts) if parts else None
 
 
 # --------------------------------------------------------------- merge
@@ -325,19 +323,6 @@ def _locations_at(log: SnapshotLog, snapshot_id: int) -> dict[int, str]:
         for b, rel in snap.get("locations", {}).items():
             loc[int(b)] = rel
     return loc
-
-
-def _has_rows(out_dir: str, log: SnapshotLog, snapshot_id: int) -> bool:
-    """False when no data root the snapshot maps holds a ``bucket=`` dir:
-    every run so far kept no page, so there is nothing to read."""
-    locs = _locations_at(log, snapshot_id)
-    roots = {os.path.join(out_dir, rel) for rel in locs.values()}
-    return any(
-        d.startswith("bucket=")
-        for root in roots
-        if os.path.isdir(root)
-        for d in os.listdir(root)
-    )
 
 
 def merge_rescore(
@@ -373,13 +358,12 @@ def merge_rescore(
         raise ValueError("merge_rescore needs an existing completed store")
     latest = log.snapshots[-1]["snapshot_id"]
     bucket_of = F.pmod(F.xxhash64(F.col(key_col)), F.lit(n_buckets))
-    empty = not _has_rows(out_dir, log, latest)
+    cur = read_results(spark, out_dir, snapshot=latest)
+    empty = cur is None
     if empty:
         # an empty store (its runs kept no page): an empty frame of the
         # transform's shape, so every new key reads as added
         cur = transform(new_pages).withColumn("bucket", bucket_of).limit(0)
-    else:
-        cur = read_results(spark, out_dir, snapshot=latest)
     h60 = _h60_url(F.col(content_col))
     new_slim = (
         new_pages.select(
@@ -420,8 +404,6 @@ def merge_rescore(
     rel = os.path.join(_REWRITE_ROOT, f"g{sid}")
     gen_dir = os.path.join(out_dir, rel)
     if os.path.exists(gen_dir):  # crashed earlier attempt: clear and redo
-        import shutil
-
         shutil.rmtree(gen_dir)
 
     unchanged_keys = j.filter(
@@ -489,12 +471,8 @@ def store_merge_cycle(
 
     Columns: snap ('base' | 'merged'), key_col, total_score, rating,
     keep."""
-    import shutil
-    import tempfile
-
-    out_dir = tempfile.mkdtemp(prefix="store_merge_gate_")
     cols = [key_col, "total_score", "rating", "keep"]
-    try:
+    with scratch_dir("store_merge_gate_") as out_dir:
         run_incremental(
             spark, old_pages, out_dir, transform,
             key_col=key_col, n_buckets=n_buckets,
@@ -511,8 +489,6 @@ def store_merge_cycle(
         )
         # eager pin so the result outlives the scratch directory
         return base.unionByName(merged).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(out_dir, ignore_errors=True)
 
 
 def compact_results(spark: SparkSession, out_dir: str) -> dict:
@@ -530,15 +506,13 @@ def compact_results(spark: SparkSession, out_dir: str) -> dict:
         raise ValueError("compact_results needs an existing completed store")
     latest = log.snapshots[-1]["snapshot_id"]
     buckets = sorted(_locations_at(log, latest))
-    if not _has_rows(out_dir, log, latest):  # nothing to rewrite
-        return {"snapshot_id": latest, "buckets": buckets, "rows": 0}
     cur = read_results(spark, out_dir, snapshot=latest)
+    if cur is None:  # nothing to rewrite
+        return {"snapshot_id": latest, "buckets": buckets, "rows": 0}
     sid = log.next_id()
     rel = os.path.join(_REWRITE_ROOT, f"g{sid}")
     gen_dir = os.path.join(out_dir, rel)
     if os.path.exists(gen_dir):  # crashed earlier attempt
-        import shutil
-
         shutil.rmtree(gen_dir)
     rows = cur.count()
     cur.write.mode("overwrite").partitionBy("bucket").parquet(gen_dir)
@@ -557,8 +531,6 @@ def expire_snapshots(out_dir: str, keep_from: int) -> dict:
     re-running expire_snapshots reclaims them.
 
     Returns {kept_snapshots, deleted_dirs}."""
-    import shutil
-
     log = SnapshotLog(out_dir)
     log.entry(keep_from)  # raises if absent
     retained = [s for s in log.snapshots if s["snapshot_id"] >= keep_from]

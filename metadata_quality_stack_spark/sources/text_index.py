@@ -9,8 +9,9 @@ postings of its own terms. This module is that index, following the
 
 * **layout** — one parquet postings table (term, doc_id, tf, dl),
   partition-dirred by a driver-computable term bucket (md5-prefix %
-  N, the dedup_index bucketing), rows sorted by term within each file
-  so parquet row-group min/max stats prune inside a bucket too. A
+  N, ``store.hex_bucket``) and written through ``sources/store.py``,
+  rows sorted by term within each file so parquet row-group min/max
+  stats prune inside a bucket too. A
   probe for Q terms reads at most Q bucket dirs: the scan cost is
   O(matching postings), independent of corpus size.
 * **stats sidecar** — BM25 needs the corpus scalars (N docs, S total
@@ -43,6 +44,7 @@ from pyspark.sql import functions as F
 
 from metadata_quality_stack_spark.functions.text import token_array
 from metadata_quality_stack_spark.operators.retrieval import BM25_SCORE_EXPR
+from metadata_quality_stack_spark.sources import store
 
 TERM_BUCKETS = 32
 
@@ -61,11 +63,7 @@ def _py_bucket(term: str) -> int:
 def _bucket_col(term: F.Column) -> F.Column:
     """Engine twin of :func:`_py_bucket` (md5 prefix — driver-computable
     so probes can name partition literals without running a job)."""
-    return (
-        F.conv(F.substring(F.md5(F.encode(term, "UTF-8")), 1, 2), 16, 10)
-        .cast("int")
-        % TERM_BUCKETS
-    )
+    return store.hex_bucket(F.md5(F.encode(term, "UTF-8")), TERM_BUCKETS)
 
 
 def _postings(docs: DataFrame) -> DataFrame:
@@ -81,13 +79,9 @@ def _postings(docs: DataFrame) -> DataFrame:
 
 
 def _write(postings: DataFrame, index_dir: str, mode: str) -> None:
-    (
-        postings.withColumn("term_bucket", _bucket_col(F.col("term")))
-        .repartition("term_bucket")
-        .sortWithinPartitions("term")
-        .write.mode(mode)
-        .partitionBy("term_bucket")
-        .parquet(index_dir)
+    store.write_partitioned(
+        postings.withColumn("term_bucket", _bucket_col(F.col("term"))),
+        index_dir, "term_bucket", mode, sort_col="term",
     )
 
 
@@ -131,21 +125,15 @@ def append_text_index(new_docs: DataFrame, index_dir: str) -> None:
 
 def compact_text_index(spark: SparkSession, index_dir: str) -> None:
     """Merge each bucket's append files back to one sorted file
-    (dynamic partition overwrite — the sink/dedup_index mechanism)."""
-    idx = spark.read.option("basePath", index_dir).parquet(index_dir)
-    with_conf = spark.conf
-    old = with_conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    with_conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        (
-            idx.repartition("term_bucket")
-            .sortWithinPartitions("term")
-            .write.mode("overwrite")
-            .partitionBy("term_bucket")
-            .parquet(index_dir)
+    (dynamic partition overwrite, ``sources/store.py``). An index no
+    posting reached has nothing to compact."""
+    idx = store.read_table(spark, index_dir)
+    if idx is None:
+        return
+    with store.dynamic_overwrite(spark):
+        store.write_partitioned(
+            idx, index_dir, "term_bucket", "overwrite", sort_col="term"
         )
-    finally:
-        with_conf.set("spark.sql.sources.partitionOverwriteMode", old)
 
 
 def index_bm25_topk(
@@ -159,9 +147,9 @@ def index_bm25_topk(
     if not terms:
         raise ValueError("index_bm25_topk needs at least one non-empty term")
     buckets = sorted({_py_bucket(t) for t in terms})
+    n_corpus, s_tokens = read_stats(spark, index_dir)  # raises on a missing index
     postings = (
-        spark.read.option("basePath", index_dir)
-        .parquet(index_dir)
+        store.read_table(spark, index_dir)
         .filter(F.col("term_bucket").isin(buckets))
         .filter(F.col("term").isin(terms))
         .select("term", "doc_id", "tf", "dl")
@@ -169,7 +157,6 @@ def index_bm25_topk(
     dfs = postings.groupBy("term").agg(
         F.countDistinct("doc_id").alias("df")
     )
-    n_corpus, s_tokens = read_stats(spark, index_dir)
     scored = (
         postings.join(F.broadcast(dfs), "term")
         .withColumn("n_corpus", F.lit(n_corpus))
@@ -190,17 +177,11 @@ def index_topk_cycle(
     """Gate lifecycle: BUILD from the full corpus into a scratch dir,
     PROBE, return. Logical answer = inline BM25 over the same corpus
     (the index is lossless), which is what bm25_topk_sql states."""
-    import shutil
-    import tempfile
-
-    index_dir = tempfile.mkdtemp(prefix="text_index_gate_")
-    try:
+    with store.scratch_dir("text_index_gate_") as index_dir:
         build_text_index(docs, index_dir)
         return index_bm25_topk(spark, index_dir, query, k).localCheckpoint(
             eager=True
         )
-    finally:
-        shutil.rmtree(index_dir, ignore_errors=True)
 
 
 def index_incremental_topk_cycle(
@@ -210,16 +191,10 @@ def index_incremental_topk_cycle(
     append the odd half, compact, probe. Must equal inline BM25 over
     the WHOLE corpus — proves append maintains postings and the stats
     scalars exactly (same oracle as index_topk_cycle)."""
-    import shutil
-    import tempfile
-
-    index_dir = tempfile.mkdtemp(prefix="text_index_gate_")
-    try:
+    with store.scratch_dir("text_index_gate_") as index_dir:
         build_text_index(docs.filter(F.col("doc_id") % 2 == 0), index_dir)
         append_text_index(docs.filter(F.col("doc_id") % 2 == 1), index_dir)
         compact_text_index(spark, index_dir)
         return index_bm25_topk(spark, index_dir, query, k).localCheckpoint(
             eager=True
         )
-    finally:
-        shutil.rmtree(index_dir, ignore_errors=True)

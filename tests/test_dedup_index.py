@@ -7,6 +7,7 @@ import glob
 from pyspark.sql import functions as F
 
 from metadata_quality_stack_spark.sources import dedup_index as dix
+from metadata_quality_stack_spark.sources.store import read_table
 
 
 def _docs(spark, rows):
@@ -21,7 +22,7 @@ def test_ingest_loop_end_to_end(spark, tmp_path):
     )
     dix.build_index(corpus, index_dir)
     # distinct fingerprints only: 2, not 3
-    assert dix.read_index(spark, index_dir).count() == 2
+    assert read_table(spark, index_dir).count() == 2
 
     batch = _docs(
         spark,
@@ -35,12 +36,12 @@ def test_ingest_loop_end_to_end(spark, tmp_path):
     kept = dix.ingest_batch(spark, batch, index_dir)
     assert sorted(r.doc_id for r in kept.collect()) == [11, 13]
     # index grew by exactly the 2 surviving fingerprints
-    assert dix.read_index(spark, index_dir).count() == 4
+    assert read_table(spark, index_dir).count() == 4
 
     # re-ingesting the SAME batch is idempotent: everything now known
     again = dix.ingest_batch(spark, batch, index_dir)
     assert again.count() == 0
-    assert dix.read_index(spark, index_dir).count() == 4
+    assert read_table(spark, index_dir).count() == 4
 
 
 def test_ingest_into_missing_index_bootstraps(spark, tmp_path):
@@ -48,7 +49,21 @@ def test_ingest_into_missing_index_bootstraps(spark, tmp_path):
     batch = _docs(spark, [(1, "a doc"), (2, "a doc"), (3, "other")])
     kept = dix.ingest_batch(spark, batch, index_dir)
     assert sorted(r.doc_id for r in kept.collect()) == [1, 3]
-    assert dix.read_index(spark, index_dir).count() == 2
+    assert read_table(spark, index_dir).count() == 2
+
+
+def test_ingest_into_foreign_table_raises(spark, tmp_path):
+    """Only an absent index reads as a first ingest. A dir holding a
+    parquet table without a ``fingerprint`` column must fail the probe,
+    not re-admit every doc of the batch."""
+    import pytest
+    from pyspark.errors import AnalysisException
+
+    index_dir = str(tmp_path / "foreign")
+    spark.createDataFrame([(1, "x")], "id long, other string").write.parquet(index_dir)
+    batch = _docs(spark, [(1, "a doc"), (2, "other")])
+    with pytest.raises(AnalysisException):
+        dix.ingest_batch(spark, batch, index_dir)
 
 
 def test_duplicate_index_rows_never_multiply_and_compact_heals(spark, tmp_path):
@@ -59,14 +74,14 @@ def test_duplicate_index_rows_never_multiply_and_compact_heals(spark, tmp_path):
     corpus = _docs(spark, [(1, "known text")])
     dix.build_index(corpus, index_dir)
     # simulate the partial retry: append the same fingerprint again
-    dup = dix.read_index(spark, index_dir).select("fingerprint")
+    dup = read_table(spark, index_dir).select("fingerprint")
     (
         dix._with_bucket(dup)
         .write.mode("append")
         .partitionBy("fp_bucket")
         .parquet(index_dir)
     )
-    assert dix.read_index(spark, index_dir).count() == 2  # duplicated
+    assert read_table(spark, index_dir).count() == 2  # duplicated
 
     batch = _docs(spark, [(10, "known text"), (11, "fresh")])
     kept = dix.ingest_batch(spark, batch, index_dir)
@@ -75,7 +90,7 @@ def test_duplicate_index_rows_never_multiply_and_compact_heals(spark, tmp_path):
     assert [r.doc_id for r in kept.collect()] == [11]
 
     dix.compact_index(spark, index_dir)
-    idx = dix.read_index(spark, index_dir)
+    idx = read_table(spark, index_dir)
     assert idx.count() == 2  # known + fresh, deduplicated
     # one file per bucket dir after compaction
     for bdir in glob.glob(f"{index_dir}/fp_bucket=*"):
@@ -120,13 +135,13 @@ def test_bloom_ingest_matches_plain_ingest(spark, tmp_path):
         }
         assert p == q
     # index contents identical
-    a = {r.fingerprint for r in di.read_index(spark, plain_dir).collect()}
-    c = {r.fingerprint for r in di.read_index(spark, bloom_dir_).collect()}
+    a = {r.fingerprint for r in read_table(spark, plain_dir).collect()}
+    c = {r.fingerprint for r in read_table(spark, bloom_dir_).collect()}
     assert a == c and len(a) == 5
     # superset invariant: every index fingerprint probes positive
     bitmap = di.read_bloom(spark, bloom_dir_)
     probed = bloom_mod.bloom_probe(
-        di.read_index(spark, bloom_dir_).select(
+        read_table(spark, bloom_dir_).select(
             F.col("fingerprint").alias("doc_id"), "fingerprint"
         ),
         bitmap,

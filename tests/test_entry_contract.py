@@ -142,3 +142,41 @@ def test_only_perfbench_measure_reads_proc_for_timing():
         for line, text in _proc_paths(ast.parse(f.read_text()))
     ]
     assert not found, f"/proc read outside perfbench/measure.py: {found}"
+
+
+OVERWRITE_MODE = "spark.sql.sources.partitionOverwriteMode"
+
+
+def _layout_sites(tree: ast.AST):
+    """(top-level def or module line, kind) for each top-level statement
+    that names the partition-overwrite conf key or calls ``mkdtemp``."""
+    for top in tree.body:
+        kinds = set()
+        for n in ast.walk(top):
+            if isinstance(n, ast.Constant) and n.value == OVERWRITE_MODE:
+                kinds.add("partitionOverwriteMode")
+            elif isinstance(n, ast.Call) and "mkdtemp" in _referenced_names(n.func):
+                kinds.add("mkdtemp")
+        for kind in sorted(kinds):
+            yield getattr(top, "name", f"line {top.lineno}"), kind
+
+
+def test_only_store_owns_the_table_layout():
+    """Dynamic partition overwrite and scratch table dirs come from
+    ``sources/store.py`` alone; a second copy of the conf save/set/
+    restore or of the mkdtemp/rmtree cycle is one that can drift from
+    it. Static: parses the package and the job, no Spark session."""
+    root = Path(entry.__file__).resolve().parent
+    pkg = root / "metadata_quality_stack_spark"
+    store = pkg / "sources" / "store.py"
+    files = [root / "job.py", *sorted(pkg.rglob("*.py"))]
+    found = [
+        f"{f.relative_to(root)}:{name} {what}"
+        for f in files
+        if f != store
+        for name, what in _layout_sites(ast.parse(f.read_text()))
+    ]
+    assert not found, f"table layout code outside sources/store.py: {found}"
+    assert {what for _, what in _layout_sites(ast.parse(store.read_text()))} == {
+        "partitionOverwriteMode", "mkdtemp",
+    }

@@ -8,6 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from metadata_quality_stack_spark.sources import fuzzy_index
+from metadata_quality_stack_spark.sources.store import read_table
 
 BASE = (
     "alpha beta gamma delta epsilon zeta eta theta iota kappa "
@@ -52,7 +53,7 @@ def test_crash_duplicate_cells_never_inflate_hits(spark, index_dir):
     corpus = _docs(spark, [(0, BASE)])
     fuzzy_index.build_fuzzy_index(corpus, index_dir)
     # simulate a mid-append crash retry: append the SAME cells again
-    cells = fuzzy_index.read_fuzzy_index(spark, index_dir)
+    cells = read_table(spark, index_dir)
     (
         cells.select("band", "bucket")
         .repartition("band")
@@ -67,9 +68,9 @@ def test_crash_duplicate_cells_never_inflate_hits(spark, index_dir):
     assert r1.n_hit_bands <= N_BANDS  # duplicates did not double-count
     assert r1.near_dup_of_corpus
     # compaction removes the duplicate rows and changes NO answer
-    n_rows_before = fuzzy_index.read_fuzzy_index(spark, index_dir).count()
+    n_rows_before = read_table(spark, index_dir).count()
     fuzzy_index.compact_fuzzy_index(spark, index_dir)
-    n_rows_after = fuzzy_index.read_fuzzy_index(spark, index_dir).count()
+    n_rows_after = read_table(spark, index_dir).count()
     assert n_rows_after < n_rows_before
     r2 = fuzzy_index.fuzzy_ingest_batch(
         spark, _docs(spark, [(6, BASE)]), index_dir

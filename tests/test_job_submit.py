@@ -191,6 +191,10 @@ def test_spark_submit_merge_recrawl(spark, tmp_path):
         [line for line in p2.stdout.splitlines() if line.startswith("{")][-1]
     )
     assert len(stats["dirty_buckets"]) >= 1
+    # table reads go through the data roots, not bucket=* globs, so no
+    # _spark_metadata probe logs a FileNotFoundException trace
+    for p in (p1, p2):
+        assert "FileStreamSink" not in p.stderr, p.stderr[-2000:]
 
     from pyspark.sql import functions as F
 

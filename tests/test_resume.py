@@ -528,9 +528,10 @@ def _hashed_transform(df):
 
 def test_merge_into_store_whose_first_run_kept_no_page(spark, tmp_path):
     """A first run whose filter keeps no page commits a snapshot but
-    writes no bucket dir. Merging a crawl into that store adds every
-    page: the latest read equals a fresh run over the same crawl, and
-    compaction before and after the merge reads the store the same way."""
+    writes no bucket dir, so its reads return None. Merging a crawl into
+    that store adds every page: the latest read equals a fresh run over
+    the same crawl, and compaction before and after the merge reads the
+    store the same way."""
     import os
 
     from pyspark.sql import functions as F
@@ -547,6 +548,9 @@ def test_merge_into_store_whose_first_run_kept_no_page(spark, tmp_path):
         lambda df: _hashed_transform(df.filter(F.col("lang") == "xx")),
     )
     assert not any(d.startswith("bucket=") for d in os.listdir(store))
+    # a store no page reached reads as None, latest or pinned
+    assert read_results(spark, store) is None
+    assert read_results(spark, store, snapshot=0) is None
     assert compact_results(spark, store) == {
         "snapshot_id": 0, "buckets": list(range(8)), "rows": 0,
     }
