@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from metadata_quality_stack_spark import config
+from metadata_quality_stack_spark.functions.hashing import hex_int_sql, md5_int_sql
 from metadata_quality_stack_spark.operators import (
     analytics,
     bloom,
@@ -1507,7 +1508,7 @@ uniq AS (
 ),
 sampled AS (
   SELECT * FROM uniq
-  WHERE ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 7))::BIGINT % 100 < 50
+  WHERE {md5_int_sql('CAST(doc_id AS VARCHAR)', 7)} % 100 < 50
 ),
 capped AS (
   SELECT doc_id, source, lang, total_score, rating, fingerprint FROM (
@@ -1578,7 +1579,7 @@ FROM events GROUP BY event_type
     )
     o["sample_documents"] = f"""
 SELECT doc_id, source, lang FROM documents
-WHERE ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 7))::BIGINT
+WHERE {md5_int_sql('CAST(doc_id AS VARCHAR)', 7)}
       % {sampling.SAMPLE_BUCKETS} < 10
 """
     o["docs_per_source_cap"] = """
@@ -1599,7 +1600,7 @@ SELECT doc_id, source FROM (
     o["score_quantiles_sampled"] = (
         f"WITH scored AS ({scored}), s AS ("
         "SELECT * FROM scored WHERE "
-        "(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 7))::BIGINT % 100)"
+        f"({md5_int_sql('CAST(doc_id AS VARCHAR)', 7)} % 100)"
         " < 10) SELECT count(*)::BIGINT AS n_sampled, "
         + ", ".join(
             f"round(quantile_cont(total_score, {p!r}), 4) AS p{int(p * 100)}"
@@ -1698,7 +1699,7 @@ FROM a JOIN b ON a.doc_id = b.doc_id GROUP BY 1, 2
     o["skew_report"] = analytics.skew_report_sql("documents", "lang")
     # merge-of-shards == sketch-of-whole: the oracle states the whole
     o["kmv_shard_merge"] = f"""
-WITH hs AS (SELECT DISTINCT {sketches._h60_sql('text')} AS h FROM documents)
+WITH hs AS (SELECT DISTINCT {md5_int_sql('text', 15)} AS h FROM documents)
 SELECT h FROM hs ORDER BY h LIMIT {sketches.KMV_K}
 """
     o["normalize_text"] = textops.normalize_text_sql()
@@ -1855,30 +1856,10 @@ FROM documents
         "SELECT md5(text) AS fingerprint, min(doc_id) AS canonical_doc_id, "
         "count(*) AS n_dups FROM documents GROUP BY md5(text)"
     )
+    # signatures + banding at the k=8 gate operating point, ending in
+    # bands(doc_id, band, bucket); the oracles below build on it
+    bands_cte = dedup.minhash_bands_cte_sql()
     sh = dedup.shingles_sql()
-    mh_cols = ",\n    ".join(
-        f"list_min(list_transform(shingles, s -> "
-        f"({dedup.MINHASH_A[k]} * ('0x' || substr(md5(s), 1, 7))::BIGINT "
-        f"+ {dedup.MINHASH_B[k]}) % {dedup.MINHASH_M})) AS mh{k}"
-        for k in range(dedup.N_MINHASH)
-    )
-    rpb = dedup.N_MINHASH // dedup.N_BANDS
-    band_selects = []
-    for b in range(dedup.N_BANDS):
-        parts = " || '|' || ".join(
-            f"coalesce(CAST(mh{b * rpb + i} AS VARCHAR), '')" for i in range(rpb)
-        )
-        # mh0 IS NOT NULL mirrors dedup.minhash_bands: no-shingle docs are
-        # excluded from banding (the degenerate shared-bucket guard)
-        band_selects.append(
-            f"SELECT doc_id, {b} AS band, md5({parts}) AS bucket FROM sig "
-            "WHERE mh0 IS NOT NULL"
-        )
-    bands_cte = (
-        f"WITH sh AS (SELECT doc_id, {sh} AS shingles FROM documents),\n"
-        f"sig AS (SELECT doc_id, {mh_cols} FROM sh),\n"
-        f"bands AS ({' UNION ALL '.join(band_selects)})"
-    )
     o["minhash_bands"] = f"{bands_cte} SELECT doc_id, band, bucket FROM bands"
     o["minhash_candidate_pairs"] = (
         f"{bands_cte} "
@@ -2007,7 +1988,7 @@ SELECT cluster_size, count(*) AS n_clusters FROM sizes GROUP BY 1
         EVAL_MOD as _EVAL_MOD,
     )
 
-    _recipe_bucket = "('0x' || substr(fingerprint, 1, 7))::BIGINT % 100"
+    _recipe_bucket = f"{hex_int_sql('fingerprint', 7)} % 100"
     o["curation_recipe"] = f"""{curate_cte.replace("WITH scored", "WITH RECURSIVE scored", 1)},
 rdocs AS (SELECT d.* FROM documents d JOIN uniq u USING (doc_id)),
 {bands_cte.replace("WITH sh", "sh", 1).replace("FROM documents", "FROM rdocs")},
@@ -2252,9 +2233,9 @@ d AS (
   FROM m
 )
 SELECT doc_id, media_type, n_bytes,
-  CAST(16 + ('0x' || substr(hd, 1, 2))::INT % 240 AS INTEGER) AS width,
-  CAST(16 + ('0x' || substr(hd, 3, 2))::INT % 240 AS INTEGER) AS height,
-  CAST(1 + ('0x' || substr(hd, 5, 2))::INT % 4 AS INTEGER) AS n_channels,
+  CAST(16 + {hex_int_sql('hd', 2)} % 240 AS INTEGER) AS width,
+  CAST(16 + {hex_int_sql('hd', 2, 3)} % 240 AS INTEGER) AS height,
+  CAST(1 + {hex_int_sql('hd', 2, 5)} % 4 AS INTEGER) AS n_channels,
   payload_sha
 FROM d
 """
@@ -2518,7 +2499,7 @@ SELECT doc_id, source FROM n WHERE domain NOT IN ({blocked_list})
         f"SELECT * FROM ({_snap}) WHERE doc_id < 300",
         f"SELECT * FROM ({_snap}) WHERE doc_id >= 100",
     )
-    _h_sql = "(('0x' || substr(md5(text), 1, 15))::BIGINT)"
+    _h_sql = md5_int_sql("text", 15)
     _dpages = (
         f"SELECT doc_id, text, lang, source, n_chars, {_h_sql} AS h, "
         f"{url_norm} AS url_norm "

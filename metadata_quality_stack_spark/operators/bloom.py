@@ -14,10 +14,11 @@ src/api/validators.py; Bloom 1970 is the public construction.)
 
 Cross-engine exactness (what makes this GATE-verifiable, unlike
 Spark's built-in df.stat.bloomFilter whose murmur layout is
-implementation-private): positions come from the repo's shared md5
-hash family — position_i(key) = h60(key || '#b{i}') % m — and a probe
-hits iff ALL k positions are set, which is exactly "all k positions
-appear in the corpus' distinct position set". The DuckDB mirror states
+implementation-private): positions come from the 60-bit md5 hash of
+``functions/hashing.py`` — position_i(key) = md5_int(key || '#b{i}',
+15) % m — and a probe hits iff ALL k positions are set, which is
+exactly "all k positions appear in the corpus' distinct position set".
+The DuckDB mirror states
 that set-membership form; the Spark side executes the real
 bitmap-and-bitwise-AND form; both are the same boolean function.
 
@@ -35,19 +36,19 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .sketches import _h60, _h60_sql
+from metadata_quality_stack_spark.functions.hashing import md5_int, md5_int_sql
 
 M_BITS = 1 << 16  # default filter size: 65,536 bits = 1,024 longs
 K_HASHES = 4
 
 
 def _position(col: Column, i: int, m_bits: int) -> Column:
-    return _h60(F.concat(col, F.lit(f"#b{i}"))) % m_bits
+    return md5_int(F.concat(col, F.lit(f"#b{i}")), 15) % m_bits
 
 
 def _position_sql(expr: str, i: int, m_bits: int) -> str:
     salted = f"({expr} || '#b{i}')"
-    return f"({_h60_sql(salted)} % {m_bits})"
+    return f"({md5_int_sql(salted, 15)} % {m_bits})"
 
 
 def bloom_build(

@@ -7,7 +7,7 @@ the count-min sketch and its applications", J. Algorithms 2005; public
 method): d hash rows x w counters; insert adds 1 to one cell per row,
 estimate(x) = min over rows — an OVERESTIMATE, never an undercount,
 with error <= e/w * N at probability 1 - e^-d. The d row hashes come
-from the shared md5 family (independent prefixes of one digest), so
+from one md5 digest (independent prefixes, functions/hashing.py), so
 cells are DRIVER-computable: a probe filters the sketch to d literal
 cells per term, no tokenization job needed.
 
@@ -30,11 +30,14 @@ training-data family (monitoring: sketches.py, hll.py).
 
 from __future__ import annotations
 
-import hashlib
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from metadata_quality_stack_spark.functions.hashing import (
+    md5_int,
+    md5_int_py,
+    md5_int_sql,
+)
 from metadata_quality_stack_spark.functions.text import token_array
 
 CMS_D = 4  # hash rows
@@ -44,30 +47,8 @@ HIST_BINS = 256
 
 
 # ------------------------------------------------------------------ CMS
-def _cell(term: Column, row: int) -> Column:
-    """Row-``row`` cell: 15 hex digits of md5 starting at offset row*4
-    (independent-enough prefixes of one digest), mod w."""
-    return (
-        F.conv(
-            F.substring(F.md5(F.encode(term, "UTF-8")), 1 + 4 * row, 15),
-            16,
-            10,
-        ).cast("long")
-        % CMS_W
-    )
-
-
-def _py_cell(term: str, row: int) -> int:
-    h = hashlib.md5(term.encode("utf-8")).hexdigest()
-    return int(h[4 * row : 4 * row + 15], 16) % CMS_W
-
-
-def _cell_sql(expr: str, row: int) -> str:
-    return (
-        f"(('0x' || substr(md5({expr}), {1 + 4 * row}, 15))::BIGINT % {CMS_W})"
-    )
-
-
+# Row r's cell is 15 hex digits of md5 from digit 1 + 4r (independent-
+# enough prefixes of one digest), mod w.
 def _tokens() -> Column:
     return F.transform(
         token_array(F.coalesce(F.col("text"), F.lit(""))),
@@ -86,7 +67,9 @@ def cms_build(docs: DataFrame, text_col: str = "text") -> DataFrame:
                 *[
                     F.struct(
                         F.lit(r).alias("row"),
-                        _cell(F.col("term"), r).alias("cell"),
+                        (md5_int(F.col("term"), 15, 1 + 4 * r) % CMS_W).alias(
+                            "cell"
+                        ),
                     )
                     for r in range(CMS_D)
                 ]
@@ -107,7 +90,11 @@ def cms_term_counts(
     sketch = cms_build(docs, text_col)
     spark = docs.sparkSession
     want = spark.createDataFrame(
-        [(t, r, _py_cell(t, r)) for t in lows for r in range(CMS_D)],
+        [
+            (t, r, md5_int_py(t, 15, 1 + 4 * r) % CMS_W)
+            for t in lows
+            for r in range(CMS_D)
+        ],
         "term string, row int, cell long",
     )
     est = (
@@ -125,10 +112,13 @@ def cms_term_counts_sql(
 
     lows = sorted({t.lower() for t in terms if t})
     vals = ", ".join(
-        f"('{t}', {r}, {_py_cell(t, r)})" for t in lows for r in range(CMS_D)
+        f"('{t}', {r}, {md5_int_py(t, 15, 1 + 4 * r) % CMS_W})"
+        for t in lows
+        for r in range(CMS_D)
     )
     cell_rows = " UNION ALL ".join(
-        f"SELECT {r} AS row, {_cell_sql('term', r)} AS cell, cnt FROM tf"
+        f"SELECT {r} AS row, ({md5_int_sql('term', 15, 1 + 4 * r)} % {CMS_W}) "
+        "AS cell, cnt FROM tf"
         for r in range(CMS_D)
     )
     return f"""

@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from metadata_quality_stack_spark.functions.hashing import md5_int, md5_int_sql
 from metadata_quality_stack_spark.functions.text import token_array as tokens
 from metadata_quality_stack_spark.functions.text import word_ngrams
 
@@ -95,9 +96,7 @@ def minhash_signatures(docs: DataFrame, n_hashes: int = N_MINHASH) -> DataFrame:
     Docs with no shingles survive via explode_outer: NULL base -> NULL mins."""
     sh = _shingles(F.col("text"))
     ex = docs.select("doc_id", F.explode_outer(sh).alias("s"))
-    base = F.conv(
-        F.substring(F.md5(F.encode(F.col("s"), "UTF-8")), 1, 7), 16, 10
-    ).cast("long")
+    base = md5_int(F.col("s"), 7)
     with_base = ex.select("doc_id", base.alias("base"))
     coeff_a, coeff_b = _minhash_coeffs(n_hashes)
     return with_base.groupBy("doc_id").agg(
@@ -1116,16 +1115,16 @@ def minhash_bands_cte_sql(
 ) -> str:
     """DuckDB CTE prelude replaying signatures + banding at ANY
     operating point (same generated coefficient family as
-    :func:`_minhash_coeffs`, same md5 bucket rule) — ends in
-    bands(doc_id, band, bucket). The k=8 gate oracles keep their
-    hand-written twin in __spark_entry__; this builder exists so the
-    PRODUCTION operating point (k=128 x 16 bands) is gate-verifiable
-    too, not just benchmarked."""
+    :func:`_minhash_coeffs`, same md5 base) — ends in
+    bands(doc_id, band, bucket). Every MinHash oracle builds on it: the
+    k=8 gate operating point (the defaults) and the PRODUCTION one
+    (k=128 x 16 bands), so the latter is gate-verifiable too, not just
+    benchmarked."""
     coeff_a, coeff_b = _minhash_coeffs(n_hashes)
     sh = shingles_sql()
     mh_cols = ",\n    ".join(
         f"list_min(list_transform(shingles, s -> "
-        f"({coeff_a[k]} * ('0x' || substr(md5(s), 1, 7))::BIGINT "
+        f"({coeff_a[k]} * {md5_int_sql('s', 7)} "
         f"+ {coeff_b[k]}) % {MINHASH_M})) AS mh{k}"
         for k in range(n_hashes)
     )

@@ -39,6 +39,7 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from metadata_quality_stack_spark.functions.hashing import md5_int, md5_int_sql
 from metadata_quality_stack_spark.functions.text import token_array
 
 N_BUCKETS = 256
@@ -55,36 +56,22 @@ def _round_half_away(x: float) -> int:
     return int(math.copysign(math.floor(abs(x) + 0.5), x))
 
 
-def _bucket(col: F.Column) -> F.Column:
-    """Stable md5-derived bucket id in [0, N_BUCKETS) — the same
-    content-hash family the sampling/split operators use, so the DuckDB
-    oracle computes identical buckets (sampling.sample_bucket)."""
-    return (
-        F.conv(F.substring(F.md5(F.encode(col, "UTF-8")), 1, 7), 16, 10).cast(
-            "long"
-        )
-        % N_BUCKETS
-    )
-
-
-def _bucket_sql(expr: str) -> str:
-    return f"(('0x' || substr(md5({expr}), 1, 7))::BIGINT % {N_BUCKETS})"
-
-
 def feature_buckets(text: F.Column) -> F.Column:
     """Hashed n-gram feature ids for one document: bucket ids of every
     lowercased unigram and every adjacent bigram. Map-only; the bigram
     pass is zip_with over the token array and its shift-by-one (HOF
     ARGUMENTS evaluate once per row — the element_at(ws, i) formulation
-    re-tokenized the document per element, O(T^2) interpreted)."""
+    re-tokenized the document per element, O(T^2) interpreted). A
+    bucket id is the 28-bit md5 prefix mod N_BUCKETS
+    (``functions/hashing.py``), so the DuckDB oracle computes the same."""
     ws = F.transform(token_array(text), lambda x: F.lower(x))
-    uni = F.transform(ws, _bucket)
+    uni = F.transform(ws, lambda x: md5_int(x, 7) % N_BUCKETS)
     n = F.size(ws)
     bi = F.when(n < 2, F.array().cast("array<bigint>")).otherwise(
         F.zip_with(
             F.slice(ws, 1, n - 1),
             F.slice(ws, 2, n - 1),
-            lambda a, b: _bucket(F.concat(a, F.lit(" "), b)),
+            lambda a, b: md5_int(F.concat(a, F.lit(" "), b), 7) % N_BUCKETS,
         )
     )
     return F.concat(uni, bi)
@@ -96,12 +83,14 @@ def _feats_sql(text: str = "text") -> str:
         "'[ \\t\\n\\r]+'), x -> x <> ''), x -> lower(x))"
     )
     bigram = "ws[i] || ' ' || ws[i+1]"
+    uni_b = f"({md5_int_sql('x', 7)} % {N_BUCKETS})"
+    bi_b = f"({md5_int_sql(bigram, 7)} % {N_BUCKETS})"
     return (
         f"WITH w AS (SELECT *, {ws} AS ws FROM {{table}}), "
         "feats AS (SELECT *, list_concat("
-        f"list_transform(ws, x -> {_bucket_sql('x')}), "
+        f"list_transform(ws, x -> {uni_b}), "
         f"list_transform(range(1, len(ws)), "
-        f"i -> {_bucket_sql(bigram)})) AS bs FROM w)"
+        f"i -> {bi_b})) AS bs FROM w)"
     )
 
 
@@ -208,11 +197,7 @@ def _gumbel_micros(id_col: F.Column) -> F.Column:
     md5-uniform of the doc id: u = (h28 + 0.5) / 2^28, g = -ln(-ln u).
     Content-derived, so selection is reproducible across runs, engines,
     and cluster sizes (same property as sampling.sample_bucket)."""
-    h28 = F.conv(
-        F.substring(F.md5(F.encode(id_col.cast("string"), "UTF-8")), 1, 7),
-        16,
-        10,
-    ).cast("double")
+    h28 = md5_int(id_col.cast("string"), 7).cast("double")
     u = (h28 + F.lit(0.5)) / F.lit(float(1 << 28))
     return F.round(-F.log(-F.log(u)) * MICROS).cast("long")
 
@@ -270,10 +255,7 @@ FROM feats f LEFT JOIN summed s USING (doc_id)
 
 
 def dsir_sample_sql(table: str = "documents", k: int = 100) -> str:
-    h28 = (
-        "(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 7))::BIGINT"
-        "::DOUBLE)"
-    )
+    h28 = f"({md5_int_sql('CAST(doc_id AS VARCHAR)', 7)}::DOUBLE)"
     g = (
         f"CAST(round(-ln(-ln(({h28} + 0.5) / {float(1 << 28)})) * {MICROS})"
         " AS BIGINT)"

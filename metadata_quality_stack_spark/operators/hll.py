@@ -14,8 +14,8 @@ integer arithmetic, so Spark, DuckDB, and Python agree bit-for-bit.
 
 Layout (m = 64, p = 6):
 
-    h       = 60-bit md5 hash (sketches._h60 — the family every
-              operator shares)
+    h       = 60-bit md5 hash (``md5_int(x, 15)``, functions/hashing.py
+              — the hash every operator shares)
     bucket  = h % 64
     w       = h div 64                     (54 payload bits)
     rank    = 55 - bitlen(w), with w = 0 -> 55
@@ -50,7 +50,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from metadata_quality_stack_spark.operators.sketches import _h60, _h60_sql
+from metadata_quality_stack_spark.functions.hashing import md5_int, md5_int_sql
 
 HLL_M = 64  # registers (p = 6)
 HLL_Q = 20  # fixed-point scale of the harmonic sum
@@ -61,7 +61,7 @@ _MAX_RANK = 55  # 54 payload bits + 1
 def hll_registers(docs: DataFrame, col: str = "text") -> DataFrame:
     """The persisted shard sketch: (bucket, register) — at most 64
     rows, merge = max per bucket. Null values are skipped (no hash)."""
-    h = _h60(F.col(col))
+    h = md5_int(F.col(col), 15)
     w = F.expr("_h div 64")
     bitlen = F.length(F.conv(w.cast("string"), 10, 2))
     rank = F.when(w == 0, F.lit(_MAX_RANK)).otherwise(
@@ -131,7 +131,7 @@ def hll_shard_merge(shards: list[DataFrame]) -> DataFrame:
 # DuckDB oracle mirrors
 # ----------------------------------------------------------------------
 def _registers_sql(table: str, col: str) -> str:
-    h = _h60_sql(col)
+    h = md5_int_sql(col, 15)
     return f"""regs AS (
   SELECT bucket, max(rank) AS register FROM (
     SELECT (h % {HLL_M})::INT AS bucket,
@@ -168,7 +168,7 @@ def hll_shard_merge_sql(
     SELECT (h % {HLL_M})::INT AS bucket,
       CASE WHEN h // {HLL_M} = 0 THEN {_MAX_RANK}
            ELSE {_MAX_RANK} - length(bin(h // {HLL_M})) END AS rank
-    FROM (SELECT {_h60_sql(col)} AS h FROM {table}
+    FROM (SELECT {md5_int_sql(col, 15)} AS h FROM {table}
           WHERE {col} IS NOT NULL AND doc_id % {mod} = {i}))
   GROUP BY bucket)"""
         for i in range(mod)

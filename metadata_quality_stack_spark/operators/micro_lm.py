@@ -45,13 +45,17 @@ as in CCNet (Wenzek et al., arXiv:1911.00359). All public.
 
 from __future__ import annotations
 
-import hashlib
 import math
 import re
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from metadata_quality_stack_spark.functions.hashing import (
+    md5_int,
+    md5_int_py,
+    md5_int_sql,
+)
 from metadata_quality_stack_spark.functions.langid import LANGS, SEED_TEXT
 from metadata_quality_stack_spark.functions.perplexity import (
     P_FLOOR,
@@ -72,26 +76,6 @@ PPL_ALPHA = 0.01  # same smoothing as functions/perplexity.py
 _WS_RE = r"[ \t\n\r]+"  # the dialect-shared whitespace class (dsir._feats_sql)
 # '.,!?;:"'()[]' with the embedded quote doubled for a SQL literal
 _PUNCT_SQL = _EDGE_PUNCT.replace("'", "''")
-
-
-# ------------------------------------------------------------------ hashing
-def _bucket(col: F.Column, n: int) -> F.Column:
-    """md5-derived bucket id in [0, n) — identical in Spark / DuckDB /
-    Python (the dsir._bucket family, parameterized modulus)."""
-    return (
-        F.conv(F.substring(F.md5(F.encode(col, "UTF-8")), 1, 7), 16, 10).cast(
-            "long"
-        )
-        % n
-    )
-
-
-def _bucket_sql(expr: str, n: int) -> str:
-    return f"(('0x' || substr(md5({expr}), 1, 7))::BIGINT % {n})"
-
-
-def _py_bucket(s: str, n: int) -> int:
-    return int(hashlib.md5(s.encode("utf-8")).hexdigest()[:7], 16) % n
 
 
 # ------------------------------------------------------------- seed corpus
@@ -124,7 +108,7 @@ def langid_weights_micros() -> dict[str, list[int]]:
         norm = _py_langid_norm(SEED_TEXT[lang])
         counts = [0] * LANGID_B
         for i in range(len(norm) - 2):
-            counts[_py_bucket(norm[i : i + 3], LANGID_B)] += 1
+            counts[md5_int_py(norm[i : i + 3], 7) % LANGID_B] += 1
         tot = len(norm) - 2
         out[lang] = [
             _round_half_away(
@@ -176,16 +160,16 @@ def _model_frame(docs: DataFrame, extra_cols: tuple[str, ...] = ()) -> DataFrame
     ).otherwise(
         F.transform(
             F.sequence(F.lit(1), nlen - 2),
-            lambda i: _bucket(F.col("_n").substr(i, F.lit(3)), LANGID_B),
+            lambda i: md5_int(F.col("_n").substr(i, F.lit(3)), 7) % LANGID_B,
         )
     )
     n = F.size(F.col("_kt"))
-    uni = F.transform(F.col("_kt"), lambda t: _bucket(t, PPL_B))
+    uni = F.transform(F.col("_kt"), lambda t: md5_int(t, 7) % PPL_B)
     bi = F.when(n < 2, F.array().cast("array<bigint>")).otherwise(
         F.zip_with(
             F.slice(F.col("_kt"), 1, n - 1),
             F.slice(F.col("_kt"), 2, n - 1),
-            lambda a, b: _bucket(F.concat(a, F.lit(" "), b), PPL_B),
+            lambda a, b: md5_int(F.concat(a, F.lit(" "), b), 7) % PPL_B,
         )
     )
     # position-aligned (unigram, bigram-or-SENTINEL) pairs; the first
@@ -298,7 +282,7 @@ def _langid_weights_cte(table: str) -> str:
         "'_' || array_to_string(list_filter(regexp_split_to_array("
         f"lower(coalesce({{col}}, '')), '{_WS_RE}'), x -> x <> ''), '_') || '_'"
     )
-    gb = _bucket_sql("substr(n, CAST(i AS INT), 3)", LANGID_B)
+    gb = f"({md5_int_sql('substr(n, CAST(i AS INT), 3)', 7)} % {LANGID_B})"
     wexpr = (
         f"CAST(round(ln((coalesce(c.c, 0) + {LANGID_ALPHA}) / "
         f"(t.tot + {LANGID_ALPHA} * {LANGID_B})) * 1000000) AS BIGINT)"
@@ -388,9 +372,9 @@ def perplexity_probs() -> tuple[list[float], list[float]]:
     for text in SEED_TEXT.values():
         kt = _py_kept_tokens(text)
         for t in kt:
-            ucnt[_py_bucket(t, PPL_B)] += 1
+            ucnt[md5_int_py(t, 7) % PPL_B] += 1
         for a, b in zip(kt, kt[1:]):
-            bcnt[_py_bucket(a + " " + b, PPL_B)] += 1
+            bcnt[md5_int_py(a + " " + b, 7) % PPL_B] += 1
         n_uni += len(kt)
         n_bi += max(len(kt) - 1, 0)
     pu = [(c + PPL_ALPHA) / (n_uni + PPL_ALPHA * PPL_B) for c in ucnt]
@@ -641,8 +625,9 @@ def _ppl_probs_cte() -> str:
         f"lower({{col}}), '{_WS_RE}'), x -> x <> ''), "
         f"x -> trim(x, '{_PUNCT_SQL}')), x -> x <> '')"
     )
-    ub = _bucket_sql("t", PPL_B)
-    bb = _bucket_sql("kt[i] || ' ' || kt[i+1]", PPL_B)
+    ub = f"({md5_int_sql('t', 7)} % {PPL_B})"
+    bigram = "kt[i] || ' ' || kt[i+1]"
+    bb = f"({md5_int_sql(bigram, 7)} % {PPL_B})"
     return f"""
 {_seed_sql()},
 skt AS (SELECT lang, {toks.format(col='txt')} AS kt FROM seed),
@@ -668,8 +653,9 @@ def perplexity_model_scores_sql(table: str = "documents") -> str:
         f"lower(coalesce(text, '')), '{_WS_RE}'), x -> x <> ''), "
         f"x -> trim(x, '{_PUNCT_SQL}')), x -> x <> '')"
     )
-    ub = _bucket_sql("kt[CAST(i AS INT)]", PPL_B)
-    bb = _bucket_sql("kt[CAST(i AS INT) - 1] || ' ' || kt[CAST(i AS INT)]", PPL_B)
+    ub = f"({md5_int_sql('kt[CAST(i AS INT)]', 7)} % {PPL_B})"
+    bigram = "kt[CAST(i AS INT) - 1] || ' ' || kt[CAST(i AS INT)]"
+    bb = f"({md5_int_sql(bigram, 7)} % {PPL_B})"
     interp = (
         f"{W_BI!r} * coalesce(pb.p, pu.p) + {W_UNI!r} * pu.p + "
         f"{W_FLOOR!r} * (1.0 / 1048576.0)"

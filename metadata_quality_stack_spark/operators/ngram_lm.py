@@ -21,7 +21,7 @@ exchanges are bounded by the BUCKET space (65k + 256 rows), never the
 corpus — the IVF-centroid / DSIR-census pattern. The trained model and
 the context backoff table ride the scoring join as broadcasts. Text
 never shuffles; the per-token md5 is the same accepted price as the
-micro scorers (the cross-engine hash family).
+micro scorers (the cross-engine hash of ``functions/hashing.py``).
 
 Cross-engine exactness without libm: ``log2`` is computed in FIXED
 POINT by pure int64 arithmetic — integer part from binary-string
@@ -42,8 +42,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from metadata_quality_stack_spark.functions.hashing import md5_int, md5_int_sql
 from metadata_quality_stack_spark.functions.text import token_array
-from metadata_quality_stack_spark.operators.sketches import _h60_sql
 from metadata_quality_stack_spark.sources.store import scratch_dir
 
 LM_BUCKETS = 256  # B: token-hash space; pairs encode as bp*B+bc < 2^16
@@ -175,11 +175,7 @@ def _doc_pairs(
     staged = docs.select("doc_id", *carry, toks.alias("_tk"))
     bkt = F.transform(
         F.col("_tk"),
-        lambda t: F.pmod(
-            F.conv(F.substring(F.md5(F.encode(t, "UTF-8")), 1, 15), 16, 10)
-            .cast("long"),
-            F.lit(LM_BUCKETS),
-        ),
+        lambda t: F.pmod(md5_int(t, 15), F.lit(LM_BUCKETS)),
     )
     sz = F.size("_bk")
     pairs = F.when(
@@ -301,7 +297,7 @@ _TOKS_SQL = (
 
 
 def _pairs_cte(table: str) -> str:
-    bkt = f"({_h60_sql('t.tok')} % {LM_BUCKETS})"
+    bkt = f"({md5_int_sql('t.tok', 15)} % {LM_BUCKETS})"
     return f"""tk AS (
   SELECT doc_id, generate_subscripts({_TOKS_SQL}, 1) AS pos,
          unnest({_TOKS_SQL}) AS tok
@@ -599,7 +595,7 @@ WITH tk AS (
          unnest({_TOKS_SQL}) AS tok
   FROM {table} WHERE text IS NOT NULL AND lang IS NOT NULL
 ),
-bk AS (SELECT doc_id, lang, pos, ({_h60_sql('t.tok')} % {LM_BUCKETS}) AS b
+bk AS (SELECT doc_id, lang, pos, ({md5_int_sql('t.tok', 15)} % {LM_BUCKETS}) AS b
        FROM tk t),
 pr AS (
   SELECT a.doc_id, a.lang, a.b * {LM_BUCKETS} + c.b AS pc

@@ -13,6 +13,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from metadata_quality_stack_spark.functions.hashing import (
+    hex_int,
+    hex_int_sql,
+    md5_int,
+    md5_int_sql,
+)
+
 SAMPLE_BUCKETS = 100
 
 
@@ -20,12 +27,7 @@ def sample_bucket(id_col: F.Column) -> F.Column:
     """Stable 0..99 bucket from md5 of the stringified id — content-
     derived, so the same document lands in the same split across runs,
     clusters, and engines (the property rand()-sampling lacks)."""
-    return (
-        F.conv(F.substring(F.md5(id_col.cast("string")), 1, 7), 16, 10).cast(
-            "long"
-        )
-        % SAMPLE_BUCKETS
-    )
+    return md5_int(id_col.cast("string"), 7) % SAMPLE_BUCKETS
 
 
 def deterministic_sample(
@@ -40,12 +42,7 @@ def deterministic_sample(
 def _content_split(val_pct: int, test_pct: int) -> tuple[F.Column, F.Column]:
     """(bucket, split) expressions keyed on md5(text) — shared by the
     per-doc assignment and the token-budget rollup."""
-    b = (
-        F.conv(
-            F.substring(F.md5(F.encode(F.col("text"), "UTF-8")), 1, 7), 16, 10
-        ).cast("long")
-        % SAMPLE_BUCKETS
-    )
+    b = md5_int(F.col("text"), 7) % SAMPLE_BUCKETS
     split = (
         F.when(b < test_pct, F.lit("test"))
         .when(b < test_pct + val_pct, F.lit("val"))
@@ -87,7 +84,7 @@ def corpus_token_budget_sql(
         f"CASE WHEN length({trimmed}) = 0 THEN [] "
         f"ELSE string_split_regex({trimmed}, '[ \\t\\n\\r]+') END"
     )
-    b = f"(('0x' || substr(md5(text), 1, 7))::BIGINT % {SAMPLE_BUCKETS})"
+    b = f"({md5_int_sql('text', 7)} % {SAMPLE_BUCKETS})"
     return f"""
 WITH t AS (
   SELECT CASE WHEN {b} < {test_pct} THEN 'test'
@@ -130,7 +127,7 @@ def train_val_test_split_sql(
 ) -> str:
     """DuckDB mirror of :func:`train_val_test_split` (identical md5
     bucket arithmetic)."""
-    b = f"(('0x' || substr(md5(text), 1, 7))::BIGINT % {SAMPLE_BUCKETS})"
+    b = f"({md5_int_sql('text', 7)} % {SAMPLE_BUCKETS})"
     return f"""
 SELECT doc_id, source, lang, {b} AS bucket,
        CASE WHEN {b} < {test_pct} THEN 'test'
@@ -356,7 +353,7 @@ w AS (SELECT lang, round((total / n_langs) / n_docs, 6) AS weight FROM per, tot)
 c AS (
   SELECT d.doc_id, d.lang,
          CAST(floor(w.weight) AS BIGINT)
-         + CASE WHEN ('0x' || substr(md5(CAST(d.doc_id AS VARCHAR)), 1, 7))::BIGINT
+         + CASE WHEN {md5_int_sql('CAST(d.doc_id AS VARCHAR)', 7)}
                      % {SAMPLE_BUCKETS}
                      < CAST(floor((w.weight - floor(w.weight)) * 100) AS BIGINT)
                 THEN 1 ELSE 0 END AS n_copies
@@ -390,9 +387,7 @@ def shuffle_shards(docs: DataFrame, n_shards: int = N_SHUFFLE_SHARDS) -> DataFra
     key = F.md5(
         F.concat(F.lit("shuffle:"), F.col("doc_id").cast("string"))
     )
-    shard = (
-        F.conv(F.substring(key, 1, 7), 16, 10).cast("long") % n_shards
-    )
+    shard = hex_int(key, 7) % n_shards
     w = Window.partitionBy("shard").orderBy("shuffle_key", "doc_id")
     return (
         docs.select(
@@ -410,7 +405,7 @@ def shuffle_shards_sql(
     return f"""
 WITH k AS (
   SELECT doc_id, {key} AS shuffle_key,
-         (('0x' || substr({key}, 1, 7))::BIGINT % {n_shards}) AS shard
+         ({hex_int_sql(key, 7)} % {n_shards}) AS shard
   FROM {table}
 )
 SELECT doc_id, shard, shuffle_key,
@@ -659,10 +654,7 @@ def quality_weighted_sample_sql(
     from metadata_quality_stack_spark import config
 
     m = int(max_score if max_score is not None else config.MAX_SCORE)
-    b = (
-        f"(('0x' || substr(md5(CAST({id_col} AS VARCHAR)), 1, 7))::BIGINT"
-        f" % {SAMPLE_BUCKETS})"
-    )
+    b = f"({md5_int_sql(f'CAST({id_col} AS VARCHAR)', 7)} % {SAMPLE_BUCKETS})"
     return (
         f"WITH scored AS ({scored_cte}) "
         f"SELECT {id_col}, total_score, rating FROM scored "

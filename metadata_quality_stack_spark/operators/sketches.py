@@ -8,8 +8,9 @@ verify it. KMV (Bar-Yossef et al. 2002, "Counting distinct elements in
 a data stream" — public) is the sketch that CAN be gate-verified:
 
     h(x)   = first 15 hex digits of md5(x) as a 60-bit integer
-             (md5 = the hash family every operator here shares, so both
-             engines compute identical hashes)
+             (``md5_int(x, 15)``, functions/hashing.py — the hash every
+             operator here shares, so all engines compute identical
+             hashes)
     sketch = the K smallest DISTINCT hash values
     est    = (K - 1) / u_K   where u_K = (kth_min + 0.5) / 2^60
 
@@ -28,28 +29,13 @@ without re-reading shards (tested in tests/test_sketches.py).
 
 from __future__ import annotations
 
-import hashlib
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from metadata_quality_stack_spark.functions.hashing import md5_int, md5_int_sql
+
 KMV_K = 128
 _H_SPACE = 2.0**60  # 15 hex digits
-
-
-def _h60(col: F.Column) -> F.Column:
-    """60-bit md5-derived hash, identical across engines."""
-    return F.conv(
-        F.substring(F.md5(F.encode(col, "UTF-8")), 1, 15), 16, 10
-    ).cast("long")
-
-
-def _h60_sql(expr: str) -> str:
-    return f"(('0x' || substr(md5({expr}), 1, 15))::BIGINT)"
-
-
-def py_h60(s: str) -> int:
-    return int(hashlib.md5(s.encode("utf-8")).hexdigest()[:15], 16)
 
 
 def kmv_sketch(docs: DataFrame, col: str = "text", k: int = KMV_K) -> DataFrame:
@@ -58,7 +44,7 @@ def kmv_sketch(docs: DataFrame, col: str = "text", k: int = KMV_K) -> DataFrame:
 
     Columns: h."""
     return (
-        docs.select(_h60(F.col(col)).alias("h"))
+        docs.select(md5_int(F.col(col), 15).alias("h"))
         .distinct()
         .orderBy("h")
         .limit(k)
@@ -90,7 +76,7 @@ def kmv_distinct_estimate_sql(
     table: str = "documents", col: str = "text", k: int = KMV_K
 ) -> str:
     return f"""
-WITH hs AS (SELECT DISTINCT {_h60_sql(col)} AS h FROM {table}),
+WITH hs AS (SELECT DISTINCT {md5_int_sql(col, 15)} AS h FROM {table}),
 top AS (SELECT h FROM hs ORDER BY h LIMIT {k}),
 agg AS (SELECT count(*) AS k_seen, max(h) AS kth_hash FROM top)
 SELECT k_seen::BIGINT AS k_seen, kth_hash::BIGINT AS kth_hash,

@@ -32,6 +32,10 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+# _h60_url: the 60-bit priority / content hash, imported under this name
+# by the sink, job.py and bench.py
+from metadata_quality_stack_spark.functions.hashing import h60 as _h60_url, md5_int_sql
+
 # one tracking param with its '&' separator (runs after ? -> & unify)
 _TRACK = "&(utm_[a-z]+|fbclid|gclid)=[^&]*"
 
@@ -260,14 +264,6 @@ def domain_cap(
     )
 
 
-def _h60_url(col: Column) -> Column:
-    """60-bit md5 priority hash (same family as sketches._h60; local
-    copy avoids a circular import)."""
-    return F.conv(
-        F.substring(F.md5(F.encode(col, "UTF-8")), 1, 15), 16, 10
-    ).cast("long")
-
-
 def domain_cap_sql(syn_pages: str, k: int) -> str:
     """DuckDB mirror — the SINGLE-window statement of the semantics the
     two-phase plan must reproduce exactly."""
@@ -276,8 +272,7 @@ WITH pages AS ({syn_pages}),
 n AS (SELECT doc_id,
         regexp_replace(regexp_extract({normalize_url_sql('url')},
                        '^([^/?&]+)', 1), ':[0-9]+$', '') AS domain,
-        (('0x' || substr(md5({normalize_url_sql('url')}), 1, 15))::BIGINT)
-          AS pri
+        {md5_int_sql(normalize_url_sql('url'), 15)} AS pri
       FROM pages),
 r AS (SELECT doc_id, domain,
         row_number() OVER (PARTITION BY domain ORDER BY pri, doc_id) AS rk
@@ -331,7 +326,7 @@ def snapshot_diff(
 
 
 def snapshot_diff_sql(old_pages: str, new_pages: str) -> str:
-    h = "(('0x' || substr(md5(text), 1, 15))::BIGINT)"
+    h = md5_int_sql("text", 15)
     return f"""
 WITH a AS (SELECT url_norm, min({h}) AS h_old FROM ({old_pages}) GROUP BY 1),
 b AS (SELECT url_norm, min({h}) AS h_new FROM ({new_pages}) GROUP BY 1),
@@ -374,7 +369,7 @@ def rescore_delta(
     keep); ``new_pages`` needs (url_col, content_col, id_col) plus
     whatever ``score_fn`` consumes. Output: url_col, action
     ('carried' | 'scored'), total_score, rating, keep."""
-    h = _h60_url  # content hash, same 60-bit md5 family as snapshot_diff
+    h = _h60_url  # content hash, the same 60-bit md5 as snapshot_diff
     u, c, i = url_col, content_col, id_col
 
     old_bh = (

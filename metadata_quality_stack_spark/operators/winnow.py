@@ -21,8 +21,8 @@ density 2/(w+1) of all grams — the storage/guarantee trade-off knob.
 Engine mapping — built-ins only, no Python in the row path:
 
 * **k-gram hashes** are one map-side projection: posexplode over a
-  transform(sequence) of 28-bit md5 prefixes (`conv(substr(md5,1,7))`,
-  the repo's shared cross-engine hash idiom — dedup._minhash_sig).
+  transform(sequence) of 28-bit md5 prefixes (``functions/hashing.py``,
+  the cross-engine hash the MinHash base uses too).
 * **rightmost-min selection** needs argmin-with-tiebreak inside a
   sliding frame, which neither engine's window-min gives directly; both
   get it from ONE min() by packing (hash, position) into a single
@@ -56,6 +56,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from metadata_quality_stack_spark.functions.hashing import md5_int, md5_int_sql
+
 WINNOW_K = 20  # k-gram length (normalized chars)
 WINNOW_W = 8  # window: guarantee threshold t = w + k - 1 = 27 chars
 POS_BITS = 24  # position field width inside the packed key
@@ -81,11 +83,7 @@ def _gram_hashes(norm, k: int):
     idx = F.sequence(F.lit(1), F.length(norm) - F.lit(k - 1))
     grams = F.transform(
         idx,
-        lambda i: F.conv(
-            F.substring(F.md5(F.encode(norm.substr(i, F.lit(k)), "UTF-8")), 1, 7),
-            16,
-            10,
-        ).cast("long"),
+        lambda i: md5_int(norm.substr(i, F.lit(k)), 7),
     )
     return F.when(F.length(norm) >= k, grams).otherwise(
         F.array().cast("array<long>")
@@ -131,7 +129,7 @@ def _sel_sql(
   SELECT doc_id, {_norm_sql(text_col)} AS norm FROM {table}),
 g AS (
   SELECT doc_id, i - 1 AS pos,
-         ('0x' || substr(md5(substr(norm, i, {k})), 1, 7))::BIGINT AS h
+         {md5_int_sql(f"substr(norm, i, {k})", 7)} AS h
   FROM nd, unnest(generate_series(1, greatest(length(norm) - {k} + 1, 0))) AS t(i)),
 keys AS (
   SELECT doc_id, pos, h * {_POS_M} + ({_POS_M - 1} - pos) AS key FROM g),

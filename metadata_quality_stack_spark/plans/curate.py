@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from metadata_quality_stack_spark.functions.hashing import hex_int
 from metadata_quality_stack_spark.operators.rules import apply_quality, filter_scored
 from metadata_quality_stack_spark.operators.sampling import (
     cap_per_key,
@@ -197,10 +198,7 @@ def curation_recipe(
     # same bucket arithmetic as sampling._content_split, but computed
     # from the fingerprint column (== md5(text)) the dedup stage already
     # carries — the split costs zero additional text reads
-    b = (
-        F.conv(F.substring("fingerprint", 1, 7), 16, 10).cast("long")
-        % SAMPLE_BUCKETS
-    )
+    b = hex_int("fingerprint", 7) % SAMPLE_BUCKETS
     split = (
         F.when(b < test_pct, F.lit("test"))
         .when(b < test_pct + val_pct, F.lit("val"))

@@ -30,6 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from metadata_quality_stack_spark.functions.hashing import hex_int
 from metadata_quality_stack_spark.operators import cdc
 from metadata_quality_stack_spark.sources import store
 
@@ -46,7 +47,7 @@ def _chunks(docs: DataFrame, text_col: str = "text") -> DataFrame:
 
 
 def _with_bucket(df: DataFrame) -> DataFrame:
-    return df.withColumn("ch_bucket", store.hex_bucket(F.col("h"), CH_BUCKETS))
+    return df.withColumn("ch_bucket", (hex_int("h", 2) % CH_BUCKETS).cast("int"))
 
 
 def build_chunk_index(docs: DataFrame, index_dir: str) -> None:

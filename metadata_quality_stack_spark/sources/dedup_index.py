@@ -35,6 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from metadata_quality_stack_spark.functions.hashing import hex_int
 from metadata_quality_stack_spark.sources import store
 
 FP_BUCKETS = 16
@@ -48,7 +49,7 @@ def content_fingerprint() -> F.Column:
 
 def _with_bucket(fps: DataFrame) -> DataFrame:
     return fps.withColumn(
-        "fp_bucket", store.hex_bucket(F.col("fingerprint"), FP_BUCKETS)
+        "fp_bucket", (hex_int("fingerprint", 2) % FP_BUCKETS).cast("int")
     )
 
 
@@ -234,7 +235,7 @@ def write_bloom(spark: SparkSession, bitmap: list[int], index_dir: str) -> None:
 
 def read_bloom(spark: SparkSession, index_dir: str) -> list[int] | None:
     """Read the bitmap at its STORED geometry (m_bits column)."""
-    sidecar = store.read_table(spark, _bloom_dir(index_dir))
+    sidecar = store.read_sidecar(spark, _bloom_dir(index_dir))
     if sidecar is None:
         return None
     rows = sidecar.collect()

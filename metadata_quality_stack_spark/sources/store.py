@@ -16,12 +16,17 @@ call these helpers for the layout itself:
 * :func:`read_table` — a read of the table ROOT with ``basePath``, so
   partition columns are exposed for pruning and ``_``-prefixed
   sidecars (``_manifest.json``, ``_bloom/``, ``_stats/``,
-  ``_rewrites/``) stay out. The probe goes through the Spark reader, not
-  ``os.path``: a table lives wherever the warehouse lives (HDFS/S3 in
-  production), where a local directory listing is always empty;
-* :func:`hex_bucket` — the md5-hex-prefix bucket, computable for a
-  literal without a job;
+  ``_rewrites/``) stay out;
+* :func:`read_sidecar` — a read of one of those ``_``-prefixed
+  sidecar tables through its data files;
 * :func:`scratch_dir` — the temporary table dir of a gate lifecycle.
+
+Both reads probe the path through the Hadoop ``FileSystem`` of the
+warehouse, not ``os.path``: a table lives wherever the warehouse lives
+(HDFS/S3 in production), where a local directory listing is always
+empty. The probe also keeps Spark's reader off paths it would warn
+about: an absent path (a ``FileStreamSink`` stack trace) and a named
+``_`` directory ("All paths were ignored").
 """
 
 from __future__ import annotations
@@ -32,7 +37,6 @@ from contextlib import contextmanager
 
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 _OVERWRITE_MODE = "spark.sql.sources.partitionOverwriteMode"
 
@@ -70,11 +74,20 @@ def write_partitioned(
     df.write.mode(mode).partitionBy(part_col).parquet(path)
 
 
+def _fs(spark: SparkSession, path: str):
+    """(Hadoop ``Path``, its ``FileSystem``) for ``path``."""
+    p = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return p, p.getFileSystem(spark._jsc.hadoopConfiguration())
+
+
 def read_table(spark: SparkSession, path: str) -> DataFrame | None:
     """The table at ``path``, or ``None`` when no write has reached it
     (no directory, or one without data files). Every other read error
     raises, and so does a caller's ``.select`` of a column the table
     does not have."""
+    p, fs = _fs(spark, path)
+    if not fs.exists(p):
+        return None
     try:
         return spark.read.option("basePath", path).parquet(path)
     except AnalysisException as e:
@@ -83,10 +96,19 @@ def read_table(spark: SparkSession, path: str) -> DataFrame | None:
         raise
 
 
-def hex_bucket(hex_col: F.Column, n: int) -> F.Column:
-    """Bucket ``0..n-1`` from the first two hex digits of an md5 hex
-    string, computable for a literal without running a job."""
-    return F.conv(F.substring(hex_col, 1, 2), 16, 10).cast("int") % n
+def read_sidecar(spark: SparkSession, path: str) -> DataFrame | None:
+    """The unpartitioned ``_``-prefixed table at ``path``, read from its
+    data files, or ``None`` when it has none (no directory, or no file
+    that is not hidden: ``_SUCCESS``, ``.crc``)."""
+    p, fs = _fs(spark, path)
+    if not fs.exists(p):
+        return None
+    files = [
+        s.getPath().toString()
+        for s in fs.listStatus(p)
+        if s.isFile() and not s.getPath().getName().startswith(("_", "."))
+    ]
+    return spark.read.parquet(*files) if files else None
 
 
 @contextmanager

@@ -8,16 +8,16 @@ postings of its own terms. This module is that index, following the
 `dedup_index` lifecycle (build / append / probe / scratch-dir gate):
 
 * **layout** — one parquet postings table (term, doc_id, tf, dl),
-  partition-dirred by a driver-computable term bucket (md5-prefix %
-  N, ``store.hex_bucket``) and written through ``sources/store.py``,
-  rows sorted by term within each file so parquet row-group min/max
-  stats prune inside a bucket too. A
-  probe for Q terms reads at most Q bucket dirs: the scan cost is
-  O(matching postings), independent of corpus size.
+  partition-dirred by a driver-computable term bucket (two md5 hex
+  digits % N, ``functions/hashing.py``) and written through
+  ``sources/store.py``, rows sorted by term within each file so parquet
+  row-group min/max stats prune inside a bucket too. A probe for Q terms
+  reads at most Q bucket dirs: the scan cost is O(matching postings),
+  independent of corpus size.
 * **stats sidecar** — BM25 needs the corpus scalars (N docs, S total
   tokens); they live in `_stats/` (underscore-hidden from partition
-  discovery), read explicitly and broadcast. Append updates them
-  arithmetically — no corpus re-scan.
+  discovery), read through ``store.read_sidecar`` and broadcast. Append
+  updates them arithmetically — no corpus re-scan.
 * **append contract** — the caller feeds only NEW documents (pair with
   dedup_index for that guarantee); appending an already-indexed doc
   would double its postings. Appends create one file per touched
@@ -37,11 +37,10 @@ matching postings, two bounded aggs, TakeOrdered — is unchanged.
 
 from __future__ import annotations
 
-import hashlib
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from metadata_quality_stack_spark.functions.hashing import md5_int, md5_int_py
 from metadata_quality_stack_spark.functions.text import token_array
 from metadata_quality_stack_spark.operators.retrieval import BM25_SCORE_EXPR
 from metadata_quality_stack_spark.sources import store
@@ -54,16 +53,6 @@ def _lows() -> F.Column:
         token_array(F.coalesce(F.col("text"), F.lit(""))),
         lambda x: F.lower(x),
     )
-
-
-def _py_bucket(term: str) -> int:
-    return int(hashlib.md5(term.encode("utf-8")).hexdigest()[:2], 16) % TERM_BUCKETS
-
-
-def _bucket_col(term: F.Column) -> F.Column:
-    """Engine twin of :func:`_py_bucket` (md5 prefix — driver-computable
-    so probes can name partition literals without running a job)."""
-    return store.hex_bucket(F.md5(F.encode(term, "UTF-8")), TERM_BUCKETS)
 
 
 def _postings(docs: DataFrame) -> DataFrame:
@@ -80,7 +69,9 @@ def _postings(docs: DataFrame) -> DataFrame:
 
 def _write(postings: DataFrame, index_dir: str, mode: str) -> None:
     store.write_partitioned(
-        postings.withColumn("term_bucket", _bucket_col(F.col("term"))),
+        postings.withColumn(
+            "term_bucket", (md5_int(F.col("term"), 2) % TERM_BUCKETS).cast("int")
+        ),
         index_dir, "term_bucket", mode, sort_col="term",
     )
 
@@ -94,7 +85,10 @@ def _write_stats(
 
 
 def read_stats(spark: SparkSession, index_dir: str) -> tuple[int, int]:
-    r = spark.read.parquet(f"{index_dir}/_stats").first()
+    stats = store.read_sidecar(spark, f"{index_dir}/_stats")
+    if stats is None:
+        raise FileNotFoundError(f"no text index at {index_dir}")
+    r = stats.first()
     return int(r.n_corpus), int(r.s_tokens)
 
 
@@ -146,7 +140,8 @@ def index_bm25_topk(
     terms = sorted({t.lower() for t in query if t})
     if not terms:
         raise ValueError("index_bm25_topk needs at least one non-empty term")
-    buckets = sorted({_py_bucket(t) for t in terms})
+    # the same bucket as _write's, computed on the driver: no job
+    buckets = sorted({md5_int_py(t, 2) % TERM_BUCKETS for t in terms})
     n_corpus, s_tokens = read_stats(spark, index_dir)  # raises on a missing index
     postings = (
         store.read_table(spark, index_dir)

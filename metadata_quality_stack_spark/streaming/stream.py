@@ -213,21 +213,6 @@ def stream_hll_registers(spark: SparkSession, input_dir: str) -> DataFrame:
     the streamed one (tested), which is the mergeability property that
     lets a monitoring job track corpus cardinality forever without
     growing state."""
-    from metadata_quality_stack_spark.operators.hll import HLL_M, _MAX_RANK
-    from metadata_quality_stack_spark.operators.sketches import _h60
+    from metadata_quality_stack_spark.operators.hll import hll_registers
 
-    pages = read_pages_stream(spark, input_dir)
-    h = _h60(F.col("text"))
-    w = F.expr("_h div 64")
-    bitlen = F.length(F.conv(w.cast("string"), 10, 2))
-    rank = F.when(w == 0, F.lit(_MAX_RANK)).otherwise(F.lit(_MAX_RANK) - bitlen)
-    return (
-        pages.filter(F.col("text").isNotNull())
-        .select(h.alias("_h"))
-        .select(
-            (F.col("_h") % HLL_M).cast("int").alias("bucket"),
-            rank.cast("int").alias("rank"),
-        )
-        .groupBy("bucket")
-        .agg(F.max("rank").alias("register"))
-    )
+    return hll_registers(read_pages_stream(spark, input_dir))

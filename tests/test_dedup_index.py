@@ -7,7 +7,7 @@ import glob
 from pyspark.sql import functions as F
 
 from metadata_quality_stack_spark.sources import dedup_index as dix
-from metadata_quality_stack_spark.sources.store import read_table
+from metadata_quality_stack_spark.sources.store import read_sidecar, read_table
 
 
 def _docs(spark, rows):
@@ -50,6 +50,17 @@ def test_ingest_into_missing_index_bootstraps(spark, tmp_path):
     kept = dix.ingest_batch(spark, batch, index_dir)
     assert sorted(r.doc_id for r in kept.collect()) == [1, 3]
     assert read_table(spark, index_dir).count() == 2
+
+
+def test_absent_and_empty_tables_read_as_none(spark, tmp_path):
+    """No directory, or one holding only hidden files, reads as no table
+    through both store readers."""
+    empty = tmp_path / "empty"
+    empty.mkdir()
+    (empty / "_SUCCESS").write_text("")
+    for path in (str(tmp_path / "absent"), str(empty)):
+        assert read_table(spark, path) is None
+        assert read_sidecar(spark, path) is None
 
 
 def test_ingest_into_foreign_table_raises(spark, tmp_path):

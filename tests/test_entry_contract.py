@@ -180,3 +180,55 @@ def test_only_store_owns_the_table_layout():
     assert {what for _, what in _layout_sites(ast.parse(store.read_text()))} == {
         "partitionOverwriteMode", "mkdtemp",
     }
+
+
+def _md5_prefix_sites(tree: ast.AST):
+    """(line, kind) for each spelling of the md5-prefix integer: Spark's
+    ``F.conv`` over a ``substring``, DuckDB's ``'0x' || substr(`` cast
+    (every occurrence inside a string or f-string part) and Python's
+    ``hashlib.md5``."""
+    for n in ast.walk(tree):
+        if isinstance(n, ast.Call):
+            func = n.func
+            if (
+                isinstance(func, ast.Attribute)
+                and func.attr == "conv"
+                and n.args
+                and isinstance(n.args[0], ast.Call)
+                and "substring" in _referenced_names(n.args[0].func)
+            ):
+                yield n.lineno, "F.conv(F.substring"
+            elif (
+                isinstance(func, ast.Attribute)
+                and func.attr == "md5"
+                and isinstance(func.value, ast.Name)
+                and func.value.id == "hashlib"
+            ):
+                yield n.lineno, "hashlib.md5"
+        elif isinstance(n, ast.Constant) and isinstance(n.value, str):
+            for _ in range(n.value.count("'0x' || substr(")):
+                yield n.lineno, "'0x' || substr("
+
+
+def test_only_hashing_spells_the_md5_prefix():
+    """The integer from N hex digits of md5 is spelled once per engine,
+    in ``functions/hashing.py``; a hand-written copy elsewhere is one
+    that can drift from its twin in another engine unnoticed until
+    both sides of a gate query drift differently. Static: parses the
+    package, the job and the entry, no Spark session."""
+    root = Path(entry.__file__).resolve().parent
+    pkg = root / "metadata_quality_stack_spark"
+    hashing = pkg / "functions" / "hashing.py"
+    files = [root / "job.py", root / "__spark_entry__.py", *sorted(pkg.rglob("*.py"))]
+    found = [
+        f"{f.relative_to(root)}:{line} {what}"
+        for f in files
+        if f != hashing
+        for line, what in _md5_prefix_sites(ast.parse(f.read_text()))
+    ]
+    assert not found, (
+        f"{len(found)} md5-prefix hash sites outside functions/hashing.py: {found}"
+    )
+    assert {what for _, what in _md5_prefix_sites(ast.parse(hashing.read_text()))} == {
+        "F.conv(F.substring", "hashlib.md5", "'0x' || substr(",
+    }

@@ -7,6 +7,7 @@ import duckdb
 import pytest
 from pyspark.sql import functions as F
 
+from metadata_quality_stack_spark.functions.hashing import md5_int_py
 from metadata_quality_stack_spark.functions.langid import LANGS
 from metadata_quality_stack_spark.functions.perplexity import PPL_EMPTY
 from metadata_quality_stack_spark.operators import micro_lm
@@ -223,7 +224,7 @@ def test_langid_scores_match_pure_python(spark):
         grams = [norm[i : i + 3] for i in range(len(norm) - 2)]
         sums = {
             lang: sum(
-                w[lang][micro_lm._py_bucket(g, micro_lm.LANGID_B)]
+                w[lang][md5_int_py(g, 7) % micro_lm.LANGID_B]
                 for g in grams
             )
             for lang in LANGS

@@ -259,11 +259,11 @@ def _score_transform(df):
     """Toy scorer carrying the 60-bit content hash the merge keys on."""
     from pyspark.sql import functions as F
 
-    from metadata_quality_stack_spark.operators.urlops import _h60_url
+    from metadata_quality_stack_spark.functions.hashing import md5_int
 
     return df.select(
         "url",
-        _h60_url(F.col("text")).alias("content_h"),
+        md5_int(F.col("text"), 15).alias("content_h"),
         F.length("text").cast("long").alias("total_score"),
         (F.length("text") > 10).alias("keep"),
     )
@@ -516,10 +516,10 @@ def _hashed_transform(df):
     """The pipeline scorer plus the content hash the merge keys on."""
     from pyspark.sql import functions as F
 
-    from metadata_quality_stack_spark.operators.urlops import _h60_url
+    from metadata_quality_stack_spark.functions.hashing import md5_int
 
     return quality_pipeline(
-        df.withColumn("content_h", _h60_url(F.col("text"))),
+        df.withColumn("content_h", md5_int(F.col("text"), 15)),
         id_cols=("url", "content_h"),
         lang_col="lang",
         include_text=False,

@@ -5,6 +5,7 @@ quality filter's broadcast anti-join and null-source safety."""
 import pytest
 from pyspark.sql import functions as F
 
+from metadata_quality_stack_spark.functions.hashing import md5_int_py
 from metadata_quality_stack_spark.operators import analytics, sketches
 
 
@@ -53,7 +54,7 @@ def test_kmv_matches_pure_python(spark):
     df = spark.createDataFrame(
         [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
     )
-    hs = sorted({sketches.py_h60(t) for t in texts})[: sketches.KMV_K]
+    hs = sorted({md5_int_py(t, 15) for t in texts})[: sketches.KMV_K]
     got = [r["h"] for r in sketches.kmv_sketch(df).collect()]
     assert got == hs
 

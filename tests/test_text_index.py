@@ -7,8 +7,9 @@ import glob
 import pytest
 from pyspark.sql import functions as F
 
+from metadata_quality_stack_spark.functions.hashing import md5_int_py
 from metadata_quality_stack_spark.operators import retrieval
-from metadata_quality_stack_spark.sources import text_index
+from metadata_quality_stack_spark.sources import store, text_index
 
 DOCS = "/root/testdata/sf0.001/documents.parquet"
 QUERY = ["vector", "hash", "window", "nosuchterm"]
@@ -66,7 +67,7 @@ def test_probe_prunes_to_query_buckets(spark, docs, tmp_path):
     text_index.build_text_index(docs, d)
     probe = text_index.index_bm25_topk(spark, d, ["vector"], 5)
     plan = probe._jdf.queryExecution().executedPlan().toString()
-    b = text_index._py_bucket("vector")
+    b = _py_bucket("vector")
     scans = [ln for ln in plan.splitlines() if "FileScan" in ln]
     assert scans
     for ln in scans:
@@ -76,18 +77,27 @@ def test_probe_prunes_to_query_buckets(spark, docs, tmp_path):
         assert "EqualTo(term,vector)" in ln
 
 
-def test_engine_and_python_bucket_agree(spark):
+def _py_bucket(term):
+    """The driver-side term bucket a probe prunes to."""
+    return md5_int_py(term, 2) % text_index.TERM_BUCKETS
+
+
+def test_engine_and_python_bucket_agree(spark, tmp_path):
+    """The partition dir a term's postings are written to is the bucket
+    the driver computes for it."""
     terms = ["vector", "hash", "window", "a", "zz", "café"]
-    df = spark.createDataFrame([(t,) for t in terms], "term string").select(
-        "term", text_index._bucket_col(F.col("term")).alias("b")
+    d = str(tmp_path / "idx")
+    text_index.build_text_index(
+        spark.createDataFrame(list(enumerate(terms)), "doc_id long, text string"), d
     )
+    df = store.read_table(spark, d).select("term", F.col("term_bucket").alias("b"))
     got = {r.term: r.b for r in df.collect()}
-    assert got == {t: text_index._py_bucket(t) for t in terms}
+    assert got == {t: _py_bucket(t) for t in terms}
 
 
 def test_bucket_math_stays_in_range(spark):
-    assert 0 <= text_index._py_bucket("anything") < text_index.TERM_BUCKETS
-    assert 0 <= text_index._py_bucket("ff" * 40) < text_index.TERM_BUCKETS
+    assert 0 <= _py_bucket("anything") < text_index.TERM_BUCKETS
+    assert 0 <= _py_bucket("ff" * 40) < text_index.TERM_BUCKETS
 
 
 def test_domain_top_terms_hostile_and_ranked(spark):

@@ -6,6 +6,7 @@ import duckdb
 import pytest
 from pyspark.sql import functions as F
 
+from metadata_quality_stack_spark.functions.hashing import md5_int
 from metadata_quality_stack_spark.operators import urlops
 
 CASES = [
@@ -167,7 +168,7 @@ def test_domain_cap_two_phase_equals_single_window(spark):
         pages.select(
             "doc_id",
             urlops.domain_of(u).alias("domain"),
-            urlops._h60_url(u).alias("pri"),
+            md5_int(u, 15).alias("pri"),
         )
         .withColumn(
             "rk",
