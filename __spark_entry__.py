@@ -1108,9 +1108,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "doc_id", "media_type", "n_bytes", "width", "height", "n_channels",
         "payload_sha",
     )
-    q["media_frame_sample"] = lambda s, d: multimodal.frame_sample(
-        _media(s, d), fps=1.0
-    ).select(
+    q["media_frame_sample"] = lambda s, d: multimodal.frame_sample(_media(s, d)).select(
         "doc_id",
         F.col("frame_ts_ms").cast("long").alias("frame_ts_ms"),
         F.col("frame_idx").cast("long").alias("frame_idx"),
@@ -1758,7 +1756,7 @@ FROM f
     )
     from metadata_quality_stack_spark.functions.scrub import scrub_sql_exprs
 
-    sc = scrub_sql_exprs("text")
+    sc = scrub_sql_exprs()
     o["scrub_pii"] = (
         "SELECT doc_id, "
         f"{sc['scrubbed_text']} AS scrubbed_text, "

@@ -5,8 +5,9 @@ Mirrors the structure of ``/root/reference/src/api/config.py``:
 * ``METRICS_BY_PROFILE`` / ``COMMON_METRICS`` (config.py:243-316) ->
   ``RULES_BY_PROFILE`` / ``WEBTEXT_RULES`` here: one dict per rule with
   ``{id, dimension, weight, kind}``.
-* ``RATING_THRESHOLDS_BY_PROFILE`` (config.py:30-46) -> ``RATING_THRESHOLDS``.
-* ``DIMENSION_MAX_SCORES`` (config.py:327-349) -> ``DIMENSION_MAX``.
+* ``RATING_THRESHOLDS_BY_PROFILE`` (config.py:30-46) ->
+  ``RATING_THRESHOLDS_BY_PROFILE``.
+* ``DIMENSION_MAX_SCORES`` (config.py:327-349) -> ``DIMENSION_MAX_BY_PROFILE``.
 * vocabularies (config.py:182-195) -> broadcast stopword / blocklist sets.
 
 The web-document profile keeps the reference's exact dimension weight
@@ -137,11 +138,9 @@ RATING_THRESHOLDS_BY_PROFILE = {  # reference config.py:30-46
     "webtext_nti": {"excellent": 264, "good": 166, "sufficient": 91},
 }
 
-# back-compat aliases (default profile, like the reference's
-# RATING_THRESHOLDS = RATING_THRESHOLDS_BY_PROFILE["dcat_ap_es"])
-DIMENSION_MAX = DIMENSION_MAX_BY_PROFILE["webtext"]
+# the default profile's ceiling (read by sampling), an alias like the
+# reference's RATING_THRESHOLDS = RATING_THRESHOLDS_BY_PROFILE["dcat_ap_es"]
 MAX_SCORE = MAX_SCORE_BY_PROFILE["webtext"]
-RATING_THRESHOLDS = RATING_THRESHOLDS_BY_PROFILE["webtext"]
 
 RATINGS = ["Excellent", "Good", "Sufficient", "Bad"]
 

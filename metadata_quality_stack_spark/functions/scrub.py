@@ -53,8 +53,8 @@ def scrub_columns(text: Column) -> dict[str, Column]:
     return out
 
 
-def apply_scrub(df: DataFrame, text_col: str = "text") -> DataFrame:
-    cols = scrub_columns(F.col(text_col))
+def apply_scrub(df: DataFrame) -> DataFrame:
+    cols = scrub_columns(F.col("text"))
     return df.select(
         df["*"],
         *[cols[k].alias(k) for k in sorted(cols)],
@@ -86,10 +86,8 @@ def toxicity_columns(text: Column, terms: list[str] | None = None) -> dict[str, 
     return {"tox_count": cnt, "detoxed_text": detoxed}
 
 
-def apply_toxicity(
-    df: DataFrame, text_col: str = "text", terms: list[str] | None = None
-) -> DataFrame:
-    cols = toxicity_columns(F.col(text_col), terms)
+def apply_toxicity(df: DataFrame, terms: list[str] | None = None) -> DataFrame:
+    cols = toxicity_columns(F.col("text"), terms)
     return df.select(
         df["*"],
         cols["tox_count"].alias("tox_count"),
@@ -132,9 +130,7 @@ RARE_MIN_DF = 2
 RARE_UNK = "<unk>"
 
 
-def rare_token_scrub(
-    docs: DataFrame, min_df: int = RARE_MIN_DF, text_col: str = "text"
-) -> DataFrame:
+def rare_token_scrub(docs: DataFrame, min_df: int = RARE_MIN_DF) -> DataFrame:
     """k-anonymity-style rare-token suppression: any whitespace token
     whose corpus DOCUMENT frequency is below ``min_df`` is replaced by
     ``<unk>`` — the memorization-risk complement of the regex PII scrub
@@ -155,7 +151,7 @@ def rare_token_scrub(
 
     tok = docs.select(
         "doc_id",
-        F.posexplode(token_array(F.coalesce(F.col(text_col), F.lit("")))).alias(
+        F.posexplode(token_array(F.coalesce(F.col("text"), F.lit("")))).alias(
             "pos", "token"
         ),
     )
@@ -193,25 +189,21 @@ def rare_token_scrub(
     )
 
 
-def rare_token_scrub_sql(
-    min_df: int = RARE_MIN_DF, table: str = "documents", text_col: str = "text"
-) -> str:
-    from metadata_quality_stack_spark.operators.textops import _lows_sql
-
+def rare_token_scrub_sql(min_df: int = RARE_MIN_DF) -> str:
     # same tokenization as token_array, but preserving case: split the
     # edge-trimmed text on whitespace runs
     toks = (
-        f"CASE WHEN trim(coalesce({text_col}, ''), ' ' || chr(9) || chr(10) "
-        f"|| chr(13)) = '' THEN []::VARCHAR[] ELSE "
-        f"regexp_split_to_array(trim(coalesce({text_col}, ''), ' ' || chr(9) "
-        f"|| chr(10) || chr(13)), '[ \\t\\n\\r]+') END"
+        "CASE WHEN trim(coalesce(text, ''), ' ' || chr(9) || chr(10) "
+        "|| chr(13)) = '' THEN []::VARCHAR[] ELSE "
+        "regexp_split_to_array(trim(coalesce(text, ''), ' ' || chr(9) "
+        "|| chr(10) || chr(13)), '[ \\t\\n\\r]+') END"
     )
     return f"""
 WITH tok AS MATERIALIZED (
   SELECT doc_id, e.pos AS pos, e.token AS token FROM (
     SELECT doc_id, unnest(list_transform(generate_series(1, len(ts)),
       i -> struct_pack(pos := i - 1, token := ts[i]))) AS e
-    FROM (SELECT doc_id, {toks} AS ts FROM {table}))),
+    FROM (SELECT doc_id, {toks} AS ts FROM documents))),
 census AS (SELECT token, count(DISTINCT doc_id) AS df FROM tok GROUP BY token),
 per AS (
   SELECT t.doc_id,
@@ -223,5 +215,5 @@ per AS (
 SELECT d.doc_id, coalesce(p.scrubbed_text, '') AS scrubbed_text,
        coalesce(p.n_tokens, 0) AS n_tokens,
        coalesce(p.n_scrubbed, 0) AS n_scrubbed
-FROM {table} d LEFT JOIN per p USING (doc_id)
+FROM documents d LEFT JOIN per p USING (doc_id)
 """

@@ -18,8 +18,7 @@ from pyspark.sql import functions as F
 
 from metadata_quality_stack_spark import config
 from metadata_quality_stack_spark.operators.rules import apply_quality
-
-DOC_META = {"lang": "lang", "source": "source", "n_chars": "n_chars"}
+from metadata_quality_stack_spark.oracle.sqlgen import DOC_META
 
 
 def scored_documents(docs: DataFrame) -> DataFrame:
@@ -145,13 +144,13 @@ def corpus_summary(scored: DataFrame) -> DataFrame:
     )
 
 
-def top_sources(scored: DataFrame, n: int = 5) -> DataFrame:
+def top_sources(scored: DataFrame) -> DataFrame:
     """O2 — dashboard.py:279-309: top-N sources by mean score (tiebreak source)."""
     return (
         scored.groupBy("source")
         .agg(F.round(F.avg("total_score"), 4).alias("avg_score"), F.count("*").alias("n_docs"))
         .orderBy(F.desc("avg_score"), F.asc("source"))
-        .limit(n)
+        .limit(5)
     )
 
 
@@ -205,9 +204,9 @@ def events_hourly(events: DataFrame) -> DataFrame:
     )
 
 
-def sessionize(events: DataFrame, gap_minutes: int = 30) -> DataFrame:
+def sessionize(events: DataFrame) -> DataFrame:
     """Gap-based sessionization: a new session starts when a user's
-    inter-event gap exceeds the timeout — the canonical lag + cumulative-
+    inter-event gap exceeds 30 minutes — the canonical lag + cumulative-
     sum window pair. One shuffle on user_id serves both windows (same
     partitioning); session stats per (user, session). The streaming twin
     is ``F.session_window`` in streaming/stream.py's aggregation family."""
@@ -217,7 +216,7 @@ def sessionize(events: DataFrame, gap_minutes: int = 30) -> DataFrame:
     secs = F.unix_timestamp(F.col("ts").cast("timestamp"))
     gap = secs - F.lag(secs).over(w)
     new_session = F.when(
-        gap.isNull() | (gap > gap_minutes * 60), 1
+        gap.isNull() | (gap > 30 * 60), 1
     ).otherwise(0)
     with_sess = events.withColumn(
         "session_id", F.sum(new_session).over(w)
@@ -401,41 +400,36 @@ def union_keep_drop_extremes(scored: DataFrame) -> DataFrame:
     return best.unionByName(worst)
 
 
-def asof_join(
-    probes: DataFrame,
-    updates: DataFrame,
-    key: str = "user_id",
-    ts_col: str = "ts",
-) -> DataFrame:
+def asof_join(probes: DataFrame, updates: DataFrame) -> DataFrame:
     """Distributed as-of join: for each probe row, the latest update row
-    of the same key with update.ts <= probe.ts (left semantics — probes
+    of the same user_id with update.ts <= probe.ts (left semantics — probes
     with no prior update keep NULL match columns). The trades/quotes
     pattern; Spark has no native ASOF JOIN (DuckDB/Pandas do), so this
     is the union-tag formulation:
 
-    tag updates 0 / probes 1, union, ONE shuffle on the key, ONE
+    tag updates 0 / probes 1, union, ONE shuffle on user_id, ONE
     sort-within-partitions on (ts, tag, id), then a running
     last(ignorenulls) window carries each update's columns forward to
     the probes that follow it. No range join, no per-probe subquery,
     no row explosion — the cost is the same single exchange a
-    groupBy(key) pays, and updates at the exact probe timestamp win
+    groupBy(user_id) pays, and updates at the exact probe timestamp win
     (tag 0 sorts first), matching ASOF's <= convention.
 
-    ``probes``/``updates`` carry (key, ts_col, id, value); outputs
+    ``probes``/``updates`` carry (user_id, ts, id, value); outputs
     probe id/ts plus asof_id, asof_ts, asof_value, gap_us.
     """
     up = updates.select(
-        F.col(key),
-        F.col(ts_col),
+        F.col("user_id"),
+        F.col("ts"),
         F.lit(0).alias("_tag"),
         F.col("id").alias("asof_id"),
-        F.col(ts_col).alias("asof_ts"),
+        F.col("ts").alias("asof_ts"),
         F.col("value").alias("asof_value"),
         F.lit(None).cast("long").alias("probe_id"),
     )
     pr = probes.select(
-        F.col(key),
-        F.col(ts_col),
+        F.col("user_id"),
+        F.col("ts"),
         F.lit(1).alias("_tag"),
         F.lit(None).cast("long").alias("asof_id"),
         # NTZ, matching the parquet ts type — a plain "timestamp" null
@@ -445,13 +439,13 @@ def asof_join(
         F.col("id").alias("probe_id"),
     )
     w = (
-        Window.partitionBy(key)
-        .orderBy(F.col(ts_col).asc(), F.col("_tag").asc(), F.col("asof_id").asc())
+        Window.partitionBy("user_id")
+        .orderBy(F.col("ts").asc(), F.col("_tag").asc(), F.col("asof_id").asc())
         .rowsBetween(Window.unboundedPreceding, 0)
     )
     carried = up.unionByName(pr).select(
-        key,
-        ts_col,
+        "user_id",
+        "ts",
         "_tag",
         "probe_id",
         *[
@@ -461,15 +455,15 @@ def asof_join(
     )
     return carried.filter(F.col("_tag") == 1).select(
         "probe_id",
-        key,
-        ts_col,
+        "user_id",
+        "ts",
         "asof_id",
         "asof_ts",
         "asof_value",
         # unix_micros needs TIMESTAMP; the NTZ->TIMESTAMP cast offset
         # cancels in the difference, so gap_us is TZ-independent
         (
-            F.unix_micros(F.col(ts_col).cast("timestamp"))
+            F.unix_micros(F.col("ts").cast("timestamp"))
             - F.unix_micros(F.col("asof_ts").cast("timestamp"))
         ).alias("gap_us"),
     )
@@ -487,15 +481,15 @@ def purchase_asof_view(events: DataFrame) -> DataFrame:
     return asof_join(purchases, views)
 
 
-def threshold_sweep(
-    scored: DataFrame, thresholds: tuple[int, ...] = tuple(range(0, 351, 25))
-) -> DataFrame:
+def threshold_sweep(scored: DataFrame) -> DataFrame:
     """Keep-rate as a function of the total-score cutoff — the curve a
     curation run reads before choosing its filter threshold. ONE pass:
     a conditional sum per threshold inside a single global aggregate
     (map-side partials reduce each partition to |thresholds| counters);
     the long output shape is unpivoted from the 1-row aggregate with
-    stack(), which is free. Never explodes rows by |thresholds|."""
+    stack(), which is free. Never explodes rows by |thresholds|. The
+    thresholds are 0, 25, .., 350."""
+    thresholds = range(0, 351, 25)
     n = F.count("*")
     aggs = [n.alias("n_docs")] + [
         F.sum((F.col("total_score") >= t).cast("long")).alias(f"k{t}")
@@ -535,14 +529,9 @@ def source_lang_entropy(docs: DataFrame) -> DataFrame:
     )
 
 
-def range_join_bins(
-    probes: DataFrame,
-    points: DataFrame,
-    window_s: int = 60,
-    ts_col: str = "ts",
-) -> DataFrame:
+def range_join_bins(probes: DataFrame, points: DataFrame) -> DataFrame:
     """Key-free temporal range join: all (probe, point) pairs with
-    |point.ts - probe.ts| <= window_s. Spark plans a bare range
+    |point.ts - probe.ts| <= W = 60 s. Spark plans a bare range
     predicate as BroadcastNestedLoop/CartesianProduct — O(n*m) and a
     broadcast of a whole table; this is the standard bin-bucketing
     rewrite instead:
@@ -555,23 +544,23 @@ def range_join_bins(
     ranges are ordinary skew AQE can split. Cost: |points| + ~3|probes|
     shuffled rows, vs |points| x |probes| compared.
 
-    Inputs carry (id, ts_col); output: probe_id, point_id, dt_us
+    Inputs carry (id, ts); output: probe_id, point_id, dt_us
     (point minus probe, negative = point earlier).
     """
-    w_us = int(window_s) * 1_000_000
+    w_us = 60 * 1_000_000
     us = lambda c: F.unix_micros(c.cast("timestamp"))  # noqa: E731
     pt = points.select(
         F.col("id").alias("point_id"),
-        us(F.col(ts_col)).alias("point_us"),
-        F.floor(us(F.col(ts_col)) / w_us).alias("bin"),
+        us(F.col("ts")).alias("point_us"),
+        F.floor(us(F.col("ts")) / w_us).alias("bin"),
     )
     pr = probes.select(
         F.col("id").alias("probe_id"),
-        us(F.col(ts_col)).alias("probe_us"),
+        us(F.col("ts")).alias("probe_us"),
         F.explode(
             F.sequence(
-                F.floor((us(F.col(ts_col)) - w_us) / w_us),
-                F.floor((us(F.col(ts_col)) + w_us) / w_us),
+                F.floor((us(F.col("ts")) - w_us) / w_us),
+                F.floor((us(F.col("ts")) + w_us) / w_us),
             )
         ).alias("bin"),
     )
@@ -586,9 +575,9 @@ def range_join_bins(
     )
 
 
-def errors_near_purchases(events: DataFrame, window_s: int = 60) -> DataFrame:
+def errors_near_purchases(events: DataFrame) -> DataFrame:
     """Gate wiring for :func:`range_join_bins`: every error event within
-    +/-window_s of any purchase, across ALL users (no equi key — the
+    +/-60 s of any purchase, across ALL users (no equi key — the
     hard case)."""
     purchases = events.filter(F.col("event_type") == "purchase").select(
         F.col("event_id").alias("id"), "ts"
@@ -596,14 +585,10 @@ def errors_near_purchases(events: DataFrame, window_s: int = 60) -> DataFrame:
     errors = events.filter(F.col("event_type") == "error").select(
         F.col("event_id").alias("id"), "ts"
     )
-    return range_join_bins(purchases, errors, window_s)
+    return range_join_bins(purchases, errors)
 
 
-def profile_flip_matrix(
-    docs: DataFrame,
-    profile_a: str = "webtext_native",
-    profile_b: str = "webtext_nti_native",
-) -> DataFrame:
+def profile_flip_matrix(docs: DataFrame) -> DataFrame:
     """What adopting a different scoring profile would DO to the corpus:
     the 2x2 keep-flip matrix between two rule profiles (the reference
     ships two reporting profiles; its operators ask exactly this before
@@ -619,9 +604,9 @@ def profile_flip_matrix(
 
     Columns: keep_a, keep_b, n_docs."""
     carry = [c for c in docs.columns]
-    a = apply_quality(docs, meta_cols=DOC_META, profile=profile_a)
+    a = apply_quality(docs, meta_cols=DOC_META, profile="webtext_native")
     a2 = a.select(*carry, F.col("keep").alias("keep_a"))
-    b = apply_quality(a2, meta_cols=DOC_META, profile=profile_b)
+    b = apply_quality(a2, meta_cols=DOC_META, profile="webtext_nti_native")
     return (
         b.select("keep_a", F.col("keep").alias("keep_b"))
         .groupBy("keep_a", "keep_b")
@@ -629,7 +614,7 @@ def profile_flip_matrix(
     )
 
 
-def rule_ablation(docs: DataFrame, profile: str = "webtext_native") -> DataFrame:
+def rule_ablation(docs: DataFrame) -> DataFrame:
     """Per-rule ablation of the keep decision: for EVERY rule, how many
     documents would be newly admitted / newly dropped if that rule were
     removed from the profile (points and hard-gate membership both) —
@@ -649,13 +634,13 @@ def rule_ablation(docs: DataFrame, profile: str = "webtext_native") -> DataFrame
         scoring_stages,
     )
 
-    rules = config.RULES_BY_PROFILE[profile]
-    staged = scoring_stages(docs, "text", DOC_META, profile)
+    rules = config.RULES_BY_PROFILE["webtext_native"]
+    staged = scoring_stages(docs, "text", DOC_META, "webtext_native")
     pcts = {r["id"]: F.col(f"pct_{r['id']}") for r in rules}
-    base = score_columns(pcts, profile)["keep"]
+    base = score_columns(pcts, "webtext_native")["keep"]
     aggs = [F.coalesce(F.sum(base.cast("long")), F.lit(0)).alias("_kb")]
     for r in rules:
-        kw = score_columns(pcts, profile, exclude=r["id"])["keep"]
+        kw = score_columns(pcts, "webtext_native", exclude=r["id"])["keep"]
         aggs += [
             F.coalesce(F.sum(kw.cast("long")), F.lit(0)).alias(f"_kw_{r['id']}"),
             F.coalesce(F.sum((kw & ~base).cast("long")), F.lit(0)).alias(
@@ -681,12 +666,10 @@ def rule_ablation(docs: DataFrame, profile: str = "webtext_native") -> DataFrame
     return wide.select(F.explode(rows).alias("x")).select("x.*")
 
 
-def rule_ablation_sql(
-    table: str = "documents", profile: str = "webtext_native"
-) -> str:
+def rule_ablation_sql() -> str:
     from metadata_quality_stack_spark.oracle import sqlgen
 
-    rules = config.RULES_BY_PROFILE[profile]
+    rules = config.RULES_BY_PROFILE["webtext_native"]
 
     def keep_expr(exclude: str | None) -> str:
         rs = [r for r in rules if r["id"] != exclude]
@@ -705,7 +688,7 @@ def rule_ablation_sql(
         hard = " AND ".join(
             f"pct_{rid} >= 0.5" for rid in config.HARD_RULES if rid in ids
         ) or "TRUE"
-        t = config.thresholds_for(profile)
+        t = config.thresholds_for("webtext_native")
         return f"((({total}) >= {t['sufficient']}) AND {hard})"
 
     kb = keep_expr(None)
@@ -726,7 +709,7 @@ def rule_ablation_sql(
         f"dro_{r['id']} AS n_dropped FROM w"
         for r in rules
     )
-    return f"""{sqlgen.pct_with_clause(table, "doc_id")},
+    return f"""{sqlgen.pct_with_clause()},
 f AS (SELECT {kb} AS kb,
     {kw_cols}
   FROM pct),
@@ -812,7 +795,7 @@ def corpus_datasheet(docs: DataFrame) -> DataFrame:
     )
 
 
-def corpus_datasheet_sql(table: str = "documents") -> str:
+def corpus_datasheet_sql() -> str:
     from metadata_quality_stack_spark.oracle import sqlgen
 
     toks = (
@@ -824,7 +807,7 @@ WITH scored AS ({sqlgen.native_scoring_sql(extra_cols=("source", "lang"))}),
 j AS (SELECT s.doc_id, s.source, s.lang, s.total_score, s.keep,
         md5(d.text) AS fp,
         CAST(len({toks}) AS BIGINT) AS n_tok
-      FROM scored s JOIN {table} d USING (doc_id))
+      FROM scored s JOIN documents d USING (doc_id))
 SELECT count(*)::BIGINT AS n_docs,
   count(DISTINCT fp)::BIGINT AS n_unique_docs,
   ((count(*) - count(DISTINCT fp)) * 1000000 // count(*))::BIGINT AS dup_ppm,
@@ -839,13 +822,13 @@ FROM j
 """
 
 
-def quality_by_crawl_day_sql(ts_expr: str, table: str = "documents") -> str:
+def quality_by_crawl_day_sql(ts_expr: str) -> str:
     from metadata_quality_stack_spark.oracle import sqlgen
 
     return f"""
 WITH scored AS ({sqlgen.native_scoring_sql()}),
 t AS (SELECT s.*, (({ts_expr}) // 86400) AS day
-      FROM scored s JOIN {table} d USING (doc_id))
+      FROM scored s JOIN documents d USING (doc_id))
 SELECT day, count(*)::BIGINT AS n_docs,
   (sum(keep::BIGINT) * 1000000 // count(*))::BIGINT AS keep_ppm,
   (sum(total_score::BIGINT) * 1000000 // count(*))::BIGINT

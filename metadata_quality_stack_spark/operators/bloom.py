@@ -55,7 +55,6 @@ def bloom_build(
     corpus: DataFrame,
     col: str = "text",
     m_bits: int = M_BITS,
-    k_hashes: int = K_HASHES,
 ) -> list[int]:
     """Build the bitmap: ≤ m/64 (word_idx, bits) rows aggregate
     distributed (keys move as 8-byte positions, the documents never
@@ -64,7 +63,7 @@ def bloom_build(
     key = F.col(col)
     pos = corpus.select(
         F.explode(
-            F.array(*[_position(key, i, m_bits) for i in range(k_hashes)])
+            F.array(*[_position(key, i, m_bits) for i in range(K_HASHES)])
         ).alias("pos")
     )
     words = (
@@ -96,7 +95,6 @@ def bloom_probe(
     batch: DataFrame,
     bitmap: list[int],
     col: str = "text",
-    k_hashes: int = K_HASHES,
 ) -> DataFrame:
     """Map-only probe: batch columns + maybe_dup. The bitmap rides the
     plan as an array<long> literal (broadcast-to-every-task semantics
@@ -109,11 +107,11 @@ def bloom_probe(
         "*",
         *[
             _position(key, i, m_bits).alias(f"_bp{i}")
-            for i in range(k_hashes)
+            for i in range(K_HASHES)
         ],
     )
     hit = F.lit(True)
-    for i in range(k_hashes):
+    for i in range(K_HASHES):
         p = F.col(f"_bp{i}")
         word = F.element_at(arr, F.floor(p / 64).cast("int") + 1)
         mask = F.expr(
@@ -121,7 +119,7 @@ def bloom_probe(
         )
         hit = hit & (word.bitwiseAND(mask) != 0)
     return staged.withColumn("maybe_dup", hit).drop(
-        *[f"_bp{i}" for i in range(k_hashes)]
+        *[f"_bp{i}" for i in range(K_HASHES)]
     )
 
 
@@ -129,9 +127,7 @@ def bloom_probe_sql(
     corpus_sql: str,
     batch_sql: str,
     col: str = "text",
-    id_col: str = "doc_id",
     m_bits: int = M_BITS,
-    k_hashes: int = K_HASHES,
 ) -> str:
     """DuckDB mirror: membership in the distinct corpus position set —
     the same boolean function the bitmap computes (false positives
@@ -139,15 +135,15 @@ def bloom_probe_sql(
     corpus keys is maybe_dup=true in both engines)."""
     pos_union = " UNION ".join(
         f"SELECT {_position_sql(col, i, m_bits)} AS p FROM corpus"
-        for i in range(k_hashes)
+        for i in range(K_HASHES)
     )
     probes = " AND ".join(
         f"({_position_sql(col, i, m_bits)} IN (SELECT p FROM cp))"
-        for i in range(k_hashes)
+        for i in range(K_HASHES)
     )
     return f"""
 WITH corpus AS ({corpus_sql}),
 cp AS ({pos_union}),
 batch AS ({batch_sql})
-SELECT {id_col}, ({probes}) AS maybe_dup FROM batch
+SELECT doc_id, ({probes}) AS maybe_dup FROM batch
 """

@@ -54,13 +54,15 @@ from metadata_quality_stack_spark.sources.store import read_table
 
 BPE_WORD_RE = "[a-z]+"
 BPE_N_MERGES = 8
+PACK_CONTEXT_TOKENS = 64
+PACK_SHARDS = 8
 
 
-def word_census(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def word_census(docs: DataFrame) -> DataFrame:
     """(word, cnt) over lowercase ASCII word runs — tokenize ONCE."""
     words = docs.select(
         F.explode(
-            F.regexp_extract_all(F.lower(F.col(text_col)), F.lit(BPE_WORD_RE), 0)
+            F.regexp_extract_all(F.lower(F.col("text")), F.lit(BPE_WORD_RE), 0)
         ).alias("word")
     )
     return words.groupBy("word").agg(F.count("*").alias("cnt"))
@@ -82,14 +84,14 @@ def _apply_merge(seq: F.Column, pair: str, merged: str) -> F.Column:
 
 
 def train_merges(
-    docs: DataFrame, n_merges: int = BPE_N_MERGES, text_col: str = "text"
+    docs: DataFrame, n_merges: int = BPE_N_MERGES
 ) -> list[tuple[str, str, int]]:
     """Learn ``n_merges`` BPE merges: [(pair, merged, total_count)]
     in merge order. Ties break on pair ASC (both engines). The census
     is persisted so the K rounds re-read a vocab-sized cache, never
     the corpus (the single-tokenization discipline the classifier
     trainer uses)."""
-    census = word_census(docs, text_col).persist(StorageLevel.MEMORY_AND_DISK)
+    census = word_census(docs).persist(StorageLevel.MEMORY_AND_DISK)
     census.count()
     try:
         vocab = census.select("word", "cnt", _char_seq(F.col("word")).alias("seq"))
@@ -136,12 +138,10 @@ def bpe_learned_merges(
     )
 
 
-def segment_vocab(
-    docs: DataFrame, merges: list[tuple[str, str, int]], text_col: str = "text"
-) -> DataFrame:
+def segment_vocab(docs: DataFrame, merges: list[tuple[str, str, int]]) -> DataFrame:
     """(word, cnt, seq, n_pieces) after applying the learned merges —
     map-only over the census, K staged replace columns."""
-    vocab = word_census(docs, text_col).select(
+    vocab = word_census(docs).select(
         "word", "cnt", _char_seq(F.col("word")).alias("seq")
     )
     for pair, merged, _ in merges:
@@ -153,22 +153,20 @@ def segment_vocab(
     )
 
 
-def bpe_tokenized_docs(
-    docs: DataFrame, n_merges: int = BPE_N_MERGES, text_col: str = "text"
-) -> DataFrame:
+def bpe_tokenized_docs(docs: DataFrame, n_merges: int = BPE_N_MERGES) -> DataFrame:
     """Per-document subword counts under the corpus-trained tokenizer:
     (doc_id, n_words, n_subwords, n_chars_in_words). The corpus joins
     the segmentation map ONCE (broadcast-sized at gate scale; word-
     keyed join of fixed-width rows at 100 TB). Docs with no [a-z] runs
     keep a zero row (left join from the corpus side)."""
-    merges = train_merges(docs, n_merges, text_col)
-    seg = segment_vocab(docs, merges, text_col).select(
+    merges = train_merges(docs, n_merges)
+    seg = segment_vocab(docs, merges).select(
         "word", "n_pieces", F.length("word").cast("long").alias("wlen")
     )
     tok = docs.select(
         "doc_id",
         F.explode(
-            F.regexp_extract_all(F.lower(F.col(text_col)), F.lit(BPE_WORD_RE), 0)
+            F.regexp_extract_all(F.lower(F.col("text")), F.lit(BPE_WORD_RE), 0)
         ).alias("word"),
     )
     per = (
@@ -195,9 +193,7 @@ def bpe_tokenized_docs(
 # ----------------------------------------------------------------------
 # DuckDB oracle mirrors — chained CTEs replaying every training round
 # ----------------------------------------------------------------------
-def _train_ctes(
-    n_merges: int = BPE_N_MERGES, table: str = "documents", text_col: str = "text"
-) -> tuple[str, str]:
+def _train_ctes(n_merges: int = BPE_N_MERGES) -> tuple[str, str]:
     """(ctes, final_seq_cte): census, seq0, then per round pairsR/bestR/
     seqR. bestR feeds seqR as scalar subqueries (coalesce to a chr(1)
     sentinel so an exhausted pair table makes the replace a no-op, the
@@ -208,8 +204,8 @@ def _train_ctes(
     # an fd exhaustion at K=8); materialization keeps the replay linear
     parts = [
         f"census AS MATERIALIZED (SELECT word, count(*) AS cnt FROM (SELECT unnest("
-        f"regexp_extract_all(lower({text_col}), '{BPE_WORD_RE}')) AS word "
-        f"FROM {table}) GROUP BY word)",
+        f"regexp_extract_all(lower(text), '{BPE_WORD_RE}')) AS word "
+        "FROM documents) GROUP BY word)",
         "seq0 AS MATERIALIZED (SELECT word, cnt, "
         "trim(regexp_replace(word, '(.)', '\\1 ', 'g')) AS seq FROM census)",
     ]
@@ -239,10 +235,8 @@ def _train_ctes(
     return ",\n".join(parts), f"seq{n_merges}"
 
 
-def bpe_learned_merges_sql(
-    n_merges: int = BPE_N_MERGES, table: str = "documents", text_col: str = "text"
-) -> str:
-    ctes, _ = _train_ctes(n_merges, table, text_col)
+def bpe_learned_merges_sql(n_merges: int = BPE_N_MERGES) -> str:
+    ctes, _ = _train_ctes(n_merges)
     sel = " UNION ALL ".join(
         f"SELECT {r} AS rank, pair, merged, total FROM best{r}"
         for r in range(1, n_merges + 1)
@@ -250,16 +244,14 @@ def bpe_learned_merges_sql(
     return f"WITH {ctes}\nSELECT * FROM ({sel})"
 
 
-def bpe_tokenized_docs_sql(
-    n_merges: int = BPE_N_MERGES, table: str = "documents", text_col: str = "text"
-) -> str:
-    ctes, final = _train_ctes(n_merges, table, text_col)
+def bpe_tokenized_docs_sql(n_merges: int = BPE_N_MERGES) -> str:
+    ctes, final = _train_ctes(n_merges)
     return f"""WITH {ctes},
 seg AS (SELECT word, len(string_split(seq, ' '))::BIGINT AS n_pieces,
                length(word)::BIGINT AS wlen FROM {final}),
 tok AS (SELECT doc_id, unnest(
-          regexp_extract_all(lower({text_col}), '{BPE_WORD_RE}')) AS word
-        FROM {table}),
+          regexp_extract_all(lower(text), '{BPE_WORD_RE}')) AS word
+        FROM documents),
 per AS (SELECT t.doc_id, count(*) AS n_words,
                sum(s.n_pieces)::BIGINT AS n_subwords,
                sum(s.wlen)::BIGINT AS n_chars_in_words
@@ -268,13 +260,11 @@ SELECT d.doc_id,
        coalesce(p.n_words, 0) AS n_words,
        coalesce(p.n_subwords, 0) AS n_subwords,
        coalesce(p.n_chars_in_words, 0) AS n_chars_in_words
-FROM {table} d LEFT JOIN per p USING (doc_id)
+FROM documents d LEFT JOIN per p USING (doc_id)
 """
 
 
-def bpe_vocab_ids(
-    docs: DataFrame, n_merges: int = BPE_N_MERGES, text_col: str = "text"
-) -> DataFrame:
+def bpe_vocab_ids(docs: DataFrame, n_merges: int = BPE_N_MERGES) -> DataFrame:
     """The id-assigned subword vocabulary: (piece, token_id, n_words_using,
     total_occurrences). Ids are frequency-ranked (total occurrences desc,
     piece asc — deterministic both engines), the layout every trained
@@ -283,8 +273,8 @@ def bpe_vocab_ids(
     count."""
     from pyspark.sql import Window
 
-    merges = train_merges(docs, n_merges, text_col)
-    seg = segment_vocab(docs, merges, text_col)
+    merges = train_merges(docs, n_merges)
+    seg = segment_vocab(docs, merges)
     pieces = (
         seg.select("cnt", F.explode(F.split("seq", " ")).alias("piece"))
         .groupBy("piece")
@@ -334,9 +324,7 @@ def bpe_vocab_ids(
     )
 
 
-def bpe_encode_docs(
-    docs: DataFrame, n_merges: int = BPE_N_MERGES, text_col: str = "text"
-) -> DataFrame:
+def bpe_encode_docs(docs: DataFrame, n_merges: int = BPE_N_MERGES) -> DataFrame:
     """Documents as token-id sequences — the terminal artifact of the
     data pipeline (what the training loader reads): (doc_id, n_tokens,
     token_ids) with token_ids a space-joined id string (dialect-stable
@@ -347,13 +335,13 @@ def bpe_encode_docs(
     table (broadcast — it IS the vocab), then re-assemble per doc in
     (word_pos, piece_pos) order. The only corpus-sized exchange carries
     (doc_id, positions, id) ints."""
-    merges = train_merges(docs, n_merges, text_col)
-    seg = segment_vocab(docs, merges, text_col).select("word", "seq")
-    ids = bpe_vocab_ids(docs, n_merges, text_col).select("piece", "token_id")
+    merges = train_merges(docs, n_merges)
+    seg = segment_vocab(docs, merges).select("word", "seq")
+    ids = bpe_vocab_ids(docs, n_merges).select("piece", "token_id")
     tok = docs.select(
         "doc_id",
         F.posexplode(
-            F.regexp_extract_all(F.lower(F.col(text_col)), F.lit(BPE_WORD_RE), 0)
+            F.regexp_extract_all(F.lower(F.col("text")), F.lit(BPE_WORD_RE), 0)
         ).alias("word_pos", "word"),
     )
     pieces = (
@@ -390,10 +378,8 @@ def bpe_encode_docs(
     )
 
 
-def bpe_vocab_ids_sql(
-    n_merges: int = BPE_N_MERGES, table: str = "documents", text_col: str = "text"
-) -> str:
-    ctes, final = _train_ctes(n_merges, table, text_col)
+def bpe_vocab_ids_sql() -> str:
+    ctes, final = _train_ctes()
     return f"""WITH {ctes},
 pieces AS (
   SELECT piece, count(*)::BIGINT AS n_words_using,
@@ -408,10 +394,8 @@ FROM pieces
 """
 
 
-def bpe_encode_docs_sql(
-    n_merges: int = BPE_N_MERGES, table: str = "documents", text_col: str = "text"
-) -> str:
-    ctes, final = _train_ctes(n_merges, table, text_col)
+def bpe_encode_docs_sql(n_merges: int = BPE_N_MERGES) -> str:
+    ctes, final = _train_ctes(n_merges)
     return f"""WITH {ctes},
 pieces AS MATERIALIZED (
   SELECT piece, count(*)::BIGINT AS n_words_using,
@@ -428,8 +412,8 @@ tok AS (
     SELECT doc_id, unnest(list_transform(generate_series(1, len(ws)),
       i -> struct_pack(pos := i - 1, word := ws[i]))) AS e
     FROM (SELECT doc_id,
-            regexp_extract_all(lower({text_col}), '{BPE_WORD_RE}') AS ws
-          FROM {table}))),
+            regexp_extract_all(lower(text), '{BPE_WORD_RE}') AS ws
+          FROM documents))),
 segp AS MATERIALIZED (
   SELECT word, e.pos AS piece_pos, e.piece AS piece FROM (
     SELECT word, unnest(list_transform(generate_series(1, len(ps)),
@@ -447,7 +431,7 @@ per AS (
   FROM pc GROUP BY doc_id)
 SELECT d.doc_id, coalesce(p.n_tokens, 0) AS n_tokens,
        coalesce(p.token_ids, '') AS token_ids
-FROM {table} d LEFT JOIN per p USING (doc_id)
+FROM documents d LEFT JOIN per p USING (doc_id)
 """
 
 
@@ -468,7 +452,6 @@ def train_merges_resumable(
     docs: DataFrame,
     log_dir: str,
     n_merges: int = BPE_N_MERGES,
-    text_col: str = "text",
 ) -> list[tuple[str, str, int]]:
     """Checkpointed BPE training: each completed round appends one row
     (rank, pair, merged, total) to a parquet log; a restarted fit
@@ -483,7 +466,7 @@ def train_merges_resumable(
     append per round."""
     spark = docs.sparkSession
     done = _read_merge_log(spark, log_dir)[:n_merges]
-    census = word_census(docs, text_col).persist(StorageLevel.MEMORY_AND_DISK)
+    census = word_census(docs).persist(StorageLevel.MEMORY_AND_DISK)
     census.count()
     try:
         vocab = census.select("word", "cnt", _char_seq(F.col("word")).alias("seq"))
@@ -530,9 +513,8 @@ def train_merges_resumable(
 def bpe_pack_sequences(
     docs: DataFrame,
     n_merges: int = BPE_N_MERGES,
-    context_tokens: int = 64,
-    n_shards: int = 8,
-    text_col: str = "text",
+    context_tokens: int = PACK_CONTEXT_TOKENS,
+    n_shards: int = PACK_SHARDS,
 ) -> DataFrame:
     """Concat-and-slice packing in TOKEN space — the final step from raw
     pages to fixed-length training sequences (GPT-style loader layout:
@@ -557,7 +539,7 @@ def bpe_pack_sequences(
     zero-token docs — they occupy no window]."""
     from pyspark.sql import Window
 
-    enc = bpe_encode_docs(docs, n_merges, text_col).select(
+    enc = bpe_encode_docs(docs, n_merges).select(
         "doc_id", "n_tokens"
     )
     sharded = enc.withColumn(
@@ -585,20 +567,14 @@ def bpe_pack_sequences(
     )
 
 
-def bpe_pack_sequences_sql(
-    n_merges: int = BPE_N_MERGES,
-    context_tokens: int = 64,
-    n_shards: int = 8,
-    table: str = "documents",
-    text_col: str = "text",
-) -> str:
+def bpe_pack_sequences_sql() -> str:
     """DuckDB mirror of :func:`bpe_pack_sequences`: the ENTIRE encode
     replay (training rounds included) nests as one CTE body, then the
     same shard + running-sum + integer-division arithmetic."""
-    enc = bpe_encode_docs_sql(n_merges, table, text_col)
+    enc = bpe_encode_docs_sql(BPE_N_MERGES)
     return f"""WITH enc AS ({enc}),
 sharded AS (
-  SELECT doc_id, n_tokens, (doc_id % {n_shards})::BIGINT AS shard FROM enc),
+  SELECT doc_id, n_tokens, (doc_id % {PACK_SHARDS})::BIGINT AS shard FROM enc),
 off AS (
   SELECT shard, doc_id, n_tokens,
          (sum(n_tokens) OVER (
@@ -607,9 +583,9 @@ off AS (
   FROM sharded)
 SELECT shard, doc_id, n_tokens, start_offset,
   CASE WHEN n_tokens > 0
-       THEN (start_offset // {context_tokens})::BIGINT END AS seq_first,
+       THEN (start_offset // {PACK_CONTEXT_TOKENS})::BIGINT END AS seq_first,
   CASE WHEN n_tokens > 0
-       THEN ((start_offset + n_tokens - 1) // {context_tokens})::BIGINT
+       THEN ((start_offset + n_tokens - 1) // {PACK_CONTEXT_TOKENS})::BIGINT
        END AS seq_last
 FROM off
 """

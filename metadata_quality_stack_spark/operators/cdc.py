@@ -129,11 +129,11 @@ def _chunks(docs: DataFrame, text_col: str = "text") -> DataFrame:
     return b.select("doc_id", F.posexplode(chunks).alias("pos", "chunk"))
 
 
-def cdc_chunk_stats(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def cdc_chunk_stats(docs: DataFrame) -> DataFrame:
     """Per-doc chunking readout: (doc_id, n_chars, n_chunks,
     max_chunk_len). Chunk lengths derive from the ends array alone —
     no substrings materialize for the stats path."""
-    b = chunk_bounds(docs, text_col)
+    b = chunk_bounds(docs, "text")
     lens = F.zip_with(
         F.col("ends"),
         F.concat(F.array(F.lit(0).cast("bigint")), F.slice(
@@ -151,12 +151,12 @@ def cdc_chunk_stats(docs: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def cdc_dedup_ratio(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def cdc_dedup_ratio(docs: DataFrame) -> DataFrame:
     """Corpus-level chunk-dedup readout (1 row): total_chunks,
     distinct_chunks, dup_chunks (occurrences beyond first per content),
     total_bytes, dup_bytes, dup_bytes_ppm. Only (md5, len) pairs
     shuffle."""
-    ch = _chunks(docs, text_col).select(
+    ch = _chunks(docs, "text").select(
         F.md5(F.col("chunk")).alias("h"),
         F.length("chunk").cast("long").alias("len"),
     )
@@ -179,7 +179,7 @@ def cdc_dedup_ratio(docs: DataFrame, text_col: str = "text") -> DataFrame:
 # ----------------------------------------------------------------------
 # DuckDB oracle mirrors
 # ----------------------------------------------------------------------
-def _ends_cte(table: str, text_col: str, prefix: str = "") -> str:
+def _ends_cte(table: str, prefix: str = "") -> str:
     """{prefix}bounds AS (doc_id, n_chars, ends): the chunk-end list
     per doc. ``prefix`` namespaces the CTEs so two corpora can be
     chunked in one statement (the chunk-index cycle oracle)."""
@@ -188,7 +188,7 @@ def _ends_cte(table: str, text_col: str, prefix: str = "") -> str:
         for j in range(CDC_W)
     )
     return f"""{prefix}src AS MATERIALIZED (
-  SELECT doc_id, coalesce({text_col}, '') AS t FROM {table}),
+  SELECT doc_id, coalesce(text, '') AS t FROM {table}),
 {prefix}bounds AS MATERIALIZED (
   SELECT doc_id, length(t) AS n_chars,
     CASE WHEN length(t) = 0 THEN []::BIGINT[]
@@ -208,8 +208,8 @@ def _ends_cte(table: str, text_col: str, prefix: str = "") -> str:
     FROM {prefix}src))"""
 
 
-def cdc_chunk_stats_sql(table: str = "documents", text_col: str = "text") -> str:
-    return f"""WITH {_ends_cte(table, text_col)}
+def cdc_chunk_stats_sql() -> str:
+    return f"""WITH {_ends_cte("documents")}
 SELECT doc_id, n_chars::BIGINT AS n_chars, len(ends)::BIGINT AS n_chunks,
   coalesce(list_max(list_transform(generate_series(1, len(ends)),
     i -> ends[i] - CASE WHEN i = 1 THEN 0 ELSE ends[i - 1] END)), 0)::BIGINT
@@ -218,8 +218,8 @@ FROM bounds
 """
 
 
-def cdc_dedup_ratio_sql(table: str = "documents", text_col: str = "text") -> str:
-    return f"""WITH {_ends_cte(table, text_col)},
+def cdc_dedup_ratio_sql() -> str:
+    return f"""WITH {_ends_cte("documents")},
 {_chunks_cte()},
 census AS (SELECT h, len, count(*) AS cnt FROM chunks GROUP BY h, len)
 SELECT sum(cnt)::BIGINT AS total_chunks,

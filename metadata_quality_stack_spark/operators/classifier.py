@@ -162,11 +162,11 @@ def train_weights(docs: DataFrame, rounds: int = TRAIN_ROUNDS) -> list[int]:
     return w
 
 
-def classifier_weights(docs: DataFrame, rounds: int = TRAIN_ROUNDS) -> DataFrame:
+def classifier_weights(docs: DataFrame) -> DataFrame:
     """Gate readout of the trained model: (bucket, w_micros),
     N_WEIGHTS rows. The training collects happen eagerly (like
     ivf_train); the returned frame is a tiny local relation."""
-    w = train_weights(docs, rounds)
+    w = train_weights(docs)
     return docs.sparkSession.createDataFrame(
         [(j, int(w[j])) for j in range(N_WEIGHTS)],
         "bucket long, w_micros long",
@@ -191,13 +191,12 @@ def classifier_scores(docs: DataFrame, rounds: int = TRAIN_ROUNDS) -> DataFrame:
 
 
 # ---------------------------------------------------------------- SQL mirrors
-def _weights_cte(table: str, rounds: int) -> str:
+def _weights_cte() -> str:
     """Chained-CTE replay of the full K-round fit (the ivf_trained_sql
     pattern): feats -> w0 (zeros) -> per round (scores, residuals,
     grads, updated weights)."""
-    feats = dsir._feats_sql().format(table=table)
     parts = [
-        f"{feats}, "
+        f"{dsir._feats_sql()}, "
         "fx AS (SELECT doc_id, "
         f"list_concat(bs, [{BIAS}::BIGINT]) AS bs, "
         f"(source IN {tuple(TARGET_SOURCES)})::INT AS y, "
@@ -206,7 +205,7 @@ def _weights_cte(table: str, rounds: int) -> str:
         "w0 AS (SELECT unnest(range(0, "
         f"{N_WEIGHTS})) AS b, 0::BIGINT AS w)"
     ]
-    for t in range(rounds):
+    for t in range(TRAIN_ROUNDS):
         prev, cur = f"w{t}", f"w{t + 1}"
         parts.append(
             f"s{t} AS (SELECT f.doc_id, f.y, sum(w.w) AS score "
@@ -226,33 +225,27 @@ def _weights_cte(table: str, rounds: int) -> str:
     return ",\n".join(parts)
 
 
-def classifier_weights_sql(
-    table: str = "documents", rounds: int = TRAIN_ROUNDS
-) -> str:
+def classifier_weights_sql() -> str:
     # _feats_sql already opens the WITH clause
     return (
-        f"{_weights_cte(table, rounds)}\n"
-        f"SELECT b AS bucket, w AS w_micros FROM w{rounds}"
+        f"{_weights_cte()}\n"
+        f"SELECT b AS bucket, w AS w_micros FROM w{TRAIN_ROUNDS}"
     )
 
 
-def classifier_scores_sql(
-    table: str = "documents", rounds: int = TRAIN_ROUNDS
-) -> str:
+def classifier_scores_sql() -> str:
     return f"""
-{_weights_cte(table, rounds)},
+{_weights_cte()},
 final AS (SELECT f.doc_id, f.y, sum(w.w) AS score
           FROM (SELECT doc_id, y, unnest(bs) AS b FROM fx) f
-          JOIN w{rounds} w USING (b) GROUP BY f.doc_id, f.y)
+          JOIN w{TRAIN_ROUNDS} w USING (b) GROUP BY f.doc_id, f.y)
 SELECT doc_id, y::BIGINT AS label, score::BIGINT AS score_micros,
        (score > 0)::BIGINT AS pred
 FROM final
 """
 
 
-def classifier_confusion(
-    docs: DataFrame, rounds: int = TRAIN_ROUNDS
-) -> DataFrame:
+def classifier_confusion(docs: DataFrame) -> DataFrame:
     """Evaluation readout of the trained filter: confusion-matrix counts
     of (label, pred) — at most 4 rows, ONE bounded-key aggregation over
     the map-only scoring pass. The per-cell counts are what precision/
@@ -261,17 +254,15 @@ def classifier_confusion(
 
     Columns: label, pred, n_docs."""
     return (
-        classifier_scores(docs, rounds)
+        classifier_scores(docs)
         .groupBy("label", "pred")
         .agg(F.count("*").alias("n_docs"))
     )
 
 
-def classifier_confusion_sql(
-    table: str = "documents", rounds: int = TRAIN_ROUNDS
-) -> str:
+def classifier_confusion_sql() -> str:
     return f"""
-WITH scored AS ({classifier_scores_sql(table, rounds)})
+WITH scored AS ({classifier_scores_sql()})
 SELECT label, pred, count(*)::BIGINT AS n_docs
 FROM scored GROUP BY label, pred
 """
@@ -290,11 +281,7 @@ SWEEP_THRESHOLDS = (
 )
 
 
-def classifier_pr_sweep(
-    docs: DataFrame,
-    rounds: int = TRAIN_ROUNDS,
-    thresholds: tuple[int, ...] = SWEEP_THRESHOLDS,
-) -> DataFrame:
+def classifier_pr_sweep(docs: DataFrame) -> DataFrame:
     """Confusion counts at EVERY candidate logit threshold — the
     precision/recall tuning curve CCNet-style filters are actually
     operated with (pick the threshold, not retrain). One map-only
@@ -304,9 +291,9 @@ def classifier_pr_sweep(
     the counts downstream.
 
     Columns: threshold, tp, fp, fn, tn."""
-    scores = classifier_scores(docs, rounds)
+    scores = classifier_scores(docs)
     th = docs.sparkSession.createDataFrame(
-        [(int(t),) for t in thresholds], "threshold long"
+        [(int(t),) for t in SWEEP_THRESHOLDS], "threshold long"
     )
     hit = F.col("score_micros") > F.col("threshold")
     pos = F.col("label") == 1
@@ -323,14 +310,10 @@ def classifier_pr_sweep(
     )
 
 
-def classifier_pr_sweep_sql(
-    table: str = "documents",
-    rounds: int = TRAIN_ROUNDS,
-    thresholds: tuple[int, ...] = SWEEP_THRESHOLDS,
-) -> str:
-    th = ", ".join(str(int(t)) for t in thresholds)
+def classifier_pr_sweep_sql() -> str:
+    th = ", ".join(str(int(t)) for t in SWEEP_THRESHOLDS)
     return f"""
-WITH scored AS ({classifier_scores_sql(table, rounds)}),
+WITH scored AS ({classifier_scores_sql()}),
 th AS (SELECT unnest([{th}])::BIGINT AS threshold)
 SELECT threshold,
   coalesce(sum(((score_micros > threshold) AND label = 1)::BIGINT), 0)::BIGINT AS tp,
@@ -350,9 +333,7 @@ CALIB_WIDTH = 10_000_000
 CALIB_BINS = 8
 
 
-def classifier_calibration(
-    docs: DataFrame, rounds: int = TRAIN_ROUNDS
-) -> DataFrame:
+def classifier_calibration(docs: DataFrame) -> DataFrame:
     """Reliability readout for the trained filter: bucket every
     document's logit into fixed micro-width bins and count docs and
     true positives per bin. A well-calibrated filter shows pos_rate
@@ -365,7 +346,7 @@ def classifier_calibration(
     micros) keeps the two engines bit-identical.
 
     Columns: bin, lo_micros, n_docs, n_pos."""
-    s = classifier_scores(docs, rounds)
+    s = classifier_scores(docs)
     raw = F.floor((F.col("score_micros") - CALIB_LO) / CALIB_WIDTH)
     b = F.greatest(F.least(raw, F.lit(CALIB_BINS - 1)), F.lit(0)).cast(
         "long"
@@ -386,11 +367,9 @@ def classifier_calibration(
     )
 
 
-def classifier_calibration_sql(
-    table: str = "documents", rounds: int = TRAIN_ROUNDS
-) -> str:
+def classifier_calibration_sql() -> str:
     return f"""
-WITH scored AS ({classifier_scores_sql(table, rounds)}),
+WITH scored AS ({classifier_scores_sql()}),
 b AS (SELECT greatest(least(
         ((score_micros - {CALIB_LO}) // {CALIB_WIDTH}),
         {CALIB_BINS - 1}), 0)::BIGINT AS bin, label

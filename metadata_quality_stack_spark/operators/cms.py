@@ -44,6 +44,7 @@ CMS_D = 4  # hash rows
 CMS_W = 1024  # counters per row
 
 HIST_BINS = 256
+HIST_QS = (1, 25, 50, 75, 99)  # percentiles read off the histogram
 
 
 # ------------------------------------------------------------------ CMS
@@ -56,7 +57,7 @@ def _tokens() -> Column:
     )
 
 
-def cms_build(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def cms_build(docs: DataFrame) -> DataFrame:
     """The sketch table: (row, cell, cnt) — at most d*w rows; the
     exchange is sketch-sized thanks to map-side partial aggregation.
     Merge across shards = sum(cnt) per (row, cell)."""
@@ -79,15 +80,13 @@ def cms_build(docs: DataFrame, text_col: str = "text") -> DataFrame:
     return cells.groupBy("row", "cell").agg(F.count("*").alias("cnt"))
 
 
-def cms_term_counts(
-    docs: DataFrame, terms: list[str], text_col: str = "text"
-) -> DataFrame:
+def cms_term_counts(docs: DataFrame, terms: list[str]) -> DataFrame:
     """Probe: estimated corpus frequency per query term — min over the
     d rows, 0 when every cell is empty. The probe filters the sketch to
     d literal cells per term (driver-computed), so it reads d*|terms|
     sketch rows, never the corpus. Columns: term, est_count."""
     lows = sorted({t.lower() for t in terms if t})
-    sketch = cms_build(docs, text_col)
+    sketch = cms_build(docs)
     spark = docs.sparkSession
     want = spark.createDataFrame(
         [
@@ -105,9 +104,7 @@ def cms_term_counts(
     return est.select("term", F.col("est_count").cast("long").alias("est_count"))
 
 
-def cms_term_counts_sql(
-    terms: list[str], table: str = "documents", text_col: str = "text"
-) -> str:
+def cms_term_counts_sql(terms: list[str]) -> str:
     from metadata_quality_stack_spark.operators.textops import _lows_sql
 
     lows = sorted({t.lower() for t in terms if t})
@@ -122,7 +119,7 @@ def cms_term_counts_sql(
         for r in range(CMS_D)
     )
     return f"""
-WITH tok AS (SELECT unnest({_lows_sql(text_col)}) AS term FROM {table}),
+WITH tok AS (SELECT unnest({_lows_sql("text")}) AS term FROM documents),
 tf AS (SELECT term, count(*) AS cnt FROM tok GROUP BY term),
 sketch AS (SELECT row, cell, sum(cnt)::BIGINT AS cnt FROM ({cell_rows})
            GROUP BY row, cell),
@@ -169,7 +166,6 @@ def hist_quantiles(
     lo: int,
     hi: int,
     bins: int = HIST_BINS,
-    qs: tuple[int, ...] = (1, 25, 50, 75, 99),
 ) -> DataFrame:
     """(q, bin, value_lower_edge): the first bin whose cumulative count
     reaches ceil(q*N/100), per requested percentile. Value error is one
@@ -189,7 +185,7 @@ def hist_quantiles(
         F.sum("cnt").over(w).alias("cum"),
         F.sum("cnt").over(total).alias("n"),
     )
-    qs_df = df.sparkSession.createDataFrame([(q,) for q in qs], "q int")
+    qs_df = df.sparkSession.createDataFrame([(q,) for q in HIST_QS], "q int")
     # one pass: every qualifying (q, bin) pair, min bin per q — the
     # histogram is <= bins rows, so the cross join is sketch-sized
     return (
@@ -211,21 +207,19 @@ def hist_quantiles_sql(
     col_expr: str,
     lo: int,
     hi: int,
-    bins: int = HIST_BINS,
-    qs: tuple[int, ...] = (1, 25, 50, 75, 99),
     from_clause: str = "documents",
 ) -> str:
-    q_vals = ", ".join(f"({q})" for q in qs)
+    q_vals = ", ".join(f"({q})" for q in HIST_QS)
     return f"""
 WITH h AS (
-  SELECT least(greatest((({col_expr}) - {lo}) * {bins} // ({hi} - {lo}), 0),
-               {bins - 1})::INT AS bin, count(*) AS cnt
+  SELECT least(greatest((({col_expr}) - {lo}) * {HIST_BINS} // ({hi} - {lo}), 0),
+               {HIST_BINS - 1})::INT AS bin, count(*) AS cnt
   FROM {from_clause} WHERE ({col_expr}) IS NOT NULL GROUP BY 1),
 c AS (SELECT bin, sum(cnt) OVER (ORDER BY bin) AS cum,
              sum(cnt) OVER () AS n FROM h),
 qs AS (SELECT * FROM (VALUES {q_vals}) AS t(q))
 SELECT q, bin::BIGINT AS bin,
-  ({lo} + bin * (({hi} - {lo}) // {bins}))::BIGINT AS value_lower_edge
+  ({lo} + bin * (({hi} - {lo}) // {HIST_BINS}))::BIGINT AS value_lower_edge
 FROM (
   SELECT qs.q, c.bin,
     row_number() OVER (PARTITION BY qs.q ORDER BY c.bin) AS rn

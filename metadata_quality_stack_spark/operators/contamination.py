@@ -34,7 +34,7 @@ from metadata_quality_stack_spark.operators.dedup import _shingles, shingles_sql
 EVAL_MOD = 41  # doc_id % EVAL_MOD == 0 -> held-out "benchmark" doc
 
 
-def decontaminate(docs: DataFrame, eval_mod: int = EVAL_MOD) -> DataFrame:
+def decontaminate(docs: DataFrame) -> DataFrame:
     """Per-train-doc contamination report: distinct shingles shared with
     the eval split. Returns only contaminated docs (n_shared >= 1) —
     the actionable set; clean docs are the complement by doc_id.
@@ -45,11 +45,11 @@ def decontaminate(docs: DataFrame, eval_mod: int = EVAL_MOD) -> DataFrame:
     """
     arr = docs.select("doc_id", _shingles(F.col("text")).alias("arr"))
     ev = (
-        arr.filter(F.col("doc_id") % eval_mod == 0)
+        arr.filter(F.col("doc_id") % EVAL_MOD == 0)
         .select(F.explode("arr").alias("s"))
         .distinct()
     )
-    tr = arr.filter(F.col("doc_id") % eval_mod != 0).select(
+    tr = arr.filter(F.col("doc_id") % EVAL_MOD != 0).select(
         "doc_id",
         F.size("arr").cast("long").alias("n_shingles"),
         F.explode("arr").alias("s"),
@@ -72,13 +72,13 @@ def decontaminate(docs: DataFrame, eval_mod: int = EVAL_MOD) -> DataFrame:
     )
 
 
-def decontaminate_sql(table: str = "documents", eval_mod: int = EVAL_MOD) -> str:
+def decontaminate_sql() -> str:
     """DuckDB mirror of :func:`decontaminate` (same shingle definition)."""
     return f"""
-WITH arr AS (SELECT doc_id, {shingles_sql("text")} AS arr FROM {table}),
-ev AS (SELECT DISTINCT unnest(arr) AS s FROM arr WHERE doc_id % {eval_mod} = 0),
+WITH arr AS (SELECT doc_id, {shingles_sql()} AS arr FROM documents),
+ev AS (SELECT DISTINCT unnest(arr) AS s FROM arr WHERE doc_id % {EVAL_MOD} = 0),
 tr AS (SELECT doc_id, CAST(len(arr) AS BIGINT) AS n_shingles, unnest(arr) AS s
-       FROM arr WHERE doc_id % {eval_mod} <> 0)
+       FROM arr WHERE doc_id % {EVAL_MOD} <> 0)
 SELECT tr.doc_id,
        any_value(n_shingles) AS n_shingles,
        count(*) AS n_shared,
@@ -88,12 +88,7 @@ GROUP BY tr.doc_id
 """
 
 
-def decontaminate_bloom(
-    docs: DataFrame,
-    eval_mod: int = EVAL_MOD,
-    m_bits: int = 1 << 16,
-    k_hashes: int = 4,
-) -> DataFrame:
+def decontaminate_bloom(docs: DataFrame) -> DataFrame:
     """Bloom-gated decontamination — the 10^12-doc shape of
     :func:`decontaminate`.
 
@@ -118,17 +113,17 @@ def decontaminate_bloom(
 
     arr = docs.select("doc_id", _shingles(F.col("text")).alias("arr"))
     ev = (
-        arr.filter(F.col("doc_id") % eval_mod == 0)
+        arr.filter(F.col("doc_id") % EVAL_MOD == 0)
         .select(F.explode("arr").alias("s"))
         .distinct()
     )
-    bitmap = bloom.bloom_build(ev, col="s", m_bits=m_bits, k_hashes=k_hashes)
-    tr = arr.filter(F.col("doc_id") % eval_mod != 0).select(
+    bitmap = bloom.bloom_build(ev, col="s")
+    tr = arr.filter(F.col("doc_id") % EVAL_MOD != 0).select(
         "doc_id",
         F.size("arr").cast("long").alias("n_shingles"),
         F.explode("arr").alias("s"),
     )
-    probed = bloom.bloom_probe(tr, bitmap, col="s", k_hashes=k_hashes)
+    probed = bloom.bloom_probe(tr, bitmap, col="s")
     return (
         probed.groupBy("doc_id")
         .agg(
@@ -147,33 +142,32 @@ def decontaminate_bloom(
     )
 
 
-def decontaminate_bloom_sql(
-    table: str = "documents",
-    eval_mod: int = EVAL_MOD,
-    m_bits: int = 1 << 16,
-    k_hashes: int = 4,
-) -> str:
+def decontaminate_bloom_sql() -> str:
     """DuckDB mirror of :func:`decontaminate_bloom`: a probe hits iff
     ALL k of its bit positions appear in the eval split's distinct
     position set — the same boolean function the bitmap computes,
     false positives included (operators/bloom.py:bloom_probe_sql
     states the identical form for the dedup sidecar)."""
-    from metadata_quality_stack_spark.operators.bloom import _position_sql
+    from metadata_quality_stack_spark.operators.bloom import (
+        K_HASHES,
+        M_BITS,
+        _position_sql,
+    )
 
     pos_union = " UNION ".join(
-        f"SELECT {_position_sql('s', i, m_bits)} AS p FROM ev"
-        for i in range(k_hashes)
+        f"SELECT {_position_sql('s', i, M_BITS)} AS p FROM ev"
+        for i in range(K_HASHES)
     )
     hit = " AND ".join(
-        f"({_position_sql('s', i, m_bits)} IN (SELECT p FROM cp))"
-        for i in range(k_hashes)
+        f"({_position_sql('s', i, M_BITS)} IN (SELECT p FROM cp))"
+        for i in range(K_HASHES)
     )
     return f"""
-WITH arr AS (SELECT doc_id, {shingles_sql("text")} AS arr FROM {table}),
-ev AS (SELECT DISTINCT unnest(arr) AS s FROM arr WHERE doc_id % {eval_mod} = 0),
+WITH arr AS (SELECT doc_id, {shingles_sql()} AS arr FROM documents),
+ev AS (SELECT DISTINCT unnest(arr) AS s FROM arr WHERE doc_id % {EVAL_MOD} = 0),
 cp AS MATERIALIZED ({pos_union}),
 tr AS (SELECT doc_id, CAST(len(arr) AS BIGINT) AS n_shingles, unnest(arr) AS s
-       FROM arr WHERE doc_id % {eval_mod} <> 0)
+       FROM arr WHERE doc_id % {EVAL_MOD} <> 0)
 SELECT doc_id,
        any_value(n_shingles) AS n_shingles,
        count(*) FILTER (WHERE {hit}) AS n_maybe,

@@ -34,8 +34,8 @@ def _shingles(text_col):
     return F.array_distinct(word_ngrams(tokens(text_col), SHINGLE_N))
 
 
-def shingles_sql(text: str = "text") -> str:
-    toks = f"list_filter(regexp_split_to_array({text}, '[ \\t\\n\\r]+'), x -> x <> '')"
+def shingles_sql() -> str:
+    toks = "list_filter(regexp_split_to_array(text, '[ \\t\\n\\r]+'), x -> x <> '')"
     return (
         f"CASE WHEN len({toks}) >= {SHINGLE_N} THEN "
         f"list_distinct(list_transform(generate_series(1, len({toks}) - {SHINGLE_N - 1}), "
@@ -246,7 +246,7 @@ def poly_hash_sql(expr: str) -> str:
     )
 
 
-def simhash(docs: DataFrame, n_bits: int = 16) -> DataFrame:
+def simhash(docs: DataFrame) -> DataFrame:
     """SimHash over lowercased tokens with the seeded polynomial hash;
     bit j set when sum over tokens of (+1/-1 by hash bit j) > 0.
 
@@ -283,7 +283,7 @@ def simhash(docs: DataFrame, n_bits: int = 16) -> DataFrame:
         )
 
     bit_terms = [
-        F.when(vote(j) > 0, F.lit(1 << j)).otherwise(F.lit(0)) for j in range(n_bits)
+        F.when(vote(j) > 0, F.lit(1 << j)).otherwise(F.lit(0)) for j in range(16)
     ]
     sim = bit_terms[0]
     for t in bit_terms[1:]:
@@ -350,7 +350,7 @@ def line_dup_stats(docs: DataFrame) -> DataFrame:
 DUP_NGRAM_N = 5  # 13 in MassiveText; 5 keeps small-SF tests meaningful
 
 
-def dup_ngram_fraction(docs: DataFrame, n: int = DUP_NGRAM_N) -> DataFrame:
+def dup_ngram_fraction(docs: DataFrame) -> DataFrame:
     """Inter-document repetition census (the cross-corpus complement of
     the within-doc repetition_stats and the line-level line_dup_stats):
     for every document, the fraction of its word n-gram POSITIONS whose
@@ -377,7 +377,7 @@ def dup_ngram_fraction(docs: DataFrame, n: int = DUP_NGRAM_N) -> DataFrame:
     Both join legs hash-partition on gh, so the scan+explode subtree is
     a single ReusedExchange. Docs with < n tokens report zero
     n-grams."""
-    grams = word_ngrams(tokens(F.col("text")), n)
+    grams = word_ngrams(tokens(F.col("text")), DUP_NGRAM_N)
     hashed = docs.select("doc_id", F.explode(grams).alias("g")).select(
         "doc_id", F.md5(F.encode(F.col("g"), "UTF-8")).alias("gh")
     )
@@ -395,7 +395,7 @@ def dup_ngram_fraction(docs: DataFrame, n: int = DUP_NGRAM_N) -> DataFrame:
     base = docs.select(
         "doc_id",
         F.greatest(
-            F.size(tokens(F.col("text"))) - (n - 1), F.lit(0)
+            F.size(tokens(F.col("text"))) - (DUP_NGRAM_N - 1), F.lit(0)
         ).cast("long").alias("n_ngrams"),
     )
     return base.join(n_dup, "doc_id", "left").select(
@@ -415,17 +415,17 @@ def dup_ngram_fraction(docs: DataFrame, n: int = DUP_NGRAM_N) -> DataFrame:
     )
 
 
-def dup_ngram_fraction_sql(table: str = "documents", n: int = DUP_NGRAM_N) -> str:
+def dup_ngram_fraction_sql() -> str:
     """DuckDB mirror of :func:`dup_ngram_fraction` (same tokenization as
     shingles_sql, positional n-grams, distinct-doc df)."""
-    toks = f"list_filter(regexp_split_to_array(text, '[ \\t\\n\\r]+'), x -> x <> '')"
+    toks = "list_filter(regexp_split_to_array(text, '[ \\t\\n\\r]+'), x -> x <> '')"
     return f"""
-WITH t AS (SELECT doc_id, {toks} AS tk FROM {table}),
+WITH t AS (SELECT doc_id, {toks} AS tk FROM documents),
 arr AS (
   SELECT doc_id,
-    CASE WHEN len(tk) >= {n} THEN
-      list_transform(generate_series(1, len(tk) - {n - 1}),
-                     i -> array_to_string(tk[i:i+{n - 1}], ' '))
+    CASE WHEN len(tk) >= {DUP_NGRAM_N} THEN
+      list_transform(generate_series(1, len(tk) - {DUP_NGRAM_N - 1}),
+                     i -> array_to_string(tk[i:i+{DUP_NGRAM_N - 1}], ' '))
     ELSE [] END AS grams
   FROM t
 ),
@@ -442,7 +442,7 @@ SELECT d.doc_id,
   round(coalesce(CAST(pd.n_dup_ngrams AS DOUBLE)
                  / nullif(CAST(pd.n_ngrams AS DOUBLE), 0.0), 0.0), 6)
     AS dup_ngram_fraction
-FROM {table} d LEFT JOIN pd USING (doc_id)
+FROM documents d LEFT JOIN pd USING (doc_id)
 """
 
 
@@ -682,14 +682,14 @@ def dedup_new_batch(new_docs: DataFrame, corpus: DataFrame) -> DataFrame:
     )
 
 
-def dedup_new_batch_sql(table: str = "documents", batch_mod: int = 10) -> str:
-    """DuckDB mirror: docs with doc_id % batch_mod == 0 are the new
+def dedup_new_batch_sql() -> str:
+    """DuckDB mirror: docs with doc_id % 10 == 0 are the new
     batch, the rest the existing corpus."""
-    return f"""
-WITH batch AS (SELECT doc_id, md5(text) AS fingerprint FROM {table}
-               WHERE doc_id % {batch_mod} = 0),
-corpus_fp AS (SELECT DISTINCT md5(text) AS fingerprint FROM {table}
-              WHERE doc_id % {batch_mod} <> 0),
+    return """
+WITH batch AS (SELECT doc_id, md5(text) AS fingerprint FROM documents
+               WHERE doc_id % 10 = 0),
+corpus_fp AS (SELECT DISTINCT md5(text) AS fingerprint FROM documents
+              WHERE doc_id % 10 <> 0),
 first AS (SELECT fingerprint, min(doc_id) AS first_id FROM batch GROUP BY 1)
 SELECT b.doc_id, b.fingerprint,
        (c.fingerprint IS NOT NULL) AS seen_in_corpus,
@@ -837,17 +837,17 @@ def drop_duplicated_spans(docs: DataFrame, w: int = SPAN_W) -> DataFrame:
     )
 
 
-def drop_duplicated_spans_sql(table: str = "documents", w: int = SPAN_W) -> str:
+def drop_duplicated_spans_sql() -> str:
     """DuckDB mirror of :func:`drop_duplicated_spans` (1-based list
     subscripts; same (doc_id, pos) canonical-occurrence order)."""
     toks = "list_filter(regexp_split_to_array(text, '[ \\t\\n\\r]+'), x -> x <> '')"
     return f"""
-WITH t AS (SELECT doc_id, {toks} AS tk FROM {table}),
+WITH t AS (SELECT doc_id, {toks} AS tk FROM documents),
 arr AS (
   SELECT doc_id,
-    CASE WHEN len(tk) >= {w} THEN
-      list_transform(generate_series(1, len(tk) - {w - 1}),
-                     i -> md5(array_to_string(tk[i:i+{w - 1}], ' ')))
+    CASE WHEN len(tk) >= {SPAN_W} THEN
+      list_transform(generate_series(1, len(tk) - {SPAN_W - 1}),
+                     i -> md5(array_to_string(tk[i:i+{SPAN_W - 1}], ' ')))
     ELSE [] END AS ghs
   FROM t
 ),
@@ -860,7 +860,7 @@ ranked AS (
   FROM occ o JOIN dup USING (gh)
 ),
 rem AS (
-  SELECT DISTINCT doc_id, unnest(generate_series(pos, pos + {w - 1})) AS idx
+  SELECT DISTINCT doc_id, unnest(generate_series(pos, pos + {SPAN_W - 1})) AS idx
   FROM ranked WHERE rn > 1
 ),
 remset AS (SELECT doc_id, count(*) AS n_removed FROM rem GROUP BY 1),
@@ -874,22 +874,22 @@ kept AS (
 )
 SELECT d.doc_id, coalesce(k.clean_text, '') AS clean_text,
        CAST(coalesce(rs.n_removed, 0) AS BIGINT) AS n_removed_tokens
-FROM {table} d
+FROM documents d
 LEFT JOIN kept k USING (doc_id)
 LEFT JOIN remset rs USING (doc_id)
 """
 
 
-def dup_span_stats_sql(table: str = "documents", w: int = SPAN_W) -> str:
+def dup_span_stats_sql() -> str:
     """DuckDB mirror of :func:`dup_span_stats`."""
     toks = "list_filter(regexp_split_to_array(text, '[ \\t\\n\\r]+'), x -> x <> '')"
     return f"""
-WITH t AS (SELECT doc_id, {toks} AS tk FROM {table}),
+WITH t AS (SELECT doc_id, {toks} AS tk FROM documents),
 arr AS (
-  SELECT doc_id, greatest(len(tk) - {w - 1}, 0) AS n_windows,
-    CASE WHEN len(tk) >= {w} THEN
-      list_transform(generate_series(1, len(tk) - {w - 1}),
-                     i -> md5(array_to_string(tk[i:i+{w - 1}], ' ')))
+  SELECT doc_id, greatest(len(tk) - {SPAN_W - 1}, 0) AS n_windows,
+    CASE WHEN len(tk) >= {SPAN_W} THEN
+      list_transform(generate_series(1, len(tk) - {SPAN_W - 1}),
+                     i -> md5(array_to_string(tk[i:i+{SPAN_W - 1}], ' ')))
     ELSE [] END AS ghs
   FROM t
 ),
@@ -1025,7 +1025,7 @@ def boilerplate_by_source(docs: DataFrame) -> DataFrame:
     )
 
 
-def boilerplate_by_source_sql(table: str = "documents") -> str:
+def boilerplate_by_source_sql() -> str:
     """DuckDB mirror of :func:`boilerplate_by_source` (same md5 line
     hashing, same integer-ppm comparison — cross-multiplied so neither
     engine divides)."""
@@ -1033,13 +1033,13 @@ def boilerplate_by_source_sql(table: str = "documents") -> str:
 WITH lines AS (
   SELECT doc_id, coalesce(source, '') AS src,
          unnest(string_split(text, chr(10))) AS line
-  FROM {table}
+  FROM documents
 ),
 nb AS (
   SELECT doc_id, src, md5(line) AS lh FROM lines WHERE trim(line) <> ''
 ),
 sd AS (SELECT coalesce(source, '') AS src, count(*) AS n_docs_src
-       FROM {table} GROUP BY 1),
+       FROM documents GROUP BY 1),
 boiler AS (
   SELECT src, lh
   FROM (SELECT src, lh, count(DISTINCT doc_id) AS sdf FROM nb GROUP BY 1, 2)
@@ -1055,7 +1055,7 @@ base AS (
   SELECT doc_id, source,
          len(list_filter(string_split(text, chr(10)),
                          l -> trim(l) <> ''))::BIGINT AS n_lines
-  FROM {table}
+  FROM documents
 )
 SELECT b.doc_id, b.source, b.n_lines,
        coalesce(c.n_boiler_lines, 0)::BIGINT AS n_boiler_lines,
@@ -1108,11 +1108,7 @@ def dedup_audit(
     )
 
 
-def minhash_bands_cte_sql(
-    table: str = "documents",
-    n_hashes: int = N_MINHASH,
-    n_bands: int = N_BANDS,
-) -> str:
+def minhash_bands_cte_sql(n_hashes: int = N_MINHASH, n_bands: int = N_BANDS) -> str:
     """DuckDB CTE prelude replaying signatures + banding at ANY
     operating point (same generated coefficient family as
     :func:`_minhash_coeffs`, same md5 base) — ends in
@@ -1140,19 +1136,18 @@ def minhash_bands_cte_sql(
             "WHERE mh0 IS NOT NULL"
         )
     return (
-        f"WITH sh AS (SELECT doc_id, {sh} AS shingles FROM {table}),\n"
+        f"WITH sh AS (SELECT doc_id, {sh} AS shingles FROM documents),\n"
         f"sig AS (SELECT doc_id, {mh_cols} FROM sh),\n"
         f"bands AS ({' UNION ALL '.join(band_selects)})"
     )
 
 
 def minhash_candidate_pairs_sql(
-    table: str = "documents",
     n_hashes: int = N_MINHASH,
     n_bands: int = N_BANDS,
 ) -> str:
     return (
-        f"{minhash_bands_cte_sql(table, n_hashes, n_bands)} "
+        f"{minhash_bands_cte_sql(n_hashes, n_bands)} "
         "SELECT DISTINCT a.doc_id AS d1, b.doc_id AS d2 FROM bands a "
         "JOIN bands b ON a.band = b.band AND a.bucket = b.bucket "
         "AND a.doc_id < b.doc_id"

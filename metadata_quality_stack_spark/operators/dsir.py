@@ -43,6 +43,7 @@ from metadata_quality_stack_spark.functions.hashing import md5_int, md5_int_sql
 from metadata_quality_stack_spark.functions.text import token_array
 
 N_BUCKETS = 256
+DSIR_K = 100  # documents drawn
 # The designated high-quality target domain (DSIR's Wikipedia+books
 # stand-in for the synthetic corpus): importance weights push the raw
 # corpus toward these sources' token distribution.
@@ -77,16 +78,16 @@ def feature_buckets(text: F.Column) -> F.Column:
     return F.concat(uni, bi)
 
 
-def _feats_sql(text: str = "text") -> str:
+def _feats_sql() -> str:
     ws = (
-        f"list_transform(list_filter(regexp_split_to_array({text}, "
+        "list_transform(list_filter(regexp_split_to_array(text, "
         "'[ \\t\\n\\r]+'), x -> x <> ''), x -> lower(x))"
     )
     bigram = "ws[i] || ' ' || ws[i+1]"
     uni_b = f"({md5_int_sql('x', 7)} % {N_BUCKETS})"
     bi_b = f"({md5_int_sql(bigram, 7)} % {N_BUCKETS})"
     return (
-        f"WITH w AS (SELECT *, {ws} AS ws FROM {{table}}), "
+        f"WITH w AS (SELECT *, {ws} AS ws FROM documents), "
         "feats AS (SELECT *, list_concat("
         f"list_transform(ws, x -> {uni_b}), "
         f"list_transform(range(1, len(ws)), "
@@ -202,7 +203,7 @@ def _gumbel_micros(id_col: F.Column) -> F.Column:
     return F.round(-F.log(-F.log(u)) * MICROS).cast("long")
 
 
-def dsir_sample(docs: DataFrame, k: int = 100) -> DataFrame:
+def dsir_sample(docs: DataFrame, k: int = DSIR_K) -> DataFrame:
     """Gumbel-top-k selection over the importance weights == sampling k
     documents without replacement with probability proportional to
     exp(logw) (softmax of the log weights) — the DSIR resampling step,
@@ -223,13 +224,12 @@ def dsir_sample(docs: DataFrame, k: int = 100) -> DataFrame:
 
 
 # ---------------------------------------------------------------- SQL mirrors
-def _lr_sql(table: str) -> str:
+def _lr_sql() -> str:
     """CTE chain computing the per-bucket log-ratio micros table in
     DuckDB — the full census replayed in SQL (same pattern as the
     Lloyd-trained IVF oracle)."""
-    feats = _feats_sql().format(table=table)
     return (
-        f"{feats}, "
+        f"{_feats_sql()}, "
         "flat AS (SELECT source IN "
         f"{tuple(TARGET_SOURCES)} AS is_t, unnest(bs) AS b FROM feats), "
         "dist AS (SELECT b, count(*) AS n_raw, "
@@ -242,9 +242,9 @@ def _lr_sql(table: str) -> str:
     )
 
 
-def dsir_logweights_sql(table: str = "documents") -> str:
+def dsir_logweights_sql() -> str:
     return f"""
-{_lr_sql(table)},
+{_lr_sql()},
 perdoc AS (SELECT doc_id, unnest(bs) AS b FROM feats),
 summed AS (SELECT p.doc_id, sum(l.lrm) AS lw
            FROM perdoc p JOIN lr l USING (b) GROUP BY p.doc_id)
@@ -254,14 +254,14 @@ FROM feats f LEFT JOIN summed s USING (doc_id)
 """
 
 
-def dsir_sample_sql(table: str = "documents", k: int = 100) -> str:
+def dsir_sample_sql() -> str:
     h28 = f"({md5_int_sql('CAST(doc_id AS VARCHAR)', 7)}::DOUBLE)"
     g = (
         f"CAST(round(-ln(-ln(({h28} + 0.5) / {float(1 << 28)})) * {MICROS})"
         " AS BIGINT)"
     )
     return f"""
-WITH w AS ({dsir_logweights_sql(table)})
+WITH w AS ({dsir_logweights_sql()})
 SELECT doc_id, logw_micros, logw_micros + {g} AS sample_key
-FROM w ORDER BY sample_key DESC, doc_id LIMIT {k}
+FROM w ORDER BY sample_key DESC, doc_id LIMIT {DSIR_K}
 """

@@ -368,10 +368,10 @@ def _frac_sql(num: str, den: str) -> str:
     )
 
 
-def gopher_repetition_sql(table: str = "documents") -> str:
+def gopher_repetition_sql() -> str:
     parts = [
         "WITH base AS (SELECT doc_id, text, "
-        f"{_lows_sql('text')} AS ws FROM {table})",
+        f"{_lows_sql('text')} AS ws FROM documents)",
         _seg_stats_sql("line", _seg_sql("chr(10)")),
         _seg_stats_sql("para", _seg_sql("chr(10) || chr(10)")),
     ]
@@ -390,7 +390,7 @@ def gopher_repetition_sql(table: str = "documents") -> str:
         + " AS dup_para_char_frac_micros",
     ]
     joins = [
-        f"{table} b",
+        "documents b",
         "LEFT JOIN line_st ON b.doc_id = line_st.doc_id",
         "LEFT JOIN para_st ON b.doc_id = para_st.doc_id",
     ]
@@ -469,7 +469,7 @@ def gopher_repetition_filter(
     )
 
 
-def gopher_repetition_filter_sql(table: str = "documents") -> str:
+def gopher_repetition_filter_sql() -> str:
     items = list(GOPHER_THRESHOLDS_MICROS.items())
     n_failed = " + ".join(f"({c} > {t})::BIGINT" for c, t in items)
     reasons = ", ".join(
@@ -477,7 +477,7 @@ def gopher_repetition_filter_sql(table: str = "documents") -> str:
         for c, t in items
     )
     return f"""
-WITH g AS ({gopher_repetition_sql(table)})
+WITH g AS ({gopher_repetition_sql()})
 SELECT doc_id, {n_failed} AS n_failed,
        ({n_failed}) = 0 AS keep,
        concat_ws(',', {reasons}) AS failed_signals

@@ -185,7 +185,7 @@ def page_link_edges(pages: DataFrame) -> DataFrame:
     )
 
 
-def pagerank_from_pages(pages: DataFrame, n_iter: int = PR_ITER) -> DataFrame:
+def pagerank_from_pages(pages: DataFrame) -> DataFrame:
     """PageRank over the REAL extracted link graph. Nodes = every
     domain seen as a source or target; targets that never link out are
     DANGLING — their rank mass leaks each round (raw power iteration;
@@ -197,7 +197,7 @@ def pagerank_from_pages(pages: DataFrame, n_iter: int = PR_ITER) -> DataFrame:
         .unionByName(edges.select(F.col("dst").alias("node")))
         .distinct()
     )
-    return _power_iterate(nodes, edges, n_iter)
+    return _power_iterate(nodes, edges, PR_ITER)
 
 
 def _power_iterate(
@@ -238,14 +238,14 @@ def _power_iterate(
 # ----------------------------------------------------------------------
 # DuckDB oracle mirrors
 # ----------------------------------------------------------------------
-def _graph_ctes(table: str = "documents") -> str:
-    return f"""nodes AS MATERIALIZED (
+def _graph_ctes() -> str:
+    return """nodes AS MATERIALIZED (
   SELECT source AS node, row_number() OVER (ORDER BY source) - 1 AS idx
-  FROM (SELECT DISTINCT source FROM {table} WHERE source IS NOT NULL)),
+  FROM (SELECT DISTINCT source FROM documents WHERE source IS NOT NULL)),
 nn AS MATERIALIZED (SELECT count(*) AS n FROM nodes),
 edges AS MATERIALIZED (
   SELECT s.node AS src, t.node AS dst, count(*) AS w
-  FROM {table} d
+  FROM documents d
   JOIN nodes s ON d.source = s.node
   CROSS JOIN nn
   JOIN nodes t ON t.idx = (s.idx + 1 + d.doc_id % greatest(nn.n - 1, 1)) % nn.n
@@ -254,8 +254,8 @@ edges AS MATERIALIZED (
 outdeg AS MATERIALIZED (SELECT src, sum(w) AS outdeg FROM edges GROUP BY src)"""
 
 
-def domain_link_stats_sql(table: str = "documents") -> str:
-    return f"""WITH {_graph_ctes(table)}
+def domain_link_stats_sql() -> str:
+    return f"""WITH {_graph_ctes()}
 SELECT n.node,
   coalesce(o.out_edges, 0) AS out_edges,
   coalesce(o.out_weight, 0) AS out_weight,
@@ -269,7 +269,7 @@ LEFT JOIN (SELECT dst, count(*) AS in_edges, sum(w)::BIGINT AS in_weight
 """
 
 
-def _power_iterate_sql(prelude_ctes: str, n_iter: int) -> str:
+def _power_iterate_sql(prelude_ctes: str) -> str:
     """Shared power-iteration SQL: ``prelude_ctes`` must define CTEs
     nodes(node), nn(n), edges(src, dst, w), outdeg(src, outdeg) — the
     same contract :func:`_power_iterate` has on the Spark side."""
@@ -279,7 +279,7 @@ def _power_iterate_sql(prelude_ctes: str, n_iter: int) -> str:
         f"r0 AS MATERIALIZED (SELECT node, ({PR_M} // nn.n) AS r "
         f"FROM nodes CROSS JOIN nn)",
     ]
-    for k in range(1, n_iter + 1):
+    for k in range(1, PR_ITER + 1):
         parts.append(
             f"""r{k} AS MATERIALIZED (
   SELECT n.node,
@@ -294,12 +294,12 @@ def _power_iterate_sql(prelude_ctes: str, n_iter: int) -> str:
         )
     return (
         f"WITH {','.join(parts)}\n"
-        f"SELECT node, r::BIGINT AS rank_micro FROM r{n_iter}"
+        f"SELECT node, r::BIGINT AS rank_micro FROM r{PR_ITER}"
     )
 
 
-def domain_pagerank_sql(n_iter: int = PR_ITER, table: str = "documents") -> str:
-    return _power_iterate_sql(_graph_ctes(table), n_iter)
+def domain_pagerank_sql() -> str:
+    return _power_iterate_sql(_graph_ctes())
 
 
 # ----------------------------------------------------------------------
@@ -372,16 +372,16 @@ def real_link_edges(docs: DataFrame) -> DataFrame:
     return page_link_edges(pages_with_links(docs))
 
 
-def pagerank_real_links(docs: DataFrame, n_iter: int = PR_ITER) -> DataFrame:
+def pagerank_real_links(docs: DataFrame) -> DataFrame:
     """PageRank over the REAL extracted link graph of the fixture pages:
     the full chain html bytes -> href parse -> URL canonicalization ->
     domain edges -> integer-micro power iteration, oracle-checked as one
     query (the DuckDB mirror replays the href regex and the normalize
     chain, not just the arithmetic)."""
-    return pagerank_from_pages(pages_with_links(docs), n_iter=n_iter)
+    return pagerank_from_pages(pages_with_links(docs))
 
 
-def _real_link_ctes(table: str = "documents") -> str:
+def _real_link_ctes() -> str:
     """DuckDB mirror of pages_with_links + the href parse + both URL
     canonicalizations, ending in edges(src, dst, w) — the prelude for
     the shared SQL readouts."""
@@ -397,7 +397,7 @@ def _real_link_ctes(table: str = "documents") -> str:
 
     return f"""doms AS MATERIALIZED (
   SELECT array_agg(DISTINCT source ORDER BY source) AS ds
-  FROM {table} WHERE source IS NOT NULL),
+  FROM documents WHERE source IS NOT NULL),
 pages AS MATERIALIZED (
   SELECT 'https://' || d.source || '/p/' || d.doc_id AS url,
     '<html>' || CASE WHEN d.doc_id % 10 = 0 THEN '' ELSE
@@ -410,7 +410,7 @@ pages AS MATERIALIZED (
       || '/b?utm_source=z&q=1">y</a></nav>' END ||
       '<main><a href="https://outside.example.com/x">o</a></main></html>'
       AS html
-  FROM {table} d CROSS JOIN doms
+  FROM documents d CROSS JOIN doms
   WHERE d.source IS NOT NULL),
 hrefs AS MATERIALIZED (
   SELECT url,
@@ -423,21 +423,19 @@ edges AS MATERIALIZED (
   FROM hrefs GROUP BY 1, 2)"""
 
 
-def real_link_edges_sql(table: str = "documents") -> str:
-    return f"""WITH {_real_link_ctes(table)}
+def real_link_edges_sql() -> str:
+    return f"""WITH {_real_link_ctes()}
 SELECT src, dst, w::BIGINT AS w FROM edges
 """
 
 
-def pagerank_real_links_sql(
-    n_iter: int = PR_ITER, table: str = "documents"
-) -> str:
-    prelude = f"""{_real_link_ctes(table)},
+def pagerank_real_links_sql() -> str:
+    prelude = f"""{_real_link_ctes()},
 nodes AS MATERIALIZED (
   SELECT src AS node FROM edges UNION SELECT dst FROM edges),
 nn AS MATERIALIZED (SELECT count(*) AS n FROM nodes),
 outdeg AS MATERIALIZED (SELECT src, sum(w) AS outdeg FROM edges GROUP BY src)"""
-    return _power_iterate_sql(prelude, n_iter)
+    return _power_iterate_sql(prelude)
 
 
 # ----------------------------------------------------------------------
@@ -465,7 +463,7 @@ def sink_pruned_edges(docs: DataFrame) -> DataFrame:
     )
 
 
-def pagerank_dangling_mass(docs: DataFrame, n_iter: int = PR_ITER) -> DataFrame:
+def pagerank_dangling_mass(docs: DataFrame) -> DataFrame:
     """(node, rank_micro) over the sink-pruned graph with per-round
     dangling-mass redistribution. Total mass is conserved up to the
     integer-division remainders (n per div), unlike the raw iteration
@@ -478,7 +476,7 @@ def pagerank_dangling_mass(docs: DataFrame, n_iter: int = PR_ITER) -> DataFrame:
     ranks = nodes.crossJoin(F.broadcast(n)).select(
         "node", F.expr(f"{PR_M} div n").alias("r")
     )
-    for _ in range(n_iter):
+    for _ in range(PR_ITER):
         withdeg = ranks.join(outdeg, ranks.node == outdeg.src, "left")
         contrib = withdeg.filter(F.col("outdeg").isNotNull()).select(
             "src", F.expr("r div outdeg").alias("c")
@@ -509,12 +507,10 @@ def pagerank_dangling_mass(docs: DataFrame, n_iter: int = PR_ITER) -> DataFrame:
     return ranks.select("node", F.col("r").cast("long").alias("rank_micro"))
 
 
-def pagerank_dangling_mass_sql(
-    n_iter: int = PR_ITER, table: str = "documents"
-) -> str:
+def pagerank_dangling_mass_sql() -> str:
     base = f"(({100 - PR_DAMP_NUM} * {PR_M}) // ({PR_DAMP_DEN} * nn.n))"
     parts = [
-        _graph_ctes(table),
+        _graph_ctes(),
         """edges_p AS MATERIALIZED (
   SELECT e.src, e.dst, e.w FROM edges e
   JOIN nodes s ON e.src = s.node WHERE s.idx % 4 <> 0),
@@ -523,7 +519,7 @@ outdeg_p AS MATERIALIZED (
         f"r0 AS MATERIALIZED (SELECT node, ({PR_M} // nn.n) AS r "
         f"FROM nodes CROSS JOIN nn)",
     ]
-    for k in range(1, n_iter + 1):
+    for k in range(1, PR_ITER + 1):
         parts.append(
             f"""d{k} AS MATERIALIZED (
   SELECT coalesce(sum(p.r), 0) AS dang FROM r{k - 1} p
@@ -542,7 +538,7 @@ r{k} AS MATERIALIZED (
         )
     return (
         f"WITH {','.join(parts)}\n"
-        f"SELECT node, r::BIGINT AS rank_micro FROM r{n_iter}"
+        f"SELECT node, r::BIGINT AS rank_micro FROM r{PR_ITER}"
     )
 
 
@@ -603,7 +599,7 @@ def anchor_text_stats(docs: DataFrame) -> DataFrame:
     )
 
 
-def anchor_text_stats_sql(table: str = "documents") -> str:
+def anchor_text_stats_sql() -> str:
     from metadata_quality_stack_spark.operators.urlops import (
         normalize_url_sql,
     )
@@ -615,7 +611,7 @@ def anchor_text_stats_sql(table: str = "documents") -> str:
         )
 
     nav = "regexp_extract(html, '<nav>(.*)</nav>', 1)"
-    return f"""WITH {_real_link_ctes(table)},
+    return f"""WITH {_real_link_ctes()},
 anchors AS MATERIALIZED (
   SELECT url,
     unnest(regexp_extract_all({nav}, '{_ANCHOR_PAT}', 1)) AS href,

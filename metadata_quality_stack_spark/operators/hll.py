@@ -58,17 +58,17 @@ HLL_AM2 = 2_904_064_000  # round(0.709 * 64^2 * 1e6)
 _MAX_RANK = 55  # 54 payload bits + 1
 
 
-def hll_registers(docs: DataFrame, col: str = "text") -> DataFrame:
+def hll_registers(docs: DataFrame) -> DataFrame:
     """The persisted shard sketch: (bucket, register) — at most 64
     rows, merge = max per bucket. Null values are skipped (no hash)."""
-    h = md5_int(F.col(col), 15)
+    h = md5_int(F.col("text"), 15)
     w = F.expr("_h div 64")
     bitlen = F.length(F.conv(w.cast("string"), 10, 2))
     rank = F.when(w == 0, F.lit(_MAX_RANK)).otherwise(
         F.lit(_MAX_RANK) - bitlen
     )
     return (
-        docs.filter(F.col(col).isNotNull())
+        docs.filter(F.col("text").isNotNull())
         .select(h.alias("_h"))
         .select(
             (F.col("_h") % HLL_M).cast("int").alias("bucket"),
@@ -110,10 +110,10 @@ def _estimate(registers: DataFrame) -> DataFrame:
     )
 
 
-def hll_distinct_estimate(docs: DataFrame, col: str = "text") -> DataFrame:
+def hll_distinct_estimate(docs: DataFrame) -> DataFrame:
     """One-row corpus readout: (nonzero_registers, denom_q20,
-    estimate_micros) — estimate of |distinct col| in micro-units."""
-    return _estimate(hll_registers(docs, col))
+    estimate_micros) — estimate of |distinct text| in micro-units."""
+    return _estimate(hll_registers(docs))
 
 
 def hll_shard_merge(shards: list[DataFrame]) -> DataFrame:
@@ -130,19 +130,19 @@ def hll_shard_merge(shards: list[DataFrame]) -> DataFrame:
 # ----------------------------------------------------------------------
 # DuckDB oracle mirrors
 # ----------------------------------------------------------------------
-def _registers_sql(table: str, col: str) -> str:
-    h = md5_int_sql(col, 15)
+def _registers_sql() -> str:
+    h = md5_int_sql("text", 15)
     return f"""regs AS (
   SELECT bucket, max(rank) AS register FROM (
     SELECT (h % {HLL_M})::INT AS bucket,
       CASE WHEN h // {HLL_M} = 0 THEN {_MAX_RANK}
            ELSE {_MAX_RANK} - length(bin(h // {HLL_M})) END AS rank
-    FROM (SELECT {h} AS h FROM {table} WHERE {col} IS NOT NULL))
+    FROM (SELECT {h} AS h FROM documents WHERE text IS NOT NULL))
   GROUP BY bucket)"""
 
 
-def hll_distinct_estimate_sql(table: str = "documents", col: str = "text") -> str:
-    return f"""WITH {_registers_sql(table, col)},
+def hll_distinct_estimate_sql() -> str:
+    return f"""WITH {_registers_sql()},
 agg AS (
   SELECT count(*)::BIGINT AS nonzero_registers,
     (coalesce(sum(CASE WHEN register <= {HLL_Q}
@@ -156,10 +156,8 @@ FROM agg
 """
 
 
-def hll_shard_merge_sql(
-    table: str = "documents", col: str = "text", mod: int = 3
-) -> str:
-    """Shard by doc_id % mod, sketch each shard, merge by max — the
+def hll_shard_merge_sql() -> str:
+    """Shard by doc_id % 3, sketch each shard, merge by max — the
     logical answer equals the whole-table sketch, which is what the
     merged registers reduce to (max of maxes = max)."""
     shard_regs = ",\n".join(
@@ -168,12 +166,12 @@ def hll_shard_merge_sql(
     SELECT (h % {HLL_M})::INT AS bucket,
       CASE WHEN h // {HLL_M} = 0 THEN {_MAX_RANK}
            ELSE {_MAX_RANK} - length(bin(h // {HLL_M})) END AS rank
-    FROM (SELECT {md5_int_sql(col, 15)} AS h FROM {table}
-          WHERE {col} IS NOT NULL AND doc_id % {mod} = {i}))
+    FROM (SELECT {md5_int_sql("text", 15)} AS h FROM documents
+          WHERE text IS NOT NULL AND doc_id % 3 = {i}))
   GROUP BY bucket)"""
-        for i in range(mod)
+        for i in range(3)
     )
-    union = " UNION ALL ".join(f"SELECT * FROM r{i}" for i in range(mod))
+    union = " UNION ALL ".join(f"SELECT * FROM r{i}" for i in range(3))
     return f"""WITH {shard_regs},
 regs AS (SELECT bucket, max(register) AS register
          FROM ({union}) GROUP BY bucket),

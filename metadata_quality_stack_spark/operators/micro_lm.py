@@ -313,12 +313,12 @@ dg AS (SELECT doc_id, greatest(len(n) - 2, 0)::BIGINT AS n_grams,
        FROM dnorm)"""
 
 
-def langid_model_scores_sql(table: str = "documents") -> str:
+def langid_model_scores_sql() -> str:
     sums = ", ".join(
         f"coalesce(sum(w.w_{lang}), 0)::BIGINT AS s_{lang}" for lang in LANGS
     )
     return f"""
-WITH {_langid_weights_cte(table)},
+WITH {_langid_weights_cte("documents")},
 persum AS (SELECT g.doc_id, sum(1) AS _n, {sums}
            FROM dg g JOIN wp w USING (b) GROUP BY g.doc_id),
 base AS (SELECT d.doc_id, greatest(len(n) - 2, 0)::BIGINT AS n_grams,
@@ -346,9 +346,9 @@ def langid_model_histogram(docs: DataFrame) -> DataFrame:
     )
 
 
-def langid_model_histogram_sql(table: str = "documents") -> str:
+def langid_model_histogram_sql() -> str:
     return f"""
-WITH scored AS ({langid_model_scores_sql(table)})
+WITH scored AS ({langid_model_scores_sql()})
 SELECT lang_pred, count(*)::BIGINT AS n_docs FROM scored GROUP BY lang_pred
 """
 
@@ -460,7 +460,7 @@ def micro_model_columns(
     )
 
 
-def micro_model_columns_sql(table: str = "documents") -> str:
+def micro_model_columns_sql() -> str:
     zs = ", ".join(
         f"s_{lang}::DOUBLE / (n_grams::DOUBLE * 1000000.0) AS z_{lang}"
         for lang in LANGS
@@ -473,14 +473,12 @@ SELECT l.doc_id, l.lang_pred,
             ELSE round(1.0 / ({ssum}), 6) END AS lang_conf,
        p.ppl
 FROM (SELECT *, {zm} AS zm
-      FROM (SELECT *, {zs} FROM ({langid_model_scores_sql(table)}))) l
-JOIN ({perplexity_model_scores_sql(table)}) p USING (doc_id)
+      FROM (SELECT *, {zs} FROM ({langid_model_scores_sql()}))) l
+JOIN ({perplexity_model_scores_sql()}) p USING (doc_id)
 """
 
 
-def full_pipeline_micro(
-    docs: DataFrame, profile: str = "webtext"
-) -> DataFrame:
+def full_pipeline_micro(docs: DataFrame) -> DataFrame:
     """The COMPLETE keep/drop pipeline — model rules included — with the
     micro scorers in the checker-plugin slot instead of the pandas UDFs:
     langid match/confidence + perplexity gate + every native heuristic
@@ -511,7 +509,7 @@ def full_pipeline_micro(
     # columns ride the same projection chain as the native heuristic
     # pcts — the doc_id model join (and the narrow-column discipline it
     # needed) is gone entirely.
-    rules = config.RULES_BY_PROFILE[profile]
+    rules = config.RULES_BY_PROFILE["webtext"]
     native_ids = {r["id"] for r in rules if r.get("kind") != "model"}
     enriched = micro_model_columns(
         docs,
@@ -520,7 +518,7 @@ def full_pipeline_micro(
         ),
     )
     natived = scoring_stages(
-        enriched, "text", meta_cols, profile, rule_ids=native_ids
+        enriched, "text", meta_cols, "webtext", rule_ids=native_ids
     )
     keep = ["doc_id", "lang_pred", "lang_conf", "ppl"]
     if meta_cols["lang"]:
@@ -549,7 +547,7 @@ def full_pipeline_micro(
         ],
     )
     scored = final_scores(
-        with_pcts, ["doc_id", "lang_pred", "lang_conf", "ppl"], profile
+        with_pcts, ["doc_id", "lang_pred", "lang_conf", "ppl"], "webtext"
     )
     keep_cols = [c for c in scored.columns if c != "drop_reasons"]
     return scored.select(
@@ -557,14 +555,12 @@ def full_pipeline_micro(
     )
 
 
-def full_pipeline_micro_sql(
-    table: str = "documents", profile: str = "webtext"
-) -> str:
+def full_pipeline_micro_sql() -> str:
     from metadata_quality_stack_spark import config
     from metadata_quality_stack_spark.oracle import sqlgen
 
-    t = config.thresholds_for(profile)
-    rules = config.RULES_BY_PROFILE[profile]
+    t = config.thresholds_for("webtext")
+    rules = config.RULES_BY_PROFILE["webtext"]
     profile_ids = {r["id"] for r in rules}
     hard = [rid for rid in config.HARD_RULES if rid in profile_ids]
     hard_cond = " AND ".join(f"pct_{rid} >= 0.5" for rid in hard) or "TRUE"
@@ -585,7 +581,7 @@ def full_pipeline_micro_sql(
 WITH src AS (
   SELECT d.doc_id, d.text, d.lang, d.source, d.n_chars,
          m.lang_pred, m.lang_conf, m.ppl
-  FROM {table} d JOIN ({micro_model_columns_sql(table)}) m USING (doc_id)
+  FROM documents d JOIN ({micro_model_columns_sql()}) m USING (doc_id)
 ), tok AS (
   SELECT doc_id, lang, source, n_chars, lang_pred, lang_conf, ppl, text,
     {sqlgen.TOKS} AS toks,
@@ -602,7 +598,7 @@ WITH src AS (
   FROM feat
 ), dims AS (
   SELECT doc_id, lang_pred, lang_conf, ppl, {all_pct_cols},
-    {sqlgen.score_select(profile)}
+    {sqlgen.score_select("webtext")}
   FROM pct
 )
 SELECT doc_id, lang_pred, lang_conf, ppl,
@@ -647,7 +643,7 @@ pb AS (SELECT k.b, (coalesce(c.c, 0) + {PPL_ALPHA}) /
        FROM bks k LEFT JOIN bcnt c USING (b), btot t)"""
 
 
-def perplexity_model_scores_sql(table: str = "documents") -> str:
+def perplexity_model_scores_sql() -> str:
     toks = (
         "list_filter(list_transform(list_filter(regexp_split_to_array("
         f"lower(coalesce(text, '')), '{_WS_RE}'), x -> x <> ''), "
@@ -662,7 +658,7 @@ def perplexity_model_scores_sql(table: str = "documents") -> str:
     )
     return f"""
 WITH {_ppl_probs_cte()},
-dkt AS (SELECT doc_id, {toks} AS kt FROM {table}),
+dkt AS (SELECT doc_id, {toks} AS kt FROM documents),
 dp AS (SELECT doc_id, len(kt) AS n_tokens, kt,
               unnest(range(1, len(kt) + 1)) AS i
        FROM dkt),
@@ -718,11 +714,11 @@ def ccnet_ppl_buckets(docs: DataFrame) -> DataFrame:
     )
 
 
-def ccnet_ppl_buckets_sql(table: str = "documents") -> str:
+def ccnet_ppl_buckets_sql() -> str:
     """DuckDB mirror of :func:`ccnet_ppl_buckets` (same ntile spec and
     (ppl, doc_id) total order)."""
     return f"""
-WITH m AS ({micro_model_columns_sql(table)})
+WITH m AS ({micro_model_columns_sql()})
 SELECT doc_id, lang_pred, ppl,
   CASE ntile(3) OVER (PARTITION BY lang_pred ORDER BY ppl, doc_id)
     WHEN 1 THEN 'head' WHEN 2 THEN 'middle' ELSE 'tail' END AS ppl_bucket

@@ -61,7 +61,7 @@ DECODED_SCHEMA = T.StructType(
 
 
 # --------------------------------------------------------------- synthesis
-def attach_fake_media(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def attach_fake_media(docs: DataFrame) -> DataFrame:
     """Deterministic fake media table from the documents corpus: payload =
     utf-8 bytes of the text prefixed with a magic header chosen by doc_id.
     Native expressions only — this is test scaffolding, not a decode path."""
@@ -73,7 +73,7 @@ def attach_fake_media(docs: DataFrame, text_col: str = "text") -> DataFrame:
     mtype = F.when(branch == 0, F.lit(magics[0][1]))
     for i in range(1, len(magics)):
         mtype = mtype.when(branch == i, F.lit(magics[i][1]))
-    payload = F.concat(header, F.encode(F.col(text_col), "UTF-8"))
+    payload = F.concat(header, F.encode(F.col("text"), "UTF-8"))
     return docs.select(
         "doc_id",
         mtype.alias("media_type"),
@@ -174,10 +174,10 @@ def decode_media(media: DataFrame, strict: bool = False) -> DataFrame:
 
 
 # --------------------------------------------------------------- frame sample
-def frame_sample(media: DataFrame, fps: float = 1.0) -> DataFrame:
-    """Sample frame timestamps at ``fps`` from video metadata — pure native
-    ``sequence`` arithmetic; one output row per (doc, frame)."""
-    step_ms = int(1000 / fps)
+def frame_sample(media: DataFrame) -> DataFrame:
+    """Sample frame timestamps at one frame per second from video metadata —
+    pure native ``sequence`` arithmetic; one output row per (doc, frame)."""
+    step_ms = 1000
     return (
         media.filter(F.col("media_type").startswith("video/"))
         .select(

@@ -167,11 +167,9 @@ def _log2fp_sql_ctes(src: str, xcol: str, out: str, cols: str) -> str:
 
 
 # ---------------------------------------------------------------- training
-def _doc_pairs(
-    docs: DataFrame, text_col: str = "text", carry: tuple = ()
-) -> DataFrame:
+def _doc_pairs(docs: DataFrame, carry: tuple = ()) -> DataFrame:
     """(doc_id, *carry, pc) for every adjacent token pair; pc = bp*B+bc."""
-    toks = token_array(F.col(text_col))
+    toks = token_array(F.col("text"))
     staged = docs.select("doc_id", *carry, toks.alias("_tk"))
     bkt = F.transform(
         F.col("_tk"),
@@ -192,12 +190,12 @@ def _doc_pairs(
     )
 
 
-def ngram_lm_model(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def ngram_lm_model(docs: DataFrame) -> DataFrame:
     """The trained model: one row per OBSERVED bigram bucket pair.
 
     Columns: pc, bp, c_big, c_ctx, surprisal_fp (Q10 fixed-point bits
     of -log2 P_add1(bc|bp))."""
-    pairs = _doc_pairs(docs, text_col)
+    pairs = _doc_pairs(docs)
     big = pairs.groupBy("pc").agg(F.count("*").alias("c_big"))
     big = big.withColumn("bp", F.expr(f"pc div {LM_BUCKETS}"))
     ctx = big.groupBy("bp").agg(F.sum("c_big").alias("c_ctx"))
@@ -227,9 +225,7 @@ def _ctx_backoff(model: DataFrame) -> DataFrame:
     return ctx.select("bp", "unseen_fp")
 
 
-def score_against_model(
-    model: DataFrame, docs: DataFrame, text_col: str = "text"
-) -> DataFrame:
+def score_against_model(model: DataFrame, docs: DataFrame) -> DataFrame:
     """Score ``docs`` against an ALREADY-TRAINED model frame (in-plan
     or read back from parquet — the stored-model production path).
     Unseen pairs back off to the context row, unseen contexts to the
@@ -237,7 +233,7 @@ def score_against_model(
 
     Columns: doc_id, n_bigrams, surprisal_fp, avg_bits."""
     backoff = _ctx_backoff(model)
-    pairs = _doc_pairs(docs, text_col).withColumn(
+    pairs = _doc_pairs(docs).withColumn(
         "bp", F.expr(f"pc div {LM_BUCKETS}")
     )
     scored = (
@@ -266,12 +262,12 @@ def score_against_model(
     )
 
 
-def ngram_lm_surprisal(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def ngram_lm_surprisal(docs: DataFrame) -> DataFrame:
     """Self-scoring: train on ``docs``, score ``docs`` (one plan)."""
-    return score_against_model(ngram_lm_model(docs, text_col), docs, text_col)
+    return score_against_model(ngram_lm_model(docs), docs)
 
 
-def ngram_lm_stored_cycle(spark, docs: DataFrame, mod: int = 2) -> DataFrame:
+def ngram_lm_stored_cycle(spark, docs: DataFrame) -> DataFrame:
     """The stored-model deployment path as one gate row: TRAIN on the
     even-id half, persist the model table to parquet, read it back,
     SCORE the odd-id half against the stored model — which exercises
@@ -281,11 +277,11 @@ def ngram_lm_stored_cycle(spark, docs: DataFrame, mod: int = 2) -> DataFrame:
 
     Columns: doc_id, n_bigrams, surprisal_fp, avg_bits."""
     with scratch_dir("ngram_lm_store_") as d:
-        train = docs.filter(F.col("doc_id") % mod == 0)
+        train = docs.filter(F.col("doc_id") % 2 == 0)
         ngram_lm_model(train).write.mode("overwrite").parquet(d)
         stored = spark.read.parquet(d)
         out = score_against_model(
-            stored, docs.filter(F.col("doc_id") % mod == 1)
+            stored, docs.filter(F.col("doc_id") % 2 == 1)
         )
         return out.localCheckpoint(eager=True)
 
@@ -329,8 +325,8 @@ FROM lden_done
 """
 
 
-def ngram_lm_surprisal_sql(table: str = "documents") -> str:
-    return ngram_lm_cross_sql(table, table)
+def ngram_lm_surprisal_sql() -> str:
+    return ngram_lm_cross_sql("documents", "documents")
 
 
 def ngram_lm_cross_sql(train_table: str, score_table: str) -> str:
@@ -362,7 +358,7 @@ FROM {table} d LEFT JOIN agg a USING (doc_id)
 
 
 # ----------------------------------------------------------- token entropy
-def token_entropy(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def token_entropy(docs: DataFrame) -> DataFrame:
     """Per-document Shannon entropy of the token distribution — the
     information-theoretic quality signal (low entropy = template spam /
     keyword stuffing; complements the Gopher repetition fractions and
@@ -379,7 +375,7 @@ def token_entropy(docs: DataFrame, text_col: str = "text") -> DataFrame:
 
     Columns: doc_id, n_tokens, entropy_sum_fp (= n*H in Q10 bits),
     avg_entropy_bits."""
-    toks = token_array(F.col(text_col))
+    toks = token_array(F.col("text"))
     tk = docs.select("doc_id", F.explode(toks).alias("tok"))
     cnt = tk.groupBy("doc_id", "tok").agg(F.count("*").alias("c"))
     nn = cnt.groupBy("doc_id").agg(F.sum("c").alias("n"))
@@ -406,11 +402,11 @@ def token_entropy(docs: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def token_entropy_sql(table: str = "documents") -> str:
+def token_entropy_sql() -> str:
     return f"""
 WITH tk AS (
   SELECT doc_id, unnest({_TOKS_SQL}) AS tok
-  FROM {table} WHERE text IS NOT NULL
+  FROM documents WHERE text IS NOT NULL
 ),
 cnt AS (SELECT doc_id, tok, count(*)::BIGINT AS c FROM tk GROUP BY 1, 2),
 nn AS (SELECT doc_id, sum(c)::BIGINT AS n FROM cnt GROUP BY 1),
@@ -429,12 +425,12 @@ SELECT d.doc_id,
        coalesce(a.n_tokens, 0)::BIGINT AS n_tokens,
        coalesce(a.entropy_sum_fp, 0)::BIGINT AS entropy_sum_fp,
        {_fp_round6_expr("coalesce(a.entropy_sum_fp, 0)", "coalesce(a.n_tokens, 0)", "//")} AS avg_entropy_bits
-FROM {table} d LEFT JOIN agg a USING (doc_id)
+FROM documents d LEFT JOIN agg a USING (doc_id)
 """
 
 
 # ------------------------------------------------------- source KL drift
-def source_kl(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def source_kl(docs: DataFrame) -> DataFrame:
     """Per-source KL divergence of the source's token distribution from
     the corpus distribution — the domain-drift readout (which sources
     talk differently from the mix; feeds mixture reweighting and
@@ -453,7 +449,7 @@ def source_kl(docs: DataFrame, text_col: str = "text") -> DataFrame:
     census keys; the four log2fp chains run on census-sized tables.
 
     Columns: source, n_tokens, kl_sum_fp, kl_bits."""
-    toks = token_array(F.col(text_col))
+    toks = token_array(F.col("text"))
     tk = docs.filter(F.col("source").isNotNull()).select(
         "source", F.explode(toks).alias("tok")
     )
@@ -498,11 +494,11 @@ def source_kl(docs: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def source_kl_sql(table: str = "documents") -> str:
+def source_kl_sql() -> str:
     return f"""
 WITH tk AS (
   SELECT source, unnest({_TOKS_SQL}) AS tok
-  FROM {table} WHERE text IS NOT NULL AND source IS NOT NULL
+  FROM documents WHERE text IS NOT NULL AND source IS NOT NULL
 ),
 sc AS (SELECT source, tok, count(*)::BIGINT AS c_st FROM tk GROUP BY 1, 2),
 ct AS (SELECT tok, sum(c_st)::BIGINT AS c_ct FROM sc GROUP BY 1),
@@ -528,7 +524,7 @@ FROM lns_done x JOIN agg a USING (source)
 
 
 # ------------------------------------------------------ per-language LMs
-def ngram_lm_by_lang(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def ngram_lm_by_lang(docs: DataFrame) -> DataFrame:
     """CCNet-faithful per-LANGUAGE models (arXiv:1911.00359 trains one
     KenLM per language; a single pooled model lets the dominant
     language set everyone's norms): every doc scores under its OWN
@@ -543,7 +539,7 @@ def ngram_lm_by_lang(docs: DataFrame, text_col: str = "text") -> DataFrame:
 
     Columns: doc_id, lang, n_bigrams, surprisal_fp, avg_bits."""
     base = docs.filter(F.col("lang").isNotNull())
-    pairs = _doc_pairs(base, text_col, carry=("lang",)).withColumn(
+    pairs = _doc_pairs(base, carry=("lang",)).withColumn(
         "bp", F.expr(f"pc div {LM_BUCKETS}")
     )
     big = pairs.groupBy("lang", "pc").agg(F.count("*").alias("c_big"))
@@ -588,12 +584,12 @@ def ngram_lm_by_lang(docs: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def ngram_lm_by_lang_sql(table: str = "documents") -> str:
+def ngram_lm_by_lang_sql() -> str:
     return f"""
 WITH tk AS (
   SELECT doc_id, lang, generate_subscripts({_TOKS_SQL}, 1) AS pos,
          unnest({_TOKS_SQL}) AS tok
-  FROM {table} WHERE text IS NOT NULL AND lang IS NOT NULL
+  FROM documents WHERE text IS NOT NULL AND lang IS NOT NULL
 ),
 bk AS (SELECT doc_id, lang, pos, ({md5_int_sql('t.tok', 15)} % {LM_BUCKETS}) AS b
        FROM tk t),
@@ -629,6 +625,6 @@ SELECT d.doc_id, d.lang,
        coalesce(a.n_bigrams, 0)::BIGINT AS n_bigrams,
        coalesce(a.surprisal_fp, 0)::BIGINT AS surprisal_fp,
        {_fp_round6_expr("coalesce(a.surprisal_fp, 0)", "coalesce(a.n_bigrams, 0)", "//")} AS avg_bits
-FROM {table} d LEFT JOIN agg a USING (doc_id)
+FROM documents d LEFT JOIN agg a USING (doc_id)
 WHERE d.lang IS NOT NULL
 """

@@ -51,7 +51,12 @@ from functools import reduce
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from metadata_quality_stack_spark.operators.similarity import centroid_array_lit, double_array_lit
+from metadata_quality_stack_spark.operators.similarity import (
+    QUERY_VEC_ID,
+    TOPK,
+    centroid_array_lit,
+    double_array_lit,
+)
 
 PQ_M = 4  # subspaces
 PQ_DSUB = 16  # dims per subspace (PQ_M * PQ_DSUB == similarity.DIM)
@@ -71,9 +76,9 @@ def _sqdist(a: Column, b: Column) -> Column:
     return F.aggregate(diffs, F.lit(0.0), lambda acc, x: acc + x)
 
 
-def _sub(emb: Column, m: int, dsub: int = PQ_DSUB) -> Column:
+def _sub(emb: Column, m: int) -> Column:
     """m-th contiguous subvector (1-based slice, like SQL)."""
-    return F.slice(emb, m * dsub + 1, dsub)
+    return F.slice(emb, m * PQ_DSUB + 1, PQ_DSUB)
 
 
 def _argmin(vec: Column, cents: list[tuple[int, list[float]]], name: str = "code") -> Column:
@@ -96,40 +101,35 @@ def _argmin(vec: Column, cents: list[tuple[int, list[float]]], name: str = "code
     return best[0][name]
 
 
-def _codes(books: list[list[tuple[int, list[float]]]], dsub: int) -> list[Column]:
+def _codes(books: list[list[tuple[int, list[float]]]]) -> list[Column]:
     """code0..code{M-1}: each subvector of ``embedding`` argmin-encoded."""
     return [
-        _argmin(_sub(F.col("embedding"), i, dsub), book).alias(f"code{i}")
+        _argmin(_sub(F.col("embedding"), i), book).alias(f"code{i}")
         for i, book in enumerate(books)
     ]
 
 
-def _qd(q: Column, cent: Column, m: int, dsub: int) -> Column:
+def _qd(q: Column, cent: Column) -> Column:
     """Query subvector vs ``cent`` distance, rounded, as a when-chain keyed
     on the ``m`` column so one projection covers all subspaces."""
-    expr = F.round(_sqdist(_sub(q, m - 1, dsub), cent), 6)
-    for i in range(m - 2, -1, -1):
-        expr = F.when(F.col("m") == i, F.round(_sqdist(_sub(q, i, dsub), cent), 6)).otherwise(expr)
+    expr = F.round(_sqdist(_sub(q, PQ_M - 1), cent), 6)
+    for i in range(PQ_M - 2, -1, -1):
+        expr = F.when(F.col("m") == i, F.round(_sqdist(_sub(q, i), cent), 6)).otherwise(expr)
     return expr
 
 
-def _coded_tall(
-    emb: DataFrame,
-    books: list[list[tuple[int, list[float]]]],
-    m: int = PQ_M,
-    dsub: int = PQ_DSUB,
-) -> DataFrame:
+def _coded_tall(emb: DataFrame, books: list[list[tuple[int, list[float]]]]) -> DataFrame:
     """(vec_id, m, code, sub) — one row per subspace, for training stats."""
     rows = F.array(
         *[
             F.struct(
                 F.lit(i).alias("m"),
-                _argmin(_sub(F.col("embedding"), i, dsub), books[i]).alias("code"),
-                _sub(F.col("embedding"), i, dsub)
+                _argmin(_sub(F.col("embedding"), i), books[i]).alias("code"),
+                _sub(F.col("embedding"), i)
                 .cast("array<double>")
                 .alias("sub"),
             )
-            for i in range(m)
+            for i in range(PQ_M)
         ]
     )
     return emb.select("vec_id", F.explode(rows).alias("e")).select(
@@ -138,47 +138,44 @@ def _coded_tall(
     )
 
 
-def pq_train(
-    embeddings: DataFrame,
-    m: int = PQ_M,
-    dsub: int = PQ_DSUB,
-    ksub: int = PQ_KSUB,
-    n_iter: int = PQ_ITER,
-) -> list[list[tuple[int, list[float]]]]:
-    """Train the M codebooks. Seed = subvectors of the first ``ksub``
+def pq_train(embeddings: DataFrame) -> list[list[tuple[int, list[float]]]]:
+    """Train the M codebooks. Seed = subvectors of the first ``PQ_KSUB``
     vec_ids (deterministic, same role as k-means++ in production); each
     round re-encodes map-only and recomputes per-(m, code) component
     means in ONE groupBy whose partial aggregation bounds the exchange
     at M*KSUB rows per partition. Empty codes drop out (vanishing
     clusters), mirroring ivf_train."""
     seed = (
-        embeddings.filter(F.col("vec_id") < ksub)
+        embeddings.filter(F.col("vec_id") < PQ_KSUB)
         .select("vec_id", "embedding")
         .collect()
     )
     books: list[list[tuple[int, list[float]]]] = [
         sorted(
-            (int(r.vec_id), [float(v) for v in r.embedding[i * dsub : (i + 1) * dsub]])
+            (
+                int(r.vec_id),
+                [float(v) for v in r.embedding[i * PQ_DSUB : (i + 1) * PQ_DSUB]],
+            )
             for r in seed
         )
-        for i in range(m)
+        for i in range(PQ_M)
     ]
-    for _ in range(n_iter):
+    for _ in range(PQ_ITER):
         stats = (
-            _coded_tall(embeddings, books, m, dsub)
+            _coded_tall(embeddings, books)
             .groupBy("m", "code")
             .agg(
                 *[
                     F.round(F.avg(F.col("sub")[i]), 6).alias(f"c{i}")
-                    for i in range(dsub)
+                    for i in range(PQ_DSUB)
                 ]
             )
             .collect()
         )
-        books = [[] for _ in range(m)]
+        books = [[] for _ in range(PQ_M)]
         for r in stats:
             books[int(r["m"])].append(
-                (int(r["code"]), [float(r[f"c{i}"]) for i in range(dsub)])
+                (int(r["code"]), [float(r[f"c{i}"]) for i in range(PQ_DSUB)])
             )
         books = [sorted(b) for b in books]
     return books
@@ -187,31 +184,26 @@ def pq_train(
 def pq_encode(
     embeddings: DataFrame,
     books: list[list[tuple[int, list[float]]]],
-    dsub: int = PQ_DSUB,
 ) -> DataFrame:
     """Map-only PQ encoding: (vec_id, label, code0..code{M-1})."""
     return embeddings.select(
         "vec_id",
         "label",
-        *_codes(books, dsub),
+        *_codes(books),
     )
 
 
 def pq_topk_trained(
     embeddings: DataFrame,
-    query_vec_id: int = 0,
-    k: int = 10,
-    m: int = PQ_M,
-    dsub: int = PQ_DSUB,
-    ksub: int = PQ_KSUB,
-    n_iter: int = PQ_ITER,
+    query_vec_id: int = QUERY_VEC_ID,
+    k: int = TOPK,
 ) -> DataFrame:
     """Trained-PQ ADC top-k: train codebooks, encode the corpus
     map-only, build the M query distance tables (M*KSUB rows), then
     score with M broadcast joins and a FIXED-ORDER 4-term sum —
     ascending ADC distance, vec_id tiebreak. The corpus never
     shuffles; the only wide op is TakeOrdered."""
-    books = pq_train(embeddings, m, dsub, ksub, n_iter)
+    books = pq_train(embeddings)
     spark = embeddings.sparkSession
     cb_rows = [
         (i, int(code), [float(v) for v in cent])
@@ -224,16 +216,16 @@ def pq_topk_trained(
     )
     # per-subspace qd against the matching query subvector
     dt = cb.crossJoin(F.broadcast(q_emb)).select(
-        "m", "code", _qd(F.col("q_emb"), F.col("cent"), m, dsub).alias("qd")
+        "m", "code", _qd(F.col("q_emb"), F.col("cent")).alias("qd")
     )
 
-    out = pq_encode(embeddings, books, dsub)
-    for i in range(m):
+    out = pq_encode(embeddings, books)
+    for i in range(PQ_M):
         dt_i = dt.filter(F.col("m") == i).select(
             F.col("code").alias(f"code{i}"), F.col("qd").alias(f"qd{i}")
         )
         out = out.join(F.broadcast(dt_i), f"code{i}")
-    adc = reduce(operator.add, [F.col(f"qd{i}") for i in range(m)])
+    adc = reduce(operator.add, [F.col(f"qd{i}") for i in range(PQ_M)])
     return (
         out.filter(F.col("vec_id") != query_vec_id)
         .select("vec_id", "label", F.round(adc, 6).alias("adc_dist"))
@@ -242,19 +234,13 @@ def pq_topk_trained(
     )
 
 
-def pq_code_histogram(
-    embeddings: DataFrame,
-    m: int = PQ_M,
-    dsub: int = PQ_DSUB,
-    ksub: int = PQ_KSUB,
-    n_iter: int = PQ_ITER,
-) -> DataFrame:
+def pq_code_histogram(embeddings: DataFrame) -> DataFrame:
     """Index-balance readout: docs per (subspace, code) after training.
     A skewed histogram means dead codes / hot codes — the PQ analog of
     ivf_cell_histogram, and the thing you check before trusting ADC
     pruning at scale."""
-    books = pq_train(embeddings, m, dsub, ksub, n_iter)
-    enc = pq_encode(embeddings, books, dsub)
+    books = pq_train(embeddings)
+    enc = pq_encode(embeddings, books)
     tall = enc.select(
         F.explode(
             F.array(
@@ -263,7 +249,7 @@ def pq_code_histogram(
                         F.lit(i).cast("int").alias("m"),
                         F.col(f"code{i}").alias("code"),
                     )
-                    for i in range(m)
+                    for i in range(PQ_M)
                 ]
             )
         ).alias("e")
@@ -295,17 +281,11 @@ def _argmin_cell(emb: Column, cells: list[tuple[int, list[float]]]) -> Column:
 
 def ivfpq_topk(
     embeddings: DataFrame,
-    query_vec_id: int = 0,
-    k: int = 10,
-    nprobe: int = IVFPQ_NPROBE,
-    n_cells: int = IVFPQ_NCELLS,
-    m: int = PQ_M,
-    dsub: int = PQ_DSUB,
-    ksub: int = PQ_KSUB,
-    n_iter: int = PQ_ITER,
+    query_vec_id: int = QUERY_VEC_ID,
+    k: int = TOPK,
 ) -> DataFrame:
     """IVF-PQ (the FAISS IVFADC search plan): a coarse quantizer routes
-    each vector to a cell map-only; the query probes the ``nprobe``
+    each vector to a cell map-only; the query probes the ``IVFPQ_NPROBE``
     nearest cells, and ONLY vectors in probed cells are ADC-scored from
     their codes. At 100 TB this is the whole game: the candidate set
     shrinks by n_cells/nprobe before any scoring, the scoring reads
@@ -316,15 +296,15 @@ def ivfpq_topk(
     Both quantizers use squared L2 so coarse routing and fine ranking
     agree (the FAISS convention). The oracle replays coarse assignment,
     PQ training, encoding, and the probe in one chained-CTE SQL."""
-    cells = _coarse_cells(embeddings, n_cells)
-    books = pq_train(embeddings, m, dsub, ksub, n_iter)
+    cells = _coarse_cells(embeddings)
+    books = pq_train(embeddings)
     spark = embeddings.sparkSession
 
     enc = embeddings.select(
         "vec_id",
         "label",
         _argmin_cell(F.col("embedding"), cells).alias("cell_id"),
-        *_codes(books, dsub),
+        *_codes(books),
     )
     q_emb = embeddings.filter(F.col("vec_id") == query_vec_id).select(
         F.col("embedding").alias("q_emb")
@@ -339,7 +319,7 @@ def ivfpq_topk(
             F.round(_sqdist(F.col("cent"), F.col("q_emb")), 6).alias("qcd"),
         )
         .orderBy(F.asc("qcd"), F.asc("cell_id"))
-        .limit(nprobe)
+        .limit(IVFPQ_NPROBE)
         .select("cell_id")
     )
     cb = spark.createDataFrame(
@@ -351,16 +331,16 @@ def ivfpq_topk(
         "m int, code long, cent array<double>",
     )
     dt = cb.crossJoin(F.broadcast(q_emb)).select(
-        "m", "code", _qd(F.col("q_emb"), F.col("cent"), m, dsub).alias("qd")
+        "m", "code", _qd(F.col("q_emb"), F.col("cent")).alias("qd")
     )
 
     out = enc.join(F.broadcast(probe), "cell_id")
-    for i in range(m):
+    for i in range(PQ_M):
         dt_i = dt.filter(F.col("m") == i).select(
             F.col("code").alias(f"code{i}"), F.col("qd").alias(f"qd{i}")
         )
         out = out.join(F.broadcast(dt_i), f"code{i}")
-    adc = reduce(operator.add, [F.col(f"qd{i}") for i in range(m)])
+    adc = reduce(operator.add, [F.col(f"qd{i}") for i in range(PQ_M)])
     return (
         out.filter(F.col("vec_id") != query_vec_id)
         .select("vec_id", "label", F.round(adc, 6).alias("adc_dist"))
@@ -384,14 +364,8 @@ def _residual(emb: Column, cell_id: Column, cells) -> Column:
 
 def ivfpq_residual_topk(
     embeddings: DataFrame,
-    query_vec_id: int = 0,
-    k: int = 10,
-    nprobe: int = IVFPQ_NPROBE,
-    n_cells: int = IVFPQ_NCELLS,
-    m: int = PQ_M,
-    dsub: int = PQ_DSUB,
-    ksub: int = PQ_KSUB,
-    n_iter: int = PQ_ITER,
+    query_vec_id: int = QUERY_VEC_ID,
+    k: int = TOPK,
 ) -> DataFrame:
     """IVFADC with RESIDUAL encoding — the actual FAISS design: PQ
     codebooks train on r = x - centroid(cell(x)), spending the 2-byte
@@ -411,7 +385,7 @@ def ivfpq_residual_topk(
 
     The oracle replays coarse assignment, residual computation, PQ
     training ON RESIDUALS, encoding, and the per-cell tables."""
-    cells = _coarse_cells(embeddings, n_cells)
+    cells = _coarse_cells(embeddings)
     assigned = embeddings.select(
         "vec_id",
         "label",
@@ -426,14 +400,14 @@ def ivfpq_residual_topk(
             "embedding"
         ),
     )
-    books = pq_train(res.select("vec_id", "embedding"), m, dsub, ksub, n_iter)
+    books = pq_train(res.select("vec_id", "embedding"))
     spark = embeddings.sparkSession
 
     enc = res.select(
         "vec_id",
         "label",
         "cell_id",
-        *_codes(books, dsub),
+        *_codes(books),
     )
     q_emb = embeddings.filter(F.col("vec_id") == query_vec_id).select(
         F.col("embedding").alias("q_emb")
@@ -448,7 +422,7 @@ def ivfpq_residual_topk(
             F.round(_sqdist(F.col("ccent"), F.col("q_emb")), 6).alias("qcd"),
         )
         .orderBy(F.asc("qcd"), F.asc("cell_id"))
-        .limit(nprobe)
+        .limit(IVFPQ_NPROBE)
         .select("cell_id")
     )
     cb = spark.createDataFrame(
@@ -466,17 +440,17 @@ def ivfpq_residual_topk(
         F.col("ccent"),
         lambda x, y: x.cast("double") - y.cast("double"),
     )
-    dt = dt.select("cell_id", "m", "code", _qd(qres, F.col("bcent"), m, dsub).alias("qd"))
+    dt = dt.select("cell_id", "m", "code", _qd(qres, F.col("bcent")).alias("qd"))
 
     out = enc.join(F.broadcast(probe), "cell_id")
-    for i in range(m):
+    for i in range(PQ_M):
         dt_i = dt.filter(F.col("m") == i).select(
             "cell_id",
             F.col("code").alias(f"code{i}"),
             F.col("qd").alias(f"qd{i}"),
         )
         out = out.join(F.broadcast(dt_i), ["cell_id", f"code{i}"])
-    adc = reduce(operator.add, [F.col(f"qd{i}") for i in range(m)])
+    adc = reduce(operator.add, [F.col(f"qd{i}") for i in range(PQ_M)])
     return (
         out.filter(F.col("vec_id") != query_vec_id)
         .select("vec_id", "label", F.round(adc, 6).alias("adc_dist"))
@@ -501,32 +475,28 @@ def _sqdist_sql(a: str, b: str, dsub: int = PQ_DSUB) -> str:
     )
 
 
-def _train_ctes(
-    m: int = PQ_M,
-    dsub: int = PQ_DSUB,
-    ksub: int = PQ_KSUB,
-    n_iter: int = PQ_ITER,
-    table: str = "embeddings",
-) -> tuple[str, str]:
+def _train_ctes(table: str = "embeddings") -> tuple[str, str]:
     """Shared CTE chain replaying pq_train over ``table`` (must expose
     vec_id + embedding; the residual variant passes its res CTE):
     returns (ctes, final_cb). sub_e materializes the (vec_id, m, sub)
     tall view once; cb0 is the seed; each round is an argmin window +
     a grouped component-mean."""
-    ms = ", ".join(f"({i})" for i in range(m))
-    sub_expr = f"list_transform(generate_series(1, {dsub}), i -> embedding[ms.m * {dsub} + i])"
+    ms = ", ".join(f"({i})" for i in range(PQ_M))
+    sub_expr = (
+        f"list_transform(generate_series(1, {PQ_DSUB}), i -> embedding[ms.m * {PQ_DSUB} + i])"
+    )
     parts = [
         f"ms AS (SELECT * FROM (VALUES {ms}) AS t(m))",
         f"sub_e AS (SELECT vec_id, ms.m AS m, {sub_expr} AS sub "
         f"FROM {table} CROSS JOIN ms)",
         f"cb0 AS (SELECT m, vec_id AS code, sub AS cent FROM sub_e "
-        f"WHERE vec_id < {ksub})",
+        f"WHERE vec_id < {PQ_KSUB})",
     ]
-    dist = _sqdist_sql("e.sub", "c.cent", dsub)
+    dist = _sqdist_sql("e.sub", "c.cent")
     comps = ", ".join(
-        f"round(avg(CAST(sub[{i + 1}] AS DOUBLE)), 6)" for i in range(dsub)
+        f"round(avg(CAST(sub[{i + 1}] AS DOUBLE)), 6)" for i in range(PQ_DSUB)
     )
-    for it in range(1, n_iter + 1):
+    for it in range(1, PQ_ITER + 1):
         parts.append(
             f"""codes{it} AS (
   SELECT vec_id, m, code FROM (
@@ -541,11 +511,11 @@ def _train_ctes(
   FROM sub_e s JOIN codes{it} x ON s.vec_id = x.vec_id AND s.m = x.m
   GROUP BY s.m, x.code)"""
         )
-    return ",\n".join(parts), f"cb{n_iter}"
+    return ",\n".join(parts), f"cb{PQ_ITER}"
 
 
-def _final_enc_cte(final_cb: str, dsub: int = PQ_DSUB) -> str:
-    dist = _sqdist_sql("e.sub", "c.cent", dsub)
+def _final_enc_cte(final_cb: str) -> str:
+    dist = _sqdist_sql("e.sub", "c.cent")
     return f"""enc AS (
   SELECT vec_id, m, code FROM (
     SELECT e.vec_id, e.m, c.code,
@@ -554,30 +524,23 @@ def _final_enc_cte(final_cb: str, dsub: int = PQ_DSUB) -> str:
     FROM sub_e e JOIN {final_cb} c USING (m)) WHERE rn = 1)"""
 
 
-def pq_trained_sql(
-    query_vec_id: int = 0,
-    k: int = 10,
-    m: int = PQ_M,
-    dsub: int = PQ_DSUB,
-    ksub: int = PQ_KSUB,
-    n_iter: int = PQ_ITER,
-) -> str:
+def pq_trained_sql(query_vec_id: int = QUERY_VEC_ID, k: int = TOPK) -> str:
     """Full replay of pq_topk_trained: training CTEs, final encoding,
     query distance tables, then the SAME fixed-order sum (codes pivoted
     wide so the 4 additions happen left-to-right, never via SUM() whose
     accumulation order is unspecified)."""
-    ctes, final_cb = _train_ctes(m, dsub, ksub, n_iter)
-    qdist = _sqdist_sql("s.sub", "c.cent", dsub)
+    ctes, final_cb = _train_ctes()
+    qdist = _sqdist_sql("s.sub", "c.cent")
     wide = ", ".join(
-        f"max(CASE WHEN m = {i} THEN code END) AS code{i}" for i in range(m)
+        f"max(CASE WHEN m = {i} THEN code END) AS code{i}" for i in range(PQ_M)
     )
     joins = "\n".join(
         f"JOIN dt d{i} ON d{i}.m = {i} AND d{i}.code = w.code{i}"
-        for i in range(m)
+        for i in range(PQ_M)
     )
-    adc = " + ".join(f"d{i}.qd" for i in range(m))
+    adc = " + ".join(f"d{i}.qd" for i in range(PQ_M))
     return f"""WITH {ctes},
-{_final_enc_cte(final_cb, dsub)},
+{_final_enc_cte(final_cb)},
 qsub AS (SELECT m, sub FROM sub_e WHERE vec_id = {query_vec_id}),
 dt AS (SELECT c.m, c.code, round({qdist}, 6) AS qd
        FROM {final_cb} c JOIN qsub s USING (m)),
@@ -593,49 +556,38 @@ ORDER BY s.adc_dist ASC, s.vec_id ASC LIMIT {k}
 """
 
 
-def pq_code_histogram_sql(
-    m: int = PQ_M, dsub: int = PQ_DSUB, ksub: int = PQ_KSUB, n_iter: int = PQ_ITER
-) -> str:
-    ctes, final_cb = _train_ctes(m, dsub, ksub, n_iter)
+def pq_code_histogram_sql() -> str:
+    ctes, final_cb = _train_ctes()
     return f"""WITH {ctes},
-{_final_enc_cte(final_cb, dsub)}
+{_final_enc_cte(final_cb)}
 SELECT m, code, count(*) AS n_vecs FROM enc GROUP BY m, code
 """
 
 
-def ivfpq_sql(
-    query_vec_id: int = 0,
-    k: int = 10,
-    nprobe: int = IVFPQ_NPROBE,
-    n_cells: int = IVFPQ_NCELLS,
-    m: int = PQ_M,
-    dsub: int = PQ_DSUB,
-    ksub: int = PQ_KSUB,
-    n_iter: int = PQ_ITER,
-) -> str:
+def ivfpq_sql(query_vec_id: int = QUERY_VEC_ID, k: int = TOPK) -> str:
     """Full replay of :func:`ivfpq_topk`: PQ training + encoding CTEs
-    (shared with pq_trained_sql), coarse cells = the first ``n_cells``
+    (shared with pq_trained_sql), coarse cells = the first ``IVFPQ_NCELLS``
     full embeddings, per-vector coarse assignment as an argmin window
     over full-dim squared L2 (round 6, cell_id tiebreak — same as the
     Spark array_min-of-structs), the nprobe nearest cells to the query,
     then the SAME fixed-order ADC sum restricted to probed cells."""
-    ctes, final_cb = _train_ctes(m, dsub, ksub, n_iter)
-    full = m * dsub
+    ctes, final_cb = _train_ctes()
+    full = PQ_M * PQ_DSUB
     cdist = _sqdist_sql("e.embedding", "c.cent", full)
     qcdist = _sqdist_sql("c.cent", "q.q_emb", full)
-    qdist = _sqdist_sql("s.sub", "c.cent", dsub)
+    qdist = _sqdist_sql("s.sub", "c.cent")
     wide = ", ".join(
-        f"max(CASE WHEN m = {i} THEN code END) AS code{i}" for i in range(m)
+        f"max(CASE WHEN m = {i} THEN code END) AS code{i}" for i in range(PQ_M)
     )
     joins = "\n".join(
         f"JOIN dt d{i} ON d{i}.m = {i} AND d{i}.code = w.code{i}"
-        for i in range(m)
+        for i in range(PQ_M)
     )
-    adc = " + ".join(f"d{i}.qd" for i in range(m))
+    adc = " + ".join(f"d{i}.qd" for i in range(PQ_M))
     return f"""WITH {ctes},
-{_final_enc_cte(final_cb, dsub)},
+{_final_enc_cte(final_cb)},
 cells AS (SELECT vec_id AS cell_id, embedding AS cent FROM embeddings
-          WHERE vec_id < {n_cells}),
+          WHERE vec_id < {IVFPQ_NCELLS}),
 assign AS (
   SELECT vec_id, cell_id FROM (
     SELECT e.vec_id, c.cell_id,
@@ -648,7 +600,7 @@ probe AS (
   SELECT cell_id FROM (
     SELECT c.cell_id, round({qcdist}, 6) AS qcd
     FROM cells c CROSS JOIN qv q)
-  ORDER BY qcd ASC, cell_id ASC LIMIT {nprobe}),
+  ORDER BY qcd ASC, cell_id ASC LIMIT {IVFPQ_NPROBE}),
 qsub AS (SELECT m, sub FROM sub_e WHERE vec_id = {query_vec_id}),
 dt AS (SELECT c.m, c.code, round({qdist}, 6) AS qd
        FROM {final_cb} c JOIN qsub s USING (m)),
@@ -666,46 +618,37 @@ ORDER BY s.adc_dist ASC, s.vec_id ASC LIMIT {k}
 """
 
 
-def ivfpq_residual_sql(
-    query_vec_id: int = 0,
-    k: int = 10,
-    nprobe: int = IVFPQ_NPROBE,
-    n_cells: int = IVFPQ_NCELLS,
-    m: int = PQ_M,
-    dsub: int = PQ_DSUB,
-    ksub: int = PQ_KSUB,
-    n_iter: int = PQ_ITER,
-) -> str:
+def ivfpq_residual_sql(query_vec_id: int = QUERY_VEC_ID, k: int = TOPK) -> str:
     """Full replay of :func:`ivfpq_residual_topk`: coarse assignment,
     residuals, PQ training over the res CTE, encoding, per-probed-cell
     distance tables keyed (cell_id, m, code)."""
-    full = m * dsub
+    full = PQ_M * PQ_DSUB
     cdist = _sqdist_sql("e.embedding", "c.cent", full)
     qcdist = _sqdist_sql("c.cent", "q.q_emb", full)
-    ctes, final_cb = _train_ctes(m, dsub, ksub, n_iter, table="res")
+    ctes, final_cb = _train_ctes("res")
     # per-cell query-residual subvector distance to a book centroid:
     # ((q_i - c_i) - b_i)^2, left fold with a 0.0 seed
     term = (
-        f"(CAST(q.q_emb[b.m * {dsub} + i] AS DOUBLE)"
-        f" - CAST(c.cent[b.m * {dsub} + i] AS DOUBLE)"
+        f"(CAST(q.q_emb[b.m * {PQ_DSUB} + i] AS DOUBLE)"
+        f" - CAST(c.cent[b.m * {PQ_DSUB} + i] AS DOUBLE)"
         f" - CAST(b.cent[i] AS DOUBLE))"
     )
     qd = (
-        f"list_reduce(list_transform(generate_series(1, {dsub}), "
+        f"list_reduce(list_transform(generate_series(1, {PQ_DSUB}), "
         f"i -> {term} * {term}), (x, y) -> x + y)"
     )
     wide = ", ".join(
-        f"max(CASE WHEN m = {i} THEN code END) AS code{i}" for i in range(m)
+        f"max(CASE WHEN m = {i} THEN code END) AS code{i}" for i in range(PQ_M)
     )
     joins = "\n".join(
         f"JOIN dt d{i} ON d{i}.cell_id = a.cell_id AND d{i}.m = {i} "
         f"AND d{i}.code = w.code{i}"
-        for i in range(m)
+        for i in range(PQ_M)
     )
-    adc = " + ".join(f"d{i}.qd" for i in range(m))
+    adc = " + ".join(f"d{i}.qd" for i in range(PQ_M))
     return f"""WITH cells AS MATERIALIZED (
   SELECT vec_id AS cell_id, embedding AS cent FROM embeddings
-  WHERE vec_id < {n_cells}),
+  WHERE vec_id < {IVFPQ_NCELLS}),
 assign AS MATERIALIZED (
   SELECT vec_id, cell_id FROM (
     SELECT e.vec_id, c.cell_id,
@@ -720,14 +663,14 @@ res AS MATERIALIZED (
   JOIN assign a ON a.vec_id = e.vec_id
   JOIN cells c ON c.cell_id = a.cell_id),
 {ctes},
-{_final_enc_cte(final_cb, dsub)},
+{_final_enc_cte(final_cb)},
 qv AS (SELECT embedding AS q_emb FROM embeddings
        WHERE vec_id = {query_vec_id}),
 probe AS (
   SELECT cell_id FROM (
     SELECT c.cell_id, round({qcdist}, 6) AS qcd
     FROM cells c CROSS JOIN qv q)
-  ORDER BY qcd ASC, cell_id ASC LIMIT {nprobe}),
+  ORDER BY qcd ASC, cell_id ASC LIMIT {IVFPQ_NPROBE}),
 dt AS MATERIALIZED (
   SELECT c.cell_id, b.m, b.code, round({qd}, 6) AS qd
   FROM cells c CROSS JOIN {final_cb} b CROSS JOIN qv q),

@@ -41,6 +41,7 @@ from pyspark.sql import functions as F
 from metadata_quality_stack_spark.functions.text import token_array
 
 MICRO = 1_000_000
+TOP_TERMS_K = 5
 
 # the gate-exact rational-idf BM25 term score (see module docstring);
 # shared verbatim by the inline scorer below and the persistent
@@ -97,9 +98,7 @@ def bm25_topk(docs: DataFrame, query: list[str], k: int = 10) -> DataFrame:
     ).limit(k)
 
 
-def bm25_topk_sql(
-    query: list[str], k: int = 10, table: str = "documents"
-) -> str:
+def bm25_topk_sql(query: list[str], k: int = 10) -> str:
     """DuckDB mirror (same tokenization, same integer quotients)."""
     from metadata_quality_stack_spark.operators.textops import _lows_sql, _sql_list
 
@@ -107,7 +106,7 @@ def bm25_topk_sql(
     lows = _lows_sql("text")
     return f"""
 WITH tok AS (
-  SELECT doc_id, len({lows}) AS dl, unnest({lows}) AS term FROM {table}
+  SELECT doc_id, len({lows}) AS dl, unnest({lows}) AS term FROM documents
 ),
 m AS (SELECT * FROM tok WHERE list_contains({_sql_list(terms)}, term)),
 tfs AS (SELECT doc_id, term, count(*) AS tf, min(dl) AS dl
@@ -115,7 +114,7 @@ tfs AS (SELECT doc_id, term, count(*) AS tf, min(dl) AS dl
 dfs AS (SELECT term, count(DISTINCT doc_id) AS df FROM tfs GROUP BY 1),
 st AS (SELECT count(*) AS n_corpus,
               sum(coalesce(len({lows}), 0))::BIGINT AS s_tokens
-       FROM {table}),
+       FROM documents),
 sc AS (
   SELECT doc_id,
     (((2 * n_corpus - 2 * df + 1) * {MICRO}) // (2 * df + 1))
@@ -131,7 +130,7 @@ ORDER BY score_micros DESC, doc_id ASC LIMIT {k}
 """
 
 
-def domain_top_terms(docs: DataFrame, k: int = 5) -> DataFrame:
+def domain_top_terms(docs: DataFrame, k: int = TOP_TERMS_K) -> DataFrame:
     """Per-domain characteristic vocabulary: top-``k`` terms by integer
     tf-idf where df is counted over DOMAINS (not docs) — the curation
     diagnostic for "what is this source actually about" before capping
@@ -185,18 +184,18 @@ def domain_top_terms(docs: DataFrame, k: int = 5) -> DataFrame:
     )
 
 
-def domain_top_terms_sql(k: int = 5, table: str = "documents") -> str:
+def domain_top_terms_sql() -> str:
     from metadata_quality_stack_spark.operators.textops import _lows_sql
 
     lows = _lows_sql("text")
     return f"""
 WITH tok AS (
-  SELECT source, unnest({lows}) AS term FROM {table}
+  SELECT source, unnest({lows}) AS term FROM documents
   WHERE source IS NOT NULL
 ),
 tfs AS (SELECT source, term, count(*) AS tf FROM tok GROUP BY 1, 2),
 dfs AS (SELECT term, count(DISTINCT source) AS df FROM tfs GROUP BY 1),
-nd AS (SELECT count(DISTINCT source) AS n_domains FROM {table}
+nd AS (SELECT count(DISTINCT source) AS n_domains FROM documents
        WHERE source IS NOT NULL),
 sc AS (
   SELECT source, term, tf,
@@ -211,5 +210,5 @@ rk AS (
 )
 SELECT source, term, tf::BIGINT AS tf,
        tfidf_micros::BIGINT AS tfidf_micros, rnk::BIGINT AS rnk
-FROM rk WHERE rnk <= {k}
+FROM rk WHERE rnk <= {TOP_TERMS_K}
 """

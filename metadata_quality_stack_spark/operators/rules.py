@@ -329,7 +329,7 @@ def final_scores(
 _BARRIER_SEQ = 0
 
 
-def filter_scored(df: DataFrame, cond: Column, observe_name: str | None = None) -> DataFrame:
+def filter_scored(df: DataFrame, cond: Column) -> DataFrame:
     """Filter on scored attribute columns WITHOUT predicate pushdown.
 
     Spark 4's predicate pushdown substitutes a deterministic condition
@@ -349,17 +349,11 @@ def filter_scored(df: DataFrame, cond: Column, observe_name: str | None = None) 
     ``df.observation`` / ``QueryExecutionListener``)."""
     global _BARRIER_SEQ
     _BARRIER_SEQ += 1
-    name = observe_name or f"pre_filter_{_BARRIER_SEQ}"
-    return df.observe(name, F.count(F.lit(1)).alias("n_rows")).filter(cond)
+    n_rows = F.count(F.lit(1)).alias("n_rows")
+    return df.observe(f"pre_filter_{_BARRIER_SEQ}", n_rows).filter(cond)
 
 
-def metric_report(
-    df: DataFrame,
-    text_col: str = "text",
-    meta_cols: dict[str, str] | None = None,
-    profile: str = "webtext_native",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def metric_report(df: DataFrame, meta_cols: dict[str, str] | None = None) -> DataFrame:
     """Per-document per-METRIC breakdown — the reference's ``metrics[]``
     report array (src/api/models.py:31-42: id/count/population/percentage/
     points/weight per metric), long-format: one row per (doc, rule).
@@ -371,8 +365,8 @@ def metric_report(
     sh:severity census; violation = hard-fail rule, warning = points
     only). Map-only (scoring stages + explode of a literal-keyed struct
     array); output rows = n_docs * n_rules."""
-    rules = config.RULES_BY_PROFILE[profile]
-    with_pcts = scoring_stages(df, text_col, meta_cols or {}, profile)
+    rules = config.RULES_BY_PROFILE["webtext_native"]
+    with_pcts = scoring_stages(df, "text", meta_cols or {}, "webtext_native")
     entries = F.array(
         *[
             F.struct(
@@ -390,15 +384,14 @@ def metric_report(
             for r in rules
         ]
     )
-    return with_pcts.select(F.col(id_col), F.explode(entries).alias("m")).select(
-        id_col, "m.metric", "m.dimension", "m.weight", "m.pct", "m.points",
+    return with_pcts.select(F.col("doc_id"), F.explode(entries).alias("m")).select(
+        "doc_id", "m.metric", "m.dimension", "m.weight", "m.pct", "m.points",
         "m.label_en", "m.label_es", "m.severity",
     )
 
 
 def apply_quality(
     df: DataFrame,
-    text_col: str = "text",
     meta_cols: dict[str, str] | None = None,
     profile: str = "webtext_native",
     keep_pcts: bool = False,
@@ -414,5 +407,5 @@ def apply_quality(
         raise ValueError("apply_quality only compiles native profiles; "
                          "use plans.pipeline.quality_pipeline for model rules")
     carry = list(df.columns)
-    with_pcts = scoring_stages(df, text_col, meta_cols or {}, profile)
+    with_pcts = scoring_stages(df, "text", meta_cols or {}, profile)
     return final_scores(with_pcts, carry, profile, keep_pcts=keep_pcts)

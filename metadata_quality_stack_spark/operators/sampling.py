@@ -21,6 +21,15 @@ from metadata_quality_stack_spark.functions.hashing import (
 )
 
 SAMPLE_BUCKETS = 100
+SPLIT_VAL_PCT = 5  # buckets of SAMPLE_BUCKETS held out for validation
+SPLIT_TEST_PCT = 5  # ... and for test
+SCORE_PROBS = (0.1, 0.25, 0.5, 0.75, 0.9)
+CHUNK_CHARS = 500
+CHUNK_OVERLAP = 50
+PACK_CONTEXT_CHARS = 2000
+PACK_SHARDS = 8
+TRIM_PCT = 1  # length percentile cut at each end
+EVAL_PER_STRATUM = 20
 
 
 def sample_bucket(id_col: F.Column) -> F.Column:
@@ -30,30 +39,26 @@ def sample_bucket(id_col: F.Column) -> F.Column:
     return md5_int(id_col.cast("string"), 7) % SAMPLE_BUCKETS
 
 
-def deterministic_sample(
-    df: DataFrame, id_col: str = "doc_id", rate_pct: int = 10
-) -> DataFrame:
+def deterministic_sample(df: DataFrame, rate_pct: int = 10) -> DataFrame:
     """Keep ~rate_pct% of rows, selected by content hash. Map-only: the
     predicate evaluates inside the scan stage, no shuffle, and composes
     with partition pruning upstream."""
-    return df.filter(sample_bucket(F.col(id_col)) < rate_pct)
+    return df.filter(sample_bucket(F.col("doc_id")) < rate_pct)
 
 
-def _content_split(val_pct: int, test_pct: int) -> tuple[F.Column, F.Column]:
+def _content_split() -> tuple[F.Column, F.Column]:
     """(bucket, split) expressions keyed on md5(text) — shared by the
     per-doc assignment and the token-budget rollup."""
     b = md5_int(F.col("text"), 7) % SAMPLE_BUCKETS
     split = (
-        F.when(b < test_pct, F.lit("test"))
-        .when(b < test_pct + val_pct, F.lit("val"))
+        F.when(b < SPLIT_TEST_PCT, F.lit("test"))
+        .when(b < SPLIT_TEST_PCT + SPLIT_VAL_PCT, F.lit("val"))
         .otherwise(F.lit("train"))
     )
     return b, split
 
 
-def corpus_token_budget(
-    docs: DataFrame, val_pct: int = 5, test_pct: int = 5
-) -> DataFrame:
+def corpus_token_budget(docs: DataFrame) -> DataFrame:
     """The pre-training budget table: documents and whitespace tokens per
     (split, lang) — the first number anyone asks of a curated corpus
     ("how many train tokens per language do we actually have?"). Built
@@ -62,7 +67,7 @@ def corpus_token_budget(
     + one partial-aggregated groupBy on a tiny (split, lang) key space."""
     from metadata_quality_stack_spark.functions.text import token_array
 
-    _, split = _content_split(val_pct, test_pct)
+    _, split = _content_split()
     per_doc = docs.select(
         split.alias("split"),
         "lang",
@@ -74,9 +79,7 @@ def corpus_token_budget(
     )
 
 
-def corpus_token_budget_sql(
-    table: str = "documents", val_pct: int = 5, test_pct: int = 5
-) -> str:
+def corpus_token_budget_sql() -> str:
     """DuckDB mirror of :func:`corpus_token_budget` (same md5 bucket and
     tokenization as the rest of the gate)."""
     trimmed = "regexp_replace(text, '^[ \\t\\n\\r]+|[ \\t\\n\\r]+$', '', 'g')"
@@ -87,20 +90,18 @@ def corpus_token_budget_sql(
     b = f"({md5_int_sql('text', 7)} % {SAMPLE_BUCKETS})"
     return f"""
 WITH t AS (
-  SELECT CASE WHEN {b} < {test_pct} THEN 'test'
-              WHEN {b} < {test_pct + val_pct} THEN 'val'
+  SELECT CASE WHEN {b} < {SPLIT_TEST_PCT} THEN 'test'
+              WHEN {b} < {SPLIT_TEST_PCT + SPLIT_VAL_PCT} THEN 'val'
               ELSE 'train' END AS split,
          lang, len({toks}) AS nt
-  FROM {table}
+  FROM documents
 )
 SELECT split, lang, count(*) AS n_docs, CAST(sum(nt) AS BIGINT) AS n_tokens
 FROM t GROUP BY 1, 2
 """
 
 
-def train_val_test_split(
-    docs: DataFrame, val_pct: int = 5, test_pct: int = 5
-) -> DataFrame:
+def train_val_test_split(docs: DataFrame) -> DataFrame:
     """Deterministic train/val/test assignment keyed on the CONTENT
     fingerprint, not the doc id: bucket = md5(text)-derived 0..99, so
     byte-identical duplicate documents always land in the SAME split —
@@ -112,7 +113,7 @@ def train_val_test_split(
     sizes.
 
     Columns: doc_id, source, lang, bucket, split."""
-    b, split = _content_split(val_pct, test_pct)
+    b, split = _content_split()
     return docs.select(
         "doc_id",
         "source",
@@ -122,18 +123,16 @@ def train_val_test_split(
     )
 
 
-def train_val_test_split_sql(
-    table: str = "documents", val_pct: int = 5, test_pct: int = 5
-) -> str:
+def train_val_test_split_sql() -> str:
     """DuckDB mirror of :func:`train_val_test_split` (identical md5
     bucket arithmetic)."""
     b = f"({md5_int_sql('text', 7)} % {SAMPLE_BUCKETS})"
     return f"""
 SELECT doc_id, source, lang, {b} AS bucket,
-       CASE WHEN {b} < {test_pct} THEN 'test'
-            WHEN {b} < {test_pct + val_pct} THEN 'val'
+       CASE WHEN {b} < {SPLIT_TEST_PCT} THEN 'test'
+            WHEN {b} < {SPLIT_TEST_PCT + SPLIT_VAL_PCT} THEN 'val'
             ELSE 'train' END AS split
-FROM {table}
+FROM documents
 """
 
 
@@ -153,9 +152,7 @@ def cap_per_key(
     )
 
 
-def score_quantiles(
-    scored: DataFrame, probs: tuple[float, ...] = (0.1, 0.25, 0.5, 0.75, 0.9)
-) -> DataFrame:
+def score_quantiles(scored: DataFrame) -> DataFrame:
     """Exact score quantiles (linear interpolation — Spark ``percentile``
     == DuckDB ``quantile_cont``), the threshold-choosing readout. Exact,
     not approx_percentile: the oracle must match bit-for-bit; at 100 TB
@@ -165,13 +162,13 @@ def score_quantiles(
             F.round(
                 F.expr(f"percentile(total_score, {p!r})"), 4
             ).alias(f"p{int(p * 100)}")
-            for p in probs
+            for p in SCORE_PROBS
         ]
     )
 
 
 def chunk_documents(
-    docs: DataFrame, chunk_chars: int = 500, overlap: int = 50
+    docs: DataFrame, chunk_chars: int = CHUNK_CHARS, overlap: int = CHUNK_OVERLAP
 ) -> DataFrame:
     """Split documents into fixed-size overlapping character windows —
     the sequence-shaping step between curation and tokenization (every
@@ -209,21 +206,19 @@ def chunk_documents(
     )
 
 
-def chunk_documents_sql(
-    table: str = "documents", chunk_chars: int = 500, overlap: int = 50
-) -> str:
+def chunk_documents_sql() -> str:
     """DuckDB mirror of :func:`chunk_documents` (same 1-based substr)."""
-    step = chunk_chars - overlap
+    step = CHUNK_CHARS - CHUNK_OVERLAP
     return f"""
 WITH starts AS (
   SELECT doc_id, text,
          unnest(generate_series(1, len(text), {step})) AS chunk_start,
-  FROM {table} WHERE len(text) >= 1
+  FROM documents WHERE len(text) >= 1
 )
 SELECT doc_id, CAST((chunk_start - 1) // {step} AS BIGINT) AS chunk_idx,
        CAST(chunk_start AS BIGINT) AS chunk_start,
-       substr(text, chunk_start, {chunk_chars}) AS chunk_text,
-       CAST(len(substr(text, chunk_start, {chunk_chars})) AS BIGINT)
+       substr(text, chunk_start, {CHUNK_CHARS}) AS chunk_text,
+       CAST(len(substr(text, chunk_start, {CHUNK_CHARS})) AS BIGINT)
          AS n_chunk_chars
 FROM starts
 """
@@ -252,7 +247,7 @@ def lang_mix_weights(docs: DataFrame) -> DataFrame:
 
 
 def pack_chunks(
-    chunks: DataFrame, context_chars: int = 2000, n_shards: int = 8
+    chunks: DataFrame, context_chars: int = PACK_CONTEXT_CHARS
 ) -> DataFrame:
     """Concat-and-slice packing accounting (the GPT-style pretraining
     layout: concatenate a shard's chunks in deterministic order, slice
@@ -260,7 +255,7 @@ def pack_chunks(
     the shard stream and the context-window index where it starts.
 
     Scale shape: packing is embarrassingly parallel per shard —
-    shard = doc_id % n_shards, ONE shuffle on the shard key, a running
+    shard = doc_id % PACK_SHARDS, ONE shuffle on the shard key, a running
     sum window inside each shard, no global ordering anywhere (a
     single global cumsum would serialize the corpus through one
     partition; per-shard streams are exactly how a multi-worker data
@@ -269,7 +264,7 @@ def pack_chunks(
     Output: (shard, doc_id, chunk_idx, start_offset [0-based in the
     shard stream], pack_bin = start_offset // context_chars)."""
     sharded = chunks.withColumn(
-        "shard", F.pmod(F.col("doc_id"), F.lit(n_shards)).cast("long")
+        "shard", F.pmod(F.col("doc_id"), F.lit(PACK_SHARDS)).cast("long")
     )
     w = (
         Window.partitionBy("shard")
@@ -286,17 +281,11 @@ def pack_chunks(
     )
 
 
-def pack_chunks_sql(
-    table: str = "documents",
-    chunk_chars: int = 500,
-    overlap: int = 50,
-    context_chars: int = 2000,
-    n_shards: int = 8,
-) -> str:
+def pack_chunks_sql() -> str:
     """DuckDB mirror of chunk_documents |> pack_chunks."""
     return f"""
-WITH chunks AS ({chunk_documents_sql(table, chunk_chars, overlap)}),
-sharded AS (SELECT *, CAST(doc_id % {n_shards} AS BIGINT) AS shard FROM chunks),
+WITH chunks AS ({chunk_documents_sql()}),
+sharded AS (SELECT *, CAST(doc_id % {PACK_SHARDS} AS BIGINT) AS shard FROM chunks),
 off AS (
   SELECT shard, doc_id, chunk_idx,
          sum(n_chunk_chars) OVER (
@@ -305,7 +294,7 @@ off AS (
   FROM sharded
 )
 SELECT shard, doc_id, chunk_idx, CAST(start_offset AS BIGINT) AS start_offset,
-       CAST(start_offset // {context_chars} AS BIGINT) AS pack_bin
+       CAST(start_offset // {PACK_CONTEXT_CHARS} AS BIGINT) AS pack_bin
 FROM off
 """
 
@@ -343,11 +332,11 @@ def rebalance_corpus(docs: DataFrame) -> DataFrame:
     )
 
 
-def rebalance_corpus_sql(table: str = "documents") -> str:
+def rebalance_corpus_sql() -> str:
     """DuckDB mirror of :func:`rebalance_corpus` (same rounded weights,
     same md5 bucket)."""
     return f"""
-WITH per AS (SELECT lang, count(*) AS n_docs FROM {table} GROUP BY lang),
+WITH per AS (SELECT lang, count(*) AS n_docs FROM documents GROUP BY lang),
 tot AS (SELECT CAST(sum(n_docs) AS BIGINT) AS total, count(*) AS n_langs FROM per),
 w AS (SELECT lang, round((total / n_langs) / n_docs, 6) AS weight FROM per, tot),
 c AS (
@@ -357,7 +346,7 @@ c AS (
                      % {SAMPLE_BUCKETS}
                      < CAST(floor((w.weight - floor(w.weight)) * 100) AS BIGINT)
                 THEN 1 ELSE 0 END AS n_copies
-  FROM {table} d JOIN w USING (lang)
+  FROM documents d JOIN w USING (lang)
 )
 SELECT doc_id, lang, unnest(generate_series(1, n_copies)) AS copy_idx
 FROM c WHERE n_copies >= 1
@@ -367,7 +356,7 @@ FROM c WHERE n_copies >= 1
 N_SHUFFLE_SHARDS = 8
 
 
-def shuffle_shards(docs: DataFrame, n_shards: int = N_SHUFFLE_SHARDS) -> DataFrame:
+def shuffle_shards(docs: DataFrame) -> DataFrame:
     """Deterministic GLOBAL SHUFFLE into training shards — the step that
     defeats crawl ordering (domain runs, recency runs) before sequence
     packing, without rand(): shard and within-shard order both derive
@@ -376,10 +365,10 @@ def shuffle_shards(docs: DataFrame, n_shards: int = N_SHUFFLE_SHARDS) -> DataFra
     and is independent of the sample/split buckets (different salt).
 
     Scale shape: ONE hash exchange on shard, then a per-shard sort. The
-    window partitions by shard, so n_shards bounds parallelism — at
-    100 TB size n_shards to the target training-file count (thousands),
+    window partitions by shard, so N_SHUFFLE_SHARDS bounds parallelism — at
+    100 TB size N_SHUFFLE_SHARDS to the target training-file count (thousands),
     keeping each shard's sort a few GB. A writer composes this as
-    repartition(n_shards, shard) + sortWithinPartitions(shuffle_key)
+    repartition(N_SHUFFLE_SHARDS, shard) + sortWithinPartitions(shuffle_key)
     + partitionBy(shard), one file per shard; `pos` is emitted here so
     the gate can hash the ORDER itself, not just membership.
 
@@ -387,7 +376,7 @@ def shuffle_shards(docs: DataFrame, n_shards: int = N_SHUFFLE_SHARDS) -> DataFra
     key = F.md5(
         F.concat(F.lit("shuffle:"), F.col("doc_id").cast("string"))
     )
-    shard = hex_int(key, 7) % n_shards
+    shard = hex_int(key, 7) % N_SHUFFLE_SHARDS
     w = Window.partitionBy("shard").orderBy("shuffle_key", "doc_id")
     return (
         docs.select(
@@ -397,16 +386,14 @@ def shuffle_shards(docs: DataFrame, n_shards: int = N_SHUFFLE_SHARDS) -> DataFra
     )
 
 
-def shuffle_shards_sql(
-    table: str = "documents", n_shards: int = N_SHUFFLE_SHARDS
-) -> str:
+def shuffle_shards_sql() -> str:
     """DuckDB mirror of :func:`shuffle_shards` (same salted md5)."""
     key = f"md5('shuffle:' || CAST(doc_id AS VARCHAR))"
     return f"""
 WITH k AS (
   SELECT doc_id, {key} AS shuffle_key,
-         ({hex_int_sql(key, 7)} % {n_shards}) AS shard
-  FROM {table}
+         ({hex_int_sql(key, 7)} % {N_SHUFFLE_SHARDS}) AS shard
+  FROM documents
 )
 SELECT doc_id, shard, shuffle_key,
        CAST(row_number() OVER (
@@ -416,11 +403,7 @@ FROM k
 """
 
 
-def temperature_mix(
-    docs: DataFrame,
-    group_col: str = "source",
-    weight_col: str = "n_chars",
-) -> DataFrame:
+def temperature_mix(docs: DataFrame) -> DataFrame:
     """Temperature-based mixture weights across sources at alpha = 0.5
     — the GPT-3 / Pile recipe (Brown et al. arXiv:2005.14165 Table 2.2;
     Gao et al. arXiv:2101.00027 §1): sampling probability proportional
@@ -442,9 +425,9 @@ def temperature_mix(
 
     Columns: source, n_docs, size_units, w_micros, p_ppm.
     """
-    per = docs.groupBy(F.col(group_col).alias("source")).agg(
+    per = docs.groupBy("source").agg(
         F.count("*").alias("n_docs"),
-        F.coalesce(F.sum(weight_col), F.lit(0)).alias("size_units"),
+        F.coalesce(F.sum("n_chars"), F.lit(0)).alias("size_units"),
     )
     w = F.floor(
         F.sqrt(F.col("size_units").cast("double")) * F.lit(1_000_000.0)
@@ -463,16 +446,12 @@ def temperature_mix(
     )
 
 
-def temperature_mix_sql(
-    table: str = "documents",
-    group_col: str = "source",
-    weight_col: str = "n_chars",
-) -> str:
-    return f"""
+def temperature_mix_sql() -> str:
+    return """
 WITH per AS (
-  SELECT {group_col} AS source, count(*)::BIGINT AS n_docs,
-         coalesce(sum({weight_col}), 0)::BIGINT AS size_units
-  FROM {table} GROUP BY 1
+  SELECT source AS source, count(*)::BIGINT AS n_docs,
+         coalesce(sum(n_chars), 0)::BIGINT AS size_units
+  FROM documents GROUP BY 1
 ),
 w AS (SELECT source, n_docs, size_units,
         CAST(floor(sqrt(size_units::DOUBLE) * 1000000.0) AS BIGINT)
@@ -485,14 +464,9 @@ FROM w, t
 """
 
 
-def length_outlier_trim(
-    docs: DataFrame,
-    len_col: str = "n_chars",
-    group_col: str = "lang",
-    pct: int = 1,
-) -> DataFrame:
+def length_outlier_trim(docs: DataFrame) -> DataFrame:
     """Per-language length-outlier trim: drop documents STRICTLY below
-    the group's p{pct} length value or strictly above its p{100-pct}
+    the group's p{TRIM_PCT} length value or strictly above its p{100-TRIM_PCT}
     value (ties at the cutoff survive, so the rule is a pure value
     threshold). The C4/Gopher min/max-length rules with data-derived
     cutoffs instead of global constants — a 50-char page is an outlier
@@ -505,118 +479,106 @@ def length_outlier_trim(
     rows — whose cumulative counts yield each group's two cutoff VALUES
     (a tiny window over the histogram); pass 2 broadcast-joins the
     #langs-row cutoff table back and filters map-side. Integer
-    arithmetic only (rank_lo = n*pct//100), so both engines cut
+    arithmetic only (rank_lo = n*TRIM_PCT//100), so both engines cut
     identically.
 
     Columns: doc_id, lang, n_chars, keep.
     """
-    hist = docs.groupBy(group_col, len_col).agg(F.count("*").alias("cnt"))
-    w = Window.partitionBy(group_col).orderBy(len_col)
+    hist = docs.groupBy("lang", "n_chars").agg(F.count("*").alias("cnt"))
+    w = Window.partitionBy("lang").orderBy("n_chars")
     cum = hist.select(
-        group_col,
-        len_col,
+        "lang",
+        "n_chars",
         F.sum("cnt").over(w).alias("cum"),
-        F.sum("cnt").over(Window.partitionBy(group_col)).alias("n"),
+        F.sum("cnt").over(Window.partitionBy("lang")).alias("n"),
     )
-    # lo cutoff: smallest value whose cumulative count exceeds n*pct//100
-    # (i.e. the p{pct} value); hi cutoff: smallest value with
-    # cum >= n - n*pct//100 (the p{100-pct} value)
+    # lo cutoff: smallest value whose cumulative count exceeds n*TRIM_PCT//100
+    # (i.e. the p{TRIM_PCT} value); hi cutoff: smallest value with
+    # cum >= n - n*TRIM_PCT//100 (the p{100-TRIM_PCT} value)
     cuts = (
         cum.select(
-            group_col,
-            len_col,
-            (F.col("cum") > F.expr(f"(n * {pct}) div 100")).alias("_lo_ok"),
-            (F.col("cum") >= F.col("n") - F.expr(f"(n * {pct}) div 100")).alias(
+            "lang",
+            "n_chars",
+            (F.col("cum") > F.expr(f"(n * {TRIM_PCT}) div 100")).alias("_lo_ok"),
+            (F.col("cum") >= F.col("n") - F.expr(f"(n * {TRIM_PCT}) div 100")).alias(
                 "_hi_ok"
             ),
         )
-        .groupBy(group_col)
+        .groupBy("lang")
         .agg(
-            F.min(F.when(F.col("_lo_ok"), F.col(len_col))).alias("lo_val"),
-            F.min(F.when(F.col("_hi_ok"), F.col(len_col))).alias("hi_val"),
+            F.min(F.when(F.col("_lo_ok"), F.col("n_chars"))).alias("lo_val"),
+            F.min(F.when(F.col("_hi_ok"), F.col("n_chars"))).alias("hi_val"),
         )
     )
     return (
-        docs.join(F.broadcast(cuts), group_col, "left")
+        docs.join(F.broadcast(cuts), "lang", "left")
         .select(
             "doc_id",
-            group_col,
-            len_col,
+            "lang",
+            "n_chars",
             (
-                (F.col(len_col) >= F.col("lo_val"))
-                & (F.col(len_col) <= F.col("hi_val"))
+                (F.col("n_chars") >= F.col("lo_val"))
+                & (F.col("n_chars") <= F.col("hi_val"))
             ).alias("keep"),
         )
     )
 
 
-def length_outlier_trim_sql(
-    table: str = "documents",
-    len_col: str = "n_chars",
-    group_col: str = "lang",
-    pct: int = 1,
-) -> str:
+def length_outlier_trim_sql() -> str:
     return f"""
 WITH hist AS (
-  SELECT {group_col}, {len_col}, count(*)::BIGINT AS cnt
-  FROM {table} GROUP BY 1, 2
+  SELECT lang, n_chars, count(*)::BIGINT AS cnt
+  FROM documents GROUP BY 1, 2
 ),
 cum AS (
-  SELECT {group_col}, {len_col},
-         sum(cnt) OVER (PARTITION BY {group_col}
-                        ORDER BY {len_col}) AS cum,
-         sum(cnt) OVER (PARTITION BY {group_col}) AS n
+  SELECT lang, n_chars,
+         sum(cnt) OVER (PARTITION BY lang
+                        ORDER BY n_chars) AS cum,
+         sum(cnt) OVER (PARTITION BY lang) AS n
   FROM hist
 ),
 cuts AS (
-  SELECT {group_col},
-         min(CASE WHEN cum > (n * {pct}) // 100 THEN {len_col} END)
+  SELECT lang,
+         min(CASE WHEN cum > (n * {TRIM_PCT}) // 100 THEN n_chars END)
            AS lo_val,
-         min(CASE WHEN cum >= n - (n * {pct}) // 100 THEN {len_col} END)
+         min(CASE WHEN cum >= n - (n * {TRIM_PCT}) // 100 THEN n_chars END)
            AS hi_val
   FROM cum GROUP BY 1
 )
-SELECT doc_id, d.{group_col}, {len_col},
-       ({len_col} >= lo_val AND {len_col} <= hi_val) AS keep
-FROM {table} d LEFT JOIN cuts USING ({group_col})
+SELECT doc_id, d.lang, n_chars,
+       (n_chars >= lo_val AND n_chars <= hi_val) AS keep
+FROM documents d LEFT JOIN cuts USING (lang)
 """
 
 
-def score_quantiles_sampled(
-    scored: DataFrame,
-    probs: tuple[float, ...] = (0.1, 0.25, 0.5, 0.75, 0.9),
-    rate_pct: int = 10,
-    id_col: str = "doc_id",
-) -> DataFrame:
+def score_quantiles_sampled(scored: DataFrame) -> DataFrame:
     """The SCALE PATH for quantiles, still gate-exact: exact quantiles
     over a deterministic md5-bucket sample. Spark's approx_percentile is
     the usual 100 TB answer but its sketch is engine-private — the gate
     can never verify it. A content-keyed sample is the verifiable
     alternative: membership is a map-only predicate (same row set in any
     engine, any cluster size, any run), the exact percentile then runs
-    over rate_pct% of the data, and the estimate's error is the standard
+    over 10% of the data, and the estimate's error is the standard
     sampling error (~1/sqrt(n·rate)) rather than an opaque sketch bound.
     Emits n_sampled alongside so the reader can judge that error.
 
-    Columns: n_sampled, p10, p25, p50, p75, p90 (for default probs)."""
-    s = scored.filter(sample_bucket(F.col(id_col)) < rate_pct)
+    Columns: n_sampled, p10, p25, p50, p75, p90."""
+    s = scored.filter(sample_bucket(F.col("doc_id")) < 10)
     return s.agg(
         F.count("*").alias("n_sampled"),
         *[
             F.round(
                 F.expr(f"percentile(total_score, {p!r})"), 4
             ).alias(f"p{int(p * 100)}")
-            for p in probs
+            for p in SCORE_PROBS
         ],
     )
 
 
-def quality_weighted_sample(
-    scored: DataFrame, id_col: str = "doc_id", max_score: int | None = None
-) -> DataFrame:
+def quality_weighted_sample(scored: DataFrame) -> DataFrame:
     """Score-proportional soft sampling (the DCLM-B / "soft quality
     filter" alternative to a hard keep threshold): each document is kept
-    with probability total_score / max_score, so borderline pages enter
+    with probability total_score / config.MAX_SCORE, so borderline pages enter
     the corpus at reduced rate instead of being cliff-dropped — the
     mixing knob used when a hard cut measurably hurts downstream
     diversity (Li et al. 2024, DataComp-LM §4.2; GPT-3's
@@ -624,7 +586,7 @@ def quality_weighted_sample(
 
     Determinism: the coin is the content-stable md5 bucket of the doc
     id (sample_bucket), and the comparison is the integer
-    cross-multiplication ``bucket * max_score < total_score *
+    cross-multiplication ``bucket * MAX_SCORE < total_score *
     SAMPLE_BUCKETS`` — no division, no floats, so membership is
     bit-identical across engines/runs/cluster sizes and the DuckDB
     oracle replays it exactly. Map-only: the predicate fuses into the
@@ -636,37 +598,33 @@ def quality_weighted_sample(
     from metadata_quality_stack_spark import config
     from metadata_quality_stack_spark.operators.rules import filter_scored
 
-    m = int(max_score if max_score is not None else config.MAX_SCORE)
-    b = sample_bucket(F.col(id_col))
+    m = config.MAX_SCORE
+    b = sample_bucket(F.col("doc_id"))
     # filter_scored (observe barrier), NOT .filter(): pushdown would
     # re-inline the whole scoring expression tree into the predicate and
     # overflow Janino's 64 KB method limit (rules.filter_scored doc)
     return filter_scored(
         scored, b * F.lit(m) < F.col("total_score") * F.lit(SAMPLE_BUCKETS)
-    ).select(id_col, "total_score", "rating")
+    ).select("doc_id", "total_score", "rating")
 
 
-def quality_weighted_sample_sql(
-    scored_cte: str, id_col: str = "doc_id", max_score: int | None = None
-) -> str:
+def quality_weighted_sample_sql(scored_cte: str) -> str:
     """DuckDB mirror of :func:`quality_weighted_sample` over a scored
     CTE body (same md5 bucket + integer cross-multiplication)."""
     from metadata_quality_stack_spark import config
 
-    m = int(max_score if max_score is not None else config.MAX_SCORE)
-    b = f"({md5_int_sql(f'CAST({id_col} AS VARCHAR)', 7)} % {SAMPLE_BUCKETS})"
+    m = config.MAX_SCORE
+    b = f"({md5_int_sql('CAST(doc_id AS VARCHAR)', 7)} % {SAMPLE_BUCKETS})"
     return (
         f"WITH scored AS ({scored_cte}) "
-        f"SELECT {id_col}, total_score, rating FROM scored "
+        "SELECT doc_id, total_score, rating FROM scored "
         f"WHERE {b} * {m} < total_score * {SAMPLE_BUCKETS}"
     )
 
 
 def eval_set_stratified(
     docs: DataFrame,
-    strata_col: str = "lang",
-    n_per_stratum: int = 20,
-    id_col: str = "doc_id",
+    n_per_stratum: int = EVAL_PER_STRATUM,
 ) -> DataFrame:
     """Fixed-size per-stratum held-out sample (the eval-set builder: N
     docs from EVERY language/source regardless of how skewed the corpus
@@ -683,16 +641,16 @@ def eval_set_stratified(
     each map task ships at most N (id, stratum, md5) rows per stratum,
     never text (pinned in tests/test_plan_shapes.py).
 
-    Columns: strata (aliased from strata_col), doc_id,
+    Columns: strata (aliased from lang), doc_id,
     rank_in_stratum (1-based)."""
     return (
-        docs.select(F.col(strata_col).alias("strata"), id_col)
+        docs.select(F.col("lang").alias("strata"), "doc_id")
         .withColumn(
             "rank_in_stratum",
             F.row_number().over(
                 Window.partitionBy("strata").orderBy(
-                    F.md5(F.col(id_col).cast("string")).asc(),
-                    F.col(id_col).asc(),
+                    F.md5(F.col("doc_id").cast("string")).asc(),
+                    F.col("doc_id").asc(),
                 )
             ),
         )
@@ -700,21 +658,16 @@ def eval_set_stratified(
     )
 
 
-def eval_set_stratified_sql(
-    table: str = "documents",
-    strata_col: str = "lang",
-    n_per_stratum: int = 20,
-    id_col: str = "doc_id",
-) -> str:
+def eval_set_stratified_sql() -> str:
     """DuckDB mirror of :func:`eval_set_stratified` (identical md5-hex
     ordering — ASCII compare of lowercase hex is engine-independent)."""
     return f"""
-SELECT strata, {id_col}, rank_in_stratum FROM (
-  SELECT {strata_col} AS strata, {id_col},
+SELECT strata, doc_id, rank_in_stratum FROM (
+  SELECT lang AS strata, doc_id,
          row_number() OVER (
-           PARTITION BY {strata_col}
-           ORDER BY md5(CAST({id_col} AS VARCHAR)), {id_col}
+           PARTITION BY lang
+           ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id
          )::INT AS rank_in_stratum
-  FROM {table})
-WHERE rank_in_stratum <= {n_per_stratum}
+  FROM documents)
+WHERE rank_in_stratum <= {EVAL_PER_STRATUM}
 """

@@ -24,6 +24,9 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 LSH_SEED = 1234
+QUERY_VEC_ID = 0  # the gate's query vector
+TOPK = 10
+SEMDEDUP_THRESHOLD = 0.3  # cosine similarity that makes a near-duplicate
 LSH_N_PLANES = 8
 DIM = 64
 
@@ -66,11 +69,11 @@ def cosine(a: Column, b: Column) -> Column:
 
 
 def hyperplanes(
-    n_planes: int = LSH_N_PLANES, dim: int = DIM, seed: int = LSH_SEED
+    n_planes: int = LSH_N_PLANES, seed: int = LSH_SEED
 ) -> list[list[float]]:
     """Deterministic seeded hyperplanes, rounded so SQL literals are exact."""
     rng = np.random.RandomState(seed)
-    h = rng.randn(n_planes, dim)
+    h = rng.randn(n_planes, DIM)
     return [[round(float(v), 6) for v in row] for row in h]
 
 
@@ -95,7 +98,7 @@ def embedding_qc(embeddings: DataFrame) -> DataFrame:
     )
 
 
-def embedding_qc_sql(table: str = "embeddings") -> str:
+def embedding_qc_sql() -> str:
     """DuckDB mirror of :func:`embedding_qc` (self-length fold, not the
     fixed-DIM dot_sql, so dim anomalies still get a correct norm)."""
     # empty guard: list_reduce ERRORS on an empty list in DuckDB while the
@@ -112,12 +115,12 @@ SELECT vec_id, len(embedding) AS dim,
   round(sqrt({sq}), 6) AS l2_norm,
   (sqrt({sq}) = 0.0) AS is_zero,
   (len(list_filter(embedding, x -> isnan(x))) > 0) AS has_nan
-FROM {table}
+FROM embeddings
 """
 
 
 def brute_force_topk(
-    embeddings: DataFrame, query_vec_id: int = 0, k: int = 10
+    embeddings: DataFrame, query_vec_id: int = QUERY_VEC_ID, k: int = TOPK
 ) -> DataFrame:
     """Exact cosine top-k vs the embedding of ``query_vec_id``.
     The 1-row query side is broadcast — no shuffle of the big side."""
@@ -156,7 +159,9 @@ def lsh_bucket_histogram(embeddings: DataFrame) -> DataFrame:
     )
 
 
-def ann_topk(embeddings: DataFrame, query_vec_id: int = 0, k: int = 10) -> DataFrame:
+def ann_topk(
+    embeddings: DataFrame, query_vec_id: int = QUERY_VEC_ID, k: int = TOPK
+) -> DataFrame:
     """IVF/LSH-style ANN: exact cosine only within the query's bucket."""
     with_b = embeddings.select(
         "vec_id", "label", "embedding", lsh_bucket(F.col("embedding")).alias("bucket")
@@ -177,11 +182,11 @@ def ann_topk(embeddings: DataFrame, query_vec_id: int = 0, k: int = 10) -> DataF
     )
 
 
-def _flip_bit(bucket: Column, i: int, n_planes: int) -> Column:
+def _flip_bit(bucket: Column, i: int) -> Column:
     """The bucket string with 0-based bit position ``i`` flipped."""
     before = F.substring(bucket, 1, i)
     bit = F.substring(bucket, i + 1, 1)
-    after = F.substring(bucket, i + 2, n_planes - i - 1)
+    after = F.substring(bucket, i + 2, LSH_N_PLANES - i - 1)
     return F.concat(
         before,
         F.when(bit == "1", F.lit("0")).otherwise(F.lit("1")),
@@ -190,10 +195,7 @@ def _flip_bit(bucket: Column, i: int, n_planes: int) -> Column:
 
 
 def ann_topk_multiprobe(
-    embeddings: DataFrame,
-    query_vec_id: int = 0,
-    k: int = 10,
-    n_planes: int = LSH_N_PLANES,
+    embeddings: DataFrame, query_vec_id: int = QUERY_VEC_ID, k: int = TOPK
 ) -> DataFrame:
     """Multi-probe LSH (Lv et al., VLDB 2007 — public): ONE hash table,
     but the query probes its own bucket plus every Hamming-distance-1
@@ -204,11 +206,11 @@ def ann_topk_multiprobe(
 
     Cost shape vs the alternatives on the 256-bucket test corpus:
     single-bucket probe ~0.4% of the corpus (recall 0.03), multi-table
-    8x5 ~25% (recall 0.43), THIS: (n_planes+1)/2^n_planes ≈ 3.5% —
+    8x5 ~25% (recall 0.43), THIS: (LSH_N_PLANES+1)/2^LSH_N_PLANES ≈ 3.5% —
     recall measured in tests/test_ann_recall.py and recorded in
     BENCH/BASELINE.md. At 100 TB the corpus keeps exactly one bucket
     per vector (storage unchanged, bucketable layout unchanged); only
-    the broadcast probe list grows by n_planes rows per query."""
+    the broadcast probe list grows by LSH_N_PLANES rows per query."""
     wb = embeddings.select(
         "vec_id",
         "label",
@@ -223,10 +225,7 @@ def ann_topk_multiprobe(
         F.explode(
             F.array(
                 F.col("qb"),
-                *[
-                    _flip_bit(F.col("qb"), i, n_planes)
-                    for i in range(n_planes)
-                ],
+                *[_flip_bit(F.col("qb"), i) for i in range(LSH_N_PLANES)],
             )
         ).alias("probe_bucket"),
     )
@@ -243,12 +242,7 @@ def ann_topk_multiprobe(
     )
 
 
-def ann_topk_multiprobe_sql(
-    table: str = "embeddings",
-    query_vec_id: int = 0,
-    k: int = 10,
-    n_planes: int = LSH_N_PLANES,
-) -> str:
+def ann_topk_multiprobe_sql() -> str:
     """DuckDB mirror of :func:`ann_topk_multiprobe` (same bucket bits,
     same Hamming-1 probe set)."""
     bucket = lsh_bucket_sql("embedding")
@@ -256,22 +250,22 @@ def ann_topk_multiprobe_sql(
     flipped = (
         f"substr(qb, 1, i) || "
         f"(CASE WHEN substr(qb, i + 1, 1) = '1' THEN '0' ELSE '1' END) || "
-        f"substr(qb, i + 2, {n_planes} - i - 1)"
+        f"substr(qb, i + 2, {LSH_N_PLANES} - i - 1)"
     )
     return f"""
-WITH wb AS (SELECT vec_id, label, embedding, {bucket} AS bucket FROM {table}),
+WITH wb AS (SELECT vec_id, label, embedding, {bucket} AS bucket FROM embeddings),
 q AS (SELECT embedding AS q_emb, bucket AS qb FROM wb
-      WHERE vec_id = {query_vec_id}),
+      WHERE vec_id = {QUERY_VEC_ID}),
 probes AS (
   SELECT q_emb, qb AS probe_bucket FROM q
   UNION ALL
   SELECT q_emb, {flipped} AS probe_bucket
-  FROM q, generate_series(0, {n_planes - 1}) AS t(i)
+  FROM q, generate_series(0, {LSH_N_PLANES - 1}) AS t(i)
 )
 SELECT vec_id, label, round({cos}, 6) AS cos_sim
 FROM wb JOIN probes ON wb.bucket = probes.probe_bucket
-WHERE vec_id <> {query_vec_id}
-ORDER BY cos_sim DESC, vec_id ASC LIMIT {k}
+WHERE vec_id <> {QUERY_VEC_ID}
+ORDER BY cos_sim DESC, vec_id ASC LIMIT {TOPK}
 """
 
 
@@ -280,11 +274,7 @@ ANN_MULTI_PLANES = 5
 
 
 def ann_topk_multi(
-    embeddings: DataFrame,
-    query_vec_id: int = 0,
-    k: int = 10,
-    n_tables: int = ANN_N_TABLES,
-    n_planes: int = ANN_MULTI_PLANES,
+    embeddings: DataFrame, query_vec_id: int = QUERY_VEC_ID, k: int = TOPK
 ) -> DataFrame:
     """Multi-table hyperplane LSH: L independently-seeded hash tables; a
     vector is a candidate if it collides with the query in ANY table.
@@ -297,7 +287,7 @@ def ann_topk_multi(
     gathered per table via the same bucket equi-join (shuffle key = small
     bucket string), deduped by vec_id before the exact re-rank."""
     tables = [
-        hyperplanes(n_planes, seed=LSH_SEED + t) for t in range(n_tables)
+        hyperplanes(ANN_MULTI_PLANES, seed=LSH_SEED + t) for t in range(ANN_N_TABLES)
     ]
     wb = embeddings.select(
         "vec_id",
@@ -305,15 +295,15 @@ def ann_topk_multi(
         "embedding",
         *[
             lsh_bucket(F.col("embedding"), planes=tables[t]).alias(f"b{t}")
-            for t in range(n_tables)
+            for t in range(ANN_N_TABLES)
         ],
     )
     q = wb.filter(F.col("vec_id") == query_vec_id).select(
         F.col("embedding").alias("q_emb"),
-        *[F.col(f"b{t}").alias(f"qb{t}") for t in range(n_tables)],
+        *[F.col(f"b{t}").alias(f"qb{t}") for t in range(ANN_N_TABLES)],
     )
     collide = None
-    for t in range(n_tables):
+    for t in range(ANN_N_TABLES):
         c = F.col(f"b{t}") == F.col(f"qb{t}")
         collide = c if collide is None else collide | c
     return (
@@ -330,7 +320,7 @@ def ann_topk_multi(
 
 
 def embedding_near_dup_pairs(
-    embeddings: DataFrame, threshold: float = 0.3
+    embeddings: DataFrame, threshold: float = SEMDEDUP_THRESHOLD
 ) -> DataFrame:
     """Embedding-cosine near-duplicate detection: LSH self-join on the
     bucket key (candidates collide only if all sign bits agree), exact
@@ -366,9 +356,9 @@ IVF_K = 16
 IVF_NPROBE = 2
 
 
-def ivf_assign(embeddings: DataFrame, k: int = IVF_K) -> DataFrame:
+def ivf_assign(embeddings: DataFrame) -> DataFrame:
     """IVF cell assignment with deterministic data-derived centroids (the
-    embeddings of the first ``k`` vec_ids — a k-means seeding without the
+    embeddings of the first ``IVF_K`` vec_ids — a k-means seeding without the
     iterations; production would Lloyd-iterate the same plumbing).
 
     Plan: the k centroids are collected to the driver (tiny — the same
@@ -380,7 +370,7 @@ def ivf_assign(embeddings: DataFrame, k: int = IVF_K) -> DataFrame:
     the oracle's ORDER BY sim DESC, cell_id ASC."""
     cents = [
         (int(r.vec_id), [float(v) for v in r.embedding])
-        for r in embeddings.filter(F.col("vec_id") < k)
+        for r in embeddings.filter(F.col("vec_id") < IVF_K)
         .select("vec_id", "embedding")
         .collect()
     ]
@@ -468,30 +458,23 @@ def ivf_assign_trained(
 IVF_TRAIN_ITER = 3
 
 
-def ivf_topk_trained(
-    embeddings: DataFrame,
-    query_vec_id: int = 0,
-    k: int = 10,
-    nprobe: int = IVF_NPROBE,
-    n_cells: int = IVF_K,
-    n_iter: int = IVF_TRAIN_ITER,
-) -> DataFrame:
+def ivf_topk_trained(embeddings: DataFrame) -> DataFrame:
     """IVF ANN against Lloyd-TRAINED centroids — the production index
     build (ivf_train) plus the same probe plan as ivf_topk. Training runs
-    ``n_iter`` one-job Lloyd rounds (map-only argmax + one groupBy of
+    ``IVF_TRAIN_ITER`` one-job Lloyd rounds (map-only argmax + one groupBy of
     k×dim partial means); the resulting centroids ride back into the
     query as literals, exactly like a broadcast. Everything is
     deterministic (seeded init = first k vec_ids, components rounded to
     6dp between rounds) so the DuckDB oracle can replay the identical
     training in SQL (ivf_trained_sql)."""
-    cents = ivf_train(embeddings, n_cells, n_iter)
+    cents = ivf_train(embeddings, IVF_K, IVF_TRAIN_ITER)
     spark = embeddings.sparkSession
     cents_df = spark.createDataFrame(
         [(int(cid), [float(v) for v in vec]) for cid, vec in cents],
         "cell_id long, c_emb array<double>",
     )
     assigned = ivf_assign_trained(embeddings, cents)
-    q_emb = embeddings.filter(F.col("vec_id") == query_vec_id).select(
+    q_emb = embeddings.filter(F.col("vec_id") == QUERY_VEC_ID).select(
         F.col("embedding").alias("q_emb")
     )
     probe_cells = (
@@ -501,35 +484,34 @@ def ivf_topk_trained(
             F.round(cosine(F.col("c_emb"), F.col("q_emb")), 6).alias("q_sim"),
         )
         .orderBy(F.desc("q_sim"), F.asc("cell_id"))
-        .limit(nprobe)
+        .limit(IVF_NPROBE)
         .select("cell_id")
     )
     return (
         assigned.join(F.broadcast(probe_cells), "cell_id")
         .crossJoin(F.broadcast(q_emb))
-        .filter(F.col("vec_id") != query_vec_id)
+        .filter(F.col("vec_id") != QUERY_VEC_ID)
         .select(
             "vec_id",
             "label",
             F.round(cosine(F.col("embedding"), F.col("q_emb")), 6).alias("cos_sim"),
         )
         .orderBy(F.desc("cos_sim"), F.asc("vec_id"))
-        .limit(k)
+        .limit(TOPK)
     )
 
 
 def ivf_topk(
     embeddings: DataFrame,
-    query_vec_id: int = 0,
-    k: int = 10,
+    query_vec_id: int = QUERY_VEC_ID,
+    k: int = TOPK,
     nprobe: int = IVF_NPROBE,
-    n_cells: int = IVF_K,
 ) -> DataFrame:
     """IVF ANN: exact cosine only within the query's ``nprobe`` nearest
     cells. Complements the hyperplane-LSH path (ann_topk): IVF probes by
     centroid distance, LSH by sign-bucket equality."""
-    assigned = ivf_assign(embeddings, n_cells)
-    cents = embeddings.filter(F.col("vec_id") < n_cells).select(
+    assigned = ivf_assign(embeddings)
+    cents = embeddings.filter(F.col("vec_id") < IVF_K).select(
         F.col("vec_id").alias("cell_id"), F.col("embedding").alias("c_emb")
     )
     q_emb = embeddings.filter(F.col("vec_id") == query_vec_id).select(
@@ -560,18 +542,18 @@ def ivf_topk(
 
 
 # ---------------------------------------------------------------- SQL mirrors
-def dot_sql(a: str, b: str, dim: int = DIM) -> str:
+def dot_sql(a: str, b: str) -> str:
     """Left-fold double dot product — bit-identical to _dot (0.0+x == x)."""
     return (
-        f"list_reduce(list_transform(generate_series(1, {dim}), "
+        f"list_reduce(list_transform(generate_series(1, {DIM}), "
         f"i -> CAST(({a})[i] AS DOUBLE) * CAST(({b})[i] AS DOUBLE)), (x, y) -> x + y)"
     )
 
 
-def cosine_sql(a: str, b: str, dim: int = DIM) -> str:
+def cosine_sql(a: str, b: str) -> str:
     return (
-        f"{dot_sql(a, b, dim)} / "
-        f"(sqrt({dot_sql(a, a, dim)}) * sqrt({dot_sql(b, b, dim)}))"
+        f"{dot_sql(a, b)} / "
+        f"(sqrt({dot_sql(a, a)}) * sqrt({dot_sql(b, b)}))"
     )
 
 
@@ -588,14 +570,7 @@ def lsh_bucket_sql(emb: str, planes: list[list[float]] | None = None) -> str:
     return " || ".join(bits)
 
 
-def ivf_trained_sql(
-    query_vec_id: int = 0,
-    k: int = 10,
-    nprobe: int = IVF_NPROBE,
-    n_cells: int = IVF_K,
-    n_iter: int = IVF_TRAIN_ITER,
-    dim: int = DIM,
-) -> str:
+def ivf_trained_sql() -> str:
     """DuckDB mirror of :func:`ivf_topk_trained`: the FULL Lloyd training
     replayed as chained CTEs (cents0 = seed, assign_i = argmax vs
     cents_{i-1}, cents_i = per-cell component means rounded to 6dp),
@@ -605,10 +580,10 @@ def ivf_trained_sql(
     into different assignments."""
     parts = [
         f"cents0 AS (SELECT vec_id AS cell_id, embedding AS c_emb "
-        f"FROM embeddings WHERE vec_id < {n_cells})"
+        f"FROM embeddings WHERE vec_id < {IVF_K})"
     ]
-    cos_ec = cosine_sql("e.embedding", "c.c_emb", dim)
-    for it in range(1, n_iter + 1):
+    cos_ec = cosine_sql("e.embedding", "c.c_emb")
+    for it in range(1, IVF_TRAIN_ITER + 1):
         parts.append(
             f"""assign{it} AS (
   SELECT vec_id, cell_id FROM (
@@ -619,7 +594,7 @@ def ivf_trained_sql(
         )
         comps = ", ".join(
             f"round(avg(CAST(e.embedding[{i + 1}] AS DOUBLE)), 6)"
-            for i in range(dim)
+            for i in range(DIM)
         )
         parts.append(
             f"""cents{it} AS (
@@ -627,9 +602,9 @@ def ivf_trained_sql(
   FROM embeddings e JOIN assign{it} a USING (vec_id)
   GROUP BY a.cell_id)"""
         )
-    final = f"cents{n_iter}"
-    cos_cq = cosine_sql("c_emb", "q_emb", dim)
-    cos_aq = cosine_sql("e.embedding", "q.q_emb", dim)
+    final = f"cents{IVF_TRAIN_ITER}"
+    cos_cq = cosine_sql("c_emb", "q_emb")
+    cos_aq = cosine_sql("e.embedding", "q.q_emb")
     ctes = ",\n".join(parts)
     return f"""WITH {ctes},
 final_assign AS (
@@ -638,20 +613,20 @@ final_assign AS (
       row_number() OVER (PARTITION BY e.vec_id
         ORDER BY round({cos_ec}, 6) DESC, c.cell_id ASC) AS rn
     FROM embeddings e, {final} c) WHERE rn = 1),
-q AS (SELECT embedding AS q_emb FROM embeddings WHERE vec_id = {query_vec_id}),
+q AS (SELECT embedding AS q_emb FROM embeddings WHERE vec_id = {QUERY_VEC_ID}),
 probe AS (SELECT cell_id FROM {final}, q
-          ORDER BY round({cos_cq}, 6) DESC, cell_id ASC LIMIT {nprobe})
+          ORDER BY round({cos_cq}, 6) DESC, cell_id ASC LIMIT {IVF_NPROBE})
 SELECT e.vec_id, e.label, round({cos_aq}, 6) AS cos_sim
 FROM embeddings e
 JOIN final_assign fa ON e.vec_id = fa.vec_id
 JOIN probe ON fa.cell_id = probe.cell_id, q
-WHERE e.vec_id <> {query_vec_id}
-ORDER BY cos_sim DESC, e.vec_id ASC LIMIT {k}
+WHERE e.vec_id <> {QUERY_VEC_ID}
+ORDER BY cos_sim DESC, e.vec_id ASC LIMIT {TOPK}
 """
 
 
 def semantic_dedup(
-    embeddings: DataFrame, threshold: float = 0.3
+    embeddings: DataFrame, threshold: float = SEMDEDUP_THRESHOLD
 ) -> DataFrame:
     """SemDeDup-style semantic deduplication (publicly described in
     Abbas et al. 2023, arXiv:2303.09540): within LSH buckets, any vector
@@ -687,7 +662,7 @@ def semantic_dedup(
     )
 
 
-def semantic_dedup_sql(threshold: float = 0.3) -> str:
+def semantic_dedup_sql() -> str:
     """DuckDB mirror of :func:`semantic_dedup`."""
     bucket = lsh_bucket_sql("embedding")
     cos = cosine_sql("a.embedding", "b.embedding")
@@ -696,7 +671,7 @@ WITH wb AS (SELECT vec_id, embedding, {bucket} AS bucket FROM embeddings),
 dropped AS (
   SELECT DISTINCT b.vec_id
   FROM wb a JOIN wb b ON a.bucket = b.bucket AND a.vec_id < b.vec_id
-  WHERE round({cos}, 6) >= {threshold}
+  WHERE round({cos}, 6) >= {SEMDEDUP_THRESHOLD}
 )
 SELECT e.vec_id, e.label,
        (e.vec_id NOT IN (SELECT vec_id FROM dropped)) AS keep

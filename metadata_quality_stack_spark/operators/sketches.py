@@ -38,33 +38,31 @@ KMV_K = 128
 _H_SPACE = 2.0**60  # 15 hex digits
 
 
-def kmv_sketch(docs: DataFrame, col: str = "text", k: int = KMV_K) -> DataFrame:
+def kmv_sketch(docs: DataFrame) -> DataFrame:
     """The K-row sketch itself (distinct minimum hashes, ascending) —
     what a per-shard job persists for later merging.
 
     Columns: h."""
     return (
-        docs.select(md5_int(F.col(col), 15).alias("h"))
+        docs.select(md5_int(F.col("text"), 15).alias("h"))
         .distinct()
         .orderBy("h")
-        .limit(k)
+        .limit(KMV_K)
     )
 
 
-def kmv_distinct_estimate(
-    docs: DataFrame, col: str = "text", k: int = KMV_K
-) -> DataFrame:
+def kmv_distinct_estimate(docs: DataFrame) -> DataFrame:
     """One-row distinct-cardinality estimate. If fewer than K distinct
     values exist the sketch IS the exact answer.
 
     Columns: k_seen, kth_hash, est_distinct."""
-    agg = kmv_sketch(docs, col, k).agg(
+    agg = kmv_sketch(docs).agg(
         F.count("*").alias("k_seen"), F.max("h").alias("kth_hash")
     )
     u_k = (F.col("kth_hash").cast("double") + F.lit(0.5)) / F.lit(_H_SPACE)
     est = F.when(
-        F.col("k_seen") < k, F.col("k_seen").cast("double")
-    ).otherwise(F.round(F.lit(float(k - 1)) / u_k, 4))
+        F.col("k_seen") < KMV_K, F.col("k_seen").cast("double")
+    ).otherwise(F.round(F.lit(float(KMV_K - 1)) / u_k, 4))
     return agg.select(
         F.col("k_seen").cast("long").alias("k_seen"),
         F.col("kth_hash").cast("long").alias("kth_hash"),
@@ -72,27 +70,25 @@ def kmv_distinct_estimate(
     )
 
 
-def kmv_distinct_estimate_sql(
-    table: str = "documents", col: str = "text", k: int = KMV_K
-) -> str:
+def kmv_distinct_estimate_sql() -> str:
     return f"""
-WITH hs AS (SELECT DISTINCT {md5_int_sql(col, 15)} AS h FROM {table}),
-top AS (SELECT h FROM hs ORDER BY h LIMIT {k}),
+WITH hs AS (SELECT DISTINCT {md5_int_sql("text", 15)} AS h FROM documents),
+top AS (SELECT h FROM hs ORDER BY h LIMIT {KMV_K}),
 agg AS (SELECT count(*) AS k_seen, max(h) AS kth_hash FROM top)
 SELECT k_seen::BIGINT AS k_seen, kth_hash::BIGINT AS kth_hash,
-       CASE WHEN k_seen < {k} THEN k_seen::DOUBLE
-            ELSE round({float(k - 1)!r} /
+       CASE WHEN k_seen < {KMV_K} THEN k_seen::DOUBLE
+            ELSE round({float(KMV_K - 1)!r} /
                        ((kth_hash::DOUBLE + 0.5) / {_H_SPACE!r}), 4)
        END AS est_distinct
 FROM agg
 """
 
 
-def kmv_merge(sketches: list[DataFrame], k: int = KMV_K) -> DataFrame:
+def kmv_merge(sketches: list[DataFrame]) -> DataFrame:
     """Union-merge of per-shard sketches: K smallest distinct hashes of
     the concatenation — the sketch of the UNION of the shards, without
     touching shard data again. Input frames must carry column ``h``."""
     merged = sketches[0]
     for s in sketches[1:]:
         merged = merged.unionByName(s)
-    return merged.select("h").distinct().orderBy("h").limit(k)
+    return merged.select("h").distinct().orderBy("h").limit(KMV_K)

@@ -23,6 +23,9 @@ from metadata_quality_stack_spark.functions.text import (
 from metadata_quality_stack_spark.functions.text import WS_CLASS
 
 LANG_ORDER = list(config.STOPWORDS_BY_LANG)
+TERM_STATS_LIMIT = 50
+STOPWORD_MIN_DISTINCT = 2
+STOPWORD_MIN_PPM = 20_000
 
 
 def token_stats(docs: DataFrame) -> DataFrame:
@@ -89,9 +92,9 @@ def lang_mismatch_by_source(docs: DataFrame) -> DataFrame:
     )
 
 
-def lang_mismatch_by_source_sql(table: str = "documents") -> str:
+def lang_mismatch_by_source_sql() -> str:
     """DuckDB mirror of :func:`lang_mismatch_by_source`."""
-    pred = langid_heuristic_sql(table, extra_cols=("source",))
+    pred = langid_heuristic_sql(extra_cols=("source",))
     return f"""
 WITH pred AS ({pred})
 SELECT source, count(*) AS n_docs,
@@ -138,9 +141,7 @@ def _sql_list(items: list[str]) -> str:
     return "[" + ", ".join("'" + s + "'" for s in items) + "]"
 
 
-def langid_heuristic_sql(
-    table: str = "documents", extra_cols: tuple[str, ...] = ()
-) -> str:
+def langid_heuristic_sql(extra_cols: tuple[str, ...] = ()) -> str:
     lows = _lows_sql()
     extra = "".join(f", {c}" for c in extra_cols)
     score_exprs = {
@@ -153,26 +154,22 @@ def langid_heuristic_sql(
         f"WHEN s_{lang} = best THEN '{lang}'" for lang in LANG_ORDER
     ) + " END"
     return f"""
-WITH t AS (SELECT doc_id, lang{extra}, {lows} AS lows FROM {table}),
+WITH t AS (SELECT doc_id, lang{extra}, {lows} AS lows FROM documents),
 s AS (SELECT doc_id, lang{extra}, {sel} FROM t),
 b AS (SELECT *, {best} AS best FROM s)
 SELECT doc_id, lang{extra}, {case} AS lang_pred, best AS best_hits FROM b
 """
 
 
-def length_quality_ramp(
-    docs: DataFrame, min_chars: int = 100, ideal_chars: int = 500
-) -> DataFrame:
+def length_quality_ramp(docs: DataFrame) -> DataFrame:
     """Partial-credit text-length ramp — the reference's only non-binary
-    client metric (react-app MQAService.ts:253-259: below min -> 0.5
-    baseline prorated, min..ideal -> 0.5..1.0, above ideal -> 1.0).
+    client metric (react-app MQAService.ts:253-259: below 100 chars ->
+    0.5 baseline prorated, 100..500 -> 0.5..1.0, above 500 -> 1.0).
     Pure least/greatest arithmetic, no branches."""
     n = F.col("n_chars").cast("double")
-    below = 0.5 * (n / F.lit(float(min_chars)))
-    ramp = 0.5 + 0.5 * (
-        (n - min_chars) / F.lit(float(ideal_chars - min_chars))
-    )
-    score = F.when(n < min_chars, below).otherwise(
+    below = 0.5 * (n / F.lit(100.0))
+    ramp = 0.5 + 0.5 * ((n - 100) / F.lit(400.0))
+    score = F.when(n < 100, below).otherwise(
         F.least(ramp, F.lit(1.0))
     )
     return docs.select(
@@ -259,11 +256,7 @@ DQV_METRIC_TEMPLATE = (
 )
 
 
-def report_dqv(
-    docs: DataFrame,
-    meta_cols: dict[str, str] | None = None,
-    profile: str = "webtext_native",
-) -> DataFrame:
+def report_dqv(docs: DataFrame, meta_cols: dict[str, str] | None = None) -> DataFrame:
     """Nested DQV-style JSON report (reference converters.py:70-137): the
     per-document quality report with the dimensions object AND a
     ``measurements`` array carrying every metric's percentage, points and
@@ -272,9 +265,9 @@ def report_dqv(
     from metadata_quality_stack_spark.operators.rules import apply_quality
 
     scored = apply_quality(
-        docs, meta_cols=meta_cols or {}, profile=profile, keep_pcts=True
+        docs, meta_cols=meta_cols or {}, profile="webtext_native", keep_pcts=True
     )
-    rules = config.RULES_BY_PROFILE[profile]
+    rules = config.RULES_BY_PROFILE["webtext_native"]
     measurements = [
         F.format_string(
             DQV_METRIC_TEMPLATE,
@@ -382,7 +375,7 @@ def rolling_fingerprint(docs: DataFrame) -> DataFrame:
     return docs.select("doc_id", _poly_hash(norm).alias("rolling_hash"))
 
 
-def term_stats(docs: DataFrame, limit: int = 50) -> DataFrame:
+def term_stats(docs: DataFrame, limit: int = TERM_STATS_LIMIT) -> DataFrame:
     """Corpus vocabulary census: per-term frequency (tf), document
     frequency (df), and smoothed idf = ln((N+1)/(df+1)) — the readout a
     tokenizer-training / stopword-mining / tf-idf stage starts from.
@@ -419,16 +412,16 @@ def term_stats(docs: DataFrame, limit: int = 50) -> DataFrame:
     )
 
 
-def term_stats_sql(table: str = "documents", limit: int = 50) -> str:
+def term_stats_sql() -> str:
     """DuckDB mirror of :func:`term_stats` (same tokenization as _lows_sql)."""
     return f"""
-WITH tok AS (SELECT doc_id, unnest({_lows_sql("text")}) AS term FROM {table}),
-n AS (SELECT count(*) AS n_docs FROM {table}),
+WITH tok AS (SELECT doc_id, unnest({_lows_sql("text")}) AS term FROM documents),
+n AS (SELECT count(*) AS n_docs FROM documents),
 per AS (SELECT term, count(*) AS tf, count(DISTINCT doc_id) AS df
         FROM tok GROUP BY term)
 SELECT term, tf, df, round(ln((n_docs + 1) / (df + 1)), 6) AS idf
 FROM per, n
-ORDER BY tf DESC, term ASC LIMIT {limit}
+ORDER BY tf DESC, term ASC LIMIT {TERM_STATS_LIMIT}
 """
 
 
@@ -436,7 +429,7 @@ ORDER BY tf DESC, term ASC LIMIT {limit}
 _CTRL_CLASS = r"[\x00-\x08\x0b\x0c\x0e-\x1f\x7f]"  # keep \t \n (\r handled first)
 
 
-def normalize_text(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def normalize_text(docs: DataFrame) -> DataFrame:
     """Canonical whitespace/control cleanup BEFORE scoring/dedup — the
     standard crawl-preprocessing stage: CRLF/CR -> LF, strip ASCII
     control characters (except tab/newline), collapse space/tab runs to
@@ -446,7 +439,7 @@ def normalize_text(docs: DataFrame, text_col: str = "text") -> DataFrame:
     makes byte-identical-modulo-whitespace recrawls collapse.
 
     Columns: doc_id, n_chars_raw, n_chars_clean, clean_text."""
-    t = F.coalesce(F.col(text_col), F.lit(""))
+    t = F.coalesce(F.col("text"), F.lit(""))
     u = F.regexp_replace(t, "\r\n", "\n")
     u = F.regexp_replace(u, "\r", "\n")
     u = F.regexp_replace(u, _CTRL_CLASS, "")
@@ -462,10 +455,10 @@ def normalize_text(docs: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def normalize_text_sql(table: str = "documents", text_col: str = "text") -> str:
+def normalize_text_sql() -> str:
     """DuckDB mirror (same step order; RE2 needs the 'g' flag where
     Spark replaces all occurrences by default)."""
-    t = f"coalesce({text_col}, '')"
+    t = "coalesce(text, '')"
     u = f"regexp_replace({t}, '\\r\\n', chr(10), 'g')"
     u = f"regexp_replace({u}, '\\r', chr(10), 'g')"
     u = f"regexp_replace({u}, '{_CTRL_CLASS}', '', 'g')"
@@ -476,7 +469,7 @@ def normalize_text_sql(table: str = "documents", text_col: str = "text") -> str:
     return f"""
 SELECT doc_id, length({t})::BIGINT AS n_chars_raw,
        length({u})::BIGINT AS n_chars_clean, {u} AS clean_text
-FROM {table}
+FROM documents
 """
 
 
@@ -490,11 +483,7 @@ C4_LINE_BLOCK = "javascript"  # C4 drops any line mentioning it
 C4_PAGE_BLOCK = ["{", "lorem ipsum"]  # page-level drops (code / filler)
 
 
-def c4_line_filter(
-    docs: DataFrame,
-    text_col: str = "text",
-    keep_cols: tuple[str, ...] = (),
-) -> DataFrame:
+def c4_line_filter(docs: DataFrame, keep_cols: tuple[str, ...] = ()) -> DataFrame:
     """C4's line-level filter: a line survives iff it ends in terminal
     punctuation, has >= 5 whitespace words, and does not mention
     'javascript'; the page keep flag then requires >= 3 surviving lines
@@ -508,7 +497,7 @@ def c4_line_filter(
 
     Columns: doc_id, n_lines_raw, n_lines_kept, keep_page, clean_text.
     """
-    t = F.coalesce(F.col(text_col), F.lit(""))
+    t = F.coalesce(F.col("text"), F.lit(""))
     lines = F.split(t, "\n", -1)
 
     def _clean(l):  # rtrim CR/space/tab, ltrim space/tab — dialect-shared
@@ -539,9 +528,9 @@ def c4_line_filter(
     )
 
 
-def c4_line_filter_sql(table: str = "documents", text_col: str = "text") -> str:
+def c4_line_filter_sql() -> str:
     """DuckDB mirror — same clean/keep lambdas over string_split."""
-    t = f"coalesce({text_col}, '')"
+    t = "coalesce(text, '')"
     clean = (
         "list_transform(string_split({t}, chr(10)), l -> "
         "regexp_replace(regexp_replace(l, '[ \\t\\r]+$', ''), '^[ \\t\\r]+', ''))"
@@ -560,7 +549,7 @@ def c4_line_filter_sql(table: str = "documents", text_col: str = "text") -> str:
 WITH k AS (SELECT doc_id, {t} AS t,
                   len(string_split({t}, chr(10)))::BIGINT AS n_lines_raw,
                   {keep} AS kept
-           FROM {table})
+           FROM documents)
 SELECT doc_id, n_lines_raw, len(kept)::BIGINT AS n_lines_kept,
        (len(kept) >= {C4_MIN_LINES_KEPT} AND {blocks}) AS keep_page,
        coalesce(list_aggregate(kept, 'string_agg', chr(10)), '') AS clean_text
@@ -570,8 +559,6 @@ FROM k
 
 def lang_stopword_density(
     docs: DataFrame,
-    min_distinct: int = 2,
-    min_density_ppm: int = 20_000,
     keep_cols: tuple[str, ...] = (),
 ) -> DataFrame:
     """Language-AWARE stopword gate: score each document against the
@@ -632,17 +619,13 @@ def lang_stopword_density(
         "*",
         density.alias("density_ppm"),
         (
-            (F.col("sw_distinct") >= min_distinct)
-            & (density >= min_density_ppm)
+            (F.col("sw_distinct") >= STOPWORD_MIN_DISTINCT)
+            & (density >= STOPWORD_MIN_PPM)
         ).alias("keep"),
     )
 
 
-def lang_stopword_density_sql(
-    table: str = "documents",
-    min_distinct: int = 2,
-    min_density_ppm: int = 20_000,
-) -> str:
+def lang_stopword_density_sql() -> str:
     lows = _lows_sql()
     case = (
         "CASE lang "
@@ -653,7 +636,7 @@ def lang_stopword_density_sql(
         + " END"
     )
     return f"""
-WITH t AS (SELECT doc_id, lang, {lows} AS lows, {case} AS sw FROM {table}),
+WITH t AS (SELECT doc_id, lang, {lows} AS lows, {case} AS sw FROM documents),
 h AS (SELECT doc_id, lang, len(lows)::BIGINT AS n_words,
         CASE WHEN sw IS NOT NULL THEN
           len(list_filter(lows, x -> list_contains(sw, x)))::BIGINT END
@@ -665,8 +648,8 @@ h AS (SELECT doc_id, lang, len(lows)::BIGINT AS n_words,
 d AS (SELECT *, CASE WHEN n_words > 0
         THEN (sw_hits * 1000000) // n_words END AS density_ppm FROM h)
 SELECT doc_id, lang, n_words, sw_hits, sw_distinct, density_ppm,
-       (sw_distinct >= {min_distinct}
-        AND density_ppm >= {min_density_ppm}) AS keep
+       (sw_distinct >= {STOPWORD_MIN_DISTINCT}
+        AND density_ppm >= {STOPWORD_MIN_PPM}) AS keep
 FROM d
 """
 
@@ -701,14 +684,14 @@ def bpe_fertility_by_lang(docs: DataFrame) -> DataFrame:
     return per.select("*", ratio.alias("chars_per_token_ppm"))
 
 
-def bpe_fertility_by_lang_sql(table: str = "documents") -> str:
+def bpe_fertility_by_lang_sql() -> str:
     nonws = BPE_NONWS_RE.replace("'", "''")
     return f"""
 WITH per AS (
   SELECT lang, count(*)::BIGINT AS n_docs,
          sum(length(text))::BIGINT AS sum_chars,
          sum(len(regexp_extract_all(text, '{nonws}')))::BIGINT AS sum_tokens
-  FROM {table} GROUP BY lang
+  FROM documents GROUP BY lang
 )
 SELECT lang, n_docs, sum_chars, sum_tokens,
        CASE WHEN sum_tokens > 0
@@ -743,11 +726,7 @@ MOJI_UNION = (
 MOJI_PPM_THRESHOLD = 2_000  # >=0.2% artifact sites => damaged page
 
 
-def mojibake_stats(
-    docs: DataFrame,
-    text_col: str = "text",
-    keep_cols: tuple[str, ...] = (),
-) -> DataFrame:
+def mojibake_stats(docs: DataFrame, keep_cols: tuple[str, ...] = ()) -> DataFrame:
     """Per-document encoding-damage census: counts of the four artifact
     families above, a non-overlapping union count, artifact sites per
     million chars (integer div — order-free), and the damage flag
@@ -757,7 +736,7 @@ def mojibake_stats(
 
     Columns: doc_id, n_chars, n_replacement, n_c1, n_latin1_pair,
     n_e2_pair, n_artifacts, mojibake_ppm, mojibake."""
-    t = F.coalesce(F.col(text_col), F.lit(""))
+    t = F.coalesce(F.col("text"), F.lit(""))
     n_chars = F.length(t).cast("long")
     cnt = lambda pat: F.regexp_count(t, F.lit(pat)).cast("long")  # noqa: E731
     counted = docs.select(
@@ -782,10 +761,10 @@ def mojibake_stats(
     )
 
 
-def mojibake_stats_sql(table: str = "documents", text_col: str = "text") -> str:
+def mojibake_stats_sql() -> str:
     """DuckDB mirror (same patterns; RE2 parses \\x{..} identically;
     // is DuckDB's integer division, matching Spark's div)."""
-    t = f"coalesce({text_col}, '')"
+    t = "coalesce(text, '')"
     c = lambda pat: f"len(regexp_extract_all({t}, '{pat}'))::BIGINT"  # noqa: E731
     ppm = f"(({c(MOJI_UNION)}) * 1000000) // greatest(length({t}), 1)"
     return f"""
@@ -798,15 +777,11 @@ SELECT doc_id, length({t})::BIGINT AS n_chars,
        {ppm} AS mojibake_ppm,
        ({c(MOJI_REPLACEMENT)} > 0 OR {ppm} >= {MOJI_PPM_THRESHOLD})
          AS mojibake
-FROM {table}
+FROM documents
 """
 
 
-def lexical_diversity(
-    docs: DataFrame,
-    text_col: str = "text",
-    keep_cols: tuple[str, ...] = (),
-) -> DataFrame:
+def lexical_diversity(docs: DataFrame, keep_cols: tuple[str, ...] = ()) -> DataFrame:
     """Type/token lexical-diversity census — the vocabulary-collapse
     spam signal the repetition suite approaches from the other side:
     keyword-stuffed or template pages reuse a tiny vocabulary (low
@@ -822,7 +797,7 @@ def lexical_diversity(
 
     Columns: doc_id, n_tokens, n_types, ttr_ppm, hapax_ppm."""
     toks = F.transform(
-        token_array(F.coalesce(F.col(text_col), F.lit(""))),
+        token_array(F.coalesce(F.col("text"), F.lit(""))),
         lambda x: F.lower(x),
     )
     staged = docs.select(
@@ -869,12 +844,12 @@ def lexical_diversity(
     )
 
 
-def lexical_diversity_sql(table: str = "documents", text_col: str = "text") -> str:
+def lexical_diversity_sql() -> str:
     """DuckDB mirror — the oracle states the semantics as the natural
     unnest + per-token counts (no need to be map-only off-engine)."""
-    lows = _lows_sql(text_col)
+    lows = _lows_sql("text")
     return f"""
-WITH toks AS (SELECT doc_id, unnest({lows}) AS tok FROM {table}),
+WITH toks AS (SELECT doc_id, unnest({lows}) AS tok FROM documents),
 per AS (SELECT doc_id, tok, count(*) AS c FROM toks GROUP BY 1, 2),
 agg AS (
   SELECT doc_id, sum(c)::BIGINT AS n_tokens, count(*)::BIGINT AS n_types,
@@ -888,7 +863,7 @@ SELECT d.doc_id,
          // greatest(coalesce(a.n_tokens, 0), 1) AS ttr_ppm,
        (coalesce(a.n_hapax, 0) * 1000000)
          // greatest(coalesce(a.n_tokens, 0), 1) AS hapax_ppm
-FROM {table} d LEFT JOIN agg a USING (doc_id)
+FROM documents d LEFT JOIN agg a USING (doc_id)
 """
 
 
@@ -911,11 +886,7 @@ _MIX_LATIN = "[A-Za-z]"
 _MIX_CYR = "[\\x{400}-\\x{4FF}]"
 
 
-def script_census(
-    docs: DataFrame,
-    text_col: str = "text",
-    keep_cols: tuple[str, ...] = (),
-) -> DataFrame:
+def script_census(docs: DataFrame, keep_cols: tuple[str, ...] = ()) -> DataFrame:
     """Per-document script census: letter counts for the five major
     scripts, the dominant script ('none' when no letters; ties break
     first-in-SCRIPT_ORDER), and the count of MIXED-SCRIPT words (a
@@ -926,7 +897,7 @@ def script_census(
 
     Columns: doc_id, n_latin, n_cyrillic, n_greek, n_arabic, n_cjk,
     dominant_script, n_mixed_words, mixed_script."""
-    t = F.coalesce(F.col(text_col), F.lit(""))
+    t = F.coalesce(F.col("text"), F.lit(""))
     counts = {
         name: F.regexp_count(t, F.lit(pat)).cast("long")
         for name, pat in SCRIPT_RANGES.items()
@@ -951,10 +922,10 @@ def script_census(
     )
 
 
-def script_census_sql(table: str = "documents", text_col: str = "text") -> str:
+def script_census_sql() -> str:
     """DuckDB mirror of :func:`script_census` (same ranges, same
     first-wins CASE tiebreak, same token split)."""
-    t = f"coalesce({text_col}, '')"
+    t = "coalesce(text, '')"
     c = {
         name: f"len(regexp_extract_all({t}, '{pat}'))::BIGINT"
         for name, pat in SCRIPT_RANGES.items()
@@ -979,7 +950,7 @@ def script_census_sql(table: str = "documents", text_col: str = "text") -> str:
     return f"""
 WITH c AS (SELECT doc_id, {mixed} AS n_mixed_words,
   {sel}
-  FROM {table})
+  FROM documents)
 SELECT doc_id, n_latin, n_cyrillic, n_greek, n_arabic, n_cjk,
        {case} AS dominant_script,
        n_mixed_words, (n_mixed_words > 0) AS mixed_script
@@ -987,7 +958,7 @@ FROM c
 """
 
 
-def lix_readability(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def lix_readability(docs: DataFrame) -> DataFrame:
     """Integer LIX readability census (Björnsson 1968: words/sentences
     + 100·longwords/words, long = more than 6 chars) — the classic
     machine-translation-era readability board that needs no syllable
@@ -1004,13 +975,13 @@ def lix_readability(docs: DataFrame, text_col: str = "text") -> DataFrame:
 
     Columns: doc_id, n_words, n_sentences, n_long_words, lix_micro
     (LIX points × 10^6; 0 for empty docs)."""
-    toks = token_array(F.coalesce(F.col(text_col), F.lit("")))
+    toks = token_array(F.coalesce(F.col("text"), F.lit("")))
     staged = docs.select(
         "doc_id",
         F.size(toks).cast("long").alias("n_words"),
         F.size(
             F.regexp_extract_all(
-                F.coalesce(F.col(text_col), F.lit("")), F.lit("[.!?]+"), 0
+                F.coalesce(F.col("text"), F.lit("")), F.lit("[.!?]+"), 0
             )
         )
         .cast("long")
@@ -1033,21 +1004,21 @@ def lix_readability(docs: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def lix_readability_sql(table: str = "documents", text_col: str = "text") -> str:
+def lix_readability_sql() -> str:
     """DuckDB mirror of :func:`lix_readability` (same raw-token split,
     same [.!?]+ sentence runs, same micro-scaled integer division)."""
     toks = (
-        f"list_filter(regexp_split_to_array(coalesce({text_col}, ''), "
-        f"'[ \\t\\n\\r]+'), x -> x <> '')"
+        "list_filter(regexp_split_to_array(coalesce(text, ''), "
+        "'[ \\t\\n\\r]+'), x -> x <> '')"
     )
     return f"""
 WITH staged AS (
   SELECT doc_id,
          len({toks})::BIGINT AS n_words,
-         len(regexp_extract_all(coalesce({text_col}, ''), '[.!?]+'))::BIGINT
+         len(regexp_extract_all(coalesce(text, ''), '[.!?]+'))::BIGINT
            AS n_sentences,
          len(list_filter({toks}, x -> length(x) > 6))::BIGINT AS n_long_words
-  FROM {table})
+  FROM documents)
 SELECT doc_id, n_words, n_sentences, n_long_words,
        ((n_words * 1000000) // greatest(n_sentences, 1)
         + (n_long_words * 100000000) // greatest(n_words, 1))::BIGINT

@@ -72,16 +72,16 @@ def normalize_url_sql(url: str) -> str:
     return f"regexp_replace({u}, '^([^&]*)&', '\\1?')"
 
 
-def url_normalize(pages: DataFrame, url_col: str = "url") -> DataFrame:
+def url_normalize(pages: DataFrame) -> DataFrame:
     """Projection: id + raw url + canonical url. Map-only."""
     return pages.select(
         "doc_id",
-        F.col(url_col).alias("url"),
-        normalize_url(F.col(url_col)).alias("url_norm"),
+        "url",
+        normalize_url(F.col("url")).alias("url_norm"),
     )
 
 
-def url_dedup(pages: DataFrame, url_col: str = "url") -> DataFrame:
+def url_dedup(pages: DataFrame) -> DataFrame:
     """One surviving row per canonical URL: min doc_id (deterministic
     representative) + how many raw rows collapsed into it.
 
@@ -91,7 +91,7 @@ def url_dedup(pages: DataFrame, url_col: str = "url") -> DataFrame:
     exact_dedup's fingerprint, operators/dedup.py).
     """
     return (
-        pages.select(normalize_url(F.col(url_col)).alias("url_norm"), "doc_id")
+        pages.select(normalize_url(F.col("url")).alias("url_norm"), "doc_id")
         .groupBy("url_norm")
         .agg(
             F.min("doc_id").alias("doc_id"),
@@ -100,12 +100,7 @@ def url_dedup(pages: DataFrame, url_col: str = "url") -> DataFrame:
     )
 
 
-def latest_snapshot_per_url(
-    pages: DataFrame,
-    url_col: str = "url",
-    ts_col: str = "warc_ts",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def latest_snapshot_per_url(pages: DataFrame) -> DataFrame:
     """Newest capture wins: one row per canonical URL, the one with the
     greatest ``warc_ts`` (ties broken by greatest id — deterministic).
     The recrawl-collapse step a Common-Crawl ingest runs before scoring:
@@ -125,27 +120,27 @@ def latest_snapshot_per_url(
     not — re-introducing exactly the per-partition sort this
     formulation exists to avoid. A 128-bit decimal IS fixed-width, fits
     ts*10^19 + id exactly for every long ts (9.2e37 + 9.2e18 < 1e38),
-    and stays in whole-stage codegen. Precondition: ``id_col`` >= 0
+    and stays in whole-stage codegen. Precondition: ``doc_id`` >= 0
     (band packing; any long ts is fine) — plan + tie semantics are
     regression-tested in tests/test_urlops.py.
     """
-    u = normalize_url(F.col(url_col))
+    u = normalize_url(F.col("url"))
     shift = F.expr("CAST(10000000000000000000 AS DECIMAL(20,0))")  # 10^19
     ordv = (
-        F.col(ts_col).cast("decimal(19,0)") * shift
-        + F.col(id_col).cast("decimal(38,0)")
+        F.col("warc_ts").cast("decimal(19,0)") * shift
+        + F.col("doc_id").cast("decimal(38,0)")
     )
     return (
         pages.select(
             u.alias("url_norm"),
-            F.col(id_col),
-            F.col(ts_col),
+            F.col("doc_id"),
+            F.col("warc_ts"),
             ordv.alias("_ord"),
         )
         .groupBy("url_norm")
         .agg(
-            F.max_by(id_col, F.col("_ord")).alias(id_col),
-            F.max_by(ts_col, F.col("_ord")).alias(ts_col),
+            F.max_by("doc_id", F.col("_ord")).alias("doc_id"),
+            F.max_by("warc_ts", F.col("_ord")).alias("warc_ts"),
             F.count("*").alias("n_snapshots"),
         )
     )
@@ -158,11 +153,7 @@ def domain_of(url_norm: Column) -> Column:
     return F.regexp_replace(host, ":[0-9]+$", "")
 
 
-def blocklist_filter(
-    pages: DataFrame,
-    blocked,
-    url_col: str = "url",
-) -> DataFrame:
+def blocklist_filter(pages: DataFrame, blocked) -> DataFrame:
     """Drop every page whose (normalized) domain is on a blocklist —
     the C4-style badwords/domain exclusion step that runs before any
     scoring spend.
@@ -174,7 +165,7 @@ def blocklist_filter(
     multi-million-entry blocklist that lives in a table (still no
     shuffle of the pages side; only the blocklist moves).
     """
-    dom = domain_of(normalize_url(F.col(url_col)))
+    dom = domain_of(normalize_url(F.col("url")))
     if isinstance(blocked, (list, tuple)):
         return pages.where(~dom.isin(*blocked))
     bl = blocked.select(F.col(blocked.columns[0]).alias("_blocked_domain"))
@@ -189,7 +180,7 @@ def blocklist_filter(
     )
 
 
-def domain_stats(pages: DataFrame, url_col: str = "url") -> DataFrame:
+def domain_stats(pages: DataFrame) -> DataFrame:
     """Per-domain crawl-skew readout: raw rows, distinct canonical URLs,
     mean document size. THE table an operator reads before choosing
     salting factors — Zipf-heavy crawl shards show up as one domain
@@ -198,7 +189,7 @@ def domain_stats(pages: DataFrame, url_col: str = "url") -> DataFrame:
     count(distinct url_norm) is exact here (gate readout); at 100 TB use
     approx_count_distinct — same plan shape, two-stage partial agg.
     """
-    u = normalize_url(F.col(url_col))
+    u = normalize_url(F.col("url"))
     return (
         pages.select(
             domain_of(u).alias("domain"),
@@ -214,16 +205,10 @@ def domain_stats(pages: DataFrame, url_col: str = "url") -> DataFrame:
     )
 
 
-def domain_cap(
-    pages: DataFrame,
-    k: int,
-    url_col: str = "url",
-    id_col: str = "doc_id",
-    salt_buckets: int = 16,
-) -> DataFrame:
+def domain_cap(pages: DataFrame, k: int, salt_buckets: int = 16) -> DataFrame:
     """FineWeb-style per-domain document cap: keep at most ``k`` pages
     per registered domain, priority = smallest md5-derived hash of the
-    canonical url (deterministic and crawl-order-free; ``id_col``
+    canonical url (deterministic and crawl-order-free; ``doc_id``
     breaks exact-hash ties). Caps the boilerplate-heavy mega-domains a
     Zipf crawl otherwise floods the corpus with (reference analog: the
     per-catalog record cap in its batch evaluator; FineWeb §3.4 is the
@@ -244,9 +229,9 @@ def domain_cap(
     """
     from pyspark.sql import Window
 
-    u = normalize_url(F.col(url_col))
+    u = normalize_url(F.col("url"))
     base = pages.select(
-        F.col(id_col).alias("doc_id"),
+        "doc_id",
         domain_of(u).alias("domain"),
         _h60_url(u).alias("_pri"),
     )
@@ -281,12 +266,7 @@ SELECT doc_id, domain, rk FROM r WHERE rk <= {k}
 """
 
 
-def snapshot_diff(
-    old: DataFrame,
-    new: DataFrame,
-    url_col: str = "url_norm",
-    content_col: str = "text",
-) -> DataFrame:
+def snapshot_diff(old: DataFrame, new: DataFrame) -> DataFrame:
     """Crawl-over-crawl delta: classify every canonical url as added /
     removed / changed / unchanged between two snapshots and count each
     class — the readout an ingest pipeline checks before paying for a
@@ -304,8 +284,8 @@ def snapshot_diff(
     def side(df: DataFrame, out: str) -> DataFrame:
         return (
             df.select(
-                F.col(url_col).alias("url_norm"),
-                _h60_url(F.col(content_col)).alias(out),
+                "url_norm",
+                _h60_url(F.col("text")).alias(out),
             )
             .groupBy("url_norm")
             .agg(F.min(out).alias(out))
@@ -339,14 +319,7 @@ SELECT status, count(*) AS n_urls FROM j GROUP BY status
 """
 
 
-def rescore_delta(
-    old_scored: DataFrame,
-    new_pages: DataFrame,
-    score_fn,
-    url_col: str = "url_norm",
-    content_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def rescore_delta(old_scored: DataFrame, new_pages: DataFrame, score_fn) -> DataFrame:
     """Incremental crawl re-score — the production answer to "a new
     crawl arrived, how little can we recompute?": every url of the NEW
     snapshot whose content hash matches the PREVIOUS snapshot carries
@@ -365,18 +338,16 @@ def rescore_delta(
     per-(url, hash) agg is value-free), the new side scores the min-id
     capture of the min hash.
 
-    ``old_scored`` needs (url_col, content_col, total_score, rating,
-    keep); ``new_pages`` needs (url_col, content_col, id_col) plus
-    whatever ``score_fn`` consumes. Output: url_col, action
+    ``old_scored`` needs (url_norm, text, total_score, rating, keep);
+    ``new_pages`` needs (url_norm, text, doc_id) plus whatever
+    ``score_fn`` consumes. Output: url_norm, action
     ('carried' | 'scored'), total_score, rating, keep."""
     h = _h60_url  # content hash, the same 60-bit md5 as snapshot_diff
-    u, c, i = url_col, content_col, id_col
-
     old_bh = (
         old_scored.select(
-            u, h(F.col(c)).alias("h"), "total_score", "rating", "keep"
+            "url_norm", h(F.col("text")).alias("h"), "total_score", "rating", "keep"
         )
-        .groupBy(u, "h")
+        .groupBy("url_norm", "h")
         .agg(
             F.min("total_score").alias("total_score"),
             F.min("rating").alias("rating"),
@@ -384,10 +355,10 @@ def rescore_delta(
         )
     )
     old_slim = (
-        old_bh.groupBy(u)
+        old_bh.groupBy("url_norm")
         .agg(F.min(F.struct("h", "total_score", "rating", "keep")).alias("st"))
         .select(
-            u,
+            "url_norm",
             F.col("st.h").alias("h_old"),
             F.col("st.total_score").alias("total_score"),
             F.col("st.rating").alias("rating"),
@@ -395,13 +366,13 @@ def rescore_delta(
         )
     )
     new_best = (
-        new_pages.select(u, h(F.col(c)).alias("h_new"))
-        .groupBy(u)
+        new_pages.select("url_norm", h(F.col("text")).alias("h_new"))
+        .groupBy("url_norm")
         .agg(F.min("h_new").alias("h_new"))
     )
-    j = new_best.join(old_slim, u, "left")
+    j = new_best.join(old_slim, "url_norm", "left")
     carried = j.filter(F.col("h_old") == F.col("h_new")).select(
-        u,
+        "url_norm",
         F.lit("carried").alias("action"),
         "total_score",
         "rating",
@@ -409,21 +380,21 @@ def rescore_delta(
     )
     need = j.filter(
         F.col("h_old").isNull() | (F.col("h_old") != F.col("h_new"))
-    ).select(u, "h_new")
-    # need derives from new_pages, so need[u] and new_pages[u] resolve to
+    ).select("url_norm", "h_new")
+    # need derives from new_pages, so need.url_norm and new_pages.url_norm resolve to
     # the SAME attribute — Spark only rescues that self-join by detecting
     # the trivially-true predicate and repointing one side (with a
     # warning). Rename the probe key instead so the join condition is
     # unambiguous by construction.
-    need_r = need.select(F.col(u).alias("_need_u"), "h_new")
-    cand = new_pages.withColumn("h", h(F.col(c))).join(
+    need_r = need.select(F.col("url_norm").alias("_need_u"), "h_new")
+    cand = new_pages.withColumn("h", h(F.col("text"))).join(
         need_r,
-        on=[F.col(u) == F.col("_need_u"), F.col("h") == F.col("h_new")],
+        on=[F.col("url_norm") == F.col("_need_u"), F.col("h") == F.col("h_new")],
     ).select(new_pages["*"])
-    pick = cand.groupBy(u).agg(F.min(i).alias(i))
-    sel = cand.join(pick, [u, i])
+    pick = cand.groupBy("url_norm").agg(F.min("doc_id").alias("doc_id"))
+    sel = cand.join(pick, ["url_norm", "doc_id"])
     scored = score_fn(sel).select(
-        u,
+        "url_norm",
         F.lit("scored").alias("action"),
         "total_score",
         "rating",
@@ -446,9 +417,7 @@ URL_SPAM_WORDS = ("porn", "xxx", "casino", "viagra", "poker", "escort")
 URL_SPAM_PATTERN = "(^|[./-])(" + "|".join(URL_SPAM_WORDS) + ")([./-]|$)"
 
 
-def url_feature_census(
-    pages: DataFrame, url_col: str = "url", id_col: str = "doc_id"
-) -> DataFrame:
+def url_feature_census(pages: DataFrame) -> DataFrame:
     """Structural URL features + soft spam score (RefinedWeb §3.1 /
     FineWeb URL filtering: before any text is fetched or scored, the
     URL itself carries signal — adult-keyword hits, digit-heavy hosts
@@ -473,12 +442,12 @@ def url_feature_census(
 
     Columns: doc_id, url_len, path_depth, n_digits, subdomain_depth,
     n_hyphens_host, has_query, spam_word_hit, url_spam_score."""
-    url = F.coalesce(F.col(url_col), F.lit(""))
+    url = F.coalesce(F.col("url"), F.lit(""))
     u = F.lower(url)
     nu = normalize_url(url)
     host = domain_of(nu)
     feats = pages.select(
-        id_col,
+        "doc_id",
         F.length(u).cast("long").alias("url_len"),
         _count_char(nu, "/").alias("path_depth"),
         (
@@ -503,18 +472,16 @@ def url_feature_census(
     return feats.withColumn("url_spam_score", score.cast("int"))
 
 
-def url_feature_census_sql(
-    syn_pages: str, url_col: str = "url", id_col: str = "doc_id"
-) -> str:
+def url_feature_census_sql(syn_pages: str) -> str:
     """DuckDB mirror of :func:`url_feature_census` (same normalize chain,
     same count-by-replace arithmetic, same weights, same null-as-'')."""
-    url = f"coalesce({url_col}, '')"
+    url = "coalesce(url, '')"
     u = f"lower({url})"
     nu = normalize_url_sql(url)
     host = f"regexp_replace(regexp_extract({nu}, '^([^/?&]+)', 1), ':[0-9]+$', '')"
     return f"""
 WITH feats AS (
-  SELECT {id_col},
+  SELECT doc_id,
     length({u})::BIGINT AS url_len,
     (length({nu}) - length(replace({nu}, '/', '')))::BIGINT AS path_depth,
     (length({u}) - length(regexp_replace({u}, '[0-9]', '', 'g')))::BIGINT

@@ -47,13 +47,10 @@ def load_vocab(
     return rows[1:] if emulate_header_swallow else rows
 
 
-def membership(value: Column, allowed: list[str], uri_only: bool = True) -> Column:
-    """Boolean probe: value in the broadcast set. With ``uri_only`` only
-    URI-shaped values can match (J1's literal-never-matches rule)."""
-    hit = value.isin(allowed)
-    if uri_only:
-        hit = hit & value.rlike(URI_RE)
-    return F.coalesce(hit, F.lit(False))
+def membership(value: Column, allowed: list[str]) -> Column:
+    """Boolean probe: value in the broadcast set. Only URI-shaped values
+    can match (J1's literal-never-matches rule)."""
+    return F.coalesce(value.isin(allowed) & value.rlike(URI_RE), F.lit(False))
 
 
 def label_membership(value: Column, labels: list[str]) -> Column:
@@ -70,8 +67,6 @@ def vocabulary_compliance(
     df: DataFrame,
     values_col: str,
     allowed: list[str],
-    id_col: str = "doc_id",
-    uri_only: bool = True,
 ) -> DataFrame:
     """Per-record (compliant, population, pct) over an array column of
     values — the J1 checker as a per-row ARRAY REDUCTION, fully map-only
@@ -84,15 +79,12 @@ def vocabulary_compliance(
     vals = F.coalesce(F.col(values_col), F.array().cast("array<string>"))
 
     def _hit(v: Column) -> Column:
-        h = v.isin(allowed)
-        if uri_only:
-            h = h & v.rlike(URI_RE)
-        return h
+        return v.isin(allowed) & v.rlike(URI_RE)
 
     population = F.size(F.filter(vals, lambda v: v.isNotNull()))
     compliant = F.size(F.filter(vals, lambda v: v.isNotNull() & _hit(v)))
     return df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         compliant.cast("long").alias("compliant"),
         population.cast("long").alias("population"),
         F.coalesce(

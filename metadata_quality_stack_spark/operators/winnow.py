@@ -72,46 +72,40 @@ def _norm(text_col):
     return F.trim(F.regexp_replace(F.lower(text_col), "[ \t\n\r]+", " "))
 
 
-def _norm_sql(text: str = "text") -> str:
-    return f"trim(regexp_replace(lower({text}), '[ \\t\\n\\r]+', ' ', 'g'))"
-
-
-def _gram_hashes(norm, k: int):
+def _gram_hashes(norm):
     """Array of 28-bit k-gram hashes at every position (index = pos).
     substr inside the HOF is O(k) per element — total O(len*k), the
     honest cost of per-position grams (not the gopher O(T^2) trap)."""
-    idx = F.sequence(F.lit(1), F.length(norm) - F.lit(k - 1))
+    idx = F.sequence(F.lit(1), F.length(norm) - F.lit(WINNOW_K - 1))
     grams = F.transform(
         idx,
-        lambda i: md5_int(norm.substr(i, F.lit(k)), 7),
+        lambda i: md5_int(norm.substr(i, F.lit(WINNOW_K)), 7),
     )
-    return F.when(F.length(norm) >= k, grams).otherwise(
+    return F.when(F.length(norm) >= WINNOW_K, grams).otherwise(
         F.array().cast("array<long>")
     )
 
 
-def selected_fingerprints(
-    docs: DataFrame, k: int = WINNOW_K, w: int = WINNOW_W
-) -> DataFrame:
+def selected_fingerprints(docs: DataFrame) -> DataFrame:
     """(doc_id, sel_pos, sel_h): the winnowed fingerprint set — the
     rightmost-minimum of every complete w-window of k-gram hashes."""
     from pyspark.sql import Window
 
     norm = _norm(F.col("text"))
     g = docs.select(
-        "doc_id", F.posexplode(_gram_hashes(norm, k)).alias("pos", "h")
+        "doc_id", F.posexplode(_gram_hashes(norm)).alias("pos", "h")
     )
     key = F.col("h") * _POS_M + (F.lit(_POS_M - 1) - F.col("pos"))
     frame = (
         Window.partitionBy("doc_id")
         .orderBy("pos")
-        .rowsBetween(Window.currentRow, w - 1)
+        .rowsBetween(Window.currentRow, WINNOW_W - 1)
     )
     win = g.select(
         "doc_id",
         F.min(key).over(frame).alias("winkey"),
         F.count(F.lit(1)).over(frame).alias("cnt"),
-    ).filter(F.col("cnt") == w)
+    ).filter(F.col("cnt") == WINNOW_W)
     return win.select(
         "doc_id",
         (F.lit(_POS_M - 1) - F.col("winkey").bitwiseAND(F.lit(_POS_M - 1)))
@@ -121,49 +115,45 @@ def selected_fingerprints(
     ).distinct()
 
 
-def _sel_sql(
-    table: str, text_col: str, k: int, w: int
-) -> str:
+def _sel_sql() -> str:
     """Shared CTE chain ending in sel(doc_id, sel_pos, sel_h)."""
     return f"""nd AS (
-  SELECT doc_id, {_norm_sql(text_col)} AS norm FROM {table}),
+  SELECT doc_id, trim(regexp_replace(lower(text), '[ \\t\\n\\r]+', ' ', 'g')) AS norm FROM documents),
 g AS (
   SELECT doc_id, i - 1 AS pos,
-         {md5_int_sql(f"substr(norm, i, {k})", 7)} AS h
-  FROM nd, unnest(generate_series(1, greatest(length(norm) - {k} + 1, 0))) AS t(i)),
+         {md5_int_sql(f"substr(norm, i, {WINNOW_K})", 7)} AS h
+  FROM nd, unnest(generate_series(1, greatest(length(norm) - {WINNOW_K} + 1, 0))) AS t(i)),
 keys AS (
   SELECT doc_id, pos, h * {_POS_M} + ({_POS_M - 1} - pos) AS key FROM g),
 win AS (
   SELECT doc_id,
          min(key) OVER (PARTITION BY doc_id ORDER BY pos
-                        ROWS BETWEEN CURRENT ROW AND {w - 1} FOLLOWING) AS winkey,
+                        ROWS BETWEEN CURRENT ROW AND {WINNOW_W - 1} FOLLOWING) AS winkey,
          count(*) OVER (PARTITION BY doc_id ORDER BY pos
-                        ROWS BETWEEN CURRENT ROW AND {w - 1} FOLLOWING) AS cnt
+                        ROWS BETWEEN CURRENT ROW AND {WINNOW_W - 1} FOLLOWING) AS cnt
   FROM keys),
 sel AS (
   SELECT DISTINCT doc_id, ({_POS_M - 1} - (winkey % {_POS_M}))::BIGINT AS sel_pos,
          (winkey // {_POS_M})::BIGINT AS sel_h
-  FROM win WHERE cnt = {w})"""
+  FROM win WHERE cnt = {WINNOW_W})"""
 
 
-def winnow_fingerprints(
-    docs: DataFrame, k: int = WINNOW_K, w: int = WINNOW_W
-) -> DataFrame:
+def winnow_fingerprints(docs: DataFrame) -> DataFrame:
     """Per-doc sketch stats: (doc_id, n_grams, n_windows, n_selected).
     n_selected / n_windows ~ 2/(w+1) (paper §4 density bound); docs
     shorter than the guarantee threshold keep a zero row (hostile-row
     rule: empty/null/short text must not vanish from the readout)."""
     norm = _norm(F.col("text"))
-    n_grams = F.greatest(F.length(norm) - F.lit(k - 1), F.lit(0))
+    n_grams = F.greatest(F.length(norm) - F.lit(WINNOW_K - 1), F.lit(0))
     base = docs.select(
         "doc_id",
         n_grams.cast("long").alias("n_grams"),
-        F.greatest(n_grams - F.lit(w - 1), F.lit(0))
+        F.greatest(n_grams - F.lit(WINNOW_W - 1), F.lit(0))
         .cast("long")
         .alias("n_windows"),
     )
     per = (
-        selected_fingerprints(docs, k, w)
+        selected_fingerprints(docs)
         .groupBy("doc_id")
         .agg(F.count(F.lit(1)).alias("n_selected"))
     )
@@ -177,17 +167,12 @@ def winnow_fingerprints(
     )
 
 
-def winnow_fingerprints_sql(
-    table: str = "documents",
-    text_col: str = "text",
-    k: int = WINNOW_K,
-    w: int = WINNOW_W,
-) -> str:
-    return f"""WITH {_sel_sql(table, text_col, k, w)},
+def winnow_fingerprints_sql() -> str:
+    return f"""WITH {_sel_sql()},
 per AS (SELECT doc_id, count(*)::BIGINT AS n_selected FROM sel GROUP BY doc_id)
 SELECT d.doc_id,
-       greatest(length(d.norm) - {k - 1}, 0)::BIGINT AS n_grams,
-       greatest(length(d.norm) - {k + w - 2}, 0)::BIGINT AS n_windows,
+       greatest(length(d.norm) - {WINNOW_K - 1}, 0)::BIGINT AS n_grams,
+       greatest(length(d.norm) - {WINNOW_K + WINNOW_W - 2}, 0)::BIGINT AS n_windows,
        coalesce(p.n_selected, 0)::BIGINT AS n_selected
 FROM nd d LEFT JOIN per p USING (doc_id)
 """
@@ -195,9 +180,6 @@ FROM nd d LEFT JOIN per p USING (doc_id)
 
 def winnow_overlap_pairs(
     docs: DataFrame,
-    k: int = WINNOW_K,
-    w: int = WINNOW_W,
-    hot: int = WINNOW_HOT_DOCS,
     min_shared: int = WINNOW_MIN_SHARED,
 ) -> DataFrame:
     """(doc_a, doc_b, n_shared): document pairs sharing >= min_shared
@@ -205,12 +187,12 @@ def winnow_overlap_pairs(
     global-Jaccard dedup family cannot see. Bucket join on sel_h with
     the hot-fingerprint guard; never all-pairs."""
     sel = (
-        selected_fingerprints(docs, k, w).select("doc_id", "sel_h").distinct()
+        selected_fingerprints(docs).select("doc_id", "sel_h").distinct()
     )
     ok = (
         sel.groupBy("sel_h")
         .agg(F.count(F.lit(1)).alias("nd"))
-        .filter(F.col("nd") <= hot)
+        .filter(F.col("nd") <= WINNOW_HOT_DOCS)
         .select("sel_h")
     )
     s = sel.join(ok, "sel_h")
@@ -225,19 +207,12 @@ def winnow_overlap_pairs(
     )
 
 
-def winnow_overlap_pairs_sql(
-    table: str = "documents",
-    text_col: str = "text",
-    k: int = WINNOW_K,
-    w: int = WINNOW_W,
-    hot: int = WINNOW_HOT_DOCS,
-    min_shared: int = WINNOW_MIN_SHARED,
-) -> str:
-    return f"""WITH {_sel_sql(table, text_col, k, w)},
+def winnow_overlap_pairs_sql() -> str:
+    return f"""WITH {_sel_sql()},
 sel2 AS (SELECT DISTINCT doc_id, sel_h FROM sel),
-ok AS (SELECT sel_h FROM sel2 GROUP BY sel_h HAVING count(*) <= {hot}),
+ok AS (SELECT sel_h FROM sel2 GROUP BY sel_h HAVING count(*) <= {WINNOW_HOT_DOCS}),
 s AS (SELECT doc_id, sel_h FROM sel2 JOIN ok USING (sel_h))
 SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*)::BIGINT AS n_shared
 FROM s a JOIN s b ON a.sel_h = b.sel_h AND a.doc_id < b.doc_id
-GROUP BY 1, 2 HAVING count(*) >= {min_shared}
+GROUP BY 1, 2 HAVING count(*) >= {WINNOW_MIN_SHARED}
 """

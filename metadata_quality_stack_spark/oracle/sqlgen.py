@@ -13,6 +13,10 @@ from __future__ import annotations
 
 from metadata_quality_stack_spark import config
 
+# the documents table's metadata columns, by role; the Spark operators
+# read the same mapping (analytics.DOC_META)
+DOC_META = {"lang": "lang", "source": "source", "n_chars": "n_chars"}
+
 
 def _sql_str_list(items: list[str]) -> str:
     return "[" + ", ".join("'" + s.replace("'", "''") + "'" for s in items) + "]"
@@ -164,46 +168,36 @@ def score_select(profile: str = "webtext_native") -> str:
     return ",\n    ".join(parts)
 
 
-def pct_with_clause(
-    table: str = "documents",
-    id_col: str = "doc_id",
-    meta: dict[str, str | None] | None = None,
-) -> str:
-    """The shared ``WITH tok .. feat .. pct`` chain ending in a ``pct``
-    relation carrying ``{id_col}`` + every pct_<rule> column."""
-    if meta is None:
-        meta = {"lang": "lang", "source": "source", "n_chars": "n_chars"}
-    meta_src = ", ".join(sorted({v for v in meta.values() if v} - {id_col}))
-    meta_carry = f", {meta_src}" if meta_src else ""
+def pct_with_clause() -> str:
+    """The shared ``WITH tok .. feat .. pct`` chain over ``documents``
+    ending in a ``pct`` relation carrying ``doc_id`` + every pct_<rule>
+    column."""
+    meta_carry = ", " + ", ".join(sorted(DOC_META.values()))
     return f"""WITH tok AS (
-  SELECT {id_col}{meta_carry}, text,
+  SELECT doc_id{meta_carry}, text,
     {TOKS} AS toks,
     {LOWS} AS lows
-  FROM {table}
+  FROM documents
 ), feat AS (
-  SELECT {id_col}{meta_carry},
+  SELECT doc_id{meta_carry},
     {feature_select()}
   FROM tok
 ), pct AS (
-  SELECT {id_col},
-    {native_pct_select(meta)}
+  SELECT doc_id,
+    {native_pct_select(DOC_META)}
   FROM feat
 )"""
 
 
-def metric_report_sql(
-    table: str = "documents",
-    id_col: str = "doc_id",
-    profile: str = "webtext_native",
-) -> str:
+def metric_report_sql() -> str:
     """Long-format per-metric breakdown (rules.metric_report oracle),
     including the per-metric label_en/label_es/severity metadata."""
-    rules = config.RULES_BY_PROFILE[profile]
+    rules = config.RULES_BY_PROFILE["webtext_native"]
     selects = []
     for r in rules:
         en, es = config.labels_for(r["id"])
         selects.append(
-            f"SELECT {id_col}, '{r['id']}' AS metric, "
+            f"SELECT doc_id, '{r['id']}' AS metric, "
             f"'{r['dimension']}' AS dimension, "
             f"CAST({int(r['weight'])} AS INTEGER) AS weight, "
             f"round(pct_{r['id']}, 6) AS pct, "
@@ -211,23 +205,17 @@ def metric_report_sql(
             f"'{en}' AS label_en, '{es}' AS label_es, "
             f"'{config.severity_for(r['id'])}' AS severity FROM pct"
         )
-    return pct_with_clause(table, id_col) + "\n" + "\nUNION ALL\n".join(selects)
+    return pct_with_clause() + "\n" + "\nUNION ALL\n".join(selects)
 
 
-def dqv_report_sql(
-    table: str = "documents",
-    id_col: str = "doc_id",
-    meta: dict[str, str | None] | None = None,
-    profile: str = "webtext_native",
-    metric_template: str | None = None,
-) -> str:
+def dqv_report_sql() -> str:
     """Nested DQV report JSON (textops.report_dqv oracle): dimensions
     object + measurements array, byte-identical to the Spark rendering."""
     from metadata_quality_stack_spark.operators.textops import DQV_METRIC_TEMPLATE
 
-    tmpl = (metric_template or DQV_METRIC_TEMPLATE).replace("'", "''")
-    t = config.thresholds_for(profile)
-    rules = config.RULES_BY_PROFILE[profile]
+    tmpl = DQV_METRIC_TEMPLATE.replace("'", "''")
+    t = config.thresholds_for("webtext_native")
+    rules = config.RULES_BY_PROFILE["webtext_native"]
     all_pcts = ", ".join(f"pct_{r['id']}" for r in rules)
     total = " + ".join(config.DIMENSIONS)
     profile_ids = {r["id"] for r in rules}
@@ -250,13 +238,13 @@ def dqv_report_sql(
         '"dimensions": {' + dims_fmt + '}, "measurements": ['
     ).replace("'", "''")
     dim_args = ", ".join(config.DIMENSIONS)
-    return f"""{pct_with_clause(table, id_col, meta)}, dims AS (
-  SELECT {id_col}, {all_pcts},
-    {score_select(profile)}
+    return f"""{pct_with_clause()}, dims AS (
+  SELECT doc_id, {all_pcts},
+    {score_select("webtext_native")}
   FROM pct
 )
-SELECT {id_col},
-  printf('{head_fmt}', {id_col}, CAST({total} AS INTEGER),
+SELECT doc_id,
+  printf('{head_fmt}', doc_id, CAST({total} AS INTEGER),
     CASE WHEN {total} >= {t['excellent']} THEN 'Excellent'
          WHEN {total} >= {t['good']} THEN 'Good'
          WHEN {total} >= {t['sufficient']} THEN 'Sufficient'
@@ -271,18 +259,14 @@ FROM dims
 
 def native_scoring_sql(
     table: str = "documents",
-    id_col: str = "doc_id",
-    meta: dict[str, str | None] | None = None,
     extra_cols: tuple[str, ...] = (),
     profile: str = "webtext_native",
 ) -> str:
     """Full per-document scoring query (native profile) in DuckDB SQL."""
-    if meta is None:
-        meta = {"lang": "lang", "source": "source", "n_chars": "n_chars"}
     t = config.thresholds_for(profile)
-    carry_cols = [id_col, *extra_cols]
+    carry_cols = ["doc_id", *extra_cols]
     carry = ", ".join(carry_cols)
-    meta_src = ", ".join(sorted({v for v in meta.values() if v} - set(carry_cols)))
+    meta_src = ", ".join(sorted(set(DOC_META.values()) - set(carry_cols)))
     meta_carry = f", {meta_src}" if meta_src else ""
     total = " + ".join(config.DIMENSIONS)
     profile_ids = {r["id"] for r in config.RULES_BY_PROFILE[profile]}
@@ -301,7 +285,7 @@ WITH tok AS (
   FROM tok
 ), pct AS (
   SELECT {carry},
-    {native_pct_select(meta)}
+    {native_pct_select(DOC_META)}
   FROM feat
 ), dims AS (
   SELECT {carry}, {hard_carry},

@@ -23,6 +23,8 @@ from pyspark.sql import functions as F
 from metadata_quality_stack_spark.functions.hashing import hex_int
 from metadata_quality_stack_spark.operators.rules import apply_quality, filter_scored
 from metadata_quality_stack_spark.operators.sampling import (
+    SPLIT_TEST_PCT,
+    SPLIT_VAL_PCT,
     cap_per_key,
     deterministic_sample,
 )
@@ -78,7 +80,7 @@ def _stages(
         ]
     )
     sampled = (
-        deterministic_sample(deduped, "doc_id", sample_pct)
+        deterministic_sample(deduped, sample_pct)
         if sample_pct is not None
         else deduped
     )
@@ -110,16 +112,14 @@ def export_curated(
     out_dir: str,
     fmt: str = "parquet",
     partition_by: str | None = "lang",
-    compression: str | None = None,
 ) -> dict:
     """Export the curated corpus for training consumption: zstd parquet
     (columnar, prunable) or gzip JSONL (line-per-doc loaders; the text
     writer's codec list has no zstd), hive-partitioned by ``partition_by``
     so per-language training jobs prune at the scan. Returns the
     per-partition row accounting (the export manifest)."""
-    if compression is None:
-        compression = "zstd" if fmt == "parquet" else "gzip"
-    writer = df.write.mode("overwrite").option("compression", compression)
+    codec = "zstd" if fmt == "parquet" else "gzip"
+    writer = df.write.mode("overwrite").option("compression", codec)
     if partition_by and partition_by in df.columns:
         writer = writer.partitionBy(partition_by)
     if fmt == "json":
@@ -145,10 +145,7 @@ def export_curated(
 def curation_recipe(
     docs: DataFrame,
     meta_cols: dict[str, str] | None = None,
-    profile: str = "webtext_native",
     contamination_max: float = 0.2,
-    val_pct: int = 5,
-    test_pct: int = 5,
 ) -> DataFrame:
     """The FULL training-data recipe (FineWeb/CCNet shape) as one
     composition — what a reference user runs end-to-end between a raw
@@ -182,7 +179,7 @@ def curation_recipe(
     from metadata_quality_stack_spark.operators.dedup import fuzzy_dedup_keep
     from metadata_quality_stack_spark.operators.sampling import SAMPLE_BUCKETS
 
-    stages = _stages(docs, meta_cols or {}, profile, None, None)
+    stages = _stages(docs, meta_cols or {}, "webtext_native", None, None)
     canon = stages["deduped"]
     surv_docs = docs.join(canon.select("doc_id"), "doc_id", "semi")
     fuzzy = fuzzy_dedup_keep(surv_docs)
@@ -200,8 +197,8 @@ def curation_recipe(
     # carries — the split costs zero additional text reads
     b = hex_int("fingerprint", 7) % SAMPLE_BUCKETS
     split = (
-        F.when(b < test_pct, F.lit("test"))
-        .when(b < test_pct + val_pct, F.lit("val"))
+        F.when(b < SPLIT_TEST_PCT, F.lit("test"))
+        .when(b < SPLIT_TEST_PCT + SPLIT_VAL_PCT, F.lit("val"))
         .otherwise(F.lit("train"))
     )
     return clean.select(
@@ -382,7 +379,7 @@ def heuristic_filter_bank(docs: DataFrame) -> DataFrame:
     return w.select("doc_id", *flags, keep.alias("keep"))
 
 
-def heuristic_filter_bank_sql(table: str = "documents") -> str:
+def heuristic_filter_bank_sql() -> str:
     """DuckDB mirror: the oracle states the semantics as six independent
     family queries joined on doc_id (it does not need the one-scan
     plan, only the same values)."""
@@ -398,12 +395,12 @@ def heuristic_filter_bank_sql(table: str = "documents") -> str:
     )
 
     return f"""
-WITH g AS ({gopher_repetition_filter_sql(table)}),
-c AS ({c4_line_filter_sql(table)}),
-m AS ({mojibake_stats_sql(table)}),
-l AS ({lexical_diversity_sql(table)}),
-s AS ({script_census_sql(table)}),
-w AS ({lang_stopword_density_sql(table)})
+WITH g AS ({gopher_repetition_filter_sql()}),
+c AS ({c4_line_filter_sql()}),
+m AS ({mojibake_stats_sql()}),
+l AS ({lexical_diversity_sql()}),
+s AS ({script_census_sql()}),
+w AS ({lang_stopword_density_sql()})
 SELECT g.doc_id,
   g.keep AS gopher_keep,
   c.keep_page AS c4_keep,

@@ -74,11 +74,8 @@ def model_scores_column(text_col: str) -> Column:
 @jvm_cached()
 def pipeline_selects(
     columns: tuple[str, ...],
-    text_col: str,
     id_cols: tuple[str, ...],
     lang_col: str | None,
-    source_col: str | None,
-    n_chars_col: str | None,
     profile: str,
     include_text: bool,
     toxic_terms: tuple[str, ...],
@@ -88,14 +85,14 @@ def pipeline_selects(
     only ``html`` is there; the model stage selects ``model_carry`` plus
     :func:`model_scores_column`; ``after`` holds the rest in order."""
     before = ()
-    if text_col not in columns and "html" in columns:
+    if "text" not in columns and "html" in columns:
         from metadata_quality_stack_spark.sources.pages import extract_text_column
 
         before = ((
             *[F.col(c) for c in columns if c != "html"],
-            extract_text_column(F.col("html")).alias(text_col),
+            extract_text_column(F.col("html")).alias("text"),
         ),)
-    needed = [*id_cols, *(c for c in (lang_col, source_col, n_chars_col) if c), text_col]
+    needed = [*id_cols, *([lang_col] if lang_col else []), "text"]
     model_carry = tuple(F.col(c) for c in needed)
 
     # Stage 1 — model scorers (the only Python in the plan; Arrow-batched,
@@ -109,17 +106,17 @@ def pipeline_selects(
     # Stages 2-3 — features then rule percentages (model rules included),
     # as staged projections (codegen locals: each feature computed once
     # per row; see rules.stage)
-    meta_cols = {"lang": lang_col, "source": source_col, "n_chars": n_chars_col}
+    meta_cols = {"lang": lang_col, "source": None, "n_chars": None}
     scoring = scoring_selects(
-        (*needed, *MODEL_COLS), text_col, tuple(sorted(meta_cols.items())), profile, None
+        (*needed, *MODEL_COLS), "text", tuple(sorted(meta_cols.items())), profile, None
     )
 
     # Stage 4 — rollup, then the scrub in the final projection
-    carry = [*id_cols, *([lang_col] if lang_col else []), *MODEL_COLS, text_col]
+    carry = [*id_cols, *([lang_col] if lang_col else []), *MODEL_COLS, "text"]
     rollup = final_select(tuple(carry), profile, False)
-    scrub = scrub_columns(F.col(text_col))
+    scrub = scrub_columns(F.col("text"))
     counts = ("scrub_count", "scrub_email_count", "scrub_ip_count", "scrub_phone_count")
-    base = [c for c in (*carry, *SCORE_COLS) if c != text_col]
+    base = [c for c in (*carry, *SCORE_COLS) if c != "text"]
     out = [*(F.col(c) for c in base), *(scrub[c].alias(c) for c in counts)]
     base += counts
     if include_text or toxic_terms:
@@ -140,11 +137,8 @@ def pipeline_selects(
 
 def quality_pipeline(
     df: DataFrame,
-    text_col: str = "text",
     id_cols: tuple[str, ...] = ("url",),
     lang_col: str | None = "lang",
-    source_col: str | None = None,
-    n_chars_col: str | None = None,
     profile: str = "webtext",
     include_text: bool = True,
     toxic_terms: list[str] | None = None,
@@ -153,21 +147,21 @@ def quality_pipeline(
     id cols, scrubbed_text (+scrub counts), dimension scores, total_score,
     rating, keep, drop_reasons, lang_pred, lang_conf, ppl.
 
-    If ``text_col`` is absent but an ``html`` binary column exists, text is
+    If ``text`` is absent but an ``html`` binary column exists, text is
     extracted first via the native byte-identical extractor
     (sources.pages.extract_text_column) — still map-only, still codegen.
 
     The plan is a fold of ``df.select`` over cached select-lists. They
     are keyed on ``df.columns`` and the other arguments plus the py4j
     gateway (:func:`pipeline_selects`); the model UDF Column is keyed on
-    ``text_col`` and the live SparkContext (:func:`model_scores_column`)."""
+    the text column and the live SparkContext (:func:`model_scores_column`)."""
     before, model_carry, after = pipeline_selects(
-        tuple(df.columns), text_col, tuple(id_cols), lang_col, source_col,
-        n_chars_col, profile, include_text, tuple(toxic_terms or ()),
+        tuple(df.columns), tuple(id_cols), lang_col, profile, include_text,
+        tuple(toxic_terms or ()),
     )
     for cols in before:
         df = df.select(*cols)
-    df = df.select(*model_carry, model_scores_column(text_col))
+    df = df.select(*model_carry, model_scores_column("text"))
     for cols in after:
         df = df.select(*cols)
     return df

@@ -35,6 +35,7 @@ from metadata_quality_stack_spark.operators import cdc
 from metadata_quality_stack_spark.sources import store
 
 CH_BUCKETS = 16
+CYCLE_MOD = 3  # ingest batches: doc_id % 3 == 0, 1, 2
 
 
 def _chunks(docs: DataFrame, text_col: str = "text") -> DataFrame:
@@ -115,35 +116,31 @@ def compact_chunk_index(spark: SparkSession, index_dir: str) -> None:
         store.write_partitioned(idx, index_dir, "ch_bucket", "overwrite")
 
 
-def chunk_index_cycle(
-    spark: SparkSession, docs: DataFrame, mod: int = 3
-) -> DataFrame:
-    """Gate lifecycle: BUILD from slice A (doc_id % mod == 0), INGEST
+def chunk_index_cycle(spark: SparkSession, docs: DataFrame) -> DataFrame:
+    """Gate lifecycle: BUILD from slice A (doc_id % 3 == 0), INGEST
     batch B (== 1, readout discarded), COMPACT, then probe-and-ingest
     batch C (== 2) and return C's novelty readout — pure chunk-set
     algebra the SQL oracle restates (C's chunks vs chunks(A) ∪
     chunks(B)). Compaction between ingests must not change the answer."""
     with store.scratch_dir("cdc_index_gate_") as index_dir:
-        build_chunk_index(docs.filter(F.col("doc_id") % mod == 0), index_dir)
+        build_chunk_index(docs.filter(F.col("doc_id") % CYCLE_MOD == 0), index_dir)
         novel_bytes_batch(
-            spark, docs.filter(F.col("doc_id") % mod == 1), index_dir
+            spark, docs.filter(F.col("doc_id") % CYCLE_MOD == 1), index_dir
         )
         compact_chunk_index(spark, index_dir)
         return novel_bytes_batch(
-            spark, docs.filter(F.col("doc_id") % mod == 2), index_dir
+            spark, docs.filter(F.col("doc_id") % CYCLE_MOD == 2), index_dir
         )
 
 
-def chunk_index_cycle_sql(
-    mod: int = 3, table: str = "documents", text_col: str = "text"
-) -> str:
+def chunk_index_cycle_sql() -> str:
     """Set-algebra restatement: batch C's per-doc bytes vs the union of
     A's and B's chunk sets (B's whole chunk set joins the index — every
     B chunk absent from A was appended, and B-vs-A novelty is exactly
     that set)."""
-    a = cdc._ends_cte(f"(SELECT * FROM {table} WHERE doc_id % {mod} = 0)", text_col, "a_")
-    b = cdc._ends_cte(f"(SELECT * FROM {table} WHERE doc_id % {mod} = 1)", text_col, "b_")
-    c = cdc._ends_cte(f"(SELECT * FROM {table} WHERE doc_id % {mod} = 2)", text_col, "c_")
+    a = cdc._ends_cte(f"(SELECT * FROM documents WHERE doc_id % {CYCLE_MOD} = 0)", "a_")
+    b = cdc._ends_cte(f"(SELECT * FROM documents WHERE doc_id % {CYCLE_MOD} = 1)", "b_")
+    c = cdc._ends_cte(f"(SELECT * FROM documents WHERE doc_id % {CYCLE_MOD} = 2)", "c_")
     return f"""WITH {a},
 {cdc._chunks_cte("a_")},
 {b},
@@ -165,6 +162,6 @@ SELECT d.doc_id,
   coalesce(p.novel_bytes, 0) AS novel_bytes,
   (coalesce(p.novel_bytes, 0) * 1000000
      // greatest(coalesce(p.total_bytes, 0), 1))::BIGINT AS novel_ppm
-FROM (SELECT doc_id FROM {table} WHERE doc_id % {mod} = 2) d
+FROM (SELECT doc_id FROM documents WHERE doc_id % {CYCLE_MOD} = 2) d
 LEFT JOIN per p USING (doc_id)
 """

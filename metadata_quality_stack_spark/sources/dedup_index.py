@@ -39,6 +39,7 @@ from metadata_quality_stack_spark.functions.hashing import hex_int
 from metadata_quality_stack_spark.sources import store
 
 FP_BUCKETS = 16
+CYCLE_MOD = 3  # ingest batches: doc_id % 3 == 0, 1, 2
 
 
 def content_fingerprint() -> F.Column:
@@ -111,11 +112,9 @@ def compact_index(spark: SparkSession, index_dir: str) -> None:
         store.write_partitioned(idx, index_dir, "fp_bucket", "overwrite")
 
 
-def index_probe_cycle(
-    spark: SparkSession, docs: DataFrame, mod: int = 3
-) -> DataFrame:
+def index_probe_cycle(spark: SparkSession, docs: DataFrame) -> DataFrame:
     """One full index lifecycle, gate-checkable against pure SQL:
-    BUILD the index from corpus slice A (doc_id % mod == 0), INGEST
+    BUILD the index from corpus slice A (doc_id % 3 == 0), INGEST
     batch B (== 1), COMPACT, then PROBE-and-ingest batch C (== 2) and
     return C's survivors. Runs against a scratch directory so the gate
     exercises the real parquet read/append/overwrite path — the logical
@@ -126,19 +125,17 @@ def index_probe_cycle(
 
     Columns: doc_id, fingerprint."""
     with store.scratch_dir("dedup_index_gate_") as index_dir:
-        build_index(docs.filter(F.col("doc_id") % mod == 0), index_dir)
-        ingest_batch(spark, docs.filter(F.col("doc_id") % mod == 1), index_dir)
+        build_index(docs.filter(F.col("doc_id") % CYCLE_MOD == 0), index_dir)
+        ingest_batch(spark, docs.filter(F.col("doc_id") % CYCLE_MOD == 1), index_dir)
         compact_index(spark, index_dir)
         # ingest_batch localCheckpoints eagerly, so the result outlives
         # the scratch directory
         return ingest_batch(
-            spark, docs.filter(F.col("doc_id") % mod == 2), index_dir
+            spark, docs.filter(F.col("doc_id") % CYCLE_MOD == 2), index_dir
         )
 
 
-def index_probe_cycle_bloom(
-    spark: SparkSession, docs: DataFrame, mod: int = 3
-) -> DataFrame:
+def index_probe_cycle_bloom(spark: SparkSession, docs: DataFrame) -> DataFrame:
     """The same lifecycle as :func:`index_probe_cycle` but with BOTH
     ingests routed through the bloom pre-filter (bitmap bootstraps from
     the built index on the first one). The answer must be identical —
@@ -150,30 +147,30 @@ def index_probe_cycle_bloom(
 
     Columns: doc_id, fingerprint."""
     with store.scratch_dir("dedup_index_bloom_gate_") as index_dir:
-        build_index(docs.filter(F.col("doc_id") % mod == 0), index_dir)
+        build_index(docs.filter(F.col("doc_id") % CYCLE_MOD == 0), index_dir)
         ingest_batch_bloom(
-            spark, docs.filter(F.col("doc_id") % mod == 1), index_dir
+            spark, docs.filter(F.col("doc_id") % CYCLE_MOD == 1), index_dir
         )
         compact_index(spark, index_dir)
         return ingest_batch_bloom(
-            spark, docs.filter(F.col("doc_id") % mod == 2), index_dir
+            spark, docs.filter(F.col("doc_id") % CYCLE_MOD == 2), index_dir
         )
 
 
-def index_probe_cycle_sql(table: str = "documents", mod: int = 3) -> str:
+def index_probe_cycle_sql() -> str:
     """DuckDB mirror of :func:`index_probe_cycle`: the index after
     build(A) + ingest(B) contains A's distinct fingerprints plus B's
     admitted (batch-first, not-in-A) fingerprints; C's survivors are its
     batch-first rows absent from both."""
     return f"""
-WITH fp AS (SELECT doc_id, md5(text) AS fingerprint FROM {table}),
-a AS (SELECT DISTINCT fingerprint FROM fp WHERE doc_id % {mod} = 0),
+WITH fp AS (SELECT doc_id, md5(text) AS fingerprint FROM documents),
+a AS (SELECT DISTINCT fingerprint FROM fp WHERE doc_id % {CYCLE_MOD} = 0),
 bfirst AS (SELECT fingerprint, min(doc_id) AS doc_id FROM fp
-           WHERE doc_id % {mod} = 1 GROUP BY fingerprint),
+           WHERE doc_id % {CYCLE_MOD} = 1 GROUP BY fingerprint),
 badm AS (SELECT fingerprint FROM bfirst
          WHERE fingerprint NOT IN (SELECT fingerprint FROM a)),
 cfirst AS (SELECT fingerprint, min(doc_id) AS doc_id FROM fp
-           WHERE doc_id % {mod} = 2 GROUP BY fingerprint)
+           WHERE doc_id % {CYCLE_MOD} = 2 GROUP BY fingerprint)
 SELECT doc_id, fingerprint FROM cfirst
 WHERE fingerprint NOT IN (SELECT fingerprint FROM a)
   AND fingerprint NOT IN (SELECT fingerprint FROM badm)

@@ -122,11 +122,9 @@ def compact_fuzzy_index(spark: SparkSession, index_dir: str) -> None:
         store.write_partitioned(idx, index_dir, "band", "overwrite")
 
 
-def fuzzy_index_probe_cycle(
-    spark: SparkSession, docs: DataFrame, mod: int = 3
-) -> DataFrame:
+def fuzzy_index_probe_cycle(spark: SparkSession, docs: DataFrame) -> DataFrame:
     """One full fuzzy-index lifecycle, gate-checkable against pure SQL:
-    BUILD from corpus slice A (doc_id % mod == 0), INGEST batch B
+    BUILD from corpus slice A (doc_id % 3 == 0), INGEST batch B
     (== 1), COMPACT, then INGEST batch C (== 2) and return C's flags.
     The logical answer is band set algebra over the same table (C
     probed against A's cells plus B's ADMITTED cells, with min-id
@@ -136,11 +134,11 @@ def fuzzy_index_probe_cycle(
     Columns: doc_id, n_hit_bands, batch_near_dup, near_dup_of_corpus,
     keep."""
     with store.scratch_dir("fuzzy_index_gate_") as index_dir:
-        build_fuzzy_index(docs.filter(F.col("doc_id") % mod == 0), index_dir)
+        build_fuzzy_index(docs.filter(F.col("doc_id") % 3 == 0), index_dir)
         fuzzy_ingest_batch(
-            spark, docs.filter(F.col("doc_id") % mod == 1), index_dir
+            spark, docs.filter(F.col("doc_id") % 3 == 1), index_dir
         )
         compact_fuzzy_index(spark, index_dir)
         return fuzzy_ingest_batch(
-            spark, docs.filter(F.col("doc_id") % mod == 2), index_dir
+            spark, docs.filter(F.col("doc_id") % 3 == 2), index_dir
         )

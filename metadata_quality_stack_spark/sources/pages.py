@@ -207,10 +207,8 @@ def generate_pages(n_rows: int = 400, seed: int = 7) -> pd.DataFrame:
     return pd.DataFrame(rows)
 
 
-def pages_spark_df(spark, n_rows: int = 400, seed: int = 7, with_class: bool = False):
-    pdf = generate_pages(n_rows, seed)
-    if not with_class:
-        pdf = pdf.drop(columns=["row_class"])
+def pages_spark_df(spark, n_rows: int = 400, seed: int = 7):
+    pdf = generate_pages(n_rows, seed).drop(columns=["row_class"])
     return spark.createDataFrame(pdf)
 
 

@@ -169,13 +169,12 @@ def run_incremental(
     transform,
     key_col: str = "url",
     n_buckets: int = 8,
-    fail_after: int | None = None,
     partition_by: str | None = None,
     n_salts: int = 16,
 ) -> dict:
     """Run ``transform`` over all not-yet-committed buckets in ONE pass,
-    then commit buckets to the manifest. ``fail_after`` injects a crash
-    after N commits (tests). ``transform`` must preserve ``key_col``.
+    then commit buckets to the manifest. ``transform`` must preserve
+    ``key_col``.
 
     ``partition_by`` (e.g. a ``day`` column the transform emits) layers a
     hive-partitioned layout inside each bucket — downstream readers that
@@ -231,10 +230,8 @@ def run_incremental(
                     e["scrubbed"] += r["scrub_count"] or 0
                 if r["reason"] is not None and r["reason_n"]:
                     e.setdefault("drop_reasons", {})[r["reason"]] = r["reason_n"]
-        for done, b in enumerate(remaining, 1):
+        for b in remaining:
             manifest.commit(b, entries[b])
-            if fail_after is not None and done >= fail_after:
-                raise RuntimeError(f"injected failure after {done} buckets")
     # run completed: record the committed-bucket set as a new snapshot
     # (only if it differs from the last one, so idempotent reruns over a
     # finished table don't grow the log)
@@ -331,10 +328,7 @@ def merge_rescore(
     new_pages: DataFrame,
     transform,
     key_col: str = "url",
-    content_col: str = "text",
-    hash_col: str = "content_h",
     n_buckets: int = 8,
-    fail_before_commit: bool = False,
 ) -> dict:
     """Apply a new crawl to an existing results store: urls whose
     60-bit content hash is unchanged keep their stored rows; buckets
@@ -344,7 +338,7 @@ def merge_rescore(
     the LATEST crawl (removed urls drop), while pinned reads at earlier
     snapshots still see exactly the pre-merge table.
 
-    The store's rows must carry ``hash_col`` (emit it from the
+    The store's rows must carry ``content_h`` (emit it from the
     ``run_incremental`` transform); ``transform`` must emit it too.
 
     Scale shape: churn detection joins two (key, hash, bucket) slims —
@@ -364,7 +358,7 @@ def merge_rescore(
         # an empty store (its runs kept no page): an empty frame of the
         # transform's shape, so every new key reads as added
         cur = transform(new_pages).withColumn("bucket", bucket_of).limit(0)
-    h60 = _h60_url(F.col(content_col))
+    h60 = _h60_url(F.col("text"))
     new_slim = (
         new_pages.select(
             F.col(key_col).alias("k"),
@@ -376,7 +370,7 @@ def merge_rescore(
     )
     cur_slim = cur.select(
         F.col(key_col).alias("k"),
-        F.col(hash_col).alias("h_old"),
+        F.col("content_h").alias("h_old"),
         F.col("bucket").cast("int").alias("b"),
     ).dropDuplicates(["k"])
     j = cur_slim.join(new_slim, ["k", "b"], "full_outer")
@@ -433,9 +427,6 @@ def merge_rescore(
     rows_written = rebuilt.count()
     rebuilt.write.mode("overwrite").partitionBy("bucket").parquet(gen_dir)
 
-    if fail_before_commit:  # crash injection for tests: files exist,
-        raise RuntimeError("injected crash before snapshot commit")  # log silent
-
     prev_loc = _locations_at(log, latest)
     locations = {str(b): r for b, r in prev_loc.items() if r}
     # an empty store has no main-dir bucket dirs to read, so the new
@@ -454,8 +445,6 @@ def store_merge_cycle(
     old_pages: DataFrame,
     new_pages: DataFrame,
     transform,
-    key_col: str = "url_norm",
-    n_buckets: int = 8,
 ) -> DataFrame:
     """One full store lifecycle, gate-checkable against pure SQL: BUILD
     the results store from the first crawl (run_incremental through the
@@ -469,17 +458,17 @@ def store_merge_cycle(
     time-travel path is value-transparent. Inputs must be one row per
     key (pre-dedup captures upstream).
 
-    Columns: snap ('base' | 'merged'), key_col, total_score, rating,
+    Columns: snap ('base' | 'merged'), url_norm, total_score, rating,
     keep."""
-    cols = [key_col, "total_score", "rating", "keep"]
+    cols = ["url_norm", "total_score", "rating", "keep"]
     with scratch_dir("store_merge_gate_") as out_dir:
         run_incremental(
             spark, old_pages, out_dir, transform,
-            key_col=key_col, n_buckets=n_buckets,
+            key_col="url_norm",
         )
         merge_rescore(
             spark, out_dir, new_pages, transform,
-            key_col=key_col, n_buckets=n_buckets,
+            key_col="url_norm",
         )
         base = read_results(spark, out_dir, snapshot=0).select(
             F.lit("base").alias("snap"), *cols

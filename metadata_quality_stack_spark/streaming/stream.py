@@ -14,8 +14,9 @@ plays (sources/sink.py).
 Two entry points:
 
 * :func:`stream_quality` — file-source ingest of page parquet drops →
-  scored/scrubbed parquet, ``availableNow`` for catch-up runs or
-  micro-batch triggers for continuous tailing.
+  scored/scrubbed parquet. Every query here that writes runs with the
+  ``availableNow`` trigger: one call processes every file not yet
+  committed, then stops.
 * :func:`stream_lang_histogram` — watermarked tumbling-window lang
   histogram over ``warc_ts`` (late data beyond the watermark dropped),
   the streaming analog of the per-partition metrics sidecar.
@@ -57,8 +58,6 @@ def stream_quality(
     input_dir: str,
     output_dir: str,
     checkpoint_dir: str,
-    available_now: bool = True,
-    include_warc_ts: bool = True,
 ) -> StreamingQuery:
     """Continuous scoring: pages stream → quality pipeline → parquet sink.
 
@@ -66,17 +65,15 @@ def stream_quality(
     committed micro-batch, reprocessing only uncommitted files — the
     streaming counterpart of the batch bucket manifest."""
     pages = read_pages_stream(spark, input_dir)
-    id_cols = ("url", "warc_ts") if include_warc_ts else ("url",)
-    scored = quality_pipeline(pages, id_cols=id_cols, lang_col="lang")
-    writer = (
+    scored = quality_pipeline(pages, id_cols=("url", "warc_ts"), lang_col="lang")
+    return (
         scored.writeStream.format("parquet")
         .option("path", output_dir)
         .option("checkpointLocation", checkpoint_dir)
         .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def stream_dedup(
@@ -85,7 +82,6 @@ def stream_dedup(
     output_dir: str,
     checkpoint_dir: str,
     watermark: str = "1 hour",
-    available_now: bool = True,
 ) -> StreamingQuery:
     """Streaming exact dedup across micro-batches: md5(text) fingerprint +
     ``dropDuplicatesWithinWatermark`` keyed by fingerprint. A duplicate
@@ -106,15 +102,14 @@ def stream_dedup(
         .withWatermark("warc_ts", watermark)
         .dropDuplicatesWithinWatermark(["fingerprint"])
     )
-    writer = (
+    return (
         deduped.writeStream.format("parquet")
         .option("path", output_dir)
         .option("checkpointLocation", checkpoint_dir)
         .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def stream_lang_histogram(
@@ -147,7 +142,6 @@ def stream_ingest_with_index(
     output_dir: str,
     checkpoint_dir: str,
     index_dir: str,
-    available_now: bool = True,
     use_bloom: bool = False,
 ) -> StreamingQuery:
     """The production continuous-ingest loop: stream crawl pages, exact-
@@ -193,14 +187,13 @@ def stream_ingest_with_index(
             "append"
         ).parquet(output_dir)
 
-    writer = (
+    return (
         pages.writeStream.foreachBatch(process)
         .option("checkpointLocation", checkpoint_dir)
         .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def stream_hll_registers(spark: SparkSession, input_dir: str) -> DataFrame:

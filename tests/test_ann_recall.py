@@ -36,8 +36,8 @@ def recall(emb):
 
 
 def test_multi_table_beats_single_table(recall):
-    single = recall(similarity.ann_topk)
-    multi = recall(similarity.ann_topk_multi)
+    single = recall(lambda e, q, k: similarity.ann_topk(e, q, k))
+    multi = recall(lambda e, q, k: similarity.ann_topk_multi(e, q, k))
     assert multi > single
     assert multi >= 0.30  # measured 0.43 with 8 tables x 5 planes
 
@@ -113,7 +113,7 @@ def test_trained_ivf_recall_and_balance(emb, recall):
     assert recall(trained) >= 0.4  # measured 0.57 at nprobe=2
 
     seed_max = (
-        similarity.ivf_assign(emb, similarity.IVF_K)
+        similarity.ivf_assign(emb)
         .groupBy("cell_id")
         .count()
         .agg(F.max("count"))
@@ -135,7 +135,7 @@ def test_multiprobe_beats_single_bucket(recall):
     multi-table's ~25%, repairing the narrow-margin misses that
     dominate single-bucket LSH. Recall measured here and recorded in
     BENCH/BASELINE.md."""
-    single = recall(similarity.ann_topk)
-    multiprobe = recall(similarity.ann_topk_multiprobe)
+    single = recall(lambda e, q, k: similarity.ann_topk(e, q, k))
+    multiprobe = recall(lambda e, q, k: similarity.ann_topk_multiprobe(e, q, k))
     assert multiprobe > single
     assert multiprobe >= 0.10  # measured on the sf0.01 embeddings

@@ -90,7 +90,7 @@ def test_range_join_bins_exact_and_no_nested_loop(spark):
     probes = spark.createDataFrame(
         [(100, _ts("2024-01-01T00:00:00"))], "id long, ts timestamp_ntz"
     )
-    out = analytics.range_join_bins(probes, pts, window_s=60)
+    out = analytics.range_join_bins(probes, pts)
     got = {(r["probe_id"], r["point_id"]): r["dt_us"] for r in out.collect()}
     # +/-60s inclusive: ids 1,2,3 in range; 4 is 61s late, 5 far away
     assert got == {(100, 1): 0, (100, 2): 59_000_000, (100, 3): 60_000_000}

@@ -232,3 +232,64 @@ def test_only_hashing_spells_the_md5_prefix():
     assert {what for _, what in _md5_prefix_sites(ast.parse(hashing.read_text()))} == {
         "F.conv(F.substring", "hashlib.md5", "'0x' || substr(",
     }
+
+
+def _public_defaults(pkg: Path):
+    """(module, function, positional params, {param: default node}) for
+    every public top-level function of the package with a default."""
+    for f in sorted(pkg.rglob("*.py")):
+        mod = ".".join(f.relative_to(pkg).with_suffix("").parts)
+        for node in ast.parse(f.read_text()).body:
+            if isinstance(node, ast.FunctionDef) and not node.name.startswith("_"):
+                a = node.args
+                pos = [p.arg for p in a.posonlyargs + a.args]
+                d = dict(zip(pos[len(pos) - len(a.defaults):], a.defaults))
+                d.update((p.arg, v) for p, v in zip(a.kwonlyargs, a.kw_defaults) if v)
+                if d:
+                    yield mod, node.name, pos, d
+
+
+def _default_census(root: Path) -> tuple[list[str], list[str]]:
+    """(every defaulted parameter, those no call site sets), each as
+    ``module.function(param)``. A call matches a function by its bare or
+    attribute name and sets a parameter by keyword or by position; a
+    ``*args`` argument sets every later position and a ``**mapping``
+    argument every parameter. Call sites: the package, the entry, the
+    job, the bench, tools/, perfbench/ and tests/."""
+    pkg = root / "metadata_quality_stack_spark"
+    fns = list(_public_defaults(pkg))
+    by_name: dict[str, list] = {}
+    for mod, name, pos, d in fns:
+        by_name.setdefault(name, []).append((mod, pos, d))
+    files = [root / n for n in ("__spark_entry__.py", "job.py", "bench.py")]
+    for d in ("metadata_quality_stack_spark", "tools", "perfbench", "tests"):
+        files += sorted((root / d).rglob("*.py"))
+    set_: set[str] = set()
+    for f in files:
+        for call in ast.walk(ast.parse(f.read_text())):
+            if not isinstance(call, ast.Call):
+                continue
+            fn = call.func
+            name = getattr(fn, "id", None) or getattr(fn, "attr", None)
+            for mod, pos, d in by_name.get(name, ()):
+                hit: set[str] = set()
+                for i, arg in enumerate(call.args):
+                    if isinstance(arg, ast.Starred):
+                        hit.update(pos[i:])
+                        break
+                    hit.update(pos[i:i + 1])
+                for kw in call.keywords:
+                    hit.update(d if kw.arg is None else {kw.arg})
+                set_.update(f"{mod}.{name}({p})" for p in hit & d.keys())
+    every = [f"{mod}.{name}({p})" for mod, name, _, d in fns for p in d]
+    return every, [p for p in every if p not in set_]
+
+
+def test_every_public_default_is_set_somewhere():
+    """A defaulted parameter of a public package function that no call
+    site sets is an option with one value in use: the body should read
+    that value (a module constant when a Spark operator and its DuckDB
+    twin share it), so the two engines agree by reading one name rather
+    than by two copied defaults. Static: parses the repo, no Spark."""
+    _, unset = _default_census(Path(entry.__file__).resolve().parent)
+    assert not unset, f"{len(unset)} defaulted parameters no call site sets: {unset}"

@@ -75,7 +75,7 @@ def test_decode_survives_repartition(media):
 
 
 def test_frame_sample_counts(media):
-    frames = mm.frame_sample(media, fps=1.0)
+    frames = mm.frame_sample(media)
     got = {
         r["doc_id"]: r["n"]
         for r in frames.groupBy("doc_id").agg(F.count("*").alias("n")).collect()

@@ -1,6 +1,7 @@
 """Kill-and-rerun resume test (SURVEY.md §5.2 item 6): inject a crash
 mid-run, rerun, and require the final table to be identical to a
-one-shot run — no duplicates, no holes."""
+one-shot run — no duplicates, no holes. Crashes are injected with
+``monkeypatch`` at the sink's commit steps (:func:`_crash_on_call`)."""
 
 import shutil
 import tempfile
@@ -8,8 +9,10 @@ import tempfile
 import pytest
 
 from metadata_quality_stack_spark.plans.pipeline import quality_pipeline
+from metadata_quality_stack_spark.sources import sink
 from metadata_quality_stack_spark.sources.pages import pages_spark_df
 from metadata_quality_stack_spark.sources.sink import (
+    SnapshotLog,
     SnapshotManifest,
     read_results,
     run_incremental,
@@ -20,17 +23,33 @@ def _transform(df):
     return quality_pipeline(df, id_cols=("url",), lang_col="lang", include_text=False)
 
 
-def test_kill_and_rerun_identical(spark):
+def _crash_on_call(mp, owner, name: str, n: int) -> None:
+    """Make ``owner.name`` raise ``RuntimeError("injected crash")`` from
+    its ``n``-th call on; the calls before it run for real."""
+    real = getattr(owner, name)
+    calls = 0
+
+    def crashing(*args, **kwargs):
+        nonlocal calls
+        calls += 1
+        if calls >= n:
+            raise RuntimeError("injected crash")
+        return real(*args, **kwargs)
+
+    mp.setattr(owner, name, crashing)
+
+
+def test_kill_and_rerun_identical(spark, monkeypatch):
     docs = pages_spark_df(spark, n_rows=300, seed=13)
     one_shot_dir = tempfile.mkdtemp()
     resumed_dir = tempfile.mkdtemp()
     try:
         run_incremental(spark, docs, one_shot_dir, _transform, n_buckets=6)
 
-        with pytest.raises(RuntimeError, match="injected failure"):
-            run_incremental(
-                spark, docs, resumed_dir, _transform, n_buckets=6, fail_after=2
-            )
+        # the 3rd bucket commit crashes: 2 entries persist
+        with monkeypatch.context() as mp, pytest.raises(RuntimeError, match="injected crash"):
+            _crash_on_call(mp, SnapshotManifest, "commit", 3)
+            run_incremental(spark, docs, resumed_dir, _transform, n_buckets=6)
         m = SnapshotManifest(resumed_dir)
         assert len(m.entries) == 2  # partial progress persisted
 
@@ -209,7 +228,7 @@ def test_read_pages_jsonl_quarantines_corrupt_lines(spark, tmp_path):
                            include_text=False)
     assert out.count() == 2
 
-def test_snapshot_time_travel(spark, tmp_path):
+def test_snapshot_time_travel(spark, tmp_path, monkeypatch):
     """Iceberg-style snapshot log: a crashed run appends NO snapshot
     (its partial buckets become visible only in the snapshot the resume
     completes); a completed run appends one; idempotent reruns don't
@@ -219,13 +238,12 @@ def test_snapshot_time_travel(spark, tmp_path):
     import os
     from contextlib import redirect_stdout
 
-    from metadata_quality_stack_spark.sources.sink import SnapshotLog
-
     docs = pages_spark_df(spark, n_rows=200, seed=21)
     out = str(tmp_path / "tt")
 
-    with pytest.raises(RuntimeError, match="injected failure"):
-        run_incremental(spark, docs, out, _transform, n_buckets=6, fail_after=2)
+    with monkeypatch.context() as mp, pytest.raises(RuntimeError, match="injected crash"):
+        _crash_on_call(mp, SnapshotManifest, "commit", 3)
+        run_incremental(spark, docs, out, _transform, n_buckets=6)
     # crash: partial manifest, but no snapshot — time travel can never
     # land on a half-written state
     assert len(SnapshotManifest(out).entries) == 2
@@ -345,7 +363,9 @@ def test_merge_rescore_rewrites_only_dirty_buckets(spark, tmp_path):
     assert res2["snapshot_id"] == res["snapshot_id"]
 
 
-def test_merge_rescore_crash_before_commit_is_invisible(spark, tmp_path):
+def test_merge_rescore_crash_before_commit_is_invisible(spark, tmp_path, monkeypatch):
+    import os
+
     from metadata_quality_stack_spark.sources.sink import merge_rescore
 
     out = str(tmp_path / "store")
@@ -360,16 +380,14 @@ def test_merge_rescore_crash_before_commit_is_invisible(spark, tmp_path):
     )
     rows = [(f"u{i}", f"original text for page {i} here") for i in range(19)]
     rows += [("u19", "changed content for the crash test run")]
-    with pytest.raises(RuntimeError, match="injected crash"):
-        merge_rescore(
-            spark,
-            out,
-            _mk_pages(spark, rows),
-            _score_transform,
-            key_col="url",
-            fail_before_commit=True,
-        )
+    # the snapshot-log append (the merge's commit) crashes after the
+    # generation write
+    with monkeypatch.context() as mp, pytest.raises(RuntimeError, match="injected crash"):
+        _crash_on_call(mp, SnapshotLog, "append", 1)
+        merge_rescore(spark, out, _mk_pages(spark, rows), _score_transform, key_col="url")
     # orphan generation files exist but the log never references them
+    assert os.path.isdir(os.path.join(out, "_rewrites", "g1"))
+    assert len(SnapshotLog(out).snapshots) == 1
     assert sorted(
         tuple(r) for r in read_results(spark, out).select("url", "total_score").collect()
     ) == before
@@ -572,3 +590,103 @@ def test_merge_into_store_whose_first_run_kept_no_page(spark, tmp_path):
     assert rows(store) == want
     assert compact_results(spark, store)["rows"] == 40
     assert rows(store) == want
+
+
+def _table(spark, out_dir, snapshot=None):
+    return sorted(
+        tuple(r)
+        for r in read_results(spark, out_dir, snapshot=snapshot)
+        .select("url", "content_h", "total_score", "keep", "bucket")
+        .collect()
+    )
+
+
+def test_kill_after_write_before_first_commit(spark, tmp_path, monkeypatch):
+    """A crash after the parquet write and before the first manifest
+    commit leaves bucket files, an empty manifest and no snapshot; the
+    rerun rewrites every bucket and its table equals a one-shot run."""
+    import os
+
+    rows = [(f"u{i}", f"page {i} body with some words") for i in range(30)]
+    pages = _mk_pages(spark, rows)
+    one_shot, resumed = str(tmp_path / "one_shot"), str(tmp_path / "resumed")
+    run_incremental(spark, pages, one_shot, _score_transform, n_buckets=4)
+
+    with monkeypatch.context() as mp, pytest.raises(RuntimeError, match="injected crash"):
+        _crash_on_call(mp, SnapshotManifest, "commit", 1)
+        run_incremental(spark, pages, resumed, _score_transform, n_buckets=4)
+    assert SnapshotManifest(resumed).entries == {}
+    assert any(d.startswith("bucket=") for d in os.listdir(resumed))
+    assert not os.path.exists(os.path.join(resumed, "_snapshots.json"))
+
+    summary = run_incremental(spark, pages, resumed, _score_transform, n_buckets=4)
+    assert summary["rows"] == 30 and summary["snapshot_id"] == 0
+    assert _table(spark, resumed) == _table(spark, one_shot)
+
+
+def test_compact_crash_before_log_append(spark, tmp_path, monkeypatch):
+    """A compaction killed after its generation write and before the log
+    append leaves an orphan generation no read sees; the rerun clears
+    that dir, rewrites it and commits."""
+    import os
+
+    from metadata_quality_stack_spark.sources.sink import compact_results
+
+    out = str(tmp_path / "store")
+    rows = [(f"u{i}", f"crawl body {i} for compaction") for i in range(16)]
+    run_incremental(spark, _mk_pages(spark, rows), out, _score_transform, n_buckets=4)
+    before = _table(spark, out)
+
+    with monkeypatch.context() as mp, pytest.raises(RuntimeError, match="injected crash"):
+        _crash_on_call(mp, SnapshotLog, "append", 1)
+        compact_results(spark, out)
+    gen = os.path.join(out, "_rewrites", "g1")
+    assert os.path.isdir(gen)
+    assert [s["snapshot_id"] for s in SnapshotLog(out).snapshots] == [0]
+    assert _table(spark, out) == before
+
+    stale = os.path.join(gen, "_stale_marker")
+    open(stale, "w").close()
+    res = compact_results(spark, out)
+    assert res["snapshot_id"] == 1 and res["rows"] == 16
+    assert not os.path.exists(stale)
+    assert SnapshotLog(out).snapshots[-1]["locations"] == {
+        str(b): os.path.join("_rewrites", "g1") for b in range(4)
+    }
+    assert _table(spark, out) == before
+
+
+def test_expire_crash_before_rmtree(spark, tmp_path, monkeypatch):
+    """An expiry killed after the log rewrite and before the generation
+    dirs are deleted: pins >= keep_from still read, the dropped pins
+    raise, and a second call reclaims the orphan dir."""
+    import os
+
+    from metadata_quality_stack_spark.sources.sink import (
+        compact_results,
+        expire_snapshots,
+        merge_rescore,
+    )
+
+    out = str(tmp_path / "store")
+    v0 = [(f"u{i}", f"crawl one body {i} with several words") for i in range(16)]
+    run_incremental(spark, _mk_pages(spark, v0), out, _score_transform, n_buckets=4)
+    v1 = [(u, t) for u, t in v0 if u != "u5"] + [("u5", "crawl two u5 changed")]
+    merge_rescore(spark, out, _mk_pages(spark, v1), _score_transform, key_col="url")
+    compact_results(spark, out)
+    latest = _table(spark, out)
+
+    with monkeypatch.context() as mp, pytest.raises(RuntimeError, match="injected crash"):
+        _crash_on_call(mp, sink.shutil, "rmtree", 1)
+        expire_snapshots(out, keep_from=2)
+    assert [s["snapshot_id"] for s in SnapshotLog(out).snapshots] == [2]
+    assert os.path.isdir(os.path.join(out, "_rewrites", "g1"))  # orphan
+    assert _table(spark, out, snapshot=2) == latest
+    assert _table(spark, out) == latest
+    with pytest.raises(ValueError, match="snapshot 1 not in log"):
+        read_results(spark, out, snapshot=1)
+
+    exp = expire_snapshots(out, keep_from=2)
+    assert exp == {"kept_snapshots": [2], "deleted_dirs": ["g1"]}
+    assert not os.path.isdir(os.path.join(out, "_rewrites", "g1"))
+    assert _table(spark, out) == latest
