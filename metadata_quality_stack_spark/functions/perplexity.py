@@ -1,4 +1,4 @@
-"""KenLM-style hashed n-gram perplexity scorer as a pandas UDF.
+"""KenLM-style hashed n-gram perplexity scorer.
 
 A hashed word unigram+bigram log-probability table trained
 deterministically at import from the langid seed corpus (all languages,
@@ -16,13 +16,12 @@ batch with one segmented reduce per doc — measured ~1.7x the per-doc-loop
 formulation this replaced (the loop's cost was per-doc numpy call
 overhead and bigram string building, not crc32 itself). Token-salad
 gibberish hits the floor probability on most tokens and its perplexity
-explodes — the 'drop: perplexity' row class. Same iterator-UDF /
-shared-scorer structure as functions/langid.py.
+explodes — the 'drop: perplexity' row class. Spark reaches it through
+the fused langid + perplexity UDF (plans.pipeline.model_scores_udf).
 """
 
 from __future__ import annotations
 
-from typing import Iterator
 from zlib import crc32
 
 import numpy as np
@@ -211,14 +210,3 @@ def get_model() -> PerplexityModel:
         _MODEL = PerplexityModel()
     return _MODEL
 
-
-def perplexity_udf():
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("double")
-    def _udf(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        model = get_model()
-        for texts in it:
-            yield model.score_batch(texts)
-
-    return _udf

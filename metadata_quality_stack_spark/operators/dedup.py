@@ -24,6 +24,9 @@ from metadata_quality_stack_spark.functions.text import word_ngrams
 N_MINHASH = 8
 N_BANDS = 4  # rows-per-band = 2
 SHINGLE_N = 3
+# incremental-dedup gate split: doc_id % NEW_BATCH_MOD == 0 is the new
+# batch, the rest the existing corpus
+NEW_BATCH_MOD = 10
 
 
 def _shingles(text_col):
@@ -683,13 +686,13 @@ def dedup_new_batch(new_docs: DataFrame, corpus: DataFrame) -> DataFrame:
 
 
 def dedup_new_batch_sql() -> str:
-    """DuckDB mirror: docs with doc_id % 10 == 0 are the new
+    """DuckDB mirror: docs with doc_id % NEW_BATCH_MOD == 0 are the new
     batch, the rest the existing corpus."""
-    return """
+    return f"""
 WITH batch AS (SELECT doc_id, md5(text) AS fingerprint FROM documents
-               WHERE doc_id % 10 = 0),
+               WHERE doc_id % {NEW_BATCH_MOD} = 0),
 corpus_fp AS (SELECT DISTINCT md5(text) AS fingerprint FROM documents
-              WHERE doc_id % 10 <> 0),
+              WHERE doc_id % {NEW_BATCH_MOD} <> 0),
 first AS (SELECT fingerprint, min(doc_id) AS first_id FROM batch GROUP BY 1)
 SELECT b.doc_id, b.fingerprint,
        (c.fingerprint IS NOT NULL) AS seen_in_corpus,

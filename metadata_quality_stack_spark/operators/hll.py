@@ -56,6 +56,7 @@ HLL_M = 64  # registers (p = 6)
 HLL_Q = 20  # fixed-point scale of the harmonic sum
 HLL_AM2 = 2_904_064_000  # round(0.709 * 64^2 * 1e6)
 _MAX_RANK = 55  # 54 payload bits + 1
+SHARD_MOD = 3  # shard-merge gate split: shard i holds doc_id % SHARD_MOD == i
 
 
 def hll_registers(docs: DataFrame) -> DataFrame:
@@ -157,7 +158,7 @@ FROM agg
 
 
 def hll_shard_merge_sql() -> str:
-    """Shard by doc_id % 3, sketch each shard, merge by max — the
+    """Shard by doc_id % SHARD_MOD, sketch each shard, merge by max — the
     logical answer equals the whole-table sketch, which is what the
     merged registers reduce to (max of maxes = max)."""
     shard_regs = ",\n".join(
@@ -167,11 +168,11 @@ def hll_shard_merge_sql() -> str:
       CASE WHEN h // {HLL_M} = 0 THEN {_MAX_RANK}
            ELSE {_MAX_RANK} - length(bin(h // {HLL_M})) END AS rank
     FROM (SELECT {md5_int_sql("text", 15)} AS h FROM documents
-          WHERE text IS NOT NULL AND doc_id % 3 = {i}))
+          WHERE text IS NOT NULL AND doc_id % {SHARD_MOD} = {i}))
   GROUP BY bucket)"""
-        for i in range(3)
+        for i in range(SHARD_MOD)
     )
-    union = " UNION ALL ".join(f"SELECT * FROM r{i}" for i in range(3))
+    union = " UNION ALL ".join(f"SELECT * FROM r{i}" for i in range(SHARD_MOD))
     return f"""WITH {shard_regs},
 regs AS (SELECT bucket, max(register) AS register
          FROM ({union}) GROUP BY bucket),

@@ -194,12 +194,13 @@ def frame_sample(media: DataFrame) -> DataFrame:
     )
 
 
-def resize_plan(decoded: DataFrame, max_side: int = 64) -> DataFrame:
-    """Resize bookkeeping (native): target dims preserving aspect ratio.
+def resize_plan(decoded: DataFrame) -> DataFrame:
+    """Resize bookkeeping (native): target dims preserving aspect ratio,
+    longest side at most 64 px.
     The pixel resample itself belongs in the decode kernel (stubbed)."""
     scale = F.least(
         F.lit(1.0),
-        F.lit(max_side) / F.greatest(F.col("width"), F.col("height")).cast("double"),
+        F.lit(64) / F.greatest(F.col("width"), F.col("height")).cast("double"),
     )
     return decoded.select(
         "doc_id",

@@ -30,6 +30,9 @@ from metadata_quality_stack_spark.operators.sampling import (
 )
 
 CURATED_COLS = ["doc_id", "source", "lang", "fingerprint", "total_score", "rating"]
+# curation_recipe drops a document whose eval-shingle contamination_ratio
+# reaches this; the gate oracle in __spark_entry__ reads the same value
+CONTAMINATION_MAX = 0.2
 
 
 def _stages(
@@ -145,7 +148,6 @@ def export_curated(
 def curation_recipe(
     docs: DataFrame,
     meta_cols: dict[str, str] | None = None,
-    contamination_max: float = 0.2,
 ) -> DataFrame:
     """The FULL training-data recipe (FineWeb/CCNet shape) as one
     composition — what a reference user runs end-to-end between a raw
@@ -186,7 +188,7 @@ def curation_recipe(
     fsurv = canon.join(fuzzy.filter(F.col("keep")).select("doc_id"), "doc_id")
     bad = (
         decontaminate(docs)
-        .filter(F.col("contamination_ratio") >= contamination_max)
+        .filter(F.col("contamination_ratio") >= CONTAMINATION_MAX)
         .select("doc_id")
     )
     clean = fsurv.join(bad, "doc_id", "left_anti").filter(

@@ -205,10 +205,10 @@ def partition_metrics(result: DataFrame | None) -> dict:
 
 
 def salted_repartition(
-    df: DataFrame, n_partitions: int, domain_col: str, fine_col: str, n_salts: int = 16
+    df: DataFrame, n_partitions: int, domain_col: str, fine_col: str
 ) -> DataFrame:
     """Skew handling for domain-heavy crawl shards (north rule): compose a
     salt from the high-cardinality column so one hot domain spreads over
-    ``n_salts`` partitions instead of one."""
-    salt = F.pmod(F.xxhash64(F.col(fine_col)), F.lit(n_salts))
+    16 partitions instead of one."""
+    salt = F.pmod(F.xxhash64(F.col(fine_col)), F.lit(16))
     return df.repartition(n_partitions, F.col(domain_col), salt)

@@ -37,6 +37,8 @@ from pyspark.sql import functions as F
 from metadata_quality_stack_spark.operators.dedup import minhash_bands
 from metadata_quality_stack_spark.sources import store
 
+CYCLE_MOD = 3  # ingest batches: doc_id % 3 == 0, 1, 2
+
 
 def build_fuzzy_index(docs: DataFrame, index_dir: str) -> None:
     """Initialize the index from an existing corpus: distinct cells,
@@ -124,7 +126,7 @@ def compact_fuzzy_index(spark: SparkSession, index_dir: str) -> None:
 
 def fuzzy_index_probe_cycle(spark: SparkSession, docs: DataFrame) -> DataFrame:
     """One full fuzzy-index lifecycle, gate-checkable against pure SQL:
-    BUILD from corpus slice A (doc_id % 3 == 0), INGEST batch B
+    BUILD from corpus slice A (doc_id % CYCLE_MOD == 0), INGEST batch B
     (== 1), COMPACT, then INGEST batch C (== 2) and return C's flags.
     The logical answer is band set algebra over the same table (C
     probed against A's cells plus B's ADMITTED cells, with min-id
@@ -134,11 +136,11 @@ def fuzzy_index_probe_cycle(spark: SparkSession, docs: DataFrame) -> DataFrame:
     Columns: doc_id, n_hit_bands, batch_near_dup, near_dup_of_corpus,
     keep."""
     with store.scratch_dir("fuzzy_index_gate_") as index_dir:
-        build_fuzzy_index(docs.filter(F.col("doc_id") % 3 == 0), index_dir)
+        build_fuzzy_index(docs.filter(F.col("doc_id") % CYCLE_MOD == 0), index_dir)
         fuzzy_ingest_batch(
-            spark, docs.filter(F.col("doc_id") % 3 == 1), index_dir
+            spark, docs.filter(F.col("doc_id") % CYCLE_MOD == 1), index_dir
         )
         compact_fuzzy_index(spark, index_dir)
         return fuzzy_ingest_batch(
-            spark, docs.filter(F.col("doc_id") % 3 == 2), index_dir
+            spark, docs.filter(F.col("doc_id") % CYCLE_MOD == 2), index_dir
         )

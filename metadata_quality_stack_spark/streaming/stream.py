@@ -81,13 +81,12 @@ def stream_dedup(
     input_dir: str,
     output_dir: str,
     checkpoint_dir: str,
-    watermark: str = "1 hour",
 ) -> StreamingQuery:
     """Streaming exact dedup across micro-batches: md5(text) fingerprint +
     ``dropDuplicatesWithinWatermark`` keyed by fingerprint. A duplicate
     landing in a LATER file than its original is still dropped as long as
-    both fall within the event-time watermark — the continuous-ingest twin
-    of ``dedup.exact_dedup_groups``.
+    both fall within the one-hour event-time watermark — the
+    continuous-ingest twin of ``dedup.exact_dedup_groups``.
 
     Scale: state holds one entry per distinct fingerprint seen inside the
     watermark horizon, then ages out — bounded by ingest-rate x horizon,
@@ -99,7 +98,7 @@ def stream_dedup(
         pages.withColumn(
             "fingerprint", F.md5(F.encode(F.col("text"), "UTF-8"))
         )
-        .withWatermark("warc_ts", watermark)
+        .withWatermark("warc_ts", "1 hour")
         .dropDuplicatesWithinWatermark(["fingerprint"])
     )
     return (
@@ -112,20 +111,16 @@ def stream_dedup(
     )
 
 
-def stream_lang_histogram(
-    spark: SparkSession,
-    input_dir: str,
-    watermark: str = "1 hour",
-    window_size: str = "1 hour",
-) -> DataFrame:
+def stream_lang_histogram(spark: SparkSession, input_dir: str) -> DataFrame:
     """Watermarked tumbling-window histogram of declared ``lang`` keyed by
-    ``warc_ts``: the streaming metrics sidecar. Late events older than the
-    watermark are dropped; state is bounded by (windows in watermark ×
-    langs). Complete/update-mode sink chosen by the caller."""
+    ``warc_ts`` (one-hour windows, one-hour watermark): the streaming
+    metrics sidecar. Late events older than the watermark are dropped;
+    state is bounded by (windows in watermark × langs).
+    Complete/update-mode sink chosen by the caller."""
     pages = read_pages_stream(spark, input_dir)
     return (
-        pages.withWatermark("warc_ts", watermark)
-        .groupBy(F.window("warc_ts", window_size).alias("w"), "lang")
+        pages.withWatermark("warc_ts", "1 hour")
+        .groupBy(F.window("warc_ts", "1 hour").alias("w"), "lang")
         .agg(F.count("*").alias("n_docs"))
         .select(
             F.col("w.start").alias("window_start"),

@@ -541,7 +541,7 @@ def test_curation_recipe_end_to_end(spark):
     docs = spark.createDataFrame(
         rows, "doc_id long, text string, lang string, source string, n_chars long"
     )
-    out = curation_recipe(docs, meta_cols=DOC_META, contamination_max=0.2)
+    out = curation_recipe(docs, meta_cols=DOC_META)
     got = {r.doc_id: r for r in out.collect()}
     assert 1 in got                      # canonical survivor
     assert 2 not in got                  # exact dup dropped

@@ -75,10 +75,11 @@ def _referenced_names(tree: ast.AST) -> set[str]:
 
 def test_every_public_fast_variant_is_used():
     """A public ``*_fast`` operator is a second implementation of some
-    other operator. It stays only while it is registered in queries()
-    (so the gate checks it) or called from package code; an uncalled
-    twin is dead weight that no gate or job exercises. Static: parses
-    the sources, no Spark session."""
+    other operator. It stays only while it is registered in the gate
+    registry (``_registry``, which queries() reads, so the gate checks
+    it) or called from package code; an uncalled twin is dead weight
+    that no gate or job exercises. Static: parses the sources, no Spark
+    session."""
     root = Path(entry.__file__).resolve().parent
     pkg = root / "metadata_quality_stack_spark"
     fast = {
@@ -94,12 +95,46 @@ def test_every_public_fast_variant_is_used():
     for f in [*pkg.rglob("*.py"), root / "job.py"]:
         used |= _referenced_names(ast.parse(f.read_text()))
     entry_tree = ast.parse((root / "__spark_entry__.py").read_text())
-    (queries_def,) = [
+    (registry_def,) = [
         n for n in entry_tree.body
-        if isinstance(n, ast.FunctionDef) and n.name == "queries"
+        if isinstance(n, ast.FunctionDef) and n.name == "_registry"
     ]
-    used |= _referenced_names(queries_def)
+    used |= _referenced_names(registry_def)
     assert not fast - used, f"uncalled *_fast operators: {sorted(fast - used)}"
+
+
+def test_each_query_is_registered_once():
+    """Every gate query is one registry entry: a ``r["name"] = (fn, sql)``
+    assignment or a ``_docs(op, op_sql[, name])`` line keyed by the
+    operator's name. A second entry under the same name would silently
+    replace the first, so the names written in ``_registry`` must be
+    distinct and must be exactly the names queries() serves. Static:
+    parses the entry file, no Spark session."""
+    root = Path(entry.__file__).resolve().parent
+    entry_tree = ast.parse((root / "__spark_entry__.py").read_text())
+    (registry_def,) = [
+        n for n in entry_tree.body
+        if isinstance(n, ast.FunctionDef) and n.name == "_registry"
+    ]
+    names = []
+    for node in ast.walk(registry_def):
+        if (
+            isinstance(node, ast.Assign)
+            and isinstance(node.targets[0], ast.Subscript)
+            and isinstance(node.targets[0].value, ast.Name)
+            and node.targets[0].value.id == "r"
+        ):
+            names.append(node.targets[0].slice.value)
+        elif (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Name)
+            and node.func.id == "_docs"
+        ):
+            key = node.args[2] if len(node.args) > 2 else node.args[0]
+            names.append(key.value if isinstance(key, ast.Constant) else key.attr)
+    duplicated = sorted({n for n in names if names.count(n) > 1})
+    assert not duplicated, f"registered more than once: {duplicated}"
+    assert sorted(names) == sorted(entry.queries())
 
 
 def _proc_paths(tree: ast.AST):

@@ -45,7 +45,7 @@ def test_perplexity_ordering():
 
 def test_udf_matches_shared_scorer(spark):
     from metadata_quality_stack_spark.functions.langid import langid_udf
-    from metadata_quality_stack_spark.functions.perplexity import perplexity_udf
+    from metadata_quality_stack_spark.plans.pipeline import model_scores_udf
     from pyspark.sql import functions as F
 
     rng = np.random.RandomState(5)
@@ -54,8 +54,15 @@ def test_udf_matches_shared_scorer(spark):
     df = spark.createDataFrame(pdf)
     got = (
         df.withColumn("lid", langid_udf()(F.col("text")))
-        .withColumn("ppl", perplexity_udf()(F.col("text")))
-        .select("i", "lid.lang_pred", "lid.lang_conf", "ppl")
+        .withColumn("m", model_scores_udf()(F.col("text")))
+        .select(
+            "i",
+            "lid.lang_pred",
+            "lid.lang_conf",
+            F.col("m.lang_pred").alias("m_lang_pred"),
+            F.col("m.lang_conf").alias("m_lang_conf"),
+            "m.ppl",
+        )
         .toPandas()
         .sort_values("i")
         .reset_index(drop=True)
@@ -64,6 +71,8 @@ def test_udf_matches_shared_scorer(spark):
     exp_ppl = get_ppl().score_batch(pdf["text"])
     assert list(got["lang_pred"]) == list(exp_lid["lang_pred"])
     assert list(got["lang_conf"]) == list(exp_lid["lang_conf"])
+    assert list(got["m_lang_pred"]) == list(exp_lid["lang_pred"])
+    assert list(got["m_lang_conf"]) == list(exp_lid["lang_conf"])
     assert list(got["ppl"]) == list(exp_ppl)
 
 

@@ -91,7 +91,7 @@ def test_frame_sample_counts(media):
 
 def test_resize_plan_bounds(media):
     decoded = mm.decode_media(media)
-    plan = mm.resize_plan(decoded, max_side=64)
+    plan = mm.resize_plan(decoded)
     bad = plan.filter(
         (F.greatest("target_width", "target_height") > 64)
         | (F.col("target_width") < 1)

@@ -42,7 +42,7 @@ def test_plain_domain_partitioning_concentrates(spark, pages):
 
 
 def test_salted_repartition_spreads(spark, pages):
-    salted = salted_repartition(pages, N_PART, "domain", "url", n_salts=16)
+    salted = salted_repartition(pages, N_PART, "domain", "url")
     sizes = _partition_sizes(salted)
     n = pages.count()
     # the hot domain no longer dominates one partition: worst partition
@@ -52,7 +52,7 @@ def test_salted_repartition_spreads(spark, pages):
 
 
 def test_salting_preserves_rows(spark, pages):
-    salted = salted_repartition(pages, N_PART, "domain", "url", n_salts=16)
+    salted = salted_repartition(pages, N_PART, "domain", "url")
     assert salted.count() == pages.count()
     assert sorted(r["url"] for r in salted.select("url").collect()) == sorted(
         r["url"] for r in pages.select("url").collect()

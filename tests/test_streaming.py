@@ -42,7 +42,7 @@ def test_stream_dedup_across_batches(spark, tmp_path):
             f"fresh content {i} here now", "en") for i in range(5)],
         "b2",
     )
-    q = stream_dedup(spark, src, out, ckpt, watermark="1 hour")
+    q = stream_dedup(spark, src, out, ckpt)
     q.awaitTermination(120)
     got = spark.read.parquet(out)
     assert got.count() == 25  # 20 originals + 5 fresh, 10 dups dropped
@@ -95,7 +95,7 @@ def test_stream_resume_no_duplicates(spark, pages_dir, tmp_path):
 
 
 def test_windowed_lang_histogram(spark, pages_dir, tmp_path):
-    agg = stream_lang_histogram(spark, pages_dir, watermark="1 hour", window_size="1 hour")
+    agg = stream_lang_histogram(spark, pages_dir)
     q = (
         agg.writeStream.format("memory")
         .queryName("lang_hist")
