@@ -36,6 +36,7 @@ from metadata_quality_stack_spark.functions.scrub import (
     scrub_sql_exprs,
     toxicity_sql_exprs,
 )
+from metadata_quality_stack_spark.functions.text import collapsed_lower_sql, token_array_sql
 from metadata_quality_stack_spark.operators import (
     analytics,
     bloom,
@@ -1175,7 +1176,8 @@ FROM rclean
         lambda s, d: textops.token_stats(_t(s, d, "documents")),
         f"""
 WITH t AS (
-  SELECT doc_id, {sqlgen.TOKS} AS toks, {sqlgen.LOWS} AS lows,
+  SELECT doc_id, {token_array_sql("text")} AS toks,
+    list_distinct({token_array_sql("lower(text)")}) AS lows,
     length(text) - (length(text) - length(regexp_replace(text, '[ \\t\\n\\r]', '', 'g')))
       AS sum_len
   FROM documents
@@ -1199,8 +1201,7 @@ FROM f
     r["doc_fingerprint"] = (
         lambda s, d: textops.doc_fingerprint(_t(s, d, "documents")),
         "SELECT doc_id, md5(text) AS fingerprint, "
-        "md5(trim(regexp_replace(lower(text), '[ \\t\\n\\r]+', ' ', 'g'))) "
-        "AS norm_fingerprint FROM documents",
+        f"md5({collapsed_lower_sql('text')}) AS norm_fingerprint FROM documents",
     )
     r["scrub_pii"] = (
         lambda s, d: textops.scrub_documents(_t(s, d, "documents")),
@@ -1267,14 +1268,10 @@ FROM documents
         lambda s, d: textops.report_dqv(_t(s, d, "documents"), meta_cols=analytics.DOC_META),
         sqlgen.dqv_report_sql(),
     )
-    lows_sql = (
-        "list_transform(list_filter(regexp_split_to_array(text, '[ \\t\\n\\r]+'), "
-        "x -> x <> ''), x -> lower(x))"
-    )
     r["repetition_stats"] = (
         lambda s, d: textops.repetition_stats(_t(s, d, "documents")),
         f"""
-WITH t AS (SELECT doc_id, {lows_sql} AS lows FROM documents),
+WITH t AS (SELECT doc_id, {token_array_sql("lower(text)")} AS lows FROM documents),
 bg AS (
   SELECT doc_id, unnest(
     CASE WHEN len(lows) >= 2 THEN
@@ -1298,7 +1295,7 @@ FROM documents d LEFT JOIN per_doc p USING (doc_id)
 """,
     )
     bpe_all = textops.BPE_PRETOKEN_RE.replace("'", "''")
-    bpe_nonws = r"''[a-z]+| ?[A-Za-z]+| ?[0-9]+| ?[^A-Za-z0-9 \t\n\r]+"
+    bpe_nonws = textops.BPE_NONWS_RE.replace("'", "''")
     r["bpe_token_stats"] = (
         lambda s, d: textops.bpe_token_stats(_t(s, d, "documents")),
         f"""
@@ -1311,10 +1308,9 @@ SELECT doc_id,
 FROM documents
 """,
     )
-    norm_sql = "trim(regexp_replace(lower(text), '[ \\t\\n\\r]+', ' ', 'g'))"
     r["rolling_fingerprint"] = (
         lambda s, d: textops.rolling_fingerprint(_t(s, d, "documents")),
-        f"SELECT doc_id, {dedup.poly_hash_sql(norm_sql)} AS rolling_hash "
+        f"SELECT doc_id, {dedup.poly_hash_sql(collapsed_lower_sql('text'))} AS rolling_hash "
         "FROM documents",
     )
     r |= _docs(textops.term_stats, textops.term_stats_sql)
@@ -1540,10 +1536,7 @@ WHERE round(CAST(n_common AS DOUBLE) / CAST(n1 + n2 - n_common AS DOUBLE), 6) >=
         f"""
 WITH t AS (
   SELECT doc_id,
-    list_transform(
-      list_transform(list_filter(regexp_split_to_array(text, '[ \\t\\n\\r]+'),
-                                 x -> x <> ''), x -> lower(x)),
-      x -> {ph}) AS hashes
+    list_transform({token_array_sql("lower(text)")}, x -> {ph}) AS hashes
   FROM documents
 ), v AS (SELECT doc_id, {', '.join(votes)} FROM t)
 SELECT doc_id, CAST({sim_terms} AS BIGINT) AS simhash FROM v
@@ -1633,8 +1626,7 @@ SELECT cluster_size, count(*) AS n_clusters FROM sizes GROUP BY 1
 WITH labels AS ({clusters_sql}),
 scores AS (
   SELECT doc_id,
-    CAST(coalesce(len(list_filter(regexp_split_to_array(text, '[ \\t\\n\\r]+'),
-                                  x -> x <> '')), 0) AS BIGINT) AS n_words
+    CAST(coalesce(len({token_array_sql("text")}), 0) AS BIGINT) AS n_words
   FROM documents
 ),
 r AS (

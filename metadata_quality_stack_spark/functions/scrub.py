@@ -13,6 +13,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from metadata_quality_stack_spark import config
+from metadata_quality_stack_spark.functions.text import token_array, token_array_sql
 
 
 def scrub_columns(text: Column) -> dict[str, Column]:
@@ -147,8 +148,6 @@ def rare_token_scrub(docs: DataFrame, min_df: int = RARE_MIN_DF) -> DataFrame:
     memorization risks.
 
     Columns: doc_id, scrubbed_text, n_tokens, n_scrubbed."""
-    from metadata_quality_stack_spark.functions.text import token_array
-
     tok = docs.select(
         "doc_id",
         F.posexplode(token_array(F.coalesce(F.col("text"), F.lit("")))).alias(
@@ -190,14 +189,7 @@ def rare_token_scrub(docs: DataFrame, min_df: int = RARE_MIN_DF) -> DataFrame:
 
 
 def rare_token_scrub_sql(min_df: int = RARE_MIN_DF) -> str:
-    # same tokenization as token_array, but preserving case: split the
-    # edge-trimmed text on whitespace runs
-    toks = (
-        "CASE WHEN trim(coalesce(text, ''), ' ' || chr(9) || chr(10) "
-        "|| chr(13)) = '' THEN []::VARCHAR[] ELSE "
-        "regexp_split_to_array(trim(coalesce(text, ''), ' ' || chr(9) "
-        "|| chr(10) || chr(13)), '[ \\t\\n\\r]+') END"
-    )
+    toks = token_array_sql("coalesce(text, '')")
     return f"""
 WITH tok AS MATERIALIZED (
   SELECT doc_id, e.pos AS pos, e.token AS token FROM (

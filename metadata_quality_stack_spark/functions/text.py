@@ -13,12 +13,19 @@ per row before this rewrite). Instead:
                     Java/RE2/Python common subset; \\n line endings assumed)
 * stopword sets  -> array_intersect on array_distinct (no lambdas)
 
+The whitespace tokenizer (:func:`token_array`) and the lowercase
+collapse (:func:`collapsed_lower`) are spelled here once per engine:
+the ``_sql`` twins build the DuckDB oracles, the ``_py`` twin the Python
+replays, so a gate query's two sides cannot drift apart.
+
 This is the Spark re-expression of the reference's per-record checkers
 (validators.py:221-646), one shared pass instead of
 one-graph-scan-per-metric (validators.py:906-972).
 """
 
 from __future__ import annotations
+
+import re
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -27,7 +34,7 @@ from metadata_quality_stack_spark import config
 
 WS_CLASS = "[ \\t\\n\\r]"  # explicit whitespace class (dialect-stable)
 WS_CHARS = " \t\n\r"
-EDGE_WS = "^" + WS_CLASS + "+|" + WS_CLASS + "+$"
+_WS_RUN = re.compile(WS_CLASS + "+")
 
 ALPHA_CHARS = "ABCDEFGHIJKLMNOPQRSTUVWXYZabcdefghijklmnopqrstuvwxyz"
 DIGIT_CHARS = "0123456789"
@@ -38,7 +45,7 @@ ASCII_CHARS = "".join(chr(c) for c in range(0x20, 0x7F)) + "\t\n\r"
 
 def edge_trimmed(text: Column) -> Column:
     """Strip leading/trailing [ \\t\\n\\r] — btrim (char-set scan, no
-    regex); identical semantics to the old regexp_replace(EDGE_WS)."""
+    regex)."""
     return F.btrim(text, F.lit(WS_CHARS))
 
 
@@ -48,6 +55,30 @@ def token_array(text: Column) -> Column:
     return F.when(F.length(t) == 0, F.array().cast("array<string>")).otherwise(
         F.split(t, WS_CLASS + "+")
     )
+
+
+def token_array_sql(expr: str) -> str:
+    """DuckDB twin of :func:`token_array` over a SQL expression (NULL
+    gives NULL, blank text ``[]``). Callers pass the input they need,
+    e.g. ``token_array_sql("lower(text)")``."""
+    return f"list_filter(regexp_split_to_array({expr}, '{WS_CLASS}+'), x -> x <> '')"
+
+
+def token_array_py(text: str) -> list[str]:
+    """Python twin of :func:`token_array`. Not ``str.split()``, which also
+    splits on Unicode whitespace (NBSP, U+3000, \\x0b, \\x0c)."""
+    return [t for t in _WS_RUN.split(text) if t]
+
+
+def collapsed_lower(text: Column) -> Column:
+    """Lowercased text with each whitespace run collapsed to one space
+    and the edges trimmed — the near-exact fingerprint's normal form."""
+    return F.trim(F.regexp_replace(F.lower(text), WS_CLASS + "+", " "))
+
+
+def collapsed_lower_sql(expr: str) -> str:
+    """DuckDB twin of :func:`collapsed_lower`."""
+    return f"trim(regexp_replace(lower({expr}), '{WS_CLASS}+', ' ', 'g'))"
 
 
 def word_ngrams(toks: Column, n: int) -> Column:

@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from metadata_quality_stack_spark import config
+from metadata_quality_stack_spark.functions.text import token_array, token_array_sql
 from metadata_quality_stack_spark.operators.rules import apply_quality
 from metadata_quality_stack_spark.oracle.sqlgen import DOC_META
 
@@ -762,8 +763,6 @@ def corpus_datasheet(docs: DataFrame) -> DataFrame:
     Columns: n_docs, n_unique_docs, dup_ppm, keep_ppm,
     score_avg_micros, total_tokens, tokens_per_doc_micros, n_sources,
     n_langs."""
-    from metadata_quality_stack_spark.functions.text import token_array
-
     scored = scored_documents(docs)
     base = scored.select(
         "doc_id",
@@ -798,10 +797,7 @@ def corpus_datasheet(docs: DataFrame) -> DataFrame:
 def corpus_datasheet_sql() -> str:
     from metadata_quality_stack_spark.oracle import sqlgen
 
-    toks = (
-        "list_filter(regexp_split_to_array(d.text, '[ \\t\\n\\r]+'),"
-        " x -> x <> '')"
-    )
+    toks = token_array_sql("d.text")
     return f"""
 WITH scored AS ({sqlgen.native_scoring_sql(extra_cols=("source", "lang"))}),
 j AS (SELECT s.doc_id, s.source, s.lang, s.total_score, s.keep,

@@ -38,7 +38,7 @@ from metadata_quality_stack_spark.functions.hashing import (
     md5_int_py,
     md5_int_sql,
 )
-from metadata_quality_stack_spark.functions.text import token_array
+from metadata_quality_stack_spark.functions.text import token_array, token_array_sql
 
 CMS_D = 4  # hash rows
 CMS_W = 1024  # counters per row
@@ -105,8 +105,6 @@ def cms_term_counts(docs: DataFrame, terms: list[str]) -> DataFrame:
 
 
 def cms_term_counts_sql(terms: list[str]) -> str:
-    from metadata_quality_stack_spark.operators.textops import _lows_sql
-
     lows = sorted({t.lower() for t in terms if t})
     vals = ", ".join(
         f"('{t}', {r}, {md5_int_py(t, 15, 1 + 4 * r) % CMS_W})"
@@ -119,7 +117,7 @@ def cms_term_counts_sql(terms: list[str]) -> str:
         for r in range(CMS_D)
     )
     return f"""
-WITH tok AS (SELECT unnest({_lows_sql("text")}) AS term FROM documents),
+WITH tok AS (SELECT unnest({token_array_sql("lower(text)")}) AS term FROM documents),
 tf AS (SELECT term, count(*) AS cnt FROM tok GROUP BY term),
 sketch AS (SELECT row, cell, sum(cnt)::BIGINT AS cnt FROM ({cell_rows})
            GROUP BY row, cell),

@@ -18,8 +18,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from metadata_quality_stack_spark.functions.hashing import md5_int, md5_int_sql
-from metadata_quality_stack_spark.functions.text import token_array as tokens
-from metadata_quality_stack_spark.functions.text import word_ngrams
+from metadata_quality_stack_spark.functions.text import (
+    token_array as tokens,
+    token_array_sql,
+    word_ngrams,
+)
 
 N_MINHASH = 8
 N_BANDS = 4  # rows-per-band = 2
@@ -38,7 +41,7 @@ def _shingles(text_col):
 
 
 def shingles_sql() -> str:
-    toks = "list_filter(regexp_split_to_array(text, '[ \\t\\n\\r]+'), x -> x <> '')"
+    toks = token_array_sql("text")
     return (
         f"CASE WHEN len({toks}) >= {SHINGLE_N} THEN "
         f"list_distinct(list_transform(generate_series(1, len({toks}) - {SHINGLE_N - 1}), "
@@ -421,7 +424,7 @@ def dup_ngram_fraction(docs: DataFrame) -> DataFrame:
 def dup_ngram_fraction_sql() -> str:
     """DuckDB mirror of :func:`dup_ngram_fraction` (same tokenization as
     shingles_sql, positional n-grams, distinct-doc df)."""
-    toks = "list_filter(regexp_split_to_array(text, '[ \\t\\n\\r]+'), x -> x <> '')"
+    toks = token_array_sql("text")
     return f"""
 WITH t AS (SELECT doc_id, {toks} AS tk FROM documents),
 arr AS (
@@ -843,7 +846,7 @@ def drop_duplicated_spans(docs: DataFrame, w: int = SPAN_W) -> DataFrame:
 def drop_duplicated_spans_sql() -> str:
     """DuckDB mirror of :func:`drop_duplicated_spans` (1-based list
     subscripts; same (doc_id, pos) canonical-occurrence order)."""
-    toks = "list_filter(regexp_split_to_array(text, '[ \\t\\n\\r]+'), x -> x <> '')"
+    toks = token_array_sql("text")
     return f"""
 WITH t AS (SELECT doc_id, {toks} AS tk FROM documents),
 arr AS (
@@ -885,7 +888,7 @@ LEFT JOIN remset rs USING (doc_id)
 
 def dup_span_stats_sql() -> str:
     """DuckDB mirror of :func:`dup_span_stats`."""
-    toks = "list_filter(regexp_split_to_array(text, '[ \\t\\n\\r]+'), x -> x <> '')"
+    toks = token_array_sql("text")
     return f"""
 WITH t AS (SELECT doc_id, {toks} AS tk FROM documents),
 arr AS (

@@ -40,7 +40,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from metadata_quality_stack_spark.functions.hashing import md5_int, md5_int_sql
-from metadata_quality_stack_spark.functions.text import token_array
+from metadata_quality_stack_spark.functions.text import token_array, token_array_sql
 
 N_BUCKETS = 256
 DSIR_K = 100  # documents drawn
@@ -79,15 +79,11 @@ def feature_buckets(text: F.Column) -> F.Column:
 
 
 def _feats_sql() -> str:
-    ws = (
-        "list_transform(list_filter(regexp_split_to_array(text, "
-        "'[ \\t\\n\\r]+'), x -> x <> ''), x -> lower(x))"
-    )
     bigram = "ws[i] || ' ' || ws[i+1]"
     uni_b = f"({md5_int_sql('x', 7)} % {N_BUCKETS})"
     bi_b = f"({md5_int_sql(bigram, 7)} % {N_BUCKETS})"
     return (
-        f"WITH w AS (SELECT *, {ws} AS ws FROM documents), "
+        f"WITH w AS (SELECT *, {token_array_sql('lower(text)')} AS ws FROM documents), "
         "feats AS (SELECT *, list_concat("
         f"list_transform(ws, x -> {uni_b}), "
         f"list_transform(range(1, len(ws)), "

@@ -60,9 +60,10 @@ from pyspark.sql import functions as F
 
 from metadata_quality_stack_spark.functions.text import (
     token_array,
+    token_array_py,
+    token_array_sql,
     word_ngrams,
 )
-from metadata_quality_stack_spark.operators.textops import _lows_sql
 
 TOP_NS = (2, 3, 4)
 DUP_NS = (5, 6, 7, 8, 9, 10)
@@ -272,13 +273,7 @@ def _py_doc_signals(text: str) -> list[int]:
             out.append(n)
         out.append(_py_frac(dup_n, n))
         out.append(_py_frac(dup_chars, tot_chars))
-    import re
-
-    ws = [
-        t.lower()
-        for t in re.split(r"[ \t\n\r]+", text.strip(" \t\n\r"))
-        if t
-    ]
+    ws = token_array_py(text.lower())
     tops, dups = [], []
     for n in TOP_NS + DUP_NS:
         grams = [" ".join(ws[i : i + n]) for i in range(len(ws) - n + 1)]
@@ -298,16 +293,19 @@ def _py_doc_signals(text: str) -> list[int]:
 
 
 def gopher_repetition_fast(docs: DataFrame) -> DataFrame:
-    """Production twin of :func:`gopher_repetition`: one Arrow-batched
-    iterator pandas UDF computing all 12 signals per batch. The column
-    version is the DuckDB-mirrorable gate variant; interpreted HOF eval
-    costs ~7.5 ms/doc where the Python Counter pass costs a fraction of
-    that (measured in tests/test_gopher.py::test_fast_variant).
-    Map-only: text crosses the Arrow pipe once, zero Exchange. Results
-    are integer-exact-equal to the column version (parity-tested;
-    tokenization is the same [ \\t\\n\\r]+ split as
-    functions/text.token_array, and str.lower matches Java toLowerCase
-    on the ASCII/Latin corpus contract shared with functions/langid.py)."""
+    """Arrow-batched variant of :func:`gopher_repetition`: one iterator
+    pandas UDF computing all 12 signals per batch, registered in the
+    gate against the same oracle (``gopher_repetition_sql``). Production
+    does not run it: ``gopher_repetition_filter`` (and with it
+    ``heuristic_filter_bank`` and ``job.py --filter-bank``) runs the
+    column version. Interpreted HOF eval costs ~7.5 ms/doc where the
+    Python Counter pass costs a fraction of that (measured in
+    tests/test_gopher.py::test_fast_variant). Map-only: text crosses
+    the Arrow pipe once, zero Exchange. Results are integer-exact-equal
+    to the column version (parity-tested; tokens come from
+    ``functions/text.token_array_py``, and str.lower matches Java
+    toLowerCase on the ASCII/Latin corpus contract shared with
+    functions/langid.py)."""
     from pyspark.sql.functions import pandas_udf
 
     cols = [c.split(" ")[0] for c in _FAST_SCHEMA.split(", ")]
@@ -371,7 +369,7 @@ def _frac_sql(num: str, den: str) -> str:
 def gopher_repetition_sql() -> str:
     parts = [
         "WITH base AS (SELECT doc_id, text, "
-        f"{_lows_sql('text')} AS ws FROM documents)",
+        f"{token_array_sql('lower(text)')} AS ws FROM documents)",
         _seg_stats_sql("line", _seg_sql("chr(10)")),
         _seg_stats_sql("para", _seg_sql("chr(10) || chr(10)")),
     ]

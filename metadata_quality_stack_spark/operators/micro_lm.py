@@ -46,7 +46,6 @@ as in CCNet (Wenzek et al., arXiv:1911.00359). All public.
 from __future__ import annotations
 
 import math
-import re
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -65,6 +64,11 @@ from metadata_quality_stack_spark.functions.perplexity import (
     W_UNI,
     _EDGE_PUNCT,
 )
+from metadata_quality_stack_spark.functions.text import (
+    token_array,
+    token_array_py,
+    token_array_sql,
+)
 from metadata_quality_stack_spark.operators.dsir import _round_half_away
 from metadata_quality_stack_spark.operators.similarity import double_array_lit
 
@@ -73,7 +77,6 @@ LANGID_ALPHA = 0.1  # same smoothing as functions/langid.py
 PPL_B = 4096  # unigram AND bigram bucket count
 PPL_ALPHA = 0.01  # same smoothing as functions/perplexity.py
 
-_WS_RE = r"[ \t\n\r]+"  # the dialect-shared whitespace class (dsir._feats_sql)
 # '.,!?;:"'()[]' with the embedded quote doubled for a SQL literal
 _PUNCT_SQL = _EDGE_PUNCT.replace("'", "''")
 
@@ -89,15 +92,9 @@ def _seed_sql() -> str:
     return f"seed AS (SELECT * FROM (VALUES {rows}) AS _s(lang, txt))"
 
 
-def _py_tokens(text: str) -> list[str]:
-    """The dialect-shared tokenizer (split on the explicit whitespace
-    class, drop empties) — used ONLY for seed-corpus weight building."""
-    return [t for t in re.split(_WS_RE, text.lower()) if t]
-
-
 # ============================================================ langid micro
 def _py_langid_norm(text: str) -> str:
-    return "_" + "_".join(_py_tokens(text)) + "_"
+    return "_" + "_".join(token_array_py(text.lower())) + "_"
 
 
 def langid_weights_micros() -> dict[str, list[int]]:
@@ -121,10 +118,7 @@ def langid_weights_micros() -> dict[str, list[int]]:
 
 
 def _langid_norm_col(text: F.Column) -> F.Column:
-    toks = F.filter(
-        F.split(F.lower(F.coalesce(text, F.lit(""))), _WS_RE),
-        lambda x: x != "",
-    )
+    toks = token_array(F.lower(F.coalesce(text, F.lit(""))))
     return F.concat(F.lit("_"), F.array_join(toks, "_"), F.lit("_"))
 
 
@@ -278,10 +272,8 @@ def _langid_weights_cte(table: str) -> str:
     """CTE chain retraining the micro langid model from the seed
     literals and producing the pivoted weight table ``wp(b, w_en..)`` —
     plus the per-document gram relation ``dg(doc_id, n_grams, b)``."""
-    norm = (
-        "'_' || array_to_string(list_filter(regexp_split_to_array("
-        f"lower(coalesce({{col}}, '')), '{_WS_RE}'), x -> x <> ''), '_') || '_'"
-    )
+    toks = token_array_sql("lower(coalesce({col}, ''))")
+    norm = f"'_' || array_to_string({toks}, '_') || '_'"
     gb = f"({md5_int_sql('substr(n, CAST(i AS INT), 3)', 7)} % {LANGID_B})"
     wexpr = (
         f"CAST(round(ln((coalesce(c.c, 0) + {LANGID_ALPHA}) / "
@@ -355,7 +347,7 @@ SELECT lang_pred, count(*)::BIGINT AS n_docs FROM scored GROUP BY lang_pred
 
 # ======================================================== perplexity micro
 def _py_kept_tokens(text: str) -> list[str]:
-    toks = (t.strip(_EDGE_PUNCT) for t in _py_tokens(text))
+    toks = (t.strip(_EDGE_PUNCT) for t in token_array_py(text.lower()))
     return [t for t in toks if t]
 
 
@@ -383,10 +375,7 @@ def perplexity_probs() -> tuple[list[float], list[float]]:
 
 
 def _kept_tokens_col(text: F.Column) -> F.Column:
-    toks = F.filter(
-        F.split(F.lower(F.coalesce(text, F.lit(""))), _WS_RE),
-        lambda x: x != "",
-    )
+    toks = token_array(F.lower(F.coalesce(text, F.lit(""))))
     stripped = F.transform(toks, lambda x: F.btrim(x, F.lit(_EDGE_PUNCT)))
     return F.filter(stripped, lambda x: x != "")
 
@@ -584,8 +573,8 @@ WITH src AS (
   FROM documents d JOIN ({micro_model_columns_sql()}) m USING (doc_id)
 ), tok AS (
   SELECT doc_id, lang, source, n_chars, lang_pred, lang_conf, ppl, text,
-    {sqlgen.TOKS} AS toks,
-    {sqlgen.LOWS} AS lows
+    {token_array_sql("text")} AS toks,
+    list_distinct({token_array_sql("lower(text)")}) AS lows
   FROM src
 ), feat AS (
   SELECT doc_id, lang, source, n_chars, lang_pred, lang_conf, ppl,
@@ -617,8 +606,7 @@ FROM dims
 def _ppl_probs_cte() -> str:
     """CTE chain retraining (p_uni, p_bi) from the seed literals."""
     toks = (
-        "list_filter(list_transform(list_filter(regexp_split_to_array("
-        f"lower({{col}}), '{_WS_RE}'), x -> x <> ''), "
+        f"list_filter(list_transform({token_array_sql('lower({col})')}, "
         f"x -> trim(x, '{_PUNCT_SQL}')), x -> x <> '')"
     )
     ub = f"({md5_int_sql('t', 7)} % {PPL_B})"
@@ -644,9 +632,9 @@ pb AS (SELECT k.b, (coalesce(c.c, 0) + {PPL_ALPHA}) /
 
 
 def perplexity_model_scores_sql() -> str:
+    raw = token_array_sql("lower(coalesce(text, ''))")
     toks = (
-        "list_filter(list_transform(list_filter(regexp_split_to_array("
-        f"lower(coalesce(text, '')), '{_WS_RE}'), x -> x <> ''), "
+        f"list_filter(list_transform({raw}, "
         f"x -> trim(x, '{_PUNCT_SQL}')), x -> x <> '')"
     )
     ub = f"({md5_int_sql('kt[CAST(i AS INT)]', 7)} % {PPL_B})"

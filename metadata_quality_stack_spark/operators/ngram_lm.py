@@ -43,7 +43,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from metadata_quality_stack_spark.functions.hashing import md5_int, md5_int_sql
-from metadata_quality_stack_spark.functions.text import token_array
+from metadata_quality_stack_spark.functions.text import token_array, token_array_sql
 from metadata_quality_stack_spark.sources.store import scratch_dir
 
 LM_BUCKETS = 256  # B: token-hash space; pairs encode as bp*B+bc < 2^16
@@ -287,16 +287,13 @@ def ngram_lm_stored_cycle(spark, docs: DataFrame) -> DataFrame:
 
 
 # ----------------------------------------------------------------- oracles
-_TOKS_SQL = (
-    "list_filter(regexp_split_to_array(text, '[ \\t\\n\\r]+'), x -> x <> '')"
-)
 
 
 def _pairs_cte(table: str) -> str:
     bkt = f"({md5_int_sql('t.tok', 15)} % {LM_BUCKETS})"
     return f"""tk AS (
-  SELECT doc_id, generate_subscripts({_TOKS_SQL}, 1) AS pos,
-         unnest({_TOKS_SQL}) AS tok
+  SELECT doc_id, generate_subscripts({token_array_sql('text')}, 1) AS pos,
+         unnest({token_array_sql('text')}) AS tok
   FROM {table} WHERE text IS NOT NULL
 ),
 bk AS (SELECT doc_id, pos, {bkt} AS b FROM tk t),
@@ -405,7 +402,7 @@ def token_entropy(docs: DataFrame) -> DataFrame:
 def token_entropy_sql() -> str:
     return f"""
 WITH tk AS (
-  SELECT doc_id, unnest({_TOKS_SQL}) AS tok
+  SELECT doc_id, unnest({token_array_sql('text')}) AS tok
   FROM documents WHERE text IS NOT NULL
 ),
 cnt AS (SELECT doc_id, tok, count(*)::BIGINT AS c FROM tk GROUP BY 1, 2),
@@ -497,7 +494,7 @@ def source_kl(docs: DataFrame) -> DataFrame:
 def source_kl_sql() -> str:
     return f"""
 WITH tk AS (
-  SELECT source, unnest({_TOKS_SQL}) AS tok
+  SELECT source, unnest({token_array_sql('text')}) AS tok
   FROM documents WHERE text IS NOT NULL AND source IS NOT NULL
 ),
 sc AS (SELECT source, tok, count(*)::BIGINT AS c_st FROM tk GROUP BY 1, 2),
@@ -587,8 +584,8 @@ def ngram_lm_by_lang(docs: DataFrame) -> DataFrame:
 def ngram_lm_by_lang_sql() -> str:
     return f"""
 WITH tk AS (
-  SELECT doc_id, lang, generate_subscripts({_TOKS_SQL}, 1) AS pos,
-         unnest({_TOKS_SQL}) AS tok
+  SELECT doc_id, lang, generate_subscripts({token_array_sql('text')}, 1) AS pos,
+         unnest({token_array_sql('text')}) AS tok
   FROM documents WHERE text IS NOT NULL AND lang IS NOT NULL
 ),
 bk AS (SELECT doc_id, lang, pos, ({md5_int_sql('t.tok', 15)} % {LM_BUCKETS}) AS b

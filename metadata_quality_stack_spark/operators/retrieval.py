@@ -38,7 +38,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from metadata_quality_stack_spark.functions.text import token_array
+from metadata_quality_stack_spark.functions.text import token_array, token_array_sql
 
 MICRO = 1_000_000
 TOP_TERMS_K = 5
@@ -100,10 +100,10 @@ def bm25_topk(docs: DataFrame, query: list[str], k: int = 10) -> DataFrame:
 
 def bm25_topk_sql(query: list[str], k: int = 10) -> str:
     """DuckDB mirror (same tokenization, same integer quotients)."""
-    from metadata_quality_stack_spark.operators.textops import _lows_sql, _sql_list
+    from metadata_quality_stack_spark.operators.textops import _sql_list
 
     terms = sorted({t.lower() for t in query if t})
-    lows = _lows_sql("text")
+    lows = token_array_sql("lower(text)")
     return f"""
 WITH tok AS (
   SELECT doc_id, len({lows}) AS dl, unnest({lows}) AS term FROM documents
@@ -185,9 +185,7 @@ def domain_top_terms(docs: DataFrame, k: int = TOP_TERMS_K) -> DataFrame:
 
 
 def domain_top_terms_sql() -> str:
-    from metadata_quality_stack_spark.operators.textops import _lows_sql
-
-    lows = _lows_sql("text")
+    lows = token_array_sql("lower(text)")
     return f"""
 WITH tok AS (
   SELECT source, unnest({lows}) AS term FROM documents

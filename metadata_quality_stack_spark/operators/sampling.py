@@ -19,6 +19,7 @@ from metadata_quality_stack_spark.functions.hashing import (
     md5_int,
     md5_int_sql,
 )
+from metadata_quality_stack_spark.functions.text import token_array, token_array_sql
 
 SAMPLE_BUCKETS = 100
 SPLIT_VAL_PCT = 5  # buckets of SAMPLE_BUCKETS held out for validation
@@ -65,8 +66,6 @@ def corpus_token_budget(docs: DataFrame) -> DataFrame:
     on the same content-hash split as train_val_test_split, so the
     numbers describe exactly the splits that ship. Map-only token count
     + one partial-aggregated groupBy on a tiny (split, lang) key space."""
-    from metadata_quality_stack_spark.functions.text import token_array
-
     _, split = _content_split()
     per_doc = docs.select(
         split.alias("split"),
@@ -82,18 +81,13 @@ def corpus_token_budget(docs: DataFrame) -> DataFrame:
 def corpus_token_budget_sql() -> str:
     """DuckDB mirror of :func:`corpus_token_budget` (same md5 bucket and
     tokenization as the rest of the gate)."""
-    trimmed = "regexp_replace(text, '^[ \\t\\n\\r]+|[ \\t\\n\\r]+$', '', 'g')"
-    toks = (
-        f"CASE WHEN length({trimmed}) = 0 THEN [] "
-        f"ELSE string_split_regex({trimmed}, '[ \\t\\n\\r]+') END"
-    )
     b = f"({md5_int_sql('text', 7)} % {SAMPLE_BUCKETS})"
     return f"""
 WITH t AS (
   SELECT CASE WHEN {b} < {SPLIT_TEST_PCT} THEN 'test'
               WHEN {b} < {SPLIT_TEST_PCT + SPLIT_VAL_PCT} THEN 'val'
               ELSE 'train' END AS split,
-         lang, len({toks}) AS nt
+         lang, len({token_array_sql('text')}) AS nt
   FROM documents
 )
 SELECT split, lang, count(*) AS n_docs, CAST(sum(nt) AS BIGINT) AS n_tokens

@@ -15,12 +15,14 @@ from pyspark.sql import functions as F
 from metadata_quality_stack_spark import config
 from metadata_quality_stack_spark.functions.scrub import scrub_columns
 from metadata_quality_stack_spark.functions.text import (
+    WS_CLASS,
     chars_matching,
+    collapsed_lower,
     safe_div,
     token_array,
+    token_array_sql,
     word_ngrams,
 )
-from metadata_quality_stack_spark.functions.text import WS_CLASS
 
 LANG_ORDER = list(config.STOPWORDS_BY_LANG)
 TERM_STATS_LIMIT = 50
@@ -109,11 +111,12 @@ FROM pred GROUP BY source
 def doc_fingerprint(docs: DataFrame) -> DataFrame:
     """Exact-content fingerprint (md5) + normalized fingerprint
     (lowercased, whitespace-collapsed) for near-exact dedup."""
-    norm = F.regexp_replace(F.lower(F.col("text")), "[ \\t\\n\\r]+", " ")
     return docs.select(
         "doc_id",
         F.md5(F.encode(F.col("text"), "UTF-8")).alias("fingerprint"),
-        F.md5(F.encode(F.trim(norm), "UTF-8")).alias("norm_fingerprint"),
+        F.md5(F.encode(collapsed_lower(F.col("text")), "UTF-8")).alias(
+            "norm_fingerprint"
+        ),
     )
 
 
@@ -130,19 +133,12 @@ def scrub_documents(docs: DataFrame) -> DataFrame:
 
 
 # ---------------------------------------------------------------- SQL mirrors
-def _lows_sql(text: str = "text") -> str:
-    return (
-        f"list_transform(list_filter(regexp_split_to_array({text}, '[ \\t\\n\\r]+'), "
-        f"x -> x <> ''), x -> lower(x))"
-    )
-
-
 def _sql_list(items: list[str]) -> str:
     return "[" + ", ".join("'" + s + "'" for s in items) + "]"
 
 
 def langid_heuristic_sql(extra_cols: tuple[str, ...] = ()) -> str:
-    lows = _lows_sql()
+    lows = token_array_sql("lower(text)")
     extra = "".join(f", {c}" for c in extra_cols)
     score_exprs = {
         lang: f"len(list_filter(lows, x -> list_contains({_sql_list(sw)}, x)))"
@@ -337,22 +333,22 @@ def report_turtle(scored: DataFrame) -> DataFrame:
 # (no \p classes, no lookahead): contractions, letter runs, digit runs,
 # punctuation runs, whitespace runs.
 BPE_PRETOKEN_RE = r"'[a-z]+| ?[A-Za-z]+| ?[0-9]+| ?[^A-Za-z0-9 \t\n\r]+|[ \t\n\r]+"
+BPE_NONWS_RE = r"'[a-z]+| ?[A-Za-z]+| ?[0-9]+| ?[^A-Za-z0-9 \t\n\r]+"
 
 
 def bpe_token_stats(docs: DataFrame) -> DataFrame:
     """BPE-ish token counting (training-data budget estimation): counts
     pretokenizer pieces and non-whitespace pieces per doc — one
     regexp_count pass each, native."""
-    nonws = r"'[a-z]+| ?[A-Za-z]+| ?[0-9]+| ?[^A-Za-z0-9 \t\n\r]+"
     return docs.select(
         "doc_id",
         F.regexp_count("text", F.lit(BPE_PRETOKEN_RE)).alias("n_pieces"),
-        F.regexp_count("text", F.lit(nonws)).alias("n_tokens"),
+        F.regexp_count("text", F.lit(BPE_NONWS_RE)).alias("n_tokens"),
         F.round(
             F.coalesce(
                 F.length("text").cast("double")
                 / F.nullif(
-                    F.regexp_count("text", F.lit(nonws)).cast("double"), F.lit(0.0)
+                    F.regexp_count("text", F.lit(BPE_NONWS_RE)).cast("double"), F.lit(0.0)
                 ),
                 F.lit(0.0),
             ),
@@ -369,10 +365,9 @@ def rolling_fingerprint(docs: DataFrame) -> DataFrame:
     path uses, so the DuckDB mirror is shared (dedup.poly_hash_sql)."""
     from metadata_quality_stack_spark.operators.dedup import _poly_hash
 
-    norm = F.trim(
-        F.regexp_replace(F.lower(F.col("text")), "[ \t\n\r]+", " ")
+    return docs.select(
+        "doc_id", _poly_hash(collapsed_lower(F.col("text"))).alias("rolling_hash")
     )
-    return docs.select("doc_id", _poly_hash(norm).alias("rolling_hash"))
 
 
 def term_stats(docs: DataFrame, limit: int = TERM_STATS_LIMIT) -> DataFrame:
@@ -413,9 +408,9 @@ def term_stats(docs: DataFrame, limit: int = TERM_STATS_LIMIT) -> DataFrame:
 
 
 def term_stats_sql() -> str:
-    """DuckDB mirror of :func:`term_stats` (same tokenization as _lows_sql)."""
+    """DuckDB mirror of :func:`term_stats`."""
     return f"""
-WITH tok AS (SELECT doc_id, unnest({_lows_sql("text")}) AS term FROM documents),
+WITH tok AS (SELECT doc_id, unnest({token_array_sql("lower(text)")}) AS term FROM documents),
 n AS (SELECT count(*) AS n_docs FROM documents),
 per AS (SELECT term, count(*) AS tf, count(DISTINCT doc_id) AS df
         FROM tok GROUP BY term)
@@ -626,7 +621,7 @@ def lang_stopword_density(
 
 
 def lang_stopword_density_sql() -> str:
-    lows = _lows_sql()
+    lows = token_array_sql("lower(text)")
     case = (
         "CASE lang "
         + " ".join(
@@ -652,9 +647,6 @@ SELECT doc_id, lang, n_words, sw_hits, sw_distinct, density_ppm,
         AND density_ppm >= {STOPWORD_MIN_PPM}) AS keep
 FROM d
 """
-
-
-BPE_NONWS_RE = r"'[a-z]+| ?[A-Za-z]+| ?[0-9]+| ?[^A-Za-z0-9 \t\n\r]+"
 
 
 def bpe_fertility_by_lang(docs: DataFrame) -> DataFrame:
@@ -847,7 +839,7 @@ def lexical_diversity(docs: DataFrame, keep_cols: tuple[str, ...] = ()) -> DataF
 def lexical_diversity_sql() -> str:
     """DuckDB mirror — the oracle states the semantics as the natural
     unnest + per-token counts (no need to be map-only off-engine)."""
-    lows = _lows_sql("text")
+    lows = token_array_sql("lower(text)")
     return f"""
 WITH toks AS (SELECT doc_id, unnest({lows}) AS tok FROM documents),
 per AS (SELECT doc_id, tok, count(*) AS c FROM toks GROUP BY 1, 2),
@@ -939,12 +931,8 @@ def script_census_sql() -> str:
         )
         + " END"
     )
-    toks = (
-        f"list_filter(regexp_split_to_array({t}, '[ \\t\\n\\r]+'), "
-        f"x -> x <> '')"
-    )
     mixed = (
-        f"len(list_filter({toks}, w -> regexp_matches(w, '{_MIX_LATIN}') "
+        f"len(list_filter({token_array_sql(t)}, w -> regexp_matches(w, '{_MIX_LATIN}') "
         f"AND regexp_matches(w, '{_MIX_CYR}')))::BIGINT"
     )
     return f"""
@@ -1007,10 +995,7 @@ def lix_readability(docs: DataFrame) -> DataFrame:
 def lix_readability_sql() -> str:
     """DuckDB mirror of :func:`lix_readability` (same raw-token split,
     same [.!?]+ sentence runs, same micro-scaled integer division)."""
-    toks = (
-        "list_filter(regexp_split_to_array(coalesce(text, ''), "
-        "'[ \\t\\n\\r]+'), x -> x <> '')"
-    )
+    toks = token_array_sql("coalesce(text, '')")
     return f"""
 WITH staged AS (
   SELECT doc_id,

@@ -57,6 +57,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from metadata_quality_stack_spark.functions.hashing import md5_int, md5_int_sql
+from metadata_quality_stack_spark.functions.text import collapsed_lower, collapsed_lower_sql
 
 WINNOW_K = 20  # k-gram length (normalized chars)
 WINNOW_W = 8  # window: guarantee threshold t = w + k - 1 = 27 chars
@@ -65,11 +66,6 @@ WINNOW_HOT_DOCS = 25  # fingerprint in more docs than this = boilerplate
 WINNOW_MIN_SHARED = 3  # pair readout: min common fingerprints
 
 _POS_M = 1 << POS_BITS
-
-
-def _norm(text_col):
-    """Whitespace-collapsed lowercase — the simhash/rolling norm."""
-    return F.trim(F.regexp_replace(F.lower(text_col), "[ \t\n\r]+", " "))
 
 
 def _gram_hashes(norm):
@@ -91,7 +87,7 @@ def selected_fingerprints(docs: DataFrame) -> DataFrame:
     rightmost-minimum of every complete w-window of k-gram hashes."""
     from pyspark.sql import Window
 
-    norm = _norm(F.col("text"))
+    norm = collapsed_lower(F.col("text"))
     g = docs.select(
         "doc_id", F.posexplode(_gram_hashes(norm)).alias("pos", "h")
     )
@@ -118,7 +114,7 @@ def selected_fingerprints(docs: DataFrame) -> DataFrame:
 def _sel_sql() -> str:
     """Shared CTE chain ending in sel(doc_id, sel_pos, sel_h)."""
     return f"""nd AS (
-  SELECT doc_id, trim(regexp_replace(lower(text), '[ \\t\\n\\r]+', ' ', 'g')) AS norm FROM documents),
+  SELECT doc_id, {collapsed_lower_sql("text")} AS norm FROM documents),
 g AS (
   SELECT doc_id, i - 1 AS pos,
          {md5_int_sql(f"substr(norm, i, {WINNOW_K})", 7)} AS h
@@ -143,7 +139,7 @@ def winnow_fingerprints(docs: DataFrame) -> DataFrame:
     n_selected / n_windows ~ 2/(w+1) (paper §4 density bound); docs
     shorter than the guarantee threshold keep a zero row (hostile-row
     rule: empty/null/short text must not vanish from the readout)."""
-    norm = _norm(F.col("text"))
+    norm = collapsed_lower(F.col("text"))
     n_grams = F.greatest(F.length(norm) - F.lit(WINNOW_K - 1), F.lit(0))
     base = docs.select(
         "doc_id",

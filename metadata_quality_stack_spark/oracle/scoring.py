@@ -18,8 +18,8 @@ import pandas as pd
 from metadata_quality_stack_spark import config
 from metadata_quality_stack_spark.functions import langid as _langid
 from metadata_quality_stack_spark.functions import perplexity as _ppl
+from metadata_quality_stack_spark.functions.text import token_array_py
 
-_WS_RE = re.compile(r"[ \t\n\r]+")
 _EMAIL_RE = re.compile(config.PII_EMAIL)
 _PHONE_RE = re.compile(config.PII_PHONE)
 _IP_RE = re.compile(config.PII_IP)
@@ -34,21 +34,15 @@ def half_even_int(x: float) -> int:
     return int(math.floor(x + 0.5))
 
 
-_EDGE_RE = re.compile(r"^[ \t\n\r]+|[ \t\n\r]+$")
 _RE_NONEMPTY_LINE = re.compile(r"(?m)^ *[^ \n]")
 _RE_TERMINAL_PUNCT = re.compile(r"(?m)[.!?\"'] *$")
 _RE_ELLIPSIS_EOL = re.compile(r"(?m)\.\.\. *$")
 _RE_BULLET_BOL = re.compile(r"(?m)^ *[-*•]")
 
 
-def _toks(text: str) -> list[str]:
-    trimmed = _EDGE_RE.sub("", text)
-    return _WS_RE.split(trimmed) if trimmed else []
-
-
 def _features(text: str) -> dict:
-    toks = _toks(text)
-    lows = set(_toks(text.lower()))
+    toks = token_array_py(text)
+    lows = set(token_array_py(text.lower()))
     raw_lines = text.split("\n")
     sw = set(config.STOPWORDS_EN)
     low_text = text.lower()

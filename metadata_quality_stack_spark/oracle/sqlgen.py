@@ -12,6 +12,7 @@ population-0 guard via coalesce/nullif).
 from __future__ import annotations
 
 from metadata_quality_stack_spark import config
+from metadata_quality_stack_spark.functions.text import token_array_sql
 
 # the documents table's metadata columns, by role; the Spark operators
 # read the same mapping (analytics.DOC_META)
@@ -39,18 +40,6 @@ def bankers_int(x: str) -> str:
         f"ELSE CAST(floor(({x}) + 0.5) AS INTEGER) END"
     )
 
-
-# edge-trimmed text + token arrays (mirrors functions.text.token_array)
-TRIMMED = "regexp_replace(text, '^[ \\t\\n\\r]+|[ \\t\\n\\r]+$', '', 'g')"
-TRIMMED_LOW = "regexp_replace(lower(text), '^[ \\t\\n\\r]+|[ \\t\\n\\r]+$', '', 'g')"
-TOKS = (
-    f"CASE WHEN length({TRIMMED}) = 0 THEN [] "
-    f"ELSE string_split_regex({TRIMMED}, '[ \\t\\n\\r]+') END"
-)
-LOWS = (
-    f"CASE WHEN length({TRIMMED_LOW}) = 0 THEN [] "
-    f"ELSE list_distinct(string_split_regex({TRIMMED_LOW}, '[ \\t\\n\\r]+')) END"
-)
 
 # multiline regex line probes — identical patterns to functions.text
 RE_NONEMPTY_LINE = "(?m)^ *[^ \\n]"
@@ -175,8 +164,8 @@ def pct_with_clause() -> str:
     meta_carry = ", " + ", ".join(sorted(DOC_META.values()))
     return f"""WITH tok AS (
   SELECT doc_id{meta_carry}, text,
-    {TOKS} AS toks,
-    {LOWS} AS lows
+    {token_array_sql("text")} AS toks,
+    list_distinct({token_array_sql("lower(text)")}) AS lows
   FROM documents
 ), feat AS (
   SELECT doc_id{meta_carry},
@@ -276,8 +265,8 @@ def native_scoring_sql(
     return f"""
 WITH tok AS (
   SELECT {carry}{meta_carry}, text,
-    {TOKS} AS toks,
-    {LOWS} AS lows
+    {token_array_sql("text")} AS toks,
+    list_distinct({token_array_sql("lower(text)")}) AS lows
   FROM {table}
 ), feat AS (
   SELECT {carry}{meta_carry},

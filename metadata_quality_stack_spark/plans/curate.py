@@ -38,11 +38,10 @@ CONTAMINATION_MAX = 0.2
 def _stages(
     docs: DataFrame,
     meta_cols: dict[str, str],
-    profile: str,
     sample_pct: int | None,
     per_source_cap: int | None,
 ) -> dict[str, DataFrame]:
-    scored = apply_quality(docs, meta_cols=meta_cols, profile=profile)
+    scored = apply_quality(docs, meta_cols=meta_cols, profile="webtext_native")
     kept = filter_scored(scored, F.col("keep"))
     if "lang" not in kept.columns:
         # job.py --curate supports lang-less pages tables (lang is added
@@ -98,15 +97,12 @@ def _stages(
 def curate(
     docs: DataFrame,
     meta_cols: dict[str, str] | None = None,
-    profile: str = "webtext_native",
     sample_pct: int | None = None,
     per_source_cap: int | None = None,
 ) -> DataFrame:
     """The curated corpus: quality-kept, exact-deduped (min doc_id is the
     canonical copy), optionally sampled and per-source capped."""
-    stages = _stages(
-        docs, meta_cols or {}, profile, sample_pct, per_source_cap
-    )
+    stages = _stages(docs, meta_cols or {}, sample_pct, per_source_cap)
     return stages["capped"].select(*CURATED_COLS)
 
 
@@ -181,7 +177,7 @@ def curation_recipe(
     from metadata_quality_stack_spark.operators.dedup import fuzzy_dedup_keep
     from metadata_quality_stack_spark.operators.sampling import SAMPLE_BUCKETS
 
-    stages = _stages(docs, meta_cols or {}, "webtext_native", None, None)
+    stages = _stages(docs, meta_cols or {}, None, None)
     canon = stages["deduped"]
     surv_docs = docs.join(canon.select("doc_id"), "doc_id", "semi")
     fuzzy = fuzzy_dedup_keep(surv_docs)
@@ -217,7 +213,6 @@ def curation_recipe(
 def curation_accounting(
     docs: DataFrame,
     meta_cols: dict[str, str] | None = None,
-    profile: str = "webtext_native",
     sample_pct: int | None = None,
     per_source_cap: int | None = None,
 ) -> DataFrame:
@@ -249,7 +244,7 @@ def curation_accounting(
 
     from metadata_quality_stack_spark.operators.sampling import sample_bucket
 
-    scored = apply_quality(docs, meta_cols=meta_cols or {}, profile=profile)
+    scored = apply_quality(docs, meta_cols=meta_cols or {}, profile="webtext_native")
     slim = scored.select(
         "doc_id",
         "source",

@@ -269,6 +269,64 @@ def test_only_hashing_spells_the_md5_prefix():
     }
 
 
+_WS_RUN = "[ \t\n\r]+"
+# BPE pre-tokenizer patterns: a different tokenizer (whitespace runs are
+# one of its piece kinds), not a copy of the whitespace split
+_OTHER_TOKENIZERS = {"BPE_PRETOKEN_RE", "BPE_NONWS_RE"}
+_DOCUMENTED = (ast.Module, ast.ClassDef, ast.FunctionDef, ast.AsyncFunctionDef)
+
+
+def _ws_run_sites(tree: ast.AST) -> list[int]:
+    """Line of each code string that spells the ``[ \\t\\n\\r]+`` run,
+    written with escapes (a regex or SQL literal) or with the raw
+    characters. Docstrings and the patterns named in
+    ``_OTHER_TOKENIZERS`` are skipped; comments are not in the tree."""
+    skip: set[int] = set()
+    for n in ast.walk(tree):
+        if isinstance(n, _DOCUMENTED) and ast.get_docstring(n) is not None:
+            skip.add(id(n.body[0].value))
+        if isinstance(n, ast.Assign) and any(
+            getattr(t, "id", None) in _OTHER_TOKENIZERS for t in n.targets
+        ):
+            skip.update(id(c) for c in ast.walk(n.value))
+    lines = []
+    for n in ast.walk(tree):
+        if isinstance(n, ast.Constant) and isinstance(n.value, str) and id(n) not in skip:
+            v = n.value.replace("\\t", "\t").replace("\\n", "\n").replace("\\r", "\r")
+            if _WS_RUN in v:
+                lines.append(n.lineno)
+    return lines
+
+
+_WS_RUN_PROBE = r'''"""Docstring: [ \t\n\r]+"""
+A = "[ \\t\\n\\r]+"
+B = r"[ \t\n\r]+"
+C = "[ \t\n\r]+"
+D = f"split({x}, '[ \\t\\n\\r]+')"
+BPE_NONWS_RE = "[ \t\n\r]+"
+'''
+
+
+def test_only_text_spells_the_whitespace_split():
+    """The whitespace token split and the lowercase collapse (runs of
+    ``[ \\t\\n\\r]``) are spelled once per engine, in
+    ``functions/text.py``; a hand-written copy elsewhere can drift from
+    its twin in the other engine. Static: parses the package, the job
+    and the entry, no Spark session."""
+    assert _ws_run_sites(ast.parse(_WS_RUN_PROBE)) == [2, 3, 4, 5]
+    root = Path(entry.__file__).resolve().parent
+    pkg = root / "metadata_quality_stack_spark"
+    text = pkg / "functions" / "text.py"
+    files = [root / "job.py", root / "__spark_entry__.py", *sorted(pkg.rglob("*.py"))]
+    found = [
+        f"{f.relative_to(root)}:{line}"
+        for f in files
+        if f != text
+        for line in _ws_run_sites(ast.parse(f.read_text()))
+    ]
+    assert not found, f"{len(found)} whitespace-run sites outside functions/text.py: {found}"
+
+
 def _public_defaults(pkg: Path):
     """(module, function, positional params, {param: default node}) for
     every public top-level function of the package with a default."""
@@ -284,13 +342,33 @@ def _public_defaults(pkg: Path):
                     yield mod, node.name, pos, d
 
 
+def _literal_dicts(tree: ast.Module) -> dict[str, set[str]]:
+    """Keys of each module-level ``NAME = dict(k=...)`` or
+    ``NAME = {"k": ...}`` literal."""
+    out = {}
+    for n in tree.body:
+        if not (isinstance(n, ast.Assign) and isinstance(n.targets[0], ast.Name)):
+            continue
+        v = n.value
+        if isinstance(v, ast.Call) and getattr(v.func, "id", None) == "dict":
+            if not v.args and all(k.arg for k in v.keywords):
+                out[n.targets[0].id] = {k.arg for k in v.keywords}
+        elif isinstance(v, ast.Dict) and all(
+            isinstance(k, ast.Constant) and isinstance(k.value, str) for k in v.keys
+        ):
+            out[n.targets[0].id] = {k.value for k in v.keys}
+    return out
+
+
 def _default_census(root: Path) -> tuple[list[str], list[str]]:
     """(every defaulted parameter, those no call site sets), each as
     ``module.function(param)``. A call matches a function by its bare or
     attribute name and sets a parameter by keyword or by position; a
-    ``*args`` argument sets every later position and a ``**mapping``
-    argument every parameter. Call sites: the package, the entry, the
-    job, the bench, tools/, perfbench/ and tests/."""
+    ``*args`` argument sets every later position. A ``**NAME`` argument
+    sets the keys of ``NAME`` when it is a module-level dict literal of
+    the same file, and every parameter otherwise. Call sites: the
+    package, the entry, the job, the bench, tools/, perfbench/ and
+    tests/."""
     pkg = root / "metadata_quality_stack_spark"
     fns = list(_public_defaults(pkg))
     by_name: dict[str, list] = {}
@@ -301,7 +379,9 @@ def _default_census(root: Path) -> tuple[list[str], list[str]]:
         files += sorted((root / d).rglob("*.py"))
     set_: set[str] = set()
     for f in files:
-        for call in ast.walk(ast.parse(f.read_text())):
+        tree = ast.parse(f.read_text())
+        literals = _literal_dicts(tree)
+        for call in ast.walk(tree):
             if not isinstance(call, ast.Call):
                 continue
             fn = call.func
@@ -314,7 +394,12 @@ def _default_census(root: Path) -> tuple[list[str], list[str]]:
                         break
                     hit.update(pos[i:i + 1])
                 for kw in call.keywords:
-                    hit.update(d if kw.arg is None else {kw.arg})
+                    if kw.arg is not None:
+                        hit.add(kw.arg)
+                    elif isinstance(kw.value, ast.Name) and kw.value.id in literals:
+                        hit.update(literals[kw.value.id])
+                    else:
+                        hit.update(d)
                 set_.update(f"{mod}.{name}({p})" for p in hit & d.keys())
     every = [f"{mod}.{name}({p})" for mod, name, _, d in fns for p in d]
     return every, [p for p in every if p not in set_]

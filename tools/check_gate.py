@@ -15,6 +15,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import duckdb
 import numpy as np
 import pandas as pd
+from pyspark.sql import SparkSession
 
 import __spark_entry__ as entrymod
 from metadata_quality_stack_spark import get_spark
@@ -56,6 +57,10 @@ def dtype_drift(sp_raw: pd.DataFrame, dk_raw: pd.DataFrame) -> list:
 
 def main() -> int:
     only = set(sys.argv[1:])
+    # no console progress bar: it would land in front of the result lines
+    SparkSession.builder.master("local[8]").config(
+        "spark.ui.showConsoleProgress", "false"
+    ).getOrCreate()
     spark = get_spark(master="local[8]")
     con = duckdb.connect()
     for t in TABLES:
